@@ -22,20 +22,34 @@ VERSION = ["commit_seq", "offset"]
 # BACKFILL_CHUNKS replay calls: chunk 0 is an upsert into the empty table,
 # chunk 1 CoW-merges into the populated buckets and crosses the v1 -> v2
 # schema change (v2_fraction = 0.5 starts v2 at mid-journal).
-# The tail is replayed in 4096-event batches.  The key space is wide enough
-# that a batch's winners stay under the 5 % auto-mode threshold of the
-# backfilled rows, so steady batches land as MOR deltas.
-BASE = 1 << 17
+# The tail is replayed in BATCH-event batches.  The key space is wide
+# enough that a batch's winners stay under the 5 % auto-mode threshold of
+# the backfilled rows (2048 of ~62k), so steady batches land as MOR deltas.
+BASE = 1 << 16
 BACKFILL_CHUNKS = 2
-BATCH = 4096
-TAIL_BATCHES = 8
+BATCH = 2048
 PATHS_PER_REPO = 65536
+N_BUCKETS = 16
 V2_FRACTION = 0.5
 LOOKUP_KEYS = 4
+# untimed steady cycles after the backfill: the first batches against a
+# fresh table are still warming up
+WARMUP_CYCLES = 4
+# a full read().count() after every SCAN_EVERY-th timed cycle and the last
+SCAN_EVERY = 5
+# In-loop maintenance thresholds, lowered from the defaults (16, 16) so
+# that maintenance runs inside the timed cycles of a 20-second run: every
+# batch adds a delta to nearly every bucket, so the 1st timed batch (the
+# 5th delta, the table's 7th commit) compacts and runs ANALYZE, and the
+# 4 deltas of the later batches stay under the threshold.  The first timed
+# cycle is also the last to run warm, so it is the one outlier: the median
+# cycle is a plain one, and the maintenance cost shows in work_per_s.
+MAX_DELTAS = 4
+ANALYZE_EVERY = 7
 # nominal costs on a 4-CPU host, used to turn --seconds into a fixed count
-# of steady cycles (one batch, then one lookup)
-BACKFILL_NOMINAL_S = 8.0
-CYCLE_NOMINAL_S = 4.0
+# of timed steady cycles (one batch, then one lookup)
+BACKFILL_NOMINAL_S = 6.0
+CYCLE_NOMINAL_S = 2.8
 
 PREFIX_REPS = 2
 
@@ -85,8 +99,6 @@ def merge_counts(summaries: list[dict], table) -> dict:
         "merge.touched_buckets": sum(s["touched_buckets"] for s in done),
         "merge.bytes_written": sum(
             table.dir_bytes(s["data_rel"]) for s in done if s.get("data_rel")),
-        "merge.schema_changes": sum(len(s.get("schema_changes") or [])
-                                    for s in done),
         "merge.delta_batch_ratio": (
             sum(1 for s in done if s.get("merge_mode") == "delta")
             / len(done) if done else 0.0),
@@ -214,15 +226,17 @@ def prefix_layers(ctx, metrics) -> dict:
         "lww.gc_s": t["lww.reduce"]["gc_s"] - t["normalize.keys"]["gc_s"],
         "merge.cpu_s": t["apply"]["cpu_s"] - t["normalize.finalize"]["cpu_s"],
         "merge.gc_s": t["apply"]["gc_s"] - t["normalize.finalize"]["gc_s"],
-        "merge.shuffle_bytes": t["apply"]["shuffle_bytes"],
+        "merge.shuffle_bytes": (t["apply"]["shuffle_bytes"]
+                                - t["normalize.finalize"]["shuffle_bytes"]),
         "prefix.apply_batch_s": walls["apply"],
     }
 
 
-def loop_layers(ctx, metrics, loop_span) -> dict:
-    """Per-layer values of the eager spans inside the timed loop."""
+def loop_layers(ctx, metrics, steady_span) -> dict:
+    """Per-layer values of the eager spans inside the timed steady cycles
+    (the backfill and the warm-up cycles are outside ``steady_span``)."""
     tr = ctx.tracer
-    inside = set(tr.descendants(loop_span))
+    inside = set(tr.descendants(steady_span))
     spans = [s for s in tr.spans if s["id"] in inside]
 
     def of(name):
@@ -233,15 +247,14 @@ def loop_layers(ctx, metrics, loop_span) -> dict:
     analyzes = of("table.maybe_analyze")
     calls = of("replay.call")
     return {
-        "merge.apply_batch_p50_s": median([tr.duration(s) for s in applies]) or 0.0,
-        "merge.jobs_per_batch": (sum(metrics.jobs_of(s) for s in applies)
-                                 / len(applies) if applies else 0.0),
+        "merge.apply_batch_p50_s": median([tr.duration(s) for s in applies]),
+        "merge.jobs_per_batch": median([metrics.jobs_of(s) for s in applies]),
         "table.maybe_compact_s": sum(tr.duration(s) for s in compacts),
         "table.compactions": sum(1 for s in compacts if s.get("compacted")),
         "table.compact_bytes_written": sum(s.get("bytes", 0) for s in compacts),
         "table.maybe_analyze_s": sum(tr.duration(s) for s in analyzes),
         "table.analyzes": sum(1 for s in analyzes if s.get("analyzed")),
-        "replay.driver_self_s": median([tr.self_time(s) for s in calls]) or 0.0,
+        "replay.driver_self_s": median([tr.self_time(s) for s in calls]),
     }
 
 
@@ -276,7 +289,8 @@ def cdc_ingest(ctx) -> dict:
 
     spark, tr = ctx.spark, ctx.tracer
     chunk = BASE // BACKFILL_CHUNKS
-    jd = generate_journal(ctx, BASE + BATCH * TAIL_BATCHES,
+    cycles = op_count(ctx.seconds - BACKFILL_NOMINAL_S, CYCLE_NOMINAL_S)
+    jd = generate_journal(ctx, BASE + BATCH * (WARMUP_CYCLES + cycles),
                           n_paths_per_repo=PATHS_PER_REPO,
                           v2_fraction=V2_FRACTION)
     t = time.perf_counter()
@@ -287,26 +301,21 @@ def cdc_ingest(ctx) -> dict:
     # from its first call, like a backfill a user starts in a fresh session
     ctx.mark_setup_done()
 
-    backfill, commits, lookups, scans = [], [], [], []
+    backfill, cycle_s, lookups, scans = [], [], [], []
     bf_summaries, st_summaries, st_events = [], [], 0
     attempted = failed = 0
+    steady_s = 0.0
     lo = BASE
     table = None
-
-    cycles = min(op_count(ctx.seconds - BACKFILL_NOMINAL_S, CYCLE_NOMINAL_S),
-                 TAIL_BATCHES - 2)
-    # In-loop compaction threshold scaled to the run: every batch adds a
-    # delta to nearly every bucket, so the batch after the warm-up and timed
-    # cycles is the first to exceed it and compacts.  The default, 16, would
-    # first fire after the run ends.
-    max_deltas = 1 + cycles
 
     def batch():
         nonlocal lo
         with tr.span("replay.call"):
             r = replay_journal(spark, jd, loc, chunk_events=BATCH,
                                offset_range=(lo, lo + BATCH - 1),
-                               max_deltas_per_bucket=max_deltas)
+                               n_buckets=N_BUCKETS,
+                               max_deltas_per_bucket=MAX_DELTAS,
+                               analyze_stale_commits=ANALYZE_EVERY)
         lo += BATCH
         return r
 
@@ -314,56 +323,64 @@ def cdc_ingest(ctx) -> dict:
         with tr.span("table.lookup_many"):
             table.lookup_many(keys[lo // BATCH - 1]).collect()
 
-    with tr.span("timed") as loop:
-        try:
-            # backfill: one replay call per chunk
-            for _ in range(BACKFILL_CHUNKS):
-                attempted += 1
-                t0 = time.perf_counter()
-                with tr.span("replay.call"):
-                    r = replay_journal(spark, jd, loc, chunk_events=chunk,
-                                       offset_range=(0, BASE - 1),
-                                       max_batches=1)
-                backfill.append((time.perf_counter() - t0, r["events"]))
-                bf_summaries += r["summaries"]
-            table = SnapshotTable(spark, loc)
-            backfill_bytes = live_bytes(table)
-            # the first steady cycle is untimed warm-up
-            with tr.span("setup.warmup"):
-                batch()
-                lookup()
-            data_before = table.dir_bytes("data")
-            for _ in range(cycles):
-                attempted += 1
-                t0 = time.perf_counter()
-                r = batch()
-                commits.append(time.perf_counter() - t0)
-                st_events += r["events"]
-                st_summaries += r["summaries"]
-                attempted += 1
-                t0 = time.perf_counter()
-                lookup()
-                lookups.append(time.perf_counter() - t0)
-            # untimed: this batch crosses max_deltas and compacts in-loop,
-            # so the median commit is over batches of one kind
-            with tr.span("maintenance"):
-                st_summaries += batch()["summaries"]
+    def scan():
+        with tr.span("table.read") as rec:
+            df = table.read()
+            df.count()
+        if rec is not None:
+            # the broadcast key probe plans as a left anti join
+            rec["mor_probe"] = "LeftAnti" in (
+                df._jdf.queryExecution().analyzed().toString())
+
+    steady = None
+    try:
+        # backfill: one replay call per chunk
+        for _ in range(BACKFILL_CHUNKS):
             attempted += 1
             t0 = time.perf_counter()
-            with tr.span("table.read") as rec:
-                df = table.read()
-                df.count()
-            scans.append(time.perf_counter() - t0)
-            if rec is not None:
-                # the broadcast key probe plans as a left anti join
-                rec["mor_probe"] = "LeftAnti" in (
-                    df._jdf.queryExecution().analyzed().toString())
-        except Exception as e:  # noqa: BLE001 - counted, run reports it
-            ctx.error(e)
-            failed += 1
+            with tr.span("replay.call"):
+                r = replay_journal(spark, jd, loc, chunk_events=chunk,
+                                   offset_range=(0, BASE - 1), max_batches=1,
+                                   n_buckets=N_BUCKETS)
+            backfill.append((time.perf_counter() - t0, r["events"]))
+            bf_summaries += r["summaries"]
+        table = SnapshotTable(spark, loc)
+        backfill_bytes = live_bytes(table)
+        # untimed warm-up cycles, counted as set-up
+        t0 = time.perf_counter()
+        with tr.span("setup.warmup"):
+            for _ in range(WARMUP_CYCLES):
+                batch()
+                lookup()
+        ctx.add_setup(time.perf_counter() - t0)
+        data_before = table.dir_bytes("data")
+        # the timed steady cycles: batch + lookup, with a full scan after
+        # every SCAN_EVERY-th cycle and the last; in-loop compaction and
+        # ANALYZE run inside the batches
+        t_steady = time.perf_counter()
+        with tr.span("steady") as steady:
+            for i in range(cycles):
+                attempted += 2
+                t0 = time.perf_counter()
+                r = batch()
+                t1 = time.perf_counter()
+                lookup()
+                t2 = time.perf_counter()
+                cycle_s.append(t2 - t0)
+                lookups.append(t2 - t1)
+                st_events += r["events"]
+                st_summaries += r["summaries"]
+                if (i + 1) % SCAN_EVERY == 0 or i + 1 == cycles:
+                    attempted += 1
+                    scan()
+                    scans.append(time.perf_counter() - t2)
+        steady_s = time.perf_counter() - t_steady
+    except Exception as e:  # noqa: BLE001 - counted, run reports it
+        ctx.error(e)
+        failed += 1
 
     out = {"attempted": attempted, "failed": failed, "gates": {}, "layers": {}}
-    if failed or not commits:
+    if failed or not cycle_s:
         return out
     steady_bytes = table.dir_bytes("data") - data_before
     counts = merge_counts(bf_summaries + st_summaries, table)
@@ -372,17 +389,25 @@ def cdc_ingest(ctx) -> dict:
                + steady_counts["merge.deletes_applied"])
     per_row = live_bytes(table, deltas=False) / max(table.base_row_count() or 0, 1)
     rates = [ev / s for s, ev in backfill]
-    out["e2e"] = {"op_latency_s": median(commits), "work_per_s": median(rates)}
+    commits = [c - lk for c, lk in zip(cycle_s, lookups)]
+    bf_s, bf_events = sum(s for s, _ in backfill), sum(e for _, e in backfill)
+    out["e2e"] = {
+        "op_latency_s": median(cycle_s),
+        "work_per_s": (bf_events + st_events) / (bf_s + steady_s),
+    }
     out["detail"] = {
-        "replay_events_per_s": median(rates),
+        "replay_events_per_s": bf_events / bf_s,
         "backfill_s": [s for s, _ in backfill],
+        "backfill_events_per_s": rates,
         "backfill_write_amp": (
             sum(table.dir_bytes(s["data_rel"]) for s in bf_summaries
                 if s.get("data_rel")) / max(backfill_bytes, 1)),
+        "steady_s": steady_s,
+        "cycle_p50_s": median(cycle_s),
+        "cycle_s": cycle_s,
         "commit_p50_s": median(commits),
         "commit_p90_s": p90(commits),
         "commits": len(commits),
-        "commit_s": commits,
         "ingest_events_per_s": st_events / sum(commits),
         "steady_write_amp": steady_bytes / max(winners * per_row, 1),
         "lookup_p50_s": median(lookups),
@@ -408,7 +433,8 @@ def cdc_ingest(ctx) -> dict:
 
             def apply(ploc=ploc):
                 replay_journal(spark, jd, ploc, chunk_events=chunk,
-                               offset_range=(0, BASE - 1), max_batches=1)
+                               offset_range=(0, BASE - 1), max_batches=1,
+                               n_buckets=N_BUCKETS)
 
             apply()
             ratios.append(prefix_decomposition(ctx, jd, chunk, 2 * chunk - 1,
@@ -417,16 +443,17 @@ def cdc_ingest(ctx) -> dict:
         layers["table.lookup_buckets"] = median([
             table.bucket_of(spark.createDataFrame(k)).select(
                 BUCKET_COL).distinct().count() for k in list(keys.values())[:3]])
-        # the first lookup span is the warm-up cycle's
+        inside = set(tr.descendants(steady))
         layers["table.lookup_many_p50_s"] = median(
-            [tr.duration(s) for s in tr.named("table.lookup_many")[1:]])
+            [tr.duration(s) for s in tr.named("table.lookup_many")
+             if s["id"] in inside])
         reads = tr.named("table.read")
-        layers["table.read_p50_s"] = median([tr.duration(s) for s in reads]) or 0.0
+        layers["table.read_p50_s"] = median([tr.duration(s) for s in reads])
         layers["table.mor_probe_ratio"] = (
-            sum(s["mor_probe"] for s in reads) / len(reads) if reads else 0.0)
+            sum(s["mor_probe"] for s in reads) / len(reads))
         metrics = SparkMetrics(spark, tr)
         layers.update(prefix_layers(ctx, metrics))
-        layers.update(loop_layers(ctx, metrics, loop))
+        layers.update(loop_layers(ctx, metrics, steady))
         parts = {k: layers[k] for k in SELF_TIMES}
         out["detail"]["apply_batch_self_times_s"] = dict(
             parts, sum=sum(parts.values()),

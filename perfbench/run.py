@@ -63,7 +63,6 @@ PER_LAYER = {
     "merge.conflicts_resolved": "count",
     "merge.touched_buckets": "count",
     "merge.bytes_written": "bytes",
-    "merge.schema_changes": "count",
     "merge.apply_batch_p50_s": "s",
     "merge.jobs_per_batch": "count",
     "merge.delta_batch_ratio": "ratio",
@@ -81,7 +80,7 @@ PER_LAYER = {
     **{f"query.{n}_s": "s" for n in querymix.QUERIES},
     **{f"query.{n}.{k}": u for n in querymix.HEAVY
        for k, u in (("cpu_s", "s"), ("gc_s", "s"), ("shuffle_bytes", "bytes"))},
-    "query.dedup_simhash.max_task_s": "s",
+    f"query.{querymix.STRAGGLER}.max_task_s": "s",
     **{f"udf.{n}.python_bytes_{d}": "bytes" for n in querymix.UDF
        for d in ("sent", "received")},
 }
@@ -108,6 +107,10 @@ class Ctx:
         """Process start -> first timed op, less journal/table generation."""
         self.setup_s = time.perf_counter() - T_PROCESS - self.load_gen_s
         self.mark("setup_done")
+
+    def add_setup(self, seconds: float) -> None:
+        """Untimed work after the first timed op (warm-up) is set-up too."""
+        self.setup_s += seconds
 
     def error(self, e: Exception) -> None:
         self.errors.append(f"{type(e).__name__}: {e}"[:500])
