@@ -13,7 +13,14 @@ import time
 
 from pyspark.sql import functions as F
 
-from harness import SparkMetrics, median, op_count, p90
+from harness import (
+    SparkMetrics,
+    jit_cpu_s,
+    median,
+    op_count,
+    p90,
+    tree_cpu_s,
+)
 
 KEYS = ["repo", "path"]
 VERSION = ["commit_seq", "offset"]
@@ -43,7 +50,7 @@ SCAN_EVERY = 5
 # 5th delta, the table's 7th commit) compacts and runs ANALYZE, and the
 # 4 deltas of the later batches stay under the threshold.  The first timed
 # cycle is also the last to run warm, so it is the one outlier: the median
-# cycle is a plain one, and the maintenance cost shows in work_per_s.
+# cycle is a plain one, and the maintenance cost shows in work_per_cpu_s.
 MAX_DELTAS = 4
 ANALYZE_EVERY = 7
 # nominal costs on a 4-CPU host, used to turn --seconds into a fixed count
@@ -64,10 +71,9 @@ def generate_journal(ctx, n_events: int, **kwargs) -> str:
     state whether or not a seed was seen before."""
     from activedata_etl_spark.journal import write_journal
 
-    t = time.perf_counter()
     path = os.path.join(ctx.work, "journal")
-    write_journal(ctx.spark, n_events, path, seed=ctx.seed, **kwargs)
-    ctx.load_gen_s += time.perf_counter() - t
+    with ctx.load_generation():
+        write_journal(ctx.spark, n_events, path, seed=ctx.seed, **kwargs)
     ctx.mark("journal_done")
     return path
 
@@ -293,18 +299,17 @@ def cdc_ingest(ctx) -> dict:
     jd = generate_journal(ctx, BASE + BATCH * (WARMUP_CYCLES + cycles),
                           n_paths_per_repo=PATHS_PER_REPO,
                           v2_fraction=V2_FRACTION)
-    t = time.perf_counter()
-    keys = _batch_keys(jd)
-    ctx.load_gen_s += time.perf_counter() - t
+    with ctx.load_generation():
+        keys = _batch_keys(jd)
     loc = os.path.join(ctx.work, "table")
     # journal generation has run the JVM's first jobs; the backfill is timed
     # from its first call, like a backfill a user starts in a fresh session
     ctx.mark_setup_done()
 
-    backfill, cycle_s, lookups, scans = [], [], [], []
+    backfill, cycle_s, cycle_cpu, lookups, scans = [], [], [], [], []
     bf_summaries, st_summaries, st_events = [], [], 0
     attempted = failed = 0
-    steady_s = 0.0
+    steady_s = steady_cpu = steady_jit = bf_cpu = 0.0
     lo = BASE
     table = None
 
@@ -335,6 +340,7 @@ def cdc_ingest(ctx) -> dict:
     steady = None
     try:
         # backfill: one replay call per chunk
+        c_bf = tree_cpu_s()
         for _ in range(BACKFILL_CHUNKS):
             attempted += 1
             t0 = time.perf_counter()
@@ -344,28 +350,29 @@ def cdc_ingest(ctx) -> dict:
                                    n_buckets=N_BUCKETS)
             backfill.append((time.perf_counter() - t0, r["events"]))
             bf_summaries += r["summaries"]
+        bf_cpu = tree_cpu_s() - c_bf
         table = SnapshotTable(spark, loc)
         backfill_bytes = live_bytes(table)
         # untimed warm-up cycles, counted as set-up
-        t0 = time.perf_counter()
-        with tr.span("setup.warmup"):
+        with ctx.more_setup(), tr.span("setup.warmup"):
             for _ in range(WARMUP_CYCLES):
                 batch()
                 lookup()
-        ctx.add_setup(time.perf_counter() - t0)
         data_before = table.dir_bytes("data")
         # the timed steady cycles: batch + lookup, with a full scan after
         # every SCAN_EVERY-th cycle and the last; in-loop compaction and
         # ANALYZE run inside the batches
-        t_steady = time.perf_counter()
+        t_steady, c_steady, j_steady = (time.perf_counter(), tree_cpu_s(),
+                                        jit_cpu_s())
         with tr.span("steady") as steady:
             for i in range(cycles):
                 attempted += 2
-                t0 = time.perf_counter()
+                t0, c0 = time.perf_counter(), tree_cpu_s()
                 r = batch()
                 t1 = time.perf_counter()
                 lookup()
                 t2 = time.perf_counter()
+                cycle_cpu.append(tree_cpu_s() - c0)
                 cycle_s.append(t2 - t0)
                 lookups.append(t2 - t1)
                 st_events += r["events"]
@@ -375,6 +382,8 @@ def cdc_ingest(ctx) -> dict:
                     scan()
                     scans.append(time.perf_counter() - t2)
         steady_s = time.perf_counter() - t_steady
+        steady_cpu = tree_cpu_s() - c_steady
+        steady_jit = jit_cpu_s() - j_steady
     except Exception as e:  # noqa: BLE001 - counted, run reports it
         ctx.error(e)
         failed += 1
@@ -392,10 +401,16 @@ def cdc_ingest(ctx) -> dict:
     commits = [c - lk for c, lk in zip(cycle_s, lookups)]
     bf_s, bf_events = sum(s for s, _ in backfill), sum(e for _, e in backfill)
     out["e2e"] = {
-        "op_latency_s": median(cycle_s),
-        "work_per_s": (bf_events + st_events) / (bf_s + steady_s),
+        "op_cpu_s": median(cycle_cpu),
+        "work_per_cpu_s": (bf_events + st_events) / (bf_cpu + steady_cpu),
     }
     out["detail"] = {
+        "op_latency_s": median(cycle_s),
+        "work_per_s": (bf_events + st_events) / (bf_s + steady_s),
+        "cycle_cpu_s": cycle_cpu,
+        "backfill_cpu_s": bf_cpu,
+        "steady_cpu_s": steady_cpu,
+        "steady_jit_cpu_s": steady_jit,
         "replay_events_per_s": bf_events / bf_s,
         "backfill_s": [s for s, _ in backfill],
         "backfill_events_per_s": rates,
@@ -420,6 +435,7 @@ def cdc_ingest(ctx) -> dict:
     layers.update(counts)
     layers["merge.delta_batch_ratio"] = steady_counts["merge.delta_batch_ratio"]
     layers["table.delta_files_live"] = table.delta_stats()["total_delta_dirs"]
+    layers["jvm.jit_cpu_s"] = steady_jit
     out["attempted"] += 1
     ctx.mark("gate")
     out["gates"]["converged"] = converged_gate(spark, loc, jd, lo - 1)

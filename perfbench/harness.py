@@ -76,24 +76,39 @@ def host_record(spark) -> dict:
 # ------------------------------------------------------- memory sampling
 
 
-def _tree_rss_kb(root: int) -> int:
-    """RSS summed over ``root`` and every descendant, read from /proc."""
+def _stat_fields(path: str) -> tuple[str, list[str]] | None:
+    """The command name and the fields after it of a /proc stat file."""
+    try:
+        with open(path) as f:
+            stat = f.read()
+    except OSError:
+        return None
+    # the command name may hold spaces: it ends at the last ')'
+    end = stat.rindex(")")
+    return stat[stat.index("(") + 1:end], stat[end + 2:].split()
+
+
+def _tree_pids(root: int) -> list[int]:
+    """``root`` and every live descendant, read from /proc."""
     children: dict[int, list[int]] = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
             continue
-        try:
-            with open(f"/proc/{name}/stat") as f:
-                stat = f.read()
-        except OSError:
-            continue
-        # the command name may hold spaces: the ppid follows the last ')'
-        ppid = int(stat[stat.rindex(")") + 2:].split()[1])
-        children.setdefault(ppid, []).append(int(name))
-    total, todo = 0, [root]
+        proc = _stat_fields(f"/proc/{name}/stat")
+        if proc is not None:
+            children.setdefault(int(proc[1][1]), []).append(int(name))
+    out, todo = [], [root]
     while todo:
         pid = todo.pop()
+        out.append(pid)
         todo.extend(children.get(pid, []))
+    return out
+
+
+def _tree_rss_kb(root: int) -> int:
+    """RSS summed over ``root`` and every descendant."""
+    total = 0
+    for pid in _tree_pids(root):
         try:
             with open(f"/proc/{pid}/status") as f:
                 for line in f:
@@ -103,6 +118,56 @@ def _tree_rss_kb(root: int) -> int:
         except OSError:
             continue
     return total
+
+
+_TICK_S = 1.0 / os.sysconf("SC_CLK_TCK")
+# HotSpot's JIT compiler threads; ``run.start_session`` keeps them alive
+# for the whole run (-XX:-UseDynamicNumberOfCompilerThreads), so the CPU
+# they burn can be read back and left out.
+_JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def _tree_cpu_ticks() -> tuple[int, int]:
+    """Clock ticks, user + system, of this process and every live
+    descendant (the JVM and its Python workers), each including the
+    children it has reaped, so the difference of two readings counts
+    processes that exited in between; and the ticks of the JIT compiler
+    threads among them."""
+    total = jit = 0
+    for pid in _tree_pids(os.getpid()):
+        proc = _stat_fields(f"/proc/{pid}/stat")
+        if proc is None:
+            continue
+        # utime, stime, cutime, cstime: fields 14-17
+        total += sum(map(int, proc[1][11:15]))
+        try:
+            tids = os.listdir(f"/proc/{pid}/task")
+        except OSError:
+            continue
+        for tid in tids:
+            thread = _stat_fields(f"/proc/{pid}/task/{tid}/stat")
+            if thread is not None and thread[0].startswith(_JIT_THREADS):
+                jit += int(thread[1][11]) + int(thread[1][12])
+    return total, jit
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds of the process tree, less its JIT compiler threads.
+
+    A guest kernel does not charge the time the hypervisor steals to a
+    process, so on a shared host this moves about half as much as wall
+    time from run to run for the same work.  JIT compilation runs on background threads, off the
+    path of any call, and how much of it lands in an interval depends on
+    the compile queue: Spark generates code for every plan, and a minute
+    into a run the C2 threads still burn as much CPU as the task threads.
+    It is reported on its own (:func:`jit_cpu_s`)."""
+    total, jit = _tree_cpu_ticks()
+    return (total - jit) * _TICK_S
+
+
+def jit_cpu_s() -> float:
+    """CPU seconds of the JVM's JIT compiler threads."""
+    return _tree_cpu_ticks()[1] * _TICK_S
 
 
 class RssSampler:

@@ -12,7 +12,7 @@ import random
 import shutil
 import time
 
-from harness import SparkMetrics, median, op_count
+from harness import SparkMetrics, jit_cpu_s, median, op_count, tree_cpu_s
 
 # Heavy registry queries over the three tables, one per operator family:
 # the dedup family, the Arrow/pandas UDF scorers, json-typed props and the
@@ -74,6 +74,11 @@ def oracle_gate(data_dir: str, results: dict) -> dict:
     return {"ok": not bad, "mismatched": bad, "checked": len(results)}
 
 
+def geomean(xs) -> float:
+    xs = list(xs)
+    return math.exp(sum(math.log(x) for x in xs) / len(xs))
+
+
 def query_mix(ctx) -> dict:
     from activedata_etl_spark.plans.queries import SPARK_QUERIES
 
@@ -91,15 +96,17 @@ def query_mix(ctx) -> dict:
     ctx.mark_setup_done()
 
     lat: dict[str, list[float]] = {n: [] for n in order}
-    passes, results = [], {}
+    cpu: dict[str, list[float]] = {n: [] for n in order}
+    passes, pass_cpu, results = [], [], {}
     attempted = failed = 0
+    jit = jit_cpu_s()
     with tr.span("timed"):
         for _ in range(op_count(ctx.seconds, NOMINAL_PASS_S)):
             sf = _pass_dir(DATA, os.path.join(ctx.work, f"pass{len(passes)}"))
-            t_pass = time.perf_counter()
+            t_pass, c_pass = time.perf_counter(), tree_cpu_s()
             for name in order:
                 attempted += 1
-                t0 = time.perf_counter()
+                t0, c0 = time.perf_counter(), tree_cpu_s()
                 try:
                     with tr.span(f"query.{name}"):
                         results[name] = SPARK_QUERIES[name](spark, sf).toPandas()
@@ -108,27 +115,33 @@ def query_mix(ctx) -> dict:
                     failed += 1
                     continue
                 lat[name].append(time.perf_counter() - t0)
+                cpu[name].append(tree_cpu_s() - c0)
             passes.append(time.perf_counter() - t_pass)
+            pass_cpu.append(tree_cpu_s() - c_pass)
             if failed:
                 break
+    jit = jit_cpu_s() - jit
 
     out = {"attempted": attempted + 1, "failed": failed, "gates": {}}
     per_query = {n: median(v) for n, v in lat.items()}
+    per_query_cpu = {n: median(v) for n, v in cpu.items()}
+    n_done = sum(map(len, lat.values()))
+    out["detail"] = {"query_mix_s": median(passes), "passes": passes,
+                     "pass_cpu_s": pass_cpu, "queries": per_query,
+                     "queries_cpu_s": per_query_cpu, "jit_cpu_s": jit}
     if not failed:
-        # each query weighs the same in the typical latency (the geometric
+        # each query weighs the same in the typical cost (the geometric
         # mean of the per-query medians); the throughput is dominated by
         # the slow queries, so the two figures move differently
-        out["e2e"] = {
-            "op_latency_s": math.exp(sum(math.log(v) for v in per_query.values())
-                                     / len(per_query)),
-            "work_per_s": sum(map(len, lat.values())) / sum(passes),
-        }
-    out["detail"] = {"query_mix_s": median(passes), "passes": passes,
-                     "queries": per_query}
+        out["e2e"] = {"op_cpu_s": geomean(per_query_cpu.values()),
+                      "work_per_cpu_s": n_done / sum(pass_cpu)}
+        out["detail"].update(op_latency_s=geomean(per_query.values()),
+                             work_per_s=n_done / sum(passes))
     out["gates"]["oracle"] = oracle_gate(sf, results)
     shutil.rmtree(warm, ignore_errors=True)
 
     layers = {f"query.{n}_s": median(v) or 0.0 for n, v in lat.items()}
+    layers["jvm.jit_cpu_s"] = jit
     if ctx.trace:
         metrics = SparkMetrics(spark, tr)
         spans = {n: tr.named(f"query.{n}") for n in order}

@@ -27,8 +27,10 @@ import os  # noqa: E402
 import shutil  # noqa: E402
 import sys  # noqa: E402
 import traceback  # noqa: E402
+from contextlib import contextmanager  # noqa: E402
 
 import querymix  # noqa: E402
+from harness import tree_cpu_s  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -36,8 +38,8 @@ ROOT = os.path.dirname(HERE)
 # name -> unit; kept equal to BENCHMARK.json (the smoke test checks it)
 E2E = {
     "setup_s": "s",
-    "op_latency_s": "s",
-    "work_per_s": "1/s",
+    "op_cpu_s": "s",
+    "work_per_cpu_s": "1/s",
 }
 PER_LAYER = {
     "session.start_s": "s",
@@ -77,6 +79,7 @@ PER_LAYER = {
     "table.delta_files_live": "count",
     "table.mor_probe_ratio": "ratio",
     "replay.driver_self_s": "s",
+    "jvm.jit_cpu_s": "s",
     **{f"query.{n}_s": "s" for n in querymix.QUERIES},
     **{f"query.{n}.{k}": u for n in querymix.HEAVY
        for k, u in (("cpu_s", "s"), ("gc_s", "s"), ("shuffle_bytes", "bytes"))},
@@ -89,28 +92,47 @@ WORKLOADS = ("cdc_ingest", "query_mix")
 
 class Ctx:
     """What a workload function needs: the session, the tracer, the seed and
-    run length, its directories, and the set-up clock."""
+    run length, its directories, and the set-up clocks.  Set-up is counted
+    both in CPU seconds (``setup_s``, see ``harness.tree_cpu_s``) and in
+    wall seconds (``setup_wall_s``, detail line only)."""
 
     def __init__(self, spark, tracer, seed, seconds, trace, work):
         self.spark, self.tracer = spark, tracer
         self.seed, self.seconds, self.trace = seed, seconds, trace
         self.work = work
-        self.load_gen_s = 0.0
-        self.setup_s = None
+        self.load_gen_s = self.load_gen_cpu_s = 0.0
+        self.setup_s = self.setup_wall_s = None
         self.errors: list[str] = []
         self.marks: dict[str, float] = {}
 
     def mark(self, name: str) -> None:
         self.marks[name] = time.perf_counter() - T_PROCESS
 
+    @contextmanager
+    def load_generation(self):
+        """Journal generation is the load generator: kept out of set-up."""
+        t, c = time.perf_counter(), tree_cpu_s()
+        try:
+            yield
+        finally:
+            self.load_gen_s += time.perf_counter() - t
+            self.load_gen_cpu_s += tree_cpu_s() - c
+
     def mark_setup_done(self) -> None:
-        """Process start -> first timed op, less journal/table generation."""
-        self.setup_s = time.perf_counter() - T_PROCESS - self.load_gen_s
+        """Process start -> first timed op, less load generation."""
+        self.setup_s = tree_cpu_s() - self.load_gen_cpu_s
+        self.setup_wall_s = time.perf_counter() - T_PROCESS - self.load_gen_s
         self.mark("setup_done")
 
-    def add_setup(self, seconds: float) -> None:
+    @contextmanager
+    def more_setup(self):
         """Untimed work after the first timed op (warm-up) is set-up too."""
-        self.setup_s += seconds
+        t, c = time.perf_counter(), tree_cpu_s()
+        try:
+            yield
+        finally:
+            self.setup_wall_s += time.perf_counter() - t
+            self.setup_s += tree_cpu_s() - c
 
     def error(self, e: Exception) -> None:
         self.errors.append(f"{type(e).__name__}: {e}"[:500])
@@ -131,7 +153,9 @@ def start_session(work: str, trace: bool):
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = harness.DRIVER_MEM
     conf = {
         "spark.driver.extraJavaOptions":
-            f"-Djava.io.tmpdir={os.path.join(work, 'tmp')} -XX:-UsePerfData",
+            f"-Djava.io.tmpdir={os.path.join(work, 'tmp')} -XX:-UsePerfData"
+            # JIT threads live as long as the JVM (see harness.tree_cpu_s)
+            " -XX:-UseDynamicNumberOfCompilerThreads",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.driver.host": "127.0.0.1",
         "spark.driver.bindAddress": "127.0.0.1",
@@ -222,6 +246,7 @@ def main(argv=None) -> int:
         "seconds": args.seconds, "trace": args.trace,
         "host": host,
         "load_generation_s": ctx.load_gen_s,
+        "setup_wall_s": ctx.setup_wall_s,
         # RSS summed over this process, the JVM and the Python workers
         "peak_rss_mb": peak_mb,
         "gates": gates,

@@ -58,7 +58,8 @@ def exercised(workload: str, names) -> list[str]:
     """The per-layer metrics a smoke run of ``workload`` must make
     non-zero."""
     if workload == "query_mix":
-        return [k for k in names if k.startswith(("session.", "setup."))
+        return [k for k in names
+                if k.startswith(("session.", "setup.", "jvm."))
                 or any(k == f"query.{q}_s" or (k.startswith((f"query.{q}.",
                                                               f"udf.{q}."))
                                                and not k.endswith(".gc_s"))
