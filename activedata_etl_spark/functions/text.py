@@ -46,11 +46,6 @@ def punct_ratio(text: Column) -> Column:
     return n / F.greatest(F.length(text), F.lit(1))
 
 
-def upper_ratio(text: Column) -> Column:
-    n = F.size(F.regexp_extract_all(text, F.lit("[A-Z]"), 0))
-    return n / F.greatest(F.length(text), F.lit(1))
-
-
 def digit_ratio(text: Column) -> Column:
     n = F.size(F.regexp_extract_all(text, F.lit("[0-9]"), 0))
     return n / F.greatest(F.length(text), F.lit(1))

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from activedata_etl_spark.lake.schema_evolution import read_parquet
+
 # bit-reversal of 4-bit block positions -> bounded-delay (<16) permutation
 _BITREV16 = [0, 8, 4, 12, 2, 10, 6, 14, 1, 9, 5, 13, 3, 11, 7, 15]
 
@@ -199,35 +201,13 @@ def write_journal(
     return out_dir
 
 
-def _segment_schema(seg_dir: str):
-    """Spark schema of one journal segment from a single parquet footer,
-    read driver-side with pyarrow — avoids the per-segment schema-inference
-    Spark JOB that ``spark.read.parquet`` otherwise runs (2 serial jobs,
-    ~2 s of fixed cost per replay, paid identically at every cluster size)."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    try:
-        from pyspark.sql.pandas.types import from_arrow_schema
-    except ImportError:  # older pyspark: fall back to inference
-        return None
-    files = sorted(_glob.glob(f"{seg_dir}/*.parquet"))
-    if not files:
-        return None
-    try:
-        return from_arrow_schema(pq.ParquetFile(files[0]).schema_arrow)
-    except Exception:
-        return None
-
-
 def read_journal(spark: SparkSession, journal_dir: str) -> DataFrame:
     """Read all segments, aligning schemas (missing ``mode`` -> null).
 
     Per-segment reads + unionByName instead of ``mergeSchema`` — the latter
     distributes a footer-merging job over every file on each invocation;
     segment schemas come from one driver-side footer read each (no Spark
-    job at all on the happy path).
+    job at all on the happy path; see ``read_parquet``).
     """
     import glob as _glob
 
@@ -236,9 +216,7 @@ def read_journal(spark: SparkSession, journal_dir: str) -> DataFrame:
         return spark.read.parquet(journal_dir)
     out = None
     for d in seg_dirs:
-        schema = _segment_schema(d)
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        df = reader.parquet(d)
+        df = read_parquet(spark, d)
         out = df if out is None else out.unionByName(df, allowMissingColumns=True)
     return out
 

@@ -8,11 +8,19 @@ do not merge with scalars.  The jx-side equivalent is ``merge_types`` at
 New columns are additive (analog of ``Index.add_property``,
 ``elasticsearch.py:419-432`` / ``net_new_properties``,
 ``vendor/mo_json/typed_encoder.py:137``) and always nullable.
+
+The physical schema of a written parquet dir comes from one footer
+(``read_parquet``), so table and journal reads plan without a
+schema-inference job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import glob
+import json
+import os
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -92,3 +100,51 @@ def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols)
+
+
+# the key under which Spark stores its own schema JSON in every parquet
+# footer it writes; Spark's schema inference reads it first, too
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(*dirs: str) -> T.StructType | None:
+    """Spark schema of the first parquet file under ``dirs``, read from its
+    footer driver-side with pyarrow.  ``spark.read.parquet`` otherwise infers
+    the schema with a Spark job of its own on every call.
+
+    A Spark-written footer carries Spark's schema JSON, which is what
+    inference would return; a footer without it (pyarrow-written) converts
+    from the Arrow schema.  Returns None when no footer can be read (no
+    ``*.parquet`` file, an unreadable footer, or a type the conversion does
+    not cover): the caller then infers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        from pyspark.sql.pandas.types import from_arrow_schema
+    except ImportError:  # older pyspark: fall back to inference
+        return None
+    for d in dirs:
+        files = sorted(glob.glob(os.path.join(d, "*.parquet")))
+        if not files:
+            continue
+        try:
+            arrow = pq.read_schema(files[0])
+            spark_json = (arrow.metadata or {}).get(_SPARK_ROW_METADATA)
+            if spark_json is not None:
+                return T.StructType.fromJson(json.loads(spark_json))
+            return from_arrow_schema(arrow)
+        except (OSError, KeyError, TypeError, ValueError, pa.ArrowException):
+            return None
+    return None
+
+
+def read_parquet(spark: SparkSession, *dirs: str) -> DataFrame:
+    """``spark.read.parquet(*dirs)`` with the schema taken from one footer
+    (:func:`footer_schema`), so the read plans without a schema-inference
+    job.  Every file under ``dirs`` must share that physical schema — true
+    for the output of one write.  Falls back to inference when no footer
+    can be read."""
+    schema = footer_schema(*dirs)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*dirs)

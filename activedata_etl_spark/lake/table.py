@@ -47,7 +47,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from activedata_etl_spark.lake.schema_evolution import align_to_schema
+from activedata_etl_spark.lake.schema_evolution import (
+    align_to_schema,
+    read_parquet,
+)
 
 
 class CommitConflictError(RuntimeError):
@@ -424,7 +427,10 @@ class SnapshotTable:
         schemas (pre-widening); each same-version group is read in one
         parquet scan and upcast on the fly — column pruning and predicate
         pushdown still reach the parquet reader because alignment is a plain
-        projection on top of the scan.
+        projection on top of the scan.  A group is the output of one write,
+        so its physical schema comes from one footer read driver-side
+        (``read_parquet``): a read plans with no schema-inference job per
+        group, and its job count stays flat as delta chains grow.
         """
         by_version: dict[int, list[str]] = {}
         for d, b in pairs:
@@ -437,8 +443,8 @@ class SnapshotTable:
             existing = [p for p in paths if os.path.exists(p)]
             if not existing:
                 continue
-            raw = self.spark.read.parquet(*existing)
-            parts.append(align_to_schema(raw, schema))
+            parts.append(align_to_schema(
+                read_parquet(self.spark, *existing), schema))
         if not parts:
             return None
         out = parts[0]
@@ -678,39 +684,10 @@ class SnapshotTable:
         10^10 rows / 8k buckets that is ~250 MB instead of ~2 TB.  ``keys``
         must bind EVERY key column — the hash needs all of them.  Result ==
         ``read().where(<key equality>)``, including read-time LWW delta
-        merge and tombstone filtering.
-
-        The bucket id is computed with the engine's own hash expression (a
-        1-row local job) so it can never drift from the write path's
-        murmur3, including type coercions.
+        merge and tombstone filtering; see :meth:`lookup_many`.
         """
-        snap = self.snapshot(version)
-        key_cols = snap["key_cols"]
-        missing = [c for c in key_cols if c not in keys]
-        if missing:
-            raise ValueError(
-                f"lookup needs every key column of {key_cols}; missing "
-                f"{missing} (hash pruning cannot bind a partial key)"
-            )
-        schema = T.StructType.fromJson(snap["schema"])
-        dtypes = {f.name: f.dataType for f in schema.fields}
-        lits = [F.lit(keys[c]).cast(dtypes[c]) for c in key_cols]
-        b = (
-            self.spark.range(1)
-            .select(
-                F.pmod(F.hash(*lits), F.lit(snap["n_buckets"]))
-                .cast("int").alias("b")
-            )
-            .first()["b"]
-        )
-        df = self.read(
-            buckets=[b], include_tombstones=include_tombstones,
-            version=version,
-        )
-        cond = F.lit(True)
-        for c in key_cols:
-            cond = cond & (F.col(c) == F.lit(keys[c]).cast(dtypes[c]))
-        return df.where(cond)
+        return self.lookup_many(
+            [keys], version=version, include_tombstones=include_tombstones)
 
     def lookup_many(
         self,
@@ -719,17 +696,29 @@ class SnapshotTable:
         version: int | None = None,
         include_tombstones: bool = False,
     ) -> DataFrame:
-        """Batched point lookup: N full keys -> rows, scanning only the
-        UNION of the keys' buckets (one job, not N ``lookup`` calls).
+        """Batched point lookup: N full keys -> their rows, equal to
+        ``read().where(<OR of the keys' equalities>)`` (table column order,
+        duplicate keys matched once), scanning only the UNION of the keys'
+        buckets.
 
-        Bucket ids for all keys come from a single local job over the
-        engine's own hash expression; the pruned read is then inner-joined
-        (broadcast — the key list is small by construction) against the
-        requested keys.  For a key list approaching the bucket count a
-        plain ``read().join(keys)`` is the better plan; this is the
-        O(|keys|) access path for dashboards/debugging, not a join
-        replacement.
+        Bucket ids come from the engine's own hash expression projected
+        over a local frame of the keys, so they can never drift from the
+        write path's murmur3, type coercions included.  The frame is built
+        from Arrow, which plans as a LocalRelation: Catalyst folds the
+        projection into it and the collect runs no Spark job.
+
+        The keys then filter the bucket-pruned read as an OR of per-key
+        equality conjunctions.  The predicate refers only to the LWW
+        grouping keys, so Catalyst pushes it through the read-time MOR merge
+        (the structmax aggregate, the broadcast probe's anti/semi joins and
+        the union) into the parquet scans: the merge shuffles only the
+        looked-up keys' rows, not whole buckets.  The predicate grows with
+        the key list — this is the O(|keys|) access path for
+        dashboards/debugging; for a key list approaching the table, join
+        ``read()`` against the keys instead.
         """
+        import pyarrow as pa
+
         if not keys:
             raise ValueError("lookup_many needs at least one key dict")
         snap = self.snapshot(version)
@@ -739,25 +728,31 @@ class SnapshotTable:
             if missing:
                 raise ValueError(
                     f"every key must bind all of {key_cols}; one is missing "
-                    f"{missing}"
+                    f"{missing} (hash pruning cannot bind a partial key)"
                 )
         schema = T.StructType.fromJson(snap["schema"])
         dtypes = {f.name: f.dataType for f in schema.fields}
+        rows = list(dict.fromkeys(tuple(k[c] for c in key_cols) for k in keys))
         kdf = self.spark.createDataFrame(
-            [tuple(k[c] for c in key_cols) for k in keys],
+            pa.table({c: [r[i] for r in rows] for i, c in enumerate(key_cols)}),
             T.StructType([T.StructField(c, dtypes[c], True) for c in key_cols]),
         )
-        buckets = [
+        buckets = sorted({
             r["b"] for r in kdf.select(
-                F.pmod(F.hash(*[F.col(c) for c in key_cols]),
-                       F.lit(snap["n_buckets"])).cast("int").alias("b")
-            ).distinct().collect()
-        ]
-        df = self.read(
+                _bucket_expr(key_cols, snap["n_buckets"]).alias("b")
+            ).collect()
+        })
+        cond = None
+        for r in rows:
+            term = None
+            for c, v in zip(key_cols, r):
+                eq = F.col(c) == F.lit(v).cast(dtypes[c])
+                term = eq if term is None else term & eq
+            cond = term if cond is None else cond | term
+        return self.read(
             buckets=buckets, include_tombstones=include_tombstones,
-            version=version,
-        )
-        return df.join(F.broadcast(kdf.distinct()), key_cols)
+            version=snap["version"],
+        ).where(cond)
 
     def existing_bucket_paths(self, buckets: list[int]) -> list[str]:
         """Physical data paths among ``buckets`` (a delete can empty a bucket,
@@ -1678,4 +1673,7 @@ class SnapshotTable:
         dirs = [d for d in dirs if os.path.exists(d)]
         if not dirs:
             raise FileNotFoundError("no lineage recorded yet")
-        return self.spark.read.parquet(*dirs)
+        from activedata_etl_spark.lake.merge import LINEAGE_SCHEMA
+
+        # merge._commit writes this fixed schema driver-side: no inference
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(*dirs)

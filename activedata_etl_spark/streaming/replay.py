@@ -523,8 +523,3 @@ def split_sink(tables: list[SnapshotTable], **apply_kwargs):
             )
 
     return sink
-
-
-def noop_sink(df: DataFrame, epoch_id: int) -> None:
-    """Dev-null sink (`activedata_etl/sinks/dummy_sink.py` analog)."""
-    df.write.format("noop").mode("overwrite").save()

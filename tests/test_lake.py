@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1118,6 +1120,170 @@ def test_mor_broadcast_probe_matches_shuffle_merge(spark, tmp_path):
     ) == ["f8.py"]
     assert [r["content"] for r in
             table.lookup({"repo": "r", "path": "f6.py"}).collect()] == ["FRESH"]
+
+
+def _key_filter(keys):
+    cond = None
+    for k in keys:
+        term = (F.col("repo") == k["repo"]) & (F.col("path") == k["path"])
+        cond = term if cond is None else cond | term
+    return cond
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_lookup_equals_filtered_read_on_both_mor_paths(spark, tmp_path):
+    """lookup / lookup_many == read().where(<key equality>) through a live
+    delta chain, on the broadcast-probe and the shuffle MOR path: stale and
+    fresh deltas, a tombstoned key (include_tombstones both ways), a column
+    widened after the base dir was written, duplicate and nonexistent
+    keys.  The result keeps the table's column order."""
+    loc = str(tmp_path / "lake_lookup_eq")
+    s1 = COLS_V1 + ", size int"
+    s2 = COLS_V1 + ", size double"
+    rows = [
+        (0, i, i, "insert", "r", f"f{i}.py", "c" * 12, None, "X" * 50, None, i)
+        for i in range(100)
+    ]
+    b0 = spark.createDataFrame(rows, s1)
+    table = ensure_table(spark, loc, b0.schema, n_buckets=8)
+    apply_batch(table, _norm(b0), 0)
+    b1 = spark.createDataFrame(
+        [
+            (0, 200, 3, "update", "r", "f5.py", "d" * 12, None, "STALE", None,
+             0.5),
+            (0, 201, 201, "update", "r", "f6.py", "d" * 12, None, "FRESH",
+             None, 1.5),
+            (0, 202, 202, "delete", "r", "f8.py", "d" * 12, None, None, None,
+             None),
+            (0, 203, 203, "insert", "r", "fNEW.py", "e" * 12, None, "N", None,
+             2.5),
+        ],
+        s2,
+    )
+    assert apply_batch(table, _norm(b1), 1, merge_mode="delta")[
+        "merge_mode"] == "delta"
+    b2 = spark.createDataFrame(
+        [(0, 204, 204, "update", "r", "f6.py", "d" * 12, None, "FRESHER",
+          None, 3.5)],
+        s2,
+    )
+    apply_batch(table, _norm(b2), 2, merge_mode="delta")
+    assert len(table.snapshot()["delta_dirs"]) >= 3  # live delta chains
+
+    keys = [{"repo": "r", "path": p} for p in (
+        "f0.py", "f5.py", "f6.py", "f8.py", "fNEW.py", "nope.py", "f6.py")]
+    for path in ("probe", "shuffle"):
+        t = SnapshotTable(spark, loc)
+        if path == "probe":
+            t.MOR_BROADCAST_MIN_BASE_RATIO = 0
+        else:
+            t.MOR_BROADCAST_MAX_DELTA_BYTES = -1
+        for tomb in (False, True):
+            full = t.read(include_tombstones=tomb)
+            got = t.lookup_many(keys, include_tombstones=tomb)
+            plan = got._jdf.queryExecution().analyzed().toString()
+            assert ("LeftAnti" in plan) == (path == "probe")
+            if path == "shuffle":
+                # the key predicate reaches every parquet scan, below the
+                # LWW aggregate
+                scans = re.findall(
+                    r"PushedFilters: \[([^\]]*)\]",
+                    got._jdf.queryExecution().executedPlan().toString())
+                assert scans and all("EqualTo(path" in f for f in scans)
+            assert got.columns == full.columns
+            assert _rows(got) == _rows(full.where(_key_filter(keys)))
+            for k in keys:
+                one = t.lookup(k, include_tombstones=tomb)
+                assert one.columns == full.columns
+                assert _rows(one) == _rows(full.where(_key_filter([k])))
+            by_path = {r["path"]: r for r in got.collect()}
+            assert sorted(by_path) == sorted(
+                ["f0.py", "f5.py", "f6.py", "fNEW.py"] + (["f8.py"] if tomb
+                                                          else []))
+            # base dir written as int, read widened to double
+            assert isinstance(by_path["f0.py"]["size"], float)
+            assert by_path["f5.py"]["content"] == "X" * 50
+            assert by_path["f6.py"]["content"] == "FRESHER"
+            if tomb:
+                assert by_path["f8.py"]["__deleted"] is True
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs that ``fn`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_job_count_flat_as_delta_chain_grows(spark, tmp_path):
+    """Table reads plan with no schema-inference job per data dir, and a
+    lookup hashes its keys with no job: a lookup and a full count run the
+    same number of jobs with 1 and with 4 live delta versions."""
+    table = _mk_base(spark, str(tmp_path / "lake_jobs"), n=100, n_buckets=8)
+    key = {"repo": "r", "path": "f7.py"}
+    counts = {}
+    for n in range(1, 5):
+        b = spark.createDataFrame(
+            [(0, 100 + n, 100 + n, "update", "r", "f7.py", "d" * 12, None,
+              f"N{n}", None)],
+            COLS_V1,
+        )
+        apply_batch(table, _norm(b), n, merge_mode="delta")
+        if n not in (1, 4):
+            continue
+        for path, attr, v in (("probe", "MOR_BROADCAST_MIN_BASE_RATIO", 0),
+                              ("shuffle", "MOR_BROADCAST_MAX_DELTA_BYTES", -1)):
+            t = SnapshotTable(spark, table.location)
+            setattr(t, attr, v)
+            counts[(n, path)] = (
+                _jobs(spark, lambda: t.lookup(key).collect()),
+                _jobs(spark, lambda: t.read().count()),
+            )
+    assert max(len(r) for r in table.snapshot()["delta_dirs"].values()) == 4
+    for path in ("probe", "shuffle"):
+        assert counts[(1, path)] == counts[(4, path)], counts
+    assert [r["content"] for r in table.lookup(key).collect()] == ["N4"]
+
+
+def test_footer_schema_and_inference_fallback(spark, tmp_path):
+    """read_parquet takes the schema inference would give from one footer,
+    and falls back to inference where no ``*.parquet`` footer exists."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from activedata_etl_spark.lake.schema_evolution import (
+        footer_schema,
+        read_parquet,
+    )
+
+    written = str(tmp_path / "spark_written")
+    spark.createDataFrame(
+        [(1, "a", None, [1.5])], "i int, s string, ts timestamp, xs array<double>"
+    ).write.parquet(written)
+    assert read_parquet(spark, written).schema == spark.read.parquet(
+        written).schema
+    assert footer_schema(written) is not None
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert footer_schema(str(empty)) is None
+    # a parquet file without the extension: no footer to read, Spark infers
+    odd = tmp_path / "no_ext"
+    odd.mkdir()
+    pq.write_table(pa.table({"k": [1, 2]}), str(odd / "part-0"))
+    assert footer_schema(str(odd)) is None
+    assert sorted(r["k"] for r in read_parquet(spark, str(odd)).collect()) == [
+        1, 2]
 
 
 def test_streaming_tail_exports_es_continuously(spark, tmp_path):
