@@ -44,7 +44,6 @@ def main() -> None:
     spark = get_spark(f"bench_inc_{mode}", parallelism=par, shuffle_partitions=32)
     journal = read_journal(spark, journal_dir)
     meta = journal_metadata(journal_dir, spark)
-    partitions = meta["partitions"]
     need = base_events + inc_events * inc_batches
     if meta["max_offset"] + 1 < need:
         # empty offset ranges would silently measure nothing and report
@@ -67,9 +66,7 @@ def main() -> None:
         b = journal.where(F.col("offset").between(lo, hi))
         return apply_batch(
             table, normalize_keys(b), batch_id,
-            finalize_fn=finalize_records, persist=False,
-            lineage_level="summary", merge_mode=merge_mode,
-            precomputed_watermarks={p: hi for p in partitions},
+            finalize_fn=finalize_records, merge_mode=merge_mode,
         )
 
     t0 = time.time()

@@ -89,15 +89,11 @@ def main() -> None:
         scratch = lake_dir + "_warm"
         replay_journal(
             spark, journal_dir, scratch, chunk_events=warm,
-            offset_range=(0, warm - 1), salted=salted, persist=False,
-            lineage_level="summary",
-            lww_strategy=os.environ.get("SPARK_GRAFT_LWW", "structmax"),
+            offset_range=(0, warm - 1), salted=salted,
         )
         shutil.rmtree(scratch, ignore_errors=True)
     r = replay_journal(
-        spark, journal_dir, lake_dir, chunk_events=chunk,
-        salted=salted, persist=False, lineage_level="summary",
-        lww_strategy=os.environ.get("SPARK_GRAFT_LWW", "structmax"),
+        spark, journal_dir, lake_dir, chunk_events=chunk, salted=salted
     )
     print(json.dumps({
         "par": par,

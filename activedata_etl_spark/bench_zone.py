@@ -122,17 +122,15 @@ def main() -> None:
     # tail (touches ~n_tail keys, i.e. few buckets) -> fresh ANALYZE
     replay_journal(
         spark, jd, loc, chunk_events=n_base, n_buckets=n_buckets,
-        offset_range=(0, n_base - 1), persist=False, lineage_level="summary",
-        analyze_stale_commits=None,
+        offset_range=(0, n_base - 1), analyze_stale_commits=None,
     )
     t = SnapshotTable(spark, loc)
     t.compact(sort_by=["commit_seq"])
     # the base frontier: every base row's commit_seq is below it
     base_max = t.read().agg({"commit_seq": "max"}).first()[0]
     replay_journal(
-        spark, jd, loc, chunk_events=n_tail, persist=False,
-        offset_range=(n_base, n_base + n_tail - 1), lineage_level="summary",
-        analyze_stale_commits=None,
+        spark, jd, loc, chunk_events=n_tail,
+        offset_range=(n_base, n_base + n_tail - 1), analyze_stale_commits=None,
     )
     t.analyze()
     snap = t.snapshot()

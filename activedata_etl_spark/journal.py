@@ -224,49 +224,30 @@ def read_journal(spark: SparkSession, journal_dir: str) -> DataFrame:
 def journal_metadata(
     journal_dir: str, spark: SparkSession | None = None, file_threshold: int = 2000
 ) -> dict:
-    """max offset + journal-partition id range.  Small journals: parquet
-    footer stats read driver-side (no Spark job).  Past ``file_threshold``
-    files the serial footer walk stops scaling (100k files at 10^10 events),
-    so the stats come from one column-pruned distributed agg instead —
-    parquet min/max row-group stats make it a metadata-ish scan."""
+    """max offset.  Small journals: parquet footer stats read driver-side
+    (no Spark job).  Past ``file_threshold`` files the serial footer walk
+    stops scaling (100k files at 10^10 events), so the max comes from one
+    column-pruned distributed agg instead — parquet min/max row-group stats
+    make it a metadata-ish scan."""
     import glob as _glob
 
     import pyarrow.parquet as pq
 
     files = _glob.glob(f"{journal_dir.rstrip('/')}/**/*.parquet", recursive=True)
     if spark is not None and len(files) > file_threshold:
-        row = (
-            read_journal(spark, journal_dir)
-            .agg(
-                F.max("offset").alias("mo"),
-                F.min("partition").alias("pmin"),
-                F.max("partition").alias("pmax"),
-            )
-            .first()
-        )
-        parts = (
-            list(range(int(row["pmin"]), int(row["pmax"]) + 1))
-            if row["pmin"] is not None else []
-        )
-        return {"max_offset": row["mo"], "partitions": parts}
+        row = read_journal(spark, journal_dir).agg(F.max("offset")).first()
+        return {"max_offset": row[0]}
 
     max_offset = None
-    p_min = p_max = None
     for f in files:
         md = pq.ParquetFile(f).metadata
         schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
         off_i = schema_names.index("offset")
-        part_i = schema_names.index("partition")
         for rg in range(md.num_row_groups):
             so = md.row_group(rg).column(off_i).statistics
-            sp = md.row_group(rg).column(part_i).statistics
             if so is not None and so.has_min_max:
                 max_offset = so.max if max_offset is None else max(max_offset, so.max)
-            if sp is not None and sp.has_min_max:
-                p_min = sp.min if p_min is None else min(p_min, sp.min)
-                p_max = sp.max if p_max is None else max(p_max, sp.max)
-    partitions = list(range(int(p_min), int(p_max) + 1)) if p_min is not None else []
-    return {"max_offset": max_offset, "partitions": partitions}
+    return {"max_offset": max_offset}
 
 
 def expected_state_df(journal: DataFrame) -> DataFrame:

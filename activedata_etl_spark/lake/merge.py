@@ -15,15 +15,18 @@ Semantics (reference parity):
 - lineage per batch/partition (`EtlHeadGenerator`,
   `activedata_etl/transforms/__init__.py:210-239`).
 
-Physical plan: within-batch LWW reduce (map-side combining hash agg) ->
-bucket id (Iceberg-style hash bucket transform) -> FULL OUTER join against
-ONLY the touched buckets of the table -> copy-on-write rewrite of those
-buckets -> atomic snapshot swap.  Merge metrics ride the write job via
-``DataFrame.observe`` (zero extra passes).
+Physical plan: one per-partition pre-pass (lineage counters, watermarks,
+touched buckets) over the cached batch -> within-batch LWW reduce
+(map-side combining hash agg) -> bucket id on the winners (Iceberg-style
+hash bucket transform) -> upsert, MOR delta append, or FULL OUTER join
+against ONLY the touched buckets with a copy-on-write rewrite -> atomic
+snapshot swap.  Merge metrics ride the write job via ``DataFrame.observe``
+(zero extra passes).
 """
 
 from __future__ import annotations
 
+import os
 import time
 import uuid as _uuid
 from itertools import chain
@@ -39,10 +42,20 @@ from activedata_etl_spark.lake.table import (
     DELETED_COL,
     CommitConflictError,
     SnapshotTable,
+    _bucket_expr,
 )
-from activedata_etl_spark.operators.lww import lww_reduce, lww_reduce_structmax
+from activedata_etl_spark.operators.lww import (
+    lww_reduce_salted,
+    lww_reduce_structmax,
+)
 
-ENVELOPE_DROP = ["op", "partition"]  # journal envelope not stored in the table
+# journal envelope columns a batch carries
+OP_COL, PARTITION_COL, OFFSET_COL, TS_COL = "op", "partition", "offset", "ts"
+ENVELOPE_DROP = [OP_COL, PARTITION_COL]  # journal envelope not stored in the table
+
+# merge_mode="auto" writes a MOR delta when the batch's live rows are under
+# this fraction of the table's base rows, else a CoW rewrite
+DELTA_FRACTION = 0.05
 
 # consolidate per-commit lineage dirs into one file past this many entries
 # (keeps snapshot JSON + read_lineage O(1) instead of O(batches ever applied))
@@ -62,33 +75,38 @@ def apply_batch(
     batch: DataFrame,
     batch_id: int,
     *,
-    op_col: str = "op",
     version_cols: tuple[str, ...] = ("commit_seq", "offset"),
-    partition_col: str = "partition",
-    offset_col: str = "offset",
     salted: bool = False,
-    validate_cols: tuple[str, ...] = ("repo", "path"),
     late_threshold_sec: int | None = None,
-    ts_col: str = "ts",
     finalize_fn=None,
-    persist: bool = True,
     enforce_watermark: bool = True,
-    lineage_level: str = "full",
-    precomputed_watermarks: dict[int, int] | None = None,
-    lww_strategy: str = "structmax",
     merge_mode: str = "auto",
-    delta_fraction: float = 0.05,
     advance_fence: bool = True,
 ) -> dict:
     """Apply one micro-batch of change events; returns a lineage summary.
 
-    ``advance_fence=False`` is REPAIR mode: the batch is merged through the
-    same versioned LWW path, but the commit keeps the table's batch fence
-    and per-partition watermarks unchanged — committed chunks can be
-    re-applied idempotently (the external_gte version guard makes stale
-    rows lose, lost rows reinsert) without fencing anything in or out of
-    later replays.  Callers must also disable ``enforce_watermark`` or the
-    re-applied events are dropped at the watermark filter.
+    ``batch`` carries the journal envelope (``partition``, ``offset``,
+    ``op``) plus the record payload; everything except ``ENVELOPE_DROP`` is
+    stored (version columns stay in the table for the cross-batch >= guard).
+    An event with a null key column is quarantined, as is (with
+    ``late_threshold_sec``) one whose ``ts`` is that far behind the table's
+    event-time watermark; quarantined events land under
+    ``quarantine/b<batch_id>``.
+
+    Phases, each with a fixed Spark job count:
+
+    1. flag + pre-pass: ONE job over the cached batch yields, per journal
+       partition, the lineage counters, the offset high-watermark, the
+       event-time watermark and the set of touched buckets.  The commit
+       records one lineage row per journal partition plus a
+       ``partition = -1`` batch total.  A batch without a ``partition``
+       column (``sync_changes``' change feed) carries no journal position:
+       it moves no watermark and its lineage is the batch total only.
+    2. within-batch LWW reduce on the live events (``salted`` picks the
+       two-phase skew path); the bucket id is computed on the winners only,
+       then ``finalize_fn`` runs on the winners.
+    3. schema evolution, then the write, with the applied/delete/conflict
+       counters observed on the write job, then the snapshot commit.
 
     ``merge_mode`` picks the physical write strategy:
 
@@ -106,13 +124,20 @@ def apply_batch(
       ``merge_conflicts_resolved`` is 0 here — conflicts resolve lazily at
       read/compaction time.
     - ``"auto"`` (default): delta when the batch's live rows are under
-      ``delta_fraction`` of the table's base rows (from snapshot metadata, no
-      scan), else CoW.  Falls back to CoW when the table is empty, row
+      ``DELTA_FRACTION`` of the table's base rows (from snapshot metadata,
+      no scan), else CoW.  Falls back to CoW when the table is empty, row
       accounting is unavailable, or ``version_cols`` mismatch the table's.
 
-    ``batch`` carries the journal envelope (partition, offset, op) plus the
-    record payload; everything except ``ENVELOPE_DROP`` is stored (version
-    columns stay in the table for the cross-batch >= guard).
+    Whatever the mode, a batch whose touched buckets hold no data yet is a
+    pure upsert: the winners are written with no join.
+
+    ``advance_fence=False`` is REPAIR mode: the batch is merged through the
+    same versioned LWW path, but the commit keeps the table's batch fence
+    and per-partition watermarks unchanged — committed chunks can be
+    re-applied idempotently (the external_gte version guard makes stale
+    rows lose, lost rows reinsert) without fencing anything in or out of
+    later replays.  Callers must also disable ``enforce_watermark`` or the
+    re-applied events are dropped at the watermark filter.
 
     Deletes become TOMBSTONES (rows with ``__deleted = true``): a stale
     update arriving after the delete — in the same batch or a later one —
@@ -127,9 +152,10 @@ def apply_batch(
     epoch fence + version guard + tombstones, which are order-independent.
     """
     t0 = time.time()
-    spark = table.spark
     snap = table.snapshot()
     key_cols = snap["key_cols"]
+    if merge_mode not in ("auto", "cow", "delta"):
+        raise ValueError(f"merge_mode must be auto|cow|delta, got {merge_mode!r}")
 
     # ---- pin key dtypes to the table's stored types --------------------
     # bucket = pmod(hash(keys), N) and F.hash(int) != F.hash(long) for equal
@@ -138,8 +164,6 @@ def apply_batch(
     # existing row — two live rows per key that no merge ever reconciles.
     # try_cast: an unrepresentable key becomes null and is quarantined below
     # (ANSI cast would abort the whole batch instead).
-    from pyspark.sql import types as T
-
     tbl_types = {f.name: f.dataType
                  for f in T.StructType.fromJson(snap["schema"]).fields}
     for k in key_cols:
@@ -158,169 +182,113 @@ def apply_batch(
         wm_map = F.create_map(
             *chain.from_iterable((F.lit(p), F.lit(o)) for p, o in wm.items())
         )
-        below = F.col(offset_col) <= F.coalesce(
-            wm_map[F.col(partition_col)], F.lit(-1)
+        below = F.col(OFFSET_COL) <= F.coalesce(
+            wm_map[F.col(PARTITION_COL)], F.lit(-1)
         )
     else:
         below = F.lit(False)
 
     # ---- dead-letter + late-data flags (DATA_TOO_OLD analog,
     #      rollover_index.py:74-77; poison-pill rejection, etl.py:309-350) --
-    invalid = F.lit(False)
-    for c in validate_cols:
-        if c in batch.columns:
-            invalid = invalid | F.col(c).isNull()
     # a CDC event without a full key is malformed: it cannot be bucketed or
     # merged (and would otherwise emit a ghost all-null row through the
     # full-outer join's key_cols[0].isNotNull() presence test)
+    invalid = F.lit(False)
     for c in key_cols:
         if c in batch.columns:
             invalid = invalid | F.col(c).isNull()
     max_event_ts = snap.get("max_event_ts")  # epoch seconds, event-time WM
-    if late_threshold_sec is not None and max_event_ts is not None and ts_col in batch.columns:
-        late = F.unix_timestamp(F.col(ts_col)) < F.lit(
+    has_ts = TS_COL in batch.columns
+    if late_threshold_sec is not None and max_event_ts is not None and has_ts:
+        late = F.unix_timestamp(F.col(TS_COL)) < F.lit(
             int(max_event_ts) - late_threshold_sec
         )
         late = F.coalesce(late, F.lit(False))
     else:
         late = F.lit(False)
 
-    from activedata_etl_spark.lake.table import _bucket_expr
-
     key_bucket = _bucket_expr(key_cols, snap["n_buckets"])
+    # the pre-pass fills this cache; the reduce and quarantine read it
     flagged = (
         batch.withColumn("__below", below)
         .withColumn("__invalid", invalid)
         .withColumn("__late", late & ~invalid)
+        .persist()
     )
-    if lineage_level == "full":
-        # full lineage collects the touched-bucket set PRE-reduce, so the
-        # bucket id must exist on every event.  Summary mode defers it to
-        # the LWW winners below: bucket = hash(keys) is constant within a
-        # key group, so computing it per event only widened the reduce
-        # shuffle and added a per-event murmur3 (measured ~6% of the reduce
-        # stage) without changing any winner.
-        flagged = flagged.withColumn(BUCKET_COL, key_bucket)
     drop_row = F.col("__below") | F.col("__invalid") | F.col("__late")
-    has_ts = ts_col in batch.columns
-    persisted = flagged
-    if persist:
-        persisted.persist()
     try:
-        pre_obs = None
-        if lineage_level == "full":
-            # ONE pre-pass job: per-partition lineage counters + touched buckets
-            part_rows = (
-                flagged.groupBy(partition_col)
-                .agg(
-                    F.min(offset_col).alias("min_offset"),
-                    F.max(offset_col).alias("max_offset"),
-                    F.count(F.lit(1)).alias("rows_read"),
-                    F.sum(F.col("__below").cast("long")).alias("below_watermark"),
-                    F.sum(F.col("__invalid").cast("long")).alias("invalid_events"),
-                    F.sum(F.col("__late").cast("long")).alias("late_events"),
-                    # valid rows only: one corrupt future-dated event must
-                    # NOT advance the event-time watermark (it would make
-                    # every later real event "late" forever)
-                    (F.max(F.when(~drop_row, F.unix_timestamp(ts_col)))
-                     if has_ts else F.lit(None).cast("long")).alias("max_ts"),
-                    F.collect_set(
-                        F.when(~drop_row, F.col(BUCKET_COL))
-                    ).alias("buckets"),
-                )
-                .collect()
-            )
-        else:
-            # "summary": no pre-pass job — counters ride the merge job via a
-            # second Observation; watermarks come precomputed (chunked replay
-            # knows its disjoint offset range analytically); touched = all
-            # buckets (large batches touch them all anyway).
-            part_rows = []
-            pre_obs = Observation(f"pre_b{batch_id}")
-            flagged = flagged.observe(
-                pre_obs,
+        # ---- ONE pre-pass job: per-partition lineage + touched buckets ---
+        by_partition = [PARTITION_COL] if PARTITION_COL in batch.columns else []
+        part_rows = [
+            r.asDict() for r in flagged.groupBy(*by_partition).agg(
+                F.min(OFFSET_COL).alias("min_offset"),
+                F.max(OFFSET_COL).alias("max_offset"),
                 F.count(F.lit(1)).alias("rows_read"),
                 F.sum(F.col("__below").cast("long")).alias("below_watermark"),
                 F.sum(F.col("__invalid").cast("long")).alias("invalid_events"),
                 F.sum(F.col("__late").cast("long")).alias("late_events"),
-                F.min(offset_col).alias("min_offset"),
-                F.max(offset_col).alias("max_offset"),
-                (F.max(F.when(~drop_row, F.unix_timestamp(ts_col)))
-                 if has_ts else F.max(F.lit(None).cast("long"))).alias("max_ts"),
-            )
-
+                # valid rows only: one corrupt future-dated event must
+                # NOT advance the event-time watermark (it would make
+                # every later real event "late" forever)
+                (F.max(F.when(~drop_row, F.unix_timestamp(TS_COL)))
+                 if has_ts else F.lit(None).cast("long")).alias("max_ts"),
+                # the bucket id lives only inside this set: the reduce
+                # computes it on the winners, since it is constant within a
+                # key group (carried per event it widens the reduce shuffle,
+                # measured ~6% of the reduce stage)
+                F.collect_set(F.when(~drop_row, key_bucket)).alias("buckets"),
+            ).collect()
+        ]
         t_pre = time.time()
-        if lineage_level == "full":
-            touched = sorted({b for r in part_rows for b in r["buckets"]})
-        else:
-            touched = list(range(snap["n_buckets"]))
-        # partition id is lineage-only (consumed above via flagged); dropping
-        # it here keeps the envelope column out of the reduce shuffle
-        live = flagged.where(~drop_row).drop(
-            "__below", "__invalid", "__late", partition_col
-        )
-
-        stored_cols = [c for c in batch.columns if c not in ENVELOPE_DROP]
+        touched = sorted({b for r in part_rows for b in r["buckets"]})
         new_wm = dict(wm)
-        for p, o in (precomputed_watermarks or {}).items():
-            new_wm[int(p)] = max(new_wm.get(int(p), -1), int(o))
-        batch_max_ts = None
-        total_read = total_dropped = n_quarantined = 0
-        if lineage_level == "full":
-            for r in part_rows:
-                p = int(r[partition_col])
+        for r in part_rows:
+            if PARTITION_COL in r:
+                p = int(r[PARTITION_COL])
                 new_wm[p] = max(new_wm.get(p, -1), int(r["max_offset"]))
-            batch_max_ts = max(
-                (int(r["max_ts"]) for r in part_rows if r["max_ts"] is not None),
-                default=None,
-            )
-            total_read = sum(r["rows_read"] for r in part_rows)
-            total_dropped = sum(
-                r["below_watermark"] + r["invalid_events"] + r["late_events"]
-                for r in part_rows
-            )
-            n_quarantined = sum(
-                r["invalid_events"] + r["late_events"] for r in part_rows
-            )
         new_max_event_ts = max(
-            (x for x in (max_event_ts, batch_max_ts) if x is not None), default=None
+            (int(x) for x in [max_event_ts] + [r["max_ts"] for r in part_rows]
+             if x is not None),
+            default=None,
         )
+        n_quarantined = sum(
+            r["invalid_events"] + r["late_events"] for r in part_rows
+        )
+        n_live = sum(
+            r["rows_read"] - r["below_watermark"] for r in part_rows
+        ) - n_quarantined
 
         if n_quarantined:
             # quarantine table: malformed + too-late events, kept for audit
-            import os as _os
             (
                 flagged.where(F.col("__invalid") | F.col("__late"))
-                .drop("__below", BUCKET_COL)
+                .drop("__below")
                 .write.mode("overwrite")
-                .parquet(_os.path.join(table.location, f"quarantine/b{batch_id}"))
+                .parquet(os.path.join(table.location, f"quarantine/b{batch_id}"))
             )
 
-        if lineage_level == "full" and total_read == total_dropped:
+        if not n_live:
             # nothing live: metadata-only commit (fence + watermark advance)
             s = _commit(
                 table, snap, batch_id, new_wm, part_rows, None, None,
                 schema_json=snap["schema"], changes=[],
                 applied=0, deletes=0, conflicts=0, t0=t0,
-                partition_col=partition_col, max_event_ts=new_max_event_ts,
-                advance_fence=advance_fence,
+                max_event_ts=new_max_event_ts, advance_fence=advance_fence,
             )
             s["pre_pass_ms"] = int((t_pre - t0) * 1000)
             return s
 
         # ---- within-batch LWW reduce (map-side combine handles skew) -----
-        if salted:
-            from activedata_etl_spark.operators.lww import lww_reduce_salted
-            reduced = lww_reduce_salted(live, key_cols, list(version_cols))
-        elif lww_strategy == "structmax":
-            # single scan + single shuffle (HashAggregate over max(struct));
-            # measured faster AND better-scaling than the agg+join-back
-            reduced = lww_reduce_structmax(live, key_cols, list(version_cols))
-        else:
-            reduced = lww_reduce(live, key_cols, list(version_cols))
-        if lineage_level != "full":
-            # deferred bucket id: winners only (see the flagged comment)
-            reduced = reduced.withColumn(BUCKET_COL, key_bucket)
+        # partition id is lineage-only (consumed by the pre-pass); dropping
+        # it keeps the envelope column out of the reduce shuffle
+        live = flagged.where(~drop_row).drop(
+            "__below", "__invalid", "__late", PARTITION_COL
+        )
+        reduce = lww_reduce_salted if salted else lww_reduce_structmax
+        reduced = reduce(live, key_cols, list(version_cols)).withColumn(
+            BUCKET_COL, key_bucket
+        )
+        stored_cols = [c for c in batch.columns if c not in ENVELOPE_DROP]
 
         # ---- finalize transforms on WINNERS only (not on every event) ----
         if finalize_fn is not None:
@@ -328,58 +296,11 @@ def apply_batch(
             stored_cols = [c for c in reduced.columns if c not in ENVELOPE_DROP
                            and c != BUCKET_COL]
 
-        reduced_persisted = None
-        reduced_count = None
-        if lineage_level != "full" and snap["bucket_dirs"]:
-            # summary mode used touched = ALL buckets, making every
-            # incremental batch O(table): rewrite of every bucket.  The
-            # winner set is tiny post-reduce, so persist it and read the
-            # actually-touched buckets off it — merge cost returns to
-            # O(touched).  (Skipped when the table is empty: the pure-upsert
-            # path below never reads target buckets at all.)  One
-            # groupBy(bucket) job yields BOTH the touched set and the winner
-            # count the auto mode-pick needs — previously two full jobs per
-            # incremental batch.
-            reduced_persisted = reduced.persist()
-            bucket_counts = (
-                reduced_persisted.groupBy(BUCKET_COL).count().collect()
-            )
-            touched = sorted(int(r[0]) for r in bucket_counts)
-            reduced_count = sum(int(r["count"]) for r in bucket_counts)
+        # ---- schema evolution (transactional with this commit) ------------
+        merged_schema, changes, src = _evolve(snap, reduced, stored_cols)
 
-        # ---- schema evolution pre-pass (transactional with this commit) --
-        from pyspark.sql import types as T
-
-        table_schema = T.StructType.fromJson(snap["schema"])
-        batch_stored_schema = T.StructType(
-            [f for f in reduced.schema.fields if f.name in stored_cols]
-        )
-        merged_schema, changes = merge_schemas(table_schema, batch_stored_schema)
-
-        have = {f.name: f for f in reduced.schema.fields}
-        src_cols = []
-        for f in merged_schema.fields:
-            if f.name == DELETED_COL:
-                # tombstone marker derives from the op, not from alignment
-                src_cols.append(
-                    (F.col(op_col) == "delete").alias(DELETED_COL)
-                )
-            elif f.name in have:
-                c = F.col(f.name)
-                src_cols.append(
-                    c.cast(f.dataType).alias(f.name)
-                    if have[f.name].dataType != f.dataType else c
-                )
-            else:
-                src_cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        # bucket id rides through the LWW reduce (constant per key)
-        src = reduced.select(*src_cols, F.col(BUCKET_COL))
-
-        out_names = [f.name for f in merged_schema.fields]
-
+        # ---- pick the write strategy --------------------------------------
         mode = merge_mode
-        if mode not in ("auto", "cow", "delta"):
-            raise ValueError(f"merge_mode must be auto|cow|delta, got {mode!r}")
         stored_version_cols = snap.get("version_cols")
         if mode != "cow" and stored_version_cols \
                 and list(version_cols) != list(stored_version_cols):
@@ -388,213 +309,118 @@ def apply_batch(
             mode = "cow"
         if mode == "auto":
             base_rows = table.base_row_count()
-            if lineage_level == "full":
-                est = total_read - total_dropped  # live rows ≥ winners
-            elif reduced_count is not None:
-                est = reduced_count  # from the touched-buckets job above
-            else:
-                est = None
-            if base_rows and est is not None and est < delta_fraction * base_rows:
-                mode = "delta"
-            else:
-                mode = "cow"
-
+            # live rows ≥ winners: an upper bound on what the batch writes
+            mode = ("delta" if base_rows and n_live < DELTA_FRACTION * base_rows
+                    else "cow")
         if not table.existing_bucket_paths(touched):
             # no target data in any touched bucket: pure upsert, no join.
             # Deletes still land as tombstones so later stale arrivals lose.
-            # applied/deletes counters ride the WRITE job via Observation —
-            # no read-back pass over the written parquet.
-            up_obs = Observation(f"upsert_b{batch_id}")
-            result = src.select(*out_names, BUCKET_COL).observe(
-                up_obs,
-                F.sum((~F.coalesce(F.col(DELETED_COL), F.lit(False))).cast("long")).alias("applied"),
-                F.sum(F.coalesce(F.col(DELETED_COL), F.lit(False)).cast("long")).alias("deletes"),
-            )
-            new_version = snap["version"] + 1
-            rel = table.write_buckets(result, new_version)
-            applied = deletes = 0
-            try:
-                m = up_obs.get
-                applied, deletes = int(m["applied"] or 0), int(m["deletes"] or 0)
-            except Exception:
-                # CollectMetrics folded away (empty/constant plan) — recount
-                # in one small pass over the winners-only frame
-                row = src.agg(
-                    F.sum((~F.coalesce(F.col(DELETED_COL), F.lit(False))).cast("long")),
-                    F.sum(F.coalesce(F.col(DELETED_COL), F.lit(False)).cast("long")),
-                ).first()
-                applied, deletes = int(row[0] or 0), int(row[1] or 0)
-            part_rows, new_max_event_ts = _summary_counters(
-                pre_obs, part_rows, batch_id, partition_col,
-                new_max_event_ts, table, flagged,
-            )
-            s = _commit(
-                table, snap, batch_id, new_wm, part_rows, touched, rel,
-                schema_json=merged_schema.jsonValue(), changes=changes,
-                applied=applied, deletes=deletes, conflicts=0, t0=t0,
-                partition_col=partition_col, max_event_ts=new_max_event_ts,
-                version_cols=version_cols, mode="upsert",
-                advance_fence=advance_fence,
-            )
-            s["pre_pass_ms"] = int((t_pre - t0) * 1000)
-            return s
+            mode = "upsert"
 
-        if mode == "delta":
-            # ---- MOR-lite: append the winners as per-bucket delta files ----
-            # No target read, no join: write cost is O(batch).  The >= version
-            # guard is deferred to the read-time LWW reduce (max over the
-            # version struct), which resolves base-vs-delta and delta-vs-delta
-            # identically to the CoW merge expressions.
-            d_obs = Observation(f"delta_b{batch_id}")
-            result = src.select(*out_names, BUCKET_COL).observe(
-                d_obs,
-                F.sum((~F.coalesce(F.col(DELETED_COL), F.lit(False))).cast("long")).alias("applied"),
-                F.sum(F.coalesce(F.col(DELETED_COL), F.lit(False)).cast("long")).alias("deletes"),
+        # ---- observe -> write -> recount -> commit -------------------------
+        if mode == "cow":
+            frame, metrics, out_cols = _cow_merge(
+                table, src, merged_schema, key_cols, version_cols, touched
             )
-            new_version = snap["version"] + 1
-            rel = table.write_buckets(result, new_version)
-            try:
-                m = d_obs.get
-                applied, deletes = int(m["applied"] or 0), int(m["deletes"] or 0)
-            except Exception:
-                row = src.agg(
-                    F.sum((~F.coalesce(F.col(DELETED_COL), F.lit(False))).cast("long")),
-                    F.sum(F.coalesce(F.col(DELETED_COL), F.lit(False)).cast("long")),
-                ).first()
-                applied, deletes = int(row[0] or 0), int(row[1] or 0)
-            part_rows, new_max_event_ts = _summary_counters(
-                pre_obs, part_rows, batch_id, partition_col,
-                new_max_event_ts, table, flagged,
-            )
-            s = _commit(
-                table, snap, batch_id, new_wm, part_rows,
-                table.written_buckets(rel), rel,
-                schema_json=merged_schema.jsonValue(), changes=changes,
-                applied=applied, deletes=deletes, conflicts=0, t0=t0,
-                partition_col=partition_col, max_event_ts=new_max_event_ts,
-                version_cols=version_cols, mode="delta",
-                advance_fence=advance_fence,
-            )
-            s["pre_pass_ms"] = int((t_pre - t0) * 1000)
-            return s
-
-        obs = Observation(f"merge_b{batch_id}")
-
-        # ---- merge against touched buckets only (copy-on-write) ----------
-        tgt = align_to_schema(table.read(buckets=touched, include_tombstones=True),
-                              merged_schema)
-        tgt = table.bucket_of(tgt).withColumn("__present", F.lit(True))
-
-        s = src.select([F.col(c).alias(f"s_{c}") for c in src.columns])
-        t = tgt.select([F.col(c).alias(f"t_{c}") for c in tgt.columns])
-        cond = [s[f"s_{k}"].eqNullSafe(t[f"t_{k}"]) for k in key_cols]
-        joined = s.join(t, cond, "full_outer")
-
-        s_ver = F.struct(*[F.col(f"s_{c}") for c in version_cols])
-        t_ver = F.struct(*[F.col(f"t_{c}") for c in version_cols])
-        s_present = F.col(f"s_{key_cols[0]}").isNotNull()
-        t_present = F.col("t___present").isNotNull()
-        src_wins = s_present & (~t_present | (s_ver >= t_ver))
-        s_deleted = F.coalesce(F.col(f"s_{DELETED_COL}"), F.lit(False))
-        t_deleted = F.coalesce(F.col(f"t_{DELETED_COL}"), F.lit(False))
-
-        joined = joined.observe(
-            obs,
-            F.sum((t_present & s_present & ~src_wins).cast("long")).alias("conflicts"),
-            F.sum((src_wins & s_deleted & t_present & ~t_deleted).cast("long")).alias("deletes"),
-            F.sum((src_wins & ~s_deleted).cast("long")).alias("applied"),
+        else:
+            # upsert / MOR delta: the winners are the rows written.  For a
+            # delta, the >= version guard is deferred to the read-time LWW
+            # reduce, which resolves base-vs-delta and delta-vs-delta exactly
+            # like the CoW merge expressions.
+            frame = src.select(*merged_schema.fieldNames(), BUCKET_COL)
+            deleted = F.coalesce(F.col(DELETED_COL), F.lit(False))
+            metrics = [
+                F.sum((~deleted).cast("long")).alias("applied"),
+                F.sum(deleted.cast("long")).alias("deletes"),
+            ]
+            out_cols = frame.columns
+        obs = Observation(f"{mode}_b{batch_id}")
+        rel = table.write_buckets(
+            frame.observe(obs, *metrics).select(*out_cols), snap["version"] + 1
         )
-
-        out_cols = [
-            F.coalesce(
-                F.when(src_wins, F.col(f"s_{f.name}")).otherwise(F.col(f"t_{f.name}")),
-                F.lit(False),
-            ).alias(f.name)
-            if f.name == DELETED_COL
-            else F.when(src_wins, F.col(f"s_{f.name}")).otherwise(
-                F.col(f"t_{f.name}")
-            ).alias(f.name)
-            for f in merged_schema.fields
-        ]
-        out_bucket = F.when(src_wins, F.col(f"s_{BUCKET_COL}")).otherwise(
-            F.col(f"t_{BUCKET_COL}")
-        ).alias(BUCKET_COL)
-        result = joined.select(*out_cols, out_bucket)
-
-        new_version = snap["version"] + 1
-        rel = table.write_buckets(result, new_version)
         try:
             m = obs.get
         except Exception:
             # CollectMetrics can be optimized away (plan folded to a local
-            # relation) — recompute the three counters in one small pass.
-            m = joined.agg(
-                F.sum((t_present & s_present & ~src_wins).cast("long")).alias("conflicts"),
-                F.sum((src_wins & s_deleted & t_present & ~t_deleted).cast("long")).alias("deletes"),
-                F.sum((src_wins & ~s_deleted).cast("long")).alias("applied"),
-            ).first().asDict()
-
-        part_rows, new_max_event_ts = _summary_counters(
-            pre_obs, part_rows, batch_id, partition_col,
-            new_max_event_ts, table, flagged,
-        )
+            # relation) — recount in one small pass over the same frame
+            m = frame.agg(*metrics).first().asDict()
         s = _commit(
             table, snap, batch_id, new_wm, part_rows, touched, rel,
             schema_json=merged_schema.jsonValue(), changes=changes,
             applied=int(m["applied"] or 0), deletes=int(m["deletes"] or 0),
-            conflicts=int(m["conflicts"] or 0), t0=t0,
-            partition_col=partition_col, max_event_ts=new_max_event_ts,
-            version_cols=version_cols, mode="cow",
-            advance_fence=advance_fence,
+            conflicts=int(m.get("conflicts") or 0), t0=t0,
+            max_event_ts=new_max_event_ts, version_cols=version_cols,
+            mode=mode, advance_fence=advance_fence,
         )
         s["pre_pass_ms"] = int((t_pre - t0) * 1000)
         return s
     finally:
-        if persist:
-            persisted.unpersist()
-        try:
-            if reduced_persisted is not None:
-                reduced_persisted.unpersist()
-        except NameError:
-            pass  # epoch-fenced / metadata-only exits never created it
+        flagged.unpersist()
 
 
-def _summary_counters(
-    pre_obs, part_rows, batch_id, partition_col, new_max_event_ts, table, flagged
-):
-    """In summary lineage mode, collect the batch-global counters from the
-    Observation that rode the merge job, and late-write the quarantine table
-    if anything was diverted."""
-    if pre_obs is None:
-        return part_rows, new_max_event_ts
-    try:
-        p = pre_obs.get
-    except Exception:
-        return part_rows, new_max_event_ts
-    row = {
-        partition_col: -2,  # -2 = all-partitions summary (no per-partition split)
-        "min_offset": int(p["min_offset"] or 0),
-        "max_offset": int(p["max_offset"] or 0),
-        "rows_read": int(p["rows_read"] or 0),
-        "below_watermark": int(p["below_watermark"] or 0),
-        "invalid_events": int(p["invalid_events"] or 0),
-        "late_events": int(p["late_events"] or 0),
-    }
-    if p.get("max_ts") is not None:
-        new_max_event_ts = max(
-            x for x in (new_max_event_ts, int(p["max_ts"])) if x is not None
-        )
-    if row["invalid_events"] or row["late_events"]:
-        import os as _os
+def _evolve(snap, reduced, stored_cols):
+    """Merge the winners' stored columns into the table schema: the merged
+    schema, its change descriptions, and the winners aligned to it with
+    the tombstone marker and bucket id."""
+    table_schema = T.StructType.fromJson(snap["schema"])
+    batch_stored_schema = T.StructType(
+        [f for f in reduced.schema.fields if f.name in stored_cols]
+    )
+    merged_schema, changes = merge_schemas(table_schema, batch_stored_schema)
 
-        from pyspark.sql import functions as _F
-        (
-            flagged.where(_F.col("__invalid") | _F.col("__late"))
-            .drop("__below", BUCKET_COL)
-            .write.mode("overwrite")
-            .parquet(_os.path.join(table.location, f"quarantine/b{batch_id}"))
-        )
-    return [row], new_max_event_ts
+    have = {f.name: f for f in reduced.schema.fields}
+    src_cols = []
+    for f in merged_schema.fields:
+        if f.name == DELETED_COL:
+            # tombstone marker derives from the op, not from alignment
+            src_cols.append((F.col(OP_COL) == "delete").alias(DELETED_COL))
+        elif f.name in have:
+            c = F.col(f.name)
+            src_cols.append(
+                c.cast(f.dataType).alias(f.name)
+                if have[f.name].dataType != f.dataType else c
+            )
+        else:
+            src_cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+    # bucket id rides along (constant per key)
+    return merged_schema, changes, reduced.select(*src_cols, F.col(BUCKET_COL))
+
+
+def _cow_merge(table, src, merged_schema, key_cols, version_cols, touched):
+    """Copy-on-write merge of the winners ``src`` against the touched
+    buckets: the full-outer joined frame, its counter expressions, and the
+    output columns (the >= version guard picks each row's side)."""
+    tgt = align_to_schema(table.read(buckets=touched, include_tombstones=True),
+                          merged_schema)
+    tgt = table.bucket_of(tgt).withColumn("__present", F.lit(True))
+
+    s = src.select([F.col(c).alias(f"s_{c}") for c in src.columns])
+    t = tgt.select([F.col(c).alias(f"t_{c}") for c in tgt.columns])
+    cond = [s[f"s_{k}"].eqNullSafe(t[f"t_{k}"]) for k in key_cols]
+    joined = s.join(t, cond, "full_outer")
+
+    s_ver = F.struct(*[F.col(f"s_{c}") for c in version_cols])
+    t_ver = F.struct(*[F.col(f"t_{c}") for c in version_cols])
+    s_present = F.col(f"s_{key_cols[0]}").isNotNull()
+    t_present = F.col("t___present").isNotNull()
+    src_wins = s_present & (~t_present | (s_ver >= t_ver))
+    s_deleted = F.coalesce(F.col(f"s_{DELETED_COL}"), F.lit(False))
+    t_deleted = F.coalesce(F.col(f"t_{DELETED_COL}"), F.lit(False))
+    metrics = [
+        F.sum((t_present & s_present & ~src_wins).cast("long")).alias("conflicts"),
+        F.sum((src_wins & s_deleted & t_present & ~t_deleted).cast("long")).alias("deletes"),
+        F.sum((src_wins & ~s_deleted).cast("long")).alias("applied"),
+    ]
+
+    def pick(name):
+        return F.when(src_wins, F.col(f"s_{name}")).otherwise(F.col(f"t_{name}"))
+
+    out_cols = [
+        (F.coalesce(pick(f.name), F.lit(False)) if f.name == DELETED_COL
+         else pick(f.name)).alias(f.name)
+        for f in merged_schema.fields
+    ] + [pick(BUCKET_COL).alias(BUCKET_COL)]
+    return joined, metrics, out_cols
 
 
 def _commit(
@@ -612,7 +438,6 @@ def _commit(
     deletes: int,
     conflicts: int,
     t0: float,
-    partition_col: str,
     max_event_ts: int | None = None,
     version_cols: tuple[str, ...] | None = None,
     mode: str = "cow",
@@ -621,32 +446,25 @@ def _commit(
     new_version = snap["version"] + 1
     duration_ms = int((time.time() - t0) * 1000)
 
-    def _g(r, k):  # older callers may lack the quarantine counters
-        try:
-            return int(r[k])
-        except (KeyError, ValueError, TypeError):
-            return 0
+    def total(k):
+        return sum(int(r[k]) for r in part_rows)
 
     lineage_rows = [
         (
-            batch_id, int(r[partition_col]), int(r["min_offset"]),
+            batch_id, int(r[PARTITION_COL]), int(r["min_offset"]),
             int(r["max_offset"]), int(r["rows_read"]), int(r["below_watermark"]),
-            _g(r, "invalid_events"), _g(r, "late_events"),
+            int(r["invalid_events"]), int(r["late_events"]),
             None, None, None, duration_ms, ENGINE_REVISION,
         )
-        for r in part_rows
+        for r in part_rows if PARTITION_COL in r
     ] + [
-        (batch_id, -1, None, None,
-         sum(int(r["rows_read"]) for r in part_rows),
-         sum(int(r["below_watermark"]) for r in part_rows),
-         sum(_g(r, "invalid_events") for r in part_rows),
-         sum(_g(r, "late_events") for r in part_rows),
+        (batch_id, -1, None, None, total("rows_read"),
+         total("below_watermark"), total("invalid_events"),
+         total("late_events"),
          applied, deletes, conflicts, duration_ms, ENGINE_REVISION)
     ]
     # lineage is tiny (one row per journal partition) — write it driver-side
     # with pyarrow, no Spark job
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -682,8 +500,6 @@ def _commit(
     # re-merged, watermarks/fence taken as per-key max).  CoW/upsert
     # rewrites DO depend on the base they merged against, so they re-raise
     # and the caller recomputes the batch (replay_journal's retry).
-    from pyspark.sql import types as _T
-
     written = (
         table.written_bucket_rows(data_rel)
         if touched is not None and data_rel is not None else None
@@ -815,8 +631,8 @@ def _commit(
                 # still readable (read-time align/cast), but the committed
                 # schema must be the UNION or their columns would vanish
                 merged2, _ = merge_schemas(
-                    _T.StructType.fromJson(parent["schema"]),
-                    _T.StructType.fromJson(schema_json),
+                    T.StructType.fromJson(parent["schema"]),
+                    T.StructType.fromJson(schema_json),
                 )
                 eff_schema = merged2.jsonValue()
 
@@ -825,8 +641,8 @@ def _commit(
         "version": new_version,
         "skipped": False,
         "pre_pass_ms": None,  # filled by apply_batch
-        "rows_read": sum(int(r["rows_read"]) for r in part_rows),
-        "below_watermark": sum(int(r["below_watermark"]) for r in part_rows),
+        "rows_read": total("rows_read"),
+        "below_watermark": total("below_watermark"),
         "rows_applied": applied,
         "deletes_applied": deletes,
         "merge_conflicts_resolved": conflicts,
@@ -858,10 +674,12 @@ def sync_changes(
     recorded in its snapshot properties (``sync_source`` /
     ``synced_version``); calling with ``from_version=None`` resumes from
     the cursor, so ``sync_changes(src, dst)`` in a loop is exactly-once
-    per range.  Journal-fence machinery (per-partition watermarks) is NOT
-    advanced here: feed rows mix offsets from many commits, and the
-    replica's convergence guarantee is the version columns, not the fence
-    — hence ``enforce_watermark=False``.
+    per range.  Each applied sync is one replica batch, so the replica's
+    batch fence advances once per sync; its per-partition watermarks do
+    not move: feed rows mix offsets from many commits and carry no journal
+    partition (``ENVELOPE_DROP``), and the replica's convergence guarantee
+    is the version columns, not the fence — hence
+    ``enforce_watermark=False``.
 
     Cost: O(changed buckets) on the source (see ``changes``) plus one
     normal incremental merge on the replica.  Reference analog: the
@@ -913,16 +731,9 @@ def sync_changes(
         F.when(F.col(SnapshotTable.CHANGE_TYPE_COL) == "delete",
                F.lit("delete")).otherwise(F.lit("update")),
     ).drop(SnapshotTable.CHANGE_TYPE_COL, "_from_version", "_to_version")
-    # the stored table dropped the journal envelope (ENVELOPE_DROP); the
-    # merge wants a partition column for its per-partition accounting only
-    # — the fence is not advanced here, so a constant is correct
-    if "partition" not in events.columns:
-        events = events.withColumn("partition", F.lit(0))
     kwargs = dict(
         version_cols=tuple(snap["version_cols"]),
-        validate_cols=tuple(snap["key_cols"]),
         enforce_watermark=False,
-        lineage_level="summary",
     )
     kwargs.update(apply_kwargs)
     s = apply_batch(replica, events, replica.last_batch_id() + 1, **kwargs)

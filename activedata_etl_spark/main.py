@@ -44,7 +44,6 @@ def _parser() -> argparse.ArgumentParser:
     r.add_argument("--n-buckets", type=int, default=None,
                    help="default: auto-size from --expected-rows")
     r.add_argument("--expected-rows", type=int, default=None)
-    r.add_argument("--lineage", choices=["full", "summary"], default="full")
     r.add_argument("--merge-mode", choices=["auto", "cow", "delta"],
                    default="auto")
     r.add_argument("--max-deltas-per-bucket", type=int, default=16)
@@ -201,7 +200,7 @@ def main(argv: list[str] | None = None) -> None:
         r = replay_journal(
             spark, args.journal, args.table, chunk_events=args.chunk_events,
             salted=args.salted, n_buckets=args.n_buckets, verbose=True,
-            lineage_level=args.lineage, merge_mode=args.merge_mode,
+            merge_mode=args.merge_mode,
             expected_rows=args.expected_rows,
             max_deltas_per_bucket=args.max_deltas_per_bucket,
         )

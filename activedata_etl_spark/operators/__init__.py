@@ -4,10 +4,8 @@ from activedata_etl_spark.operators.corpus import (  # noqa: F401
 )
 from activedata_etl_spark.operators.lww import (  # noqa: F401
     lww_reduce,
-    lww_reduce_maxby,
     lww_reduce_salted,
     lww_reduce_structmax,
-    lww_reduce_window,
 )
 from activedata_etl_spark.operators.sampling import (  # noqa: F401
     contamination_pairs,

@@ -7,7 +7,7 @@ re-writes merge by key keeping the newest (`activedata_etl/sinks/
 s3_bucket.py:92-118`).  Here: per (repo, path) keep the event with the
 largest (commit_seq, offset).
 
-Five physical strategies, same semantics:
+Three physical strategies, same semantics:
 
 - ``lww_reduce_structmax`` ONE scan, ONE shuffle: ``max(struct(version...,
                            payload...))`` — plain Max over an orderable
@@ -18,21 +18,20 @@ Five physical strategies, same semantics:
                            lead the struct so ordering is by version first;
                            payload columns follow, giving a DETERMINISTIC
                            tiebreak for distinct events that share a version.
-                           DEFAULT since round 2 (measured faster and
+                           The CDC path's default (measured faster and
                            better-scaling than the agg+join-back).
 - ``lww_reduce``           groupBy max(struct(version)) + winner join-back —
-                           two passes over the batch; kept for payloads with
-                           non-orderable columns (maps) and for equivalence
-                           testing.
+                           two passes over the batch; the fallback
+                           structmax takes when a payload column is not
+                           orderable (MapType).
 - ``lww_reduce_salted``    explicit two-phase structmax over a salt column
                            (per (key, salt), then per key — associative, so
                            result == structmax); useful where partial agg is
                            unavailable, and the skew-evidence path for the
                            bench's with/without-salting comparison.
-- ``lww_reduce_window``    row_number() over (key ORDER BY version DESC) —
-                           mirrors the reference's per-key ordering
-                           (`vendor/jx_python/jx.py:945-1018` window executor);
-                           shuffles every row, kept for equivalence testing.
+
+The independent pandas oracle (``tests/oracle.py``) pins the semantics all
+three must match.
 
 Property (tested): the result is independent of input partitioning and of
 batch split, because (commit_seq, offset) is a total order per key.  For
@@ -147,21 +146,6 @@ def lww_reduce_structmax(
     )
 
 
-def lww_reduce_maxby(
-    df: DataFrame,
-    keys: list[str] | None = None,
-    version_cols: list[str] | None = None,
-) -> DataFrame:
-    """Single-pass max_by(struct) formulation (SortAggregate; kept for
-    equivalence testing and for narrow payloads where it wins)."""
-    keys = keys or DEFAULT_KEYS
-    version_cols = version_cols or DEFAULT_VERSION
-    payload = [c for c in df.columns if c not in keys]
-    winner = F.max_by(F.struct(*[F.col(c) for c in payload]), _version_struct(version_cols))
-    out = df.groupBy(*keys).agg(winner.alias("__w"))
-    return out.select(*keys, *[F.col(f"__w.{c}").alias(c) for c in payload])
-
-
 def lww_reduce_salted(
     df: DataFrame,
     keys: list[str] | None = None,
@@ -216,20 +200,4 @@ def lww_reduce_salted(
     return out.select(
         *[F.col(c) if c in keys else F.col(f"__w.{c}").alias(c)
           for c in df.columns]
-    )
-
-
-def lww_reduce_window(
-    df: DataFrame,
-    keys: list[str] | None = None,
-    version_cols: list[str] | None = None,
-) -> DataFrame:
-    """row_number()==1 formulation (reference-mirror; full shuffle)."""
-    keys = keys or DEFAULT_KEYS
-    version_cols = version_cols or DEFAULT_VERSION
-    w = W.partitionBy(*keys).orderBy(*[F.desc(c) for c in version_cols])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
     )

@@ -86,11 +86,8 @@ def replay_journal(
     salted: bool = False,
     n_buckets: int = 64,
     late_threshold_sec: int | None = None,
-    persist: bool = True,
     offset_range: tuple[int, int] | None = None,
     verbose: bool = False,
-    lineage_level: str = "full",
-    lww_strategy: str = "structmax",
     merge_mode: str = "auto",
     expected_rows: int | None = None,
     max_deltas_per_bucket: int | None = 16,
@@ -103,6 +100,16 @@ def replay_journal(
     journal partition, so per-partition delivery order is preserved while
     commit_seq stays out-of-order (bounded-delay permutation), exercising the
     external_gte guard.
+
+    Each chunk is one ``apply_batch`` call (batch_id = chunk index): one
+    pre-pass job records per-partition lineage and the offset watermarks of
+    the events actually read, then the LWW winners are written as an
+    upsert, a MOR delta or a CoW rewrite (``merge_mode``, default auto) in
+    the same snapshot commit.  ``salted`` switches the reduce to the
+    two-phase skew path; ``late_threshold_sec`` quarantines events that far
+    behind the table's event-time watermark.  Returns ``batches``,
+    ``events`` (rows read), ``rows_applied`` and the per-batch
+    ``summaries``.
 
     ``max_deltas_per_bucket`` is the steady-state maintenance knob: after a
     batch lands as a MOR-lite delta, buckets whose delta chain exceeds the
@@ -144,8 +151,8 @@ def replay_journal(
         n_buckets=n_buckets, expected_rows=expected_rows,
     )
 
-    # max offset + partition set: footer stats driver-side for small
-    # journals, one distributed column-pruned agg past ~2k files
+    # max offset: footer stats driver-side for small journals, one
+    # distributed column-pruned agg past ~2k files
     meta = journal_metadata(journal_dir, spark)
     max_offset = journal_max = meta["max_offset"]
     if offset_range is not None and max_offset is not None:
@@ -188,7 +195,6 @@ def replay_journal(
             "journal end"
         )
     done_through = table.last_batch_id()
-    partitions: list[int] = meta["partitions"]
     t0 = time.time()
     total_read = total_applied = ran = 0
     summaries = []
@@ -199,12 +205,6 @@ def replay_journal(
             break
         lo, hi = i * chunk_events, (i + 1) * chunk_events - 1
         chunk = journal.where(F.col("offset").between(lo, hi))
-        # analytic watermark claims are only safe for chunks FULLY inside
-        # the replayed range — a partially-covered boundary chunk would
-        # claim offsets the range filter excluded; fall back to no claim
-        # (full mode computes watermarks from the rows actually applied)
-        claim_hi = hi if offset_range is None else min(hi, offset_range[1])
-        full_cover = offset_range is None or lo >= offset_range[0]
         # key normalization pre-reduce; lang/sha256 only on LWW winners.
         # A CommitConflictError means a concurrent MAINTENANCE commit
         # (compactor/analyze) won the version CAS: nothing was applied, so
@@ -218,13 +218,7 @@ def replay_journal(
                 s = apply_batch(
                     table, normalize_keys(chunk), i, salted=salted,
                     late_threshold_sec=late_threshold_sec,
-                    finalize_fn=finalize_records, persist=persist,
-                    lineage_level=lineage_level, lww_strategy=lww_strategy,
-                    merge_mode=merge_mode,
-                    precomputed_watermarks=(
-                        {p: claim_hi for p in partitions}
-                        if lineage_level == "summary" and full_cover else None
-                    ),
+                    finalize_fn=finalize_records, merge_mode=merge_mode,
                 )
                 break
             except CommitConflictError:
@@ -309,7 +303,7 @@ def repair_range(
         s = apply_batch(
             table, normalize_keys(chunk), i, salted=salted,
             finalize_fn=finalize_records, enforce_watermark=False,
-            advance_fence=False, lineage_level="full",
+            advance_fence=False,
         )
         if not s.get("skipped"):
             total += s["rows_read"]
@@ -401,7 +395,7 @@ def reingest_quarantine(
         s = apply_batch(
             table, ok, bid, salted=salted, finalize_fn=finalize_records,
             enforce_watermark=False, advance_fence=False,
-            late_threshold_sec=None, lineage_level="full",
+            late_threshold_sec=None,
         )
         reapplied += s["rows_read"]
         if verbose:

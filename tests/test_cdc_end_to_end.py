@@ -83,21 +83,6 @@ def test_salted_path_same_result(spark, journal_dir, journal_pdf, tmp_path):
     assert_table_matches_oracle(SnapshotTable(spark, loc).read(), journal_pdf)
 
 
-def test_summary_lineage_mode_same_result(spark, journal_dir, journal_pdf, tmp_path):
-    """The bench code path (no pre-pass job, analytic watermarks, summary
-    lineage) must converge to the same bytes and stay resumable."""
-    loc = str(tmp_path / "lake_summary")
-    r1 = replay_journal(spark, journal_dir, loc, chunk_events=2048,
-                        lineage_level="summary", persist=False, max_batches=2)
-    assert r1["batches"] == 2
-    replay_journal(spark, journal_dir, loc, chunk_events=2048,
-                   lineage_level="summary", persist=False)
-    table = SnapshotTable(spark, loc)
-    assert_table_matches_oracle(table.read(), journal_pdf)
-    lin = table.read_lineage()
-    assert lin.where("partition = -2").count() > 0  # summary rows recorded
-
-
 def test_kill_and_resume(spark, journal_dir, journal_pdf, tmp_path):
     loc = str(tmp_path / "lake_resume")
     partial = replay_journal(spark, journal_dir, loc, chunk_events=2048, max_batches=2)

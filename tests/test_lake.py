@@ -157,9 +157,9 @@ def test_update_where_moving_key_stays_visible(spark, tmp_path):
     assert {r["path"] for r in table.read().collect()} == {"moved/deep/f3.py"}
 
 
-def test_summary_mode_incremental_merge_touches_few_buckets(spark, tmp_path):
-    """In summary lineage mode an incremental batch must NOT rewrite the
-    whole table: touched buckets come from the reduced winner set."""
+def test_incremental_merge_touches_few_buckets(spark, tmp_path):
+    """An incremental batch must NOT rewrite the whole table: the pre-pass
+    reports only the buckets of the batch's live events as touched."""
     loc = str(tmp_path / "lake_sumtouch")
     rows = [
         (0, i, i, "insert", "r", f"f{i}.py", "c" * 12, None, f"X{i}", None)
@@ -167,14 +167,14 @@ def test_summary_mode_incremental_merge_touches_few_buckets(spark, tmp_path):
     ]
     b0 = spark.createDataFrame(rows, COLS_V1)
     table = ensure_table(spark, loc, b0.schema, n_buckets=32)
-    s0 = apply_batch(table, _norm(b0), 0, lineage_level="summary")
+    s0 = apply_batch(table, _norm(b0), 0)
     assert s0["rows_applied"] == 40
 
     b1 = spark.createDataFrame(
         [(0, 100, 100, "update", "r", "f7.py", "d" * 12, None, "NEW", None)],
         COLS_V1,
     )
-    s1 = apply_batch(table, _norm(b1), 1, lineage_level="summary")
+    s1 = apply_batch(table, _norm(b1), 1)
     assert s1["touched_buckets"] == 1
     got = {r["path"]: r["content"] for r in table.read().collect()}
     assert got["f7.py"] == "NEW" and len(got) == 40
@@ -233,11 +233,11 @@ def test_key_dtype_pinned_to_table_schema(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(0, "insert", 7, 0, 0, "old")],
         "partition int, op string, id int, offset long, commit_seq long, v string")
-    apply_batch(table, b1, 0, validate_cols=(), version_cols=("commit_seq", "offset"))
+    apply_batch(table, b1, 0, version_cols=("commit_seq", "offset"))
     b2 = spark.createDataFrame(
         [(0, "insert", 7, 1, 1, "new")],
         "partition int, op string, id long, offset long, commit_seq long, v string")
-    apply_batch(table, b2, 1, validate_cols=(), version_cols=("commit_seq", "offset"))
+    apply_batch(table, b2, 1, version_cols=("commit_seq", "offset"))
     rows = table.read().collect()
     assert [(r["id"], r["v"]) for r in rows] == [(7, "new")]
 
@@ -256,7 +256,7 @@ def test_create_without_deleted_col_still_merges(spark, tmp_path):
     b = spark.createDataFrame(
         [(0, "insert", 1, 0, 0, "x")],
         "partition int, op string, id long, offset long, commit_seq long, v string")
-    s = apply_batch(table, b, 0, validate_cols=(), version_cols=("commit_seq", "offset"))
+    s = apply_batch(table, b, 0, version_cols=("commit_seq", "offset"))
     assert s["rows_applied"] == 1
     assert table.read().count() == 1
 
@@ -1001,7 +1001,9 @@ def _rowset(table):
 
 def test_sync_changes_replica_converges(spark, tmp_path):
     """CDC-out: a replica fed only by sync_changes converges to the source
-    byte-for-byte, survives re-runs (cursor), and applies deletes."""
+    byte-for-byte, survives re-runs (cursor), and applies deletes.  Each
+    applied sync advances the replica's batch fence by one and leaves its
+    per-partition watermarks where they were."""
     from activedata_etl_spark.lake.merge import sync_changes
 
     src_loc = str(tmp_path / "cdf_src")
@@ -1017,6 +1019,9 @@ def test_sync_changes_replica_converges(spark, tmp_path):
     s1 = sync_changes(src, rep_loc)  # creates the replica
     rep = SnapshotTable(spark, rep_loc)
     assert s1["applied"] == 12 and _rowset(rep) == _rowset(src)
+    assert rep.last_batch_id() == 0 and rep.watermarks() == {}
+    # the feed carries no journal partition: lineage is the batch total
+    assert [r["partition"] for r in rep.read_lineage().collect()] == [-1]
 
     # churn: update, delete, insert — sync resumes from the cursor
     b1 = spark.createDataFrame(
@@ -1028,6 +1033,7 @@ def test_sync_changes_replica_converges(spark, tmp_path):
     apply_batch(src, _norm(b1), 1)
     s2 = sync_changes(src, rep)
     assert s2["deletes"] == 1
+    assert rep.last_batch_id() == 1 and rep.watermarks() == {}
     assert _rowset(rep) == _rowset(src)
     assert "f2.py" not in {r["path"] for r in rep.read().collect()}
 
@@ -1035,10 +1041,13 @@ def test_sync_changes_replica_converges(spark, tmp_path):
     s3 = sync_changes(src, rep)
     assert s3 == {"applied": 0, "deletes": 0, "batches": 0,
                   "synced_version": s2["synced_version"]}
+    assert rep.last_batch_id() == 1
 
     # replaying an ALREADY-CONSUMED range is harmless (LWW idempotence)
     s4 = sync_changes(src, rep, from_version=0)
     assert _rowset(rep) == _rowset(src)
+    assert s4["batches"] == 1
+    assert rep.last_batch_id() == 2 and rep.watermarks() == {}
     # wrong-source guard
     other = ensure_table(spark, str(tmp_path / "cdf_other"), b0.schema)
     apply_batch(other, _norm(b0), 0)
@@ -1253,6 +1262,29 @@ def test_read_job_count_flat_as_delta_chain_grows(spark, tmp_path):
     for path in ("probe", "shuffle"):
         assert counts[(1, path)] == counts[(4, path)], counts
     assert [r["content"] for r in table.lookup(key).collect()] == ["N4"]
+
+
+def test_apply_batch_job_count(spark, tmp_path):
+    """A batch runs a fixed number of Spark jobs per write path: the
+    per-partition pre-pass, the write, and for CoW the touched-bucket read
+    of the merge target."""
+    table = _mk_base(spark, str(tmp_path / "lake_apply_jobs"), n=100, n_buckets=8)
+
+    def batch(i):
+        return _norm(spark.createDataFrame(
+            [(0, 100 + i, 100 + i, "update", "r", "f7.py", "d" * 12, None,
+              f"N{i}", None)],
+            COLS_V1,
+        ))
+
+    out = {}
+    n_delta = _jobs(spark, lambda: out.update(
+        delta=apply_batch(table, batch(1), 1)))
+    n_cow = _jobs(spark, lambda: out.update(
+        cow=apply_batch(table, batch(2), 2, merge_mode="cow")))
+    assert out["delta"]["merge_mode"] == "delta"
+    assert out["cow"]["merge_mode"] == "cow"
+    assert (n_delta, n_cow) == (5, 8)
 
 
 def test_footer_schema_and_inference_fallback(spark, tmp_path):

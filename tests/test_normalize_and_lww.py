@@ -12,9 +12,8 @@ from activedata_etl_spark.functions.normalize import (
 from activedata_etl_spark.journal import journal_df
 from activedata_etl_spark.operators.lww import (
     lww_reduce,
-    lww_reduce_maxby,
     lww_reduce_salted,
-    lww_reduce_window,
+    lww_reduce_structmax,
 )
 
 
@@ -139,24 +138,20 @@ def test_typed_decode_new_shapes(spark):
 
 def test_lww_strategies_agree(spark):
     j = journal_df(spark, 2048)
-    a = lww_reduce(j).orderBy("repo", "path").toPandas()
-    b = lww_reduce_window(j).orderBy("repo", "path").toPandas()
+    a = lww_reduce_structmax(j).orderBy("repo", "path").toPandas()
+    b = lww_reduce(j).orderBy("repo", "path").toPandas()
     c = lww_reduce_salted(j, salt_buckets=8).orderBy("repo", "path").toPandas()
-    d = lww_reduce_maxby(j).orderBy("repo", "path").toPandas()
     import pandas as pd
 
     cols = sorted(a.columns)
     pd.testing.assert_frame_equal(a[cols], b[cols].reset_index(drop=True))
     pd.testing.assert_frame_equal(a[cols], c[cols].reset_index(drop=True))
-    pd.testing.assert_frame_equal(a[cols], d[cols].reset_index(drop=True))
 
 
 def test_lww_strategies_agree_on_null_keys(spark):
     """Null-key rows must survive EVERY strategy identically: the join-back
     strategies use a null-safe winner join (a plain equi-join would drop the
     null-key group that groupBy keeps, silently diverging from structmax)."""
-    from activedata_etl_spark.operators.lww import lww_reduce_structmax
-
     rows = [
         (None, "a.py", 1, 0, "v1"),
         (None, "a.py", 2, 1, "v2"),       # winner of the null-repo key
@@ -171,7 +166,7 @@ def test_lww_strategies_agree_on_null_keys(spark):
     want = {(r["repo"], r["path"]): r["v"]
             for r in lww_reduce_structmax(df, **kw).collect()}
     assert want == {(None, "a.py"): "v2", ("r", None): "w2", ("r", "b.py"): "x1"}
-    for fn in (lww_reduce, lww_reduce_window, lww_reduce_maxby,
+    for fn in (lww_reduce,
                lambda d, **k: lww_reduce_salted(d, salt_buckets=4, **k)):
         got = {(r["repo"], r["path"]): r["v"] for r in fn(df, **kw).collect()}
         assert got == want, fn
