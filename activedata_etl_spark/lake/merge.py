@@ -218,15 +218,21 @@ def apply_batch(
     drop_row = F.col("__below") | F.col("__invalid") | F.col("__late")
     try:
         # ---- ONE pre-pass job: per-partition lineage + touched buckets ---
+        # counters are counts, never sums: without a partition column this
+        # is a global aggregate, which yields one row (all counts 0) even
+        # for an empty batch
         by_partition = [PARTITION_COL] if PARTITION_COL in batch.columns else []
         part_rows = [
             r.asDict() for r in flagged.groupBy(*by_partition).agg(
                 F.min(OFFSET_COL).alias("min_offset"),
                 F.max(OFFSET_COL).alias("max_offset"),
                 F.count(F.lit(1)).alias("rows_read"),
-                F.sum(F.col("__below").cast("long")).alias("below_watermark"),
-                F.sum(F.col("__invalid").cast("long")).alias("invalid_events"),
-                F.sum(F.col("__late").cast("long")).alias("late_events"),
+                F.count(F.when(F.col("__below"), 1)).alias("below_watermark"),
+                F.count(F.when(F.col("__invalid"), 1)).alias("invalid_events"),
+                F.count(F.when(F.col("__late"), 1)).alias("late_events"),
+                # the flags overlap (a null-key event can also sit below
+                # the watermark), so live rows are counted, not derived
+                F.count(F.when(~drop_row, 1)).alias("live_rows"),
                 # valid rows only: one corrupt future-dated event must
                 # NOT advance the event-time watermark (it would make
                 # every later real event "late" forever)
@@ -254,9 +260,7 @@ def apply_batch(
         n_quarantined = sum(
             r["invalid_events"] + r["late_events"] for r in part_rows
         )
-        n_live = sum(
-            r["rows_read"] - r["below_watermark"] for r in part_rows
-        ) - n_quarantined
+        n_live = sum(r["live_rows"] for r in part_rows)
 
         if n_quarantined:
             # quarantine table: malformed + too-late events, kept for audit

@@ -218,6 +218,26 @@ def test_invalid_event_cannot_poison_event_time_watermark(spark, tmp_path):
     assert {r["path"] for r in table.read().collect()} == {"a.py", "b.py"}
 
 
+def test_null_key_below_watermark_does_not_hide_live_event(spark, tmp_path):
+    """An event that is both below the watermark and missing its key is
+    counted under both flags in the lineage, yet the live row next to it is
+    still applied (live rows are counted directly, not derived from the
+    overlapping drop counters)."""
+    table = _mk_base(spark, str(tmp_path / "lake_overlap"), n=8, n_buckets=4)
+    b1 = spark.createDataFrame(
+        [(0, 3, 3, "update", None, "f3.py", "d" * 12, None, "OLD", None),
+         (0, 50, 50, "update", "r", "f5.py", "d" * 12, None, "NEW", None)],
+        COLS_V1,
+    )
+    s = apply_batch(table, _norm(b1), 1)
+    assert s["merge_mode"] != "metadata_only" and s["rows_applied"] == 1
+    lin = table.read_lineage().where("batch_id = 1 AND partition = -1").first()
+    assert (lin["rows_read"], lin["below_watermark"],
+            lin["invalid_events"]) == (2, 1, 1)
+    got = {r["path"]: r["content"] for r in table.read().collect()}
+    assert got["f5.py"] == "NEW" and len(got) == 8
+
+
 def test_key_dtype_pinned_to_table_schema(spark, tmp_path):
     """A batch whose key column arrives with a different physical type must
     bucket identically to the table's existing rows — otherwise the same key
@@ -1081,6 +1101,52 @@ def test_sync_changes_one_shot_full_range(spark, tmp_path):
     # a later replay of the INSERT range alone must not resurrect g0.py
     sync_changes(src, rep, from_version=0, to_version=src.current_version())
     assert "g0.py" not in {r["path"] for r in rep.read().collect()}
+
+
+def test_sync_changes_empty_feed_leaves_replica_unchanged(spark, tmp_path):
+    """A source range whose changed buckets diff to no rows — a compaction,
+    or an insert then a delete of the same key — syncs as an empty batch:
+    no error, the replica's rows and watermarks stay, its fence advances
+    once and the cursor moves to the range's end."""
+    from activedata_etl_spark.lake.merge import sync_changes
+
+    src = _mk_base(spark, str(tmp_path / "cdfe_src"), n=8, n_buckets=4)
+    b1 = spark.createDataFrame(
+        [(0, 20, 20, "update", "r", "f1.py", "d" * 12, None, "NEW", None)],
+        COLS_V1,
+    )
+    apply_batch(src, _norm(b1), 1, merge_mode="delta")
+    rep_loc = str(tmp_path / "cdfe_rep")
+    sync_changes(src, rep_loc)
+    rep = SnapshotTable(spark, rep_loc)
+    before = _rowset(rep)
+    assert before == _rowset(src)
+
+    def range_step(step):
+        v0 = src.current_version()
+        step()
+        v1 = src.current_version()
+        assert src.changed_buckets(v0, v1)
+        assert src.changes(v0, v1, deletes="tombstone").count() == 0
+        fence = rep.last_batch_id()
+        s = sync_changes(src, rep)
+        assert s == {"applied": 0, "deletes": 0, "batches": 1,
+                     "synced_version": v1}
+        assert rep.last_batch_id() == fence + 1 and rep.watermarks() == {}
+        assert _rowset(rep) == before
+
+    range_step(src.compact)
+
+    def insert_then_delete():
+        for i, op in ((2, "insert"), (3, "delete")):
+            b = spark.createDataFrame(
+                [(0, 30 + i, 30 + i, op, "r", "tmp.py", "e" * 12, None,
+                  "T", None)],
+                COLS_V1,
+            )
+            apply_batch(src, _norm(b), i)
+
+    range_step(insert_then_delete)
 
 
 def test_mor_broadcast_probe_matches_shuffle_merge(spark, tmp_path):
