@@ -34,10 +34,16 @@ Event identity & ordering model
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from activedata_etl_spark.lake.schema_evolution import read_parquet
+from activedata_etl_spark.lake.schema_evolution import (
+    align_to_schema,
+    read_parquet,
+)
 
 # bit-reversal of 4-bit block positions -> bounded-delay (<16) permutation
 _BITREV16 = [0, 8, 4, 12, 2, 10, 6, 14, 1, 9, 5, 13, 3, 11, 7, 15]
@@ -201,6 +207,26 @@ def write_journal(
     return out_dir
 
 
+def _journal_roots(journal_dir: str) -> list[str]:
+    """The dirs ``read_journal`` reads one scan each from: the ``seg=*``
+    segments, or the journal dir itself when it has none."""
+    import glob as _glob
+
+    return sorted(_glob.glob(f"{journal_dir.rstrip('/')}/seg=*")) or [journal_dir]
+
+
+def _read_root(spark: SparkSession, root: str, paths: list[str]) -> DataFrame:
+    """Read ``paths`` (the root itself, or files under it) as one scan of a
+    journal root.  A segment is the output of one write, so its schema
+    comes from one footer (``read_parquet``, no inference job); a journal
+    without segments is read as a plain parquet dataset (schema and
+    partition columns inferred), with ``basePath`` keeping partition
+    discovery relative to the root when only some of its files are read."""
+    if os.path.basename(root.rstrip("/")).startswith("seg="):
+        return read_parquet(spark, *paths)
+    return spark.read.option("basePath", root).parquet(*paths)
+
+
 def read_journal(spark: SparkSession, journal_dir: str) -> DataFrame:
     """Read all segments, aligning schemas (missing ``mode`` -> null).
 
@@ -209,45 +235,83 @@ def read_journal(spark: SparkSession, journal_dir: str) -> DataFrame:
     segment schemas come from one driver-side footer read each (no Spark
     job at all on the happy path; see ``read_parquet``).
     """
-    import glob as _glob
-
-    seg_dirs = sorted(_glob.glob(f"{journal_dir.rstrip('/')}/seg=*"))
-    if not seg_dirs:
-        return spark.read.parquet(journal_dir)
     out = None
-    for d in seg_dirs:
-        df = read_parquet(spark, d)
+    for root in _journal_roots(journal_dir):
+        df = _read_root(spark, root, [root])
         out = df if out is None else out.unionByName(df, allowMissingColumns=True)
     return out
+
+
+def read_journal_range(
+    spark: SparkSession, journal_dir: str, lo: int, hi: int, files: list,
+    schema: T.StructType,
+) -> DataFrame:
+    """Journal rows with ``lo <= offset <= hi``, scanning only the files
+    whose footer offset range overlaps ``[lo, hi]`` — file skipping by the
+    min/max stats kept beside the data.  ``files`` is
+    ``journal_metadata``'s ``(path, min_offset, max_offset)`` list (bounds
+    None when a row group has no stats: always scanned); ``schema`` is the
+    full journal schema (``read_journal(...).schema``), which the result is
+    aligned to, so a chunk holding only old-segment rows still carries the
+    newer segments' columns as nulls."""
+    hit = [f for f, fmin, fmax in files
+           if fmin is None or (fmin <= hi and fmax >= lo)]
+    out = None
+    for root in _journal_roots(journal_dir):
+        mine = [f for f in hit if f.startswith(root.rstrip("/") + os.sep)]
+        if mine:
+            df = align_to_schema(_read_root(spark, root, mine), schema)
+            out = df if out is None else out.unionByName(df)
+    if out is None:
+        return spark.createDataFrame([], schema)
+    return out.where(F.col("offset").between(lo, hi))
 
 
 def journal_metadata(
     journal_dir: str, spark: SparkSession | None = None, file_threshold: int = 2000
 ) -> dict:
-    """max offset.  Small journals: parquet footer stats read driver-side
-    (no Spark job).  Past ``file_threshold`` files the serial footer walk
-    stops scaling (100k files at 10^10 events), so the max comes from one
-    column-pruned distributed agg instead — parquet min/max row-group stats
-    make it a metadata-ish scan."""
+    """max offset, and per file its offset range.  Small journals: parquet
+    footer stats read driver-side (no Spark job); ``files`` lists
+    ``(path, min_offset, max_offset)`` for ``read_journal_range``, with
+    None bounds for a file that has a row group without offset stats.
+    Past ``file_threshold`` files the serial footer walk stops scaling
+    (100k files at 10^10 events), so the max comes from one column-pruned
+    distributed agg instead — parquet min/max row-group stats make it a
+    metadata-ish scan — and ``files`` is None (chunks scan the whole
+    journal)."""
     import glob as _glob
 
     import pyarrow.parquet as pq
 
-    files = _glob.glob(f"{journal_dir.rstrip('/')}/**/*.parquet", recursive=True)
-    if spark is not None and len(files) > file_threshold:
+    paths = _glob.glob(f"{journal_dir.rstrip('/')}/**/*.parquet", recursive=True)
+    if spark is not None and len(paths) > file_threshold:
         row = read_journal(spark, journal_dir).agg(F.max("offset")).first()
-        return {"max_offset": row[0]}
+        return {"max_offset": row[0], "files": None}
 
     max_offset = None
-    for f in files:
+    files = []
+    for f in paths:
         md = pq.ParquetFile(f).metadata
         schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
         off_i = schema_names.index("offset")
+        fmin = fmax = None
+        stats_ok = True
         for rg in range(md.num_row_groups):
+            if md.row_group(rg).num_rows == 0:
+                continue
             so = md.row_group(rg).column(off_i).statistics
-            if so is not None and so.has_min_max:
-                max_offset = so.max if max_offset is None else max(max_offset, so.max)
-    return {"max_offset": max_offset}
+            if so is None or not so.has_min_max:
+                stats_ok = False
+                continue
+            fmin = so.min if fmin is None else min(fmin, so.min)
+            fmax = so.max if fmax is None else max(fmax, so.max)
+        if fmax is not None:
+            max_offset = fmax if max_offset is None else max(max_offset, fmax)
+        if not stats_ok:
+            files.append((f, None, None))
+        elif fmax is not None:
+            files.append((f, fmin, fmax))
+    return {"max_offset": max_offset, "files": files}
 
 
 def expected_state_df(journal: DataFrame) -> DataFrame:

@@ -16,12 +16,13 @@ Semantics (reference parity):
   `activedata_etl/transforms/__init__.py:210-239`).
 
 Physical plan: one per-partition pre-pass (lineage counters, watermarks,
-touched buckets) over the cached batch -> within-batch LWW reduce
-(map-side combining hash agg) -> bucket id on the winners (Iceberg-style
-hash bucket transform) -> upsert, MOR delta append, or FULL OUTER join
-against ONLY the touched buckets with a copy-on-write rewrite -> atomic
-snapshot swap.  Merge metrics ride the write job via ``DataFrame.observe``
-(zero extra passes).
+touched buckets) -> within-batch LWW reduce (a ``max(struct)`` aggregate
+with map-side partial aggregation; on Spark 4.1 a struct holding strings
+plans as SortAggregate, the partial and the final aggregate each behind a
+Sort) -> bucket id on the winners (Iceberg-style hash bucket transform) ->
+upsert, MOR delta append, or FULL OUTER join against ONLY the touched
+buckets with a copy-on-write rewrite -> atomic snapshot swap.  Merge
+metrics ride the write job via ``DataFrame.observe`` (zero extra passes).
 """
 
 from __future__ import annotations
@@ -95,7 +96,7 @@ def apply_batch(
 
     Phases, each with a fixed Spark job count:
 
-    1. flag + pre-pass: ONE job over the cached batch yields, per journal
+    1. flag + pre-pass: ONE job over the batch yields, per journal
        partition, the lineage counters, the offset high-watermark, the
        event-time watermark and the set of touched buckets.  The commit
        records one lineage row per journal partition plus a
@@ -208,158 +209,156 @@ def apply_batch(
         late = F.lit(False)
 
     key_bucket = _bucket_expr(key_cols, snap["n_buckets"])
-    # the pre-pass fills this cache; the reduce and quarantine read it
+    # not cached: the pre-pass, the quarantine write and the reduce each
+    # re-read the batch, which costs less than the job that would fill a cache
     flagged = (
         batch.withColumn("__below", below)
         .withColumn("__invalid", invalid)
         .withColumn("__late", late & ~invalid)
-        .persist()
     )
     drop_row = F.col("__below") | F.col("__invalid") | F.col("__late")
-    try:
-        # ---- ONE pre-pass job: per-partition lineage + touched buckets ---
-        # counters are counts, never sums: without a partition column this
-        # is a global aggregate, which yields one row (all counts 0) even
-        # for an empty batch
-        by_partition = [PARTITION_COL] if PARTITION_COL in batch.columns else []
-        part_rows = [
-            r.asDict() for r in flagged.groupBy(*by_partition).agg(
-                F.min(OFFSET_COL).alias("min_offset"),
-                F.max(OFFSET_COL).alias("max_offset"),
-                F.count(F.lit(1)).alias("rows_read"),
-                F.count(F.when(F.col("__below"), 1)).alias("below_watermark"),
-                F.count(F.when(F.col("__invalid"), 1)).alias("invalid_events"),
-                F.count(F.when(F.col("__late"), 1)).alias("late_events"),
-                # the flags overlap (a null-key event can also sit below
-                # the watermark), so live rows are counted, not derived
-                F.count(F.when(~drop_row, 1)).alias("live_rows"),
-                # valid rows only: one corrupt future-dated event must
-                # NOT advance the event-time watermark (it would make
-                # every later real event "late" forever)
-                (F.max(F.when(~drop_row, F.unix_timestamp(TS_COL)))
-                 if has_ts else F.lit(None).cast("long")).alias("max_ts"),
-                # the bucket id lives only inside this set: the reduce
-                # computes it on the winners, since it is constant within a
-                # key group (carried per event it widens the reduce shuffle,
-                # measured ~6% of the reduce stage)
-                F.collect_set(F.when(~drop_row, key_bucket)).alias("buckets"),
-            ).collect()
-        ]
-        t_pre = time.time()
-        touched = sorted({b for r in part_rows for b in r["buckets"]})
-        new_wm = dict(wm)
-        for r in part_rows:
-            if PARTITION_COL in r:
-                p = int(r[PARTITION_COL])
-                new_wm[p] = max(new_wm.get(p, -1), int(r["max_offset"]))
-        new_max_event_ts = max(
-            (int(x) for x in [max_event_ts] + [r["max_ts"] for r in part_rows]
-             if x is not None),
-            default=None,
+
+    # ---- ONE pre-pass job: per-partition lineage + touched buckets -------
+    # counters are counts, never sums: without a partition column this
+    # is a global aggregate, which yields one row (all counts 0) even
+    # for an empty batch
+    by_partition = [PARTITION_COL] if PARTITION_COL in batch.columns else []
+    part_rows = [
+        r.asDict() for r in flagged.groupBy(*by_partition).agg(
+            F.min(OFFSET_COL).alias("min_offset"),
+            F.max(OFFSET_COL).alias("max_offset"),
+            F.count(F.lit(1)).alias("rows_read"),
+            F.count(F.when(F.col("__below"), 1)).alias("below_watermark"),
+            F.count(F.when(F.col("__invalid"), 1)).alias("invalid_events"),
+            F.count(F.when(F.col("__late"), 1)).alias("late_events"),
+            # the flags overlap (a null-key event can also sit below
+            # the watermark), so live rows are counted, not derived
+            F.count(F.when(~drop_row, 1)).alias("live_rows"),
+            # valid rows only: one corrupt future-dated event must
+            # NOT advance the event-time watermark (it would make
+            # every later real event "late" forever)
+            (F.max(F.when(~drop_row, F.unix_timestamp(TS_COL)))
+             if has_ts else F.lit(None).cast("long")).alias("max_ts"),
+            # the bucket id lives only inside this set: the reduce
+            # computes it on the winners, since it is constant within a
+            # key group (carried per event it widens the reduce shuffle,
+            # measured ~6% of the reduce stage)
+            F.collect_set(F.when(~drop_row, key_bucket)).alias("buckets"),
+        ).collect()
+    ]
+    t_pre = time.time()
+    touched = sorted({b for r in part_rows for b in r["buckets"]})
+    new_wm = dict(wm)
+    for r in part_rows:
+        if PARTITION_COL in r:
+            p = int(r[PARTITION_COL])
+            new_wm[p] = max(new_wm.get(p, -1), int(r["max_offset"]))
+    new_max_event_ts = max(
+        (int(x) for x in [max_event_ts] + [r["max_ts"] for r in part_rows]
+         if x is not None),
+        default=None,
+    )
+    n_quarantined = sum(
+        r["invalid_events"] + r["late_events"] for r in part_rows
+    )
+    n_live = sum(r["live_rows"] for r in part_rows)
+
+    if n_quarantined:
+        # quarantine table: malformed + too-late events, kept for audit
+        (
+            flagged.where(F.col("__invalid") | F.col("__late"))
+            .drop("__below")
+            .write.mode("overwrite")
+            .parquet(os.path.join(table.location, f"quarantine/b{batch_id}"))
         )
-        n_quarantined = sum(
-            r["invalid_events"] + r["late_events"] for r in part_rows
-        )
-        n_live = sum(r["live_rows"] for r in part_rows)
 
-        if n_quarantined:
-            # quarantine table: malformed + too-late events, kept for audit
-            (
-                flagged.where(F.col("__invalid") | F.col("__late"))
-                .drop("__below")
-                .write.mode("overwrite")
-                .parquet(os.path.join(table.location, f"quarantine/b{batch_id}"))
-            )
-
-        if not n_live:
-            # nothing live: metadata-only commit (fence + watermark advance)
-            s = _commit(
-                table, snap, batch_id, new_wm, part_rows, None, None,
-                schema_json=snap["schema"], changes=[],
-                applied=0, deletes=0, conflicts=0, t0=t0,
-                max_event_ts=new_max_event_ts, advance_fence=advance_fence,
-            )
-            s["pre_pass_ms"] = int((t_pre - t0) * 1000)
-            return s
-
-        # ---- within-batch LWW reduce (map-side combine handles skew) -----
-        # partition id is lineage-only (consumed by the pre-pass); dropping
-        # it keeps the envelope column out of the reduce shuffle
-        live = flagged.where(~drop_row).drop(
-            "__below", "__invalid", "__late", PARTITION_COL
-        )
-        reduce = lww_reduce_salted if salted else lww_reduce_structmax
-        reduced = reduce(live, key_cols, list(version_cols)).withColumn(
-            BUCKET_COL, key_bucket
-        )
-        stored_cols = [c for c in batch.columns if c not in ENVELOPE_DROP]
-
-        # ---- finalize transforms on WINNERS only (not on every event) ----
-        if finalize_fn is not None:
-            reduced = finalize_fn(reduced)
-            stored_cols = [c for c in reduced.columns if c not in ENVELOPE_DROP
-                           and c != BUCKET_COL]
-
-        # ---- schema evolution (transactional with this commit) ------------
-        merged_schema, changes, src = _evolve(snap, reduced, stored_cols)
-
-        # ---- pick the write strategy --------------------------------------
-        mode = merge_mode
-        stored_version_cols = snap.get("version_cols")
-        if mode != "cow" and stored_version_cols \
-                and list(version_cols) != list(stored_version_cols):
-            # read-time LWW merges on the TABLE's version columns; a delta
-            # written under different ones would merge wrong — CoW instead
-            mode = "cow"
-        if mode == "auto":
-            base_rows = table.base_row_count()
-            # live rows ≥ winners: an upper bound on what the batch writes
-            mode = ("delta" if base_rows and n_live < DELTA_FRACTION * base_rows
-                    else "cow")
-        if not table.existing_bucket_paths(touched):
-            # no target data in any touched bucket: pure upsert, no join.
-            # Deletes still land as tombstones so later stale arrivals lose.
-            mode = "upsert"
-
-        # ---- observe -> write -> recount -> commit -------------------------
-        if mode == "cow":
-            frame, metrics, out_cols = _cow_merge(
-                table, src, merged_schema, key_cols, version_cols, touched
-            )
-        else:
-            # upsert / MOR delta: the winners are the rows written.  For a
-            # delta, the >= version guard is deferred to the read-time LWW
-            # reduce, which resolves base-vs-delta and delta-vs-delta exactly
-            # like the CoW merge expressions.
-            frame = src.select(*merged_schema.fieldNames(), BUCKET_COL)
-            deleted = F.coalesce(F.col(DELETED_COL), F.lit(False))
-            metrics = [
-                F.sum((~deleted).cast("long")).alias("applied"),
-                F.sum(deleted.cast("long")).alias("deletes"),
-            ]
-            out_cols = frame.columns
-        obs = Observation(f"{mode}_b{batch_id}")
-        rel = table.write_buckets(
-            frame.observe(obs, *metrics).select(*out_cols), snap["version"] + 1
-        )
-        try:
-            m = obs.get
-        except Exception:
-            # CollectMetrics can be optimized away (plan folded to a local
-            # relation) — recount in one small pass over the same frame
-            m = frame.agg(*metrics).first().asDict()
+    if not n_live:
+        # nothing live: metadata-only commit (fence + watermark advance)
         s = _commit(
-            table, snap, batch_id, new_wm, part_rows, touched, rel,
-            schema_json=merged_schema.jsonValue(), changes=changes,
-            applied=int(m["applied"] or 0), deletes=int(m["deletes"] or 0),
-            conflicts=int(m.get("conflicts") or 0), t0=t0,
-            max_event_ts=new_max_event_ts, version_cols=version_cols,
-            mode=mode, advance_fence=advance_fence,
+            table, snap, batch_id, new_wm, part_rows, None, None,
+            schema_json=snap["schema"], changes=[],
+            applied=0, deletes=0, conflicts=0, t0=t0,
+            max_event_ts=new_max_event_ts, advance_fence=advance_fence,
         )
         s["pre_pass_ms"] = int((t_pre - t0) * 1000)
         return s
-    finally:
-        flagged.unpersist()
+
+    # ---- within-batch LWW reduce (map-side combine handles skew) -----
+    # partition id is lineage-only (consumed by the pre-pass); dropping
+    # it keeps the envelope column out of the reduce shuffle
+    live = flagged.where(~drop_row).drop(
+        "__below", "__invalid", "__late", PARTITION_COL
+    )
+    reduce = lww_reduce_salted if salted else lww_reduce_structmax
+    reduced = reduce(live, key_cols, list(version_cols)).withColumn(
+        BUCKET_COL, key_bucket
+    )
+    stored_cols = [c for c in batch.columns if c not in ENVELOPE_DROP]
+
+    # ---- finalize transforms on WINNERS only (not on every event) ----
+    if finalize_fn is not None:
+        reduced = finalize_fn(reduced)
+        stored_cols = [c for c in reduced.columns if c not in ENVELOPE_DROP
+                       and c != BUCKET_COL]
+
+    # ---- schema evolution (transactional with this commit) ------------
+    merged_schema, changes, src = _evolve(snap, reduced, stored_cols)
+
+    # ---- pick the write strategy --------------------------------------
+    mode = merge_mode
+    stored_version_cols = snap.get("version_cols")
+    if mode != "cow" and stored_version_cols \
+            and list(version_cols) != list(stored_version_cols):
+        # read-time LWW merges on the TABLE's version columns; a delta
+        # written under different ones would merge wrong — CoW instead
+        mode = "cow"
+    if mode == "auto":
+        base_rows = table.base_row_count()
+        # live rows ≥ winners: an upper bound on what the batch writes
+        mode = ("delta" if base_rows and n_live < DELTA_FRACTION * base_rows
+                else "cow")
+    if not table.existing_bucket_paths(touched):
+        # no target data in any touched bucket: pure upsert, no join.
+        # Deletes still land as tombstones so later stale arrivals lose.
+        mode = "upsert"
+
+    # ---- observe -> write -> recount -> commit -------------------------
+    if mode == "cow":
+        frame, metrics, out_cols = _cow_merge(
+            table, src, merged_schema, key_cols, version_cols, touched
+        )
+    else:
+        # upsert / MOR delta: the winners are the rows written.  For a
+        # delta, the >= version guard is deferred to the read-time LWW
+        # reduce, which resolves base-vs-delta and delta-vs-delta exactly
+        # like the CoW merge expressions.
+        frame = src.select(*merged_schema.fieldNames(), BUCKET_COL)
+        deleted = F.coalesce(F.col(DELETED_COL), F.lit(False))
+        metrics = [
+            F.sum((~deleted).cast("long")).alias("applied"),
+            F.sum(deleted.cast("long")).alias("deletes"),
+        ]
+        out_cols = frame.columns
+    obs = Observation(f"{mode}_b{batch_id}")
+    rel = table.write_buckets(
+        frame.observe(obs, *metrics).select(*out_cols), snap["version"] + 1
+    )
+    try:
+        m = obs.get
+    except Exception:
+        # CollectMetrics can be optimized away (plan folded to a local
+        # relation) — recount in one small pass over the same frame
+        m = frame.agg(*metrics).first().asDict()
+    s = _commit(
+        table, snap, batch_id, new_wm, part_rows, touched, rel,
+        schema_json=merged_schema.jsonValue(), changes=changes,
+        applied=int(m["applied"] or 0), deletes=int(m["deletes"] or 0),
+        conflicts=int(m.get("conflicts") or 0), t0=t0,
+        max_event_ts=new_max_event_ts, version_cols=version_cols,
+        mode=mode, advance_fence=advance_fence,
+    )
+    s["pre_pass_ms"] = int((t_pre - t0) * 1000)
+    return s
 
 
 def _evolve(snap, reduced, stored_cols):
@@ -400,7 +399,12 @@ def _cow_merge(table, src, merged_schema, key_cols, version_cols, touched):
 
     s = src.select([F.col(c).alias(f"s_{c}") for c in src.columns])
     t = tgt.select([F.col(c).alias(f"t_{c}") for c in tgt.columns])
-    cond = [s[f"s_{k}"].eqNullSafe(t[f"t_{k}"]) for k in key_cols]
+    # plain equality, not null-safe: the pre-pass quarantines every null-key
+    # event, so no null key reaches this join, and a null-key target row
+    # stays unmatched either way.  The join then hash-partitions on the
+    # plain key columns, the murmur3 the bucket id derives from, so the
+    # bucketed write gets whole buckets per task (``write_buckets``)
+    cond = [s[f"s_{k}"] == t[f"t_{k}"] for k in key_cols]
     joined = s.join(t, cond, "full_outer")
 
     s_ver = F.struct(*[F.col(f"s_{c}") for c in version_cols])

@@ -107,10 +107,11 @@ def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def footer_schema(*dirs: str) -> T.StructType | None:
-    """Spark schema of the first parquet file under ``dirs``, read from its
-    footer driver-side with pyarrow.  ``spark.read.parquet`` otherwise infers
-    the schema with a Spark job of its own on every call.
+def footer_schema(*paths: str) -> T.StructType | None:
+    """Spark schema of the first parquet file among ``paths`` (files, or
+    dirs holding ``*.parquet`` files), read from its footer driver-side
+    with pyarrow.  ``spark.read.parquet`` otherwise infers the schema with
+    a Spark job of its own on every call.
 
     A Spark-written footer carries Spark's schema JSON, which is what
     inference would return; a footer without it (pyarrow-written) converts
@@ -124,8 +125,9 @@ def footer_schema(*dirs: str) -> T.StructType | None:
         from pyspark.sql.pandas.types import from_arrow_schema
     except ImportError:  # older pyspark: fall back to inference
         return None
-    for d in dirs:
-        files = sorted(glob.glob(os.path.join(d, "*.parquet")))
+    for p in paths:
+        files = ([p] if os.path.isfile(p)
+                 else sorted(glob.glob(os.path.join(p, "*.parquet"))))
         if not files:
             continue
         try:
@@ -139,12 +141,12 @@ def footer_schema(*dirs: str) -> T.StructType | None:
     return None
 
 
-def read_parquet(spark: SparkSession, *dirs: str) -> DataFrame:
-    """``spark.read.parquet(*dirs)`` with the schema taken from one footer
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema taken from one footer
     (:func:`footer_schema`), so the read plans without a schema-inference
-    job.  Every file under ``dirs`` must share that physical schema — true
-    for the output of one write.  Falls back to inference when no footer
-    can be read."""
-    schema = footer_schema(*dirs)
+    job.  Every file under ``paths`` must share that physical schema —
+    true for the output of one write.  Falls back to inference when no
+    footer can be read."""
+    schema = footer_schema(*paths)
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(*dirs)
+    return reader.parquet(*paths)

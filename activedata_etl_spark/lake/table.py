@@ -49,6 +49,7 @@ from pyspark.sql import types as T
 
 from activedata_etl_spark.lake.schema_evolution import (
     align_to_schema,
+    footer_schema,
     read_parquet,
 )
 
@@ -424,27 +425,29 @@ class SnapshotTable:
         """Scan (dir relpath, bucket id) pairs aligned to ``schema``.
 
         Data dirs written by older snapshots may have narrower physical
-        schemas (pre-widening); each same-version group is read in one
-        parquet scan and upcast on the fly — column pruning and predicate
-        pushdown still reach the parquet reader because alignment is a plain
-        projection on top of the scan.  A group is the output of one write,
-        so its physical schema comes from one footer read driver-side
-        (``read_parquet``): a read plans with no schema-inference job per
-        group, and its job count stays flat as delta chains grow.
+        schemas (pre-widening).  The pairs are grouped by physical schema,
+        and each group is read in ONE parquet scan and upcast on the fly —
+        column pruning and predicate pushdown still reach the parquet
+        reader because alignment is a plain projection on top of the scan.
+        A data dir is the output of one write, so its physical schema comes
+        from one footer read driver-side (``read_parquet``): a read plans
+        with no schema-inference job, its scan count is the number of
+        distinct physical schemas (not of writer versions), and Spark packs
+        the small bucket files of one scan into few tasks.
         """
-        by_version: dict[int, list[str]] = {}
-        for d, b in pairs:
-            ver = snap["dir_versions"][d]
-            by_version.setdefault(ver, []).append(
-                os.path.join(self.location, d, f"{BUCKET_COL}={b}")
-            )
-        parts: list[DataFrame] = []
-        for _, paths in sorted(by_version.items()):
-            existing = [p for p in paths if os.path.exists(p)]
-            if not existing:
+        dir_schema: dict[str, str] = {}
+        groups: dict[str, list[str]] = {}
+        for d, b in sorted(pairs, key=lambda p: snap["dir_versions"][p[0]]):
+            path = os.path.join(self.location, d, f"{BUCKET_COL}={b}")
+            if not os.path.exists(path):
                 continue
-            parts.append(align_to_schema(
-                read_parquet(self.spark, *existing), schema))
+            if d not in dir_schema:
+                phys = footer_schema(path)
+                # an unreadable footer keeps its dir apart (inferred scan)
+                dir_schema[d] = phys.json() if phys is not None else d
+            groups.setdefault(dir_schema[d], []).append(path)
+        parts = [align_to_schema(read_parquet(self.spark, *paths), schema)
+                 for paths in groups.values()]
         if not parts:
             return None
         out = parts[0]
@@ -556,7 +559,7 @@ class SnapshotTable:
         Buckets that carry MOR-lite delta files (small incremental batches,
         see ``merge.apply_batch(merge_mode=...)``) are merged at read time:
         base ∪ deltas reduced last-writer-wins on the table's version columns
-        — the same structmax HashAggregate the write path uses, confined to
+        — the same structmax aggregate the write path uses, confined to
         exactly the buckets that have deltas.  Buckets without deltas take
         the plain scan path with zero overhead.
 
@@ -796,13 +799,23 @@ class SnapshotTable:
         after its grace period.  Nothing parses the dir name: snapshots
         reference dirs through ``bucket_dirs``/``dir_versions``.
 
-        NO repartition: the caller's plan is already hash-partitioned by the
-        key columns (LWW window / merge join), and bucket = murmur3(keys) %
-        n_buckets is aligned with that partitioning, so every task holds
-        whole buckets — ``partitionBy`` emits at most one file per bucket per
-        task with zero extra shuffle.  ``sortWithinPartitions`` groups each
-        task's rows by bucket so the dynamic-partition writer keeps a single
-        open file at a time.
+        NO repartition: bucket = murmur3(keys) % n_buckets, the hash Spark's
+        shuffle partitions by, so every task holds whole buckets — and
+        ``partitionBy`` writes ONE file per bucket with zero extra shuffle —
+        when two conditions hold:
+
+        1. ``spark.sql.shuffle.partitions`` divides ``n_buckets`` (then
+           partition = hash % P is a function of bucket = hash % N; AQE's
+           coalescing only merges whole partitions);
+        2. the input is hash-partitioned on the PLAIN key columns (the LWW
+           aggregate, or a merge join on ``==``).  A null-safe join hashes
+           ``coalesce``/``isnull`` key expressions instead, which scatters
+           each bucket over many tasks.
+
+        Otherwise (or where AQE splits a skewed join partition) the write
+        stays correct but emits up to one file per bucket per task.  ``sortWithinPartitions`` groups each task's rows
+        by bucket so the dynamic-partition writer keeps a single open file
+        at a time.
         """
         rel = f"data/v{version}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.location, rel)

@@ -619,14 +619,21 @@ def simhash(
     return per_doc.select("id", sig.cast("long").alias("simhash"))
 
 
+# most blocks a band plan splits the signature into: the canonical-band
+# dedup looks the first matching band up in a 2^B-entry literal table
+_MAX_BAND_BLOCKS = 12
+
+
 def _simhash_band_plan(max_hamming: int, max_bands: int = 64):
     """Block-permutation (Manku-style) band layout with EXACT recall.
 
     Split the 63 signature bits into B blocks and band on every
     (B - h)-subset of blocks: a pair within hamming h dirties <= h blocks,
     leaving >= B-h clean blocks, so at least one band (the all-clean subset)
-    matches — no recall loss, by pigeonhole.  B is the largest block count
-    with C(B, h) <= ``max_bands``.
+    matches — no recall loss, by pigeonhole, for ANY B >= h + 1.  B is the
+    largest block count with C(B, h) <= ``max_bands``, capped at
+    ``_MAX_BAND_BLOCKS`` (the cap binds only at h = 1, where C(B, 1) = B
+    would otherwise reach 16 and a 65,536-literal lookup table).
 
     Why not wider still: naive h+1-chunk pigeonhole (the B = h+1 degenerate
     case of this layout) gives 63/(h+1)-bit keys — at h=8 that is 7 bits /
@@ -639,7 +646,7 @@ def _simhash_band_plan(max_hamming: int, max_bands: int = 64):
     from math import comb
 
     B = max_hamming + 1
-    while B < 16 and comb(B + 1, max_hamming) <= max_bands:
+    while B < _MAX_BAND_BLOCKS and comb(B + 1, max_hamming) <= max_bands:
         B += 1
     starts = [63 * c // B for c in range(B + 1)]
     combos = list(_it.combinations(range(B), B - max_hamming))
@@ -769,7 +776,7 @@ def _simhash_candidates(
         # up to ALL C(B, h) bands (hamming 0 matches every one), so the join
         # emits each true pair ~|combos| times and the old distinct shuffled
         # that whole multiplicity (~40x the output at h=8).  Keeping only
-        # the FIRST matching band — computable per joined row from a 10-bit
+        # the FIRST matching band — computable per joined row from a B-bit
         # clean-block mask, no extra pass — emits each candidate pair
         # EXACTLY once, map-side, and the distinct disappears.  (With a
         # frequency cap a pair's canonical band can be capped away while a
@@ -787,7 +794,8 @@ def _simhash_candidates(
             ).otherwise(F.lit(0))
             clean = m if clean is None else clean + m
         # first matching combo per clean-block mask, precomputed driver-side
-        # into a 2^B table (B <= 15 by the band plan): one element_at per
+        # into a 2^B table (B <= 12 by the band plan for h <= 11; an exact
+        # plan needs B >= h + 1 above that): one element_at per
         # joined row instead of |combos| chained comparisons
         combo_masks = [sum(1 << c for c in cb) for cb in combos]
         nope = len(combos)

@@ -11,10 +11,13 @@ Three physical strategies, same semantics:
 
 - ``lww_reduce_structmax`` ONE scan, ONE shuffle: ``max(struct(version...,
                            payload...))`` — plain Max over an orderable
-                           struct is a DeclarativeAggregate, so Spark runs a
-                           true HashAggregate with map-side partial
-                           aggregation (a hot key collapses to ONE row per
-                           map task before the shuffle).  The version columns
+                           struct is a DeclarativeAggregate, so Spark runs
+                           it with map-side partial aggregation (a hot key
+                           collapses to ONE row per map task before the
+                           shuffle).  A struct buffer is not a fixed-width
+                           hash-aggregate buffer, so on Spark 4.1 the
+                           partial and the final aggregate each plan as a
+                           SortAggregate behind a Sort.  The version columns
                            lead the struct so ordering is by version first;
                            payload columns follow, giving a DETERMINISTIC
                            tiebreak for distinct events that share a version.
@@ -80,10 +83,11 @@ def lww_reduce(
 ) -> DataFrame:
     """One row per key: the one with max (version_cols...), all columns kept.
 
-    Physical shape: (1) scalar ``max(struct(version))`` per key — a true
-    HashAggregate with map-side combine (a wide-payload ``max_by`` falls back
-    to SortAggregate and measured ~20x slower per row); (2) join the winning
-    version back to fetch the payload; (3) a row_number over the winner set
+    Physical shape: (1) ``max(struct(version))`` per key with map-side
+    partial aggregation (a SortAggregate on Spark 4.1, like every struct
+    max; a wide-payload ``max_by`` measured ~20x slower per row); (2) join
+    the winning version back to fetch the payload; (3) a row_number over
+    the winner set
     (≈ one row per key, tiny) collapses exact-duplicate redeliveries, which
     share the same (version, payload) bytes.
     """
@@ -121,11 +125,14 @@ def lww_reduce_structmax(
 
     Max over a struct compares fields lexicographically, so leading with the
     version columns makes this exactly "row with the largest version, ties
-    broken deterministically by payload bytes".  Unlike ``max_by`` (which
-    plans as a SortAggregate) plain ``max`` is a DeclarativeAggregate →
-    HashAggregate with map-side combine: one scan, one shuffle of one row
-    per key per map task, no join-back.  Falls back to ``lww_reduce`` when a
-    payload column is not orderable (MapType).
+    broken deterministically by payload bytes".  Plain ``max`` is a
+    DeclarativeAggregate with map-side partial aggregation: one scan, one
+    shuffle of one row per key per map task, no join-back.  Its struct
+    buffer is not fixed-width, so on Spark 4.1 it plans as SortAggregate,
+    the partial and the final aggregate each behind a Sort (``explain()``
+    of ``SnapshotTable.read`` on a delta-carrying table shows it).  Falls
+    back to ``lww_reduce`` when a payload column is not orderable
+    (MapType).
     """
     keys = keys or DEFAULT_KEYS
     version_cols = version_cols or DEFAULT_VERSION
@@ -160,7 +167,7 @@ def lww_reduce_salted(
     is ASSOCIATIVE, so folding the per-salt winners into the per-key winner
     yields exactly ``lww_reduce_structmax``'s result (largest version,
     ties broken deterministically by payload bytes) — with no join-back
-    and no window: two hash aggregates, both map-side combinable.  (The
+    and no window: two aggregates, both map-side combinable.  (The
     previous formulation carried only the version through phase 1 and
     joined the payload back — one extra shuffle plus a full re-scan, 29%
     slower in the 4x2 replay bench.)  Spark's partial aggregation already

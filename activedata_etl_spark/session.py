@@ -25,6 +25,10 @@ def tuning_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.compression.codec": "zstd",
+        # pyspark otherwise captures a DataFrame query context around every
+        # Column call: extra py4j round trips (and a failed IPython import)
+        # per F.* call, thousands per CDC batch
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if shuffle_partitions:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

@@ -139,20 +139,20 @@ def replay_journal(
     offsets is a deliberate no-op.  To re-apply committed data use
     ``repair_range`` (same merge path, fence and watermarks unchanged).
     """
-    from activedata_etl_spark.journal import journal_metadata, read_journal
+    from activedata_etl_spark.journal import (
+        journal_metadata,
+        read_journal,
+        read_journal_range,
+    )
 
     journal = read_journal(spark, journal_dir)
-    if offset_range is not None:
-        journal = journal.where(
-            F.col("offset").between(offset_range[0], offset_range[1])
-        )
     table = ensure_table(
         spark, table_location, journal.schema,
         n_buckets=n_buckets, expected_rows=expected_rows,
     )
 
-    # max offset: footer stats driver-side for small journals, one
-    # distributed column-pruned agg past ~2k files
+    # max offset and per-file offset ranges: footer stats driver-side for
+    # small journals, one distributed column-pruned agg past ~2k files
     meta = journal_metadata(journal_dir, spark)
     max_offset = journal_max = meta["max_offset"]
     if offset_range is not None and max_offset is not None:
@@ -204,7 +204,16 @@ def replay_journal(
         if max_batches is not None and ran >= max_batches:
             break
         lo, hi = i * chunk_events, (i + 1) * chunk_events - 1
-        chunk = journal.where(F.col("offset").between(lo, hi))
+        if offset_range is not None:
+            lo, hi = max(lo, offset_range[0]), min(hi, offset_range[1])
+        # a chunk scans only the journal files whose footer offset range
+        # overlaps it; past the footer walk's file threshold there are no
+        # per-file ranges and the chunk filters the whole journal
+        chunk = (
+            journal.where(F.col("offset").between(lo, hi))
+            if meta["files"] is None else read_journal_range(
+                spark, journal_dir, lo, hi, meta["files"], journal.schema)
+        )
         # key normalization pre-reduce; lang/sha256 only on LWW winners.
         # A CommitConflictError means a concurrent MAINTENANCE commit
         # (compactor/analyze) won the version CAS: nothing was applied, so

@@ -226,3 +226,48 @@ def test_lineage_recorded(spark, journal_dir, tmp_path):
     assert per_part["rows_read"].sum() == read_journal(spark, journal_dir).count()
     summary = lin[lin["partition"] == -1]
     assert (summary["rows_applied"] >= 0).all()
+
+
+def test_chunk_scans_only_overlapping_journal_files(
+    spark, journal_dir, journal_pdf, tmp_path
+):
+    """A replay chunk reads only the journal files whose offsets overlap it,
+    with the full journal schema and the rows of a whole-journal filter; a
+    replay whose chunks straddle the seg=1/seg=2 boundary and end inside
+    files converges to the oracle."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from activedata_etl_spark.journal import journal_metadata, read_journal_range
+
+    meta = journal_metadata(journal_dir, spark)
+    offsets = {f: pq.read_table(f, columns=["offset"]).column(0).to_pylist()
+               for f, _, _ in meta["files"]}
+    full = read_journal(spark, journal_dir)
+    seg2_lo = min(lo for f, lo, _ in meta["files"] if "seg=2" in f)
+    chunk = 1500
+    # the fixture: chunk boundaries fall inside journal files, and one
+    # chunk holds rows of both segments
+    assert any(lo < b <= hi for b in range(chunk, N, chunk)
+               for _, lo, hi in meta["files"])
+    assert seg2_lo % chunk != 0
+    for lo, hi in ((0, chunk - 1), (seg2_lo // chunk * chunk,
+                                    (seg2_lo // chunk + 1) * chunk - 1)):
+        df = read_journal_range(spark, journal_dir, lo, hi, meta["files"],
+                                full.schema)
+        want = {f for f, offs in offsets.items()
+                if any(lo <= o <= hi for o in offs)}
+        got = {os.path.realpath(p.removeprefix("file:"))
+               for p in df.inputFiles()}
+        assert got == {os.path.realpath(f) for f in want}
+        assert len(want) < len(offsets)
+        assert df.columns == full.columns  # seg=1-only chunk keeps `mode`
+        where = full.where(F.col("offset").between(lo, hi))
+        assert sorted(map(tuple, df.collect()), key=repr) == sorted(
+            map(tuple, where.collect()), key=repr)
+
+    loc = str(tmp_path / "lake_pruned_chunks")
+    res = replay_journal(spark, journal_dir, loc, chunk_events=chunk)
+    assert res["batches"] == -(-N // chunk)
+    assert_table_matches_oracle(SnapshotTable(spark, loc).read(), journal_pdf)

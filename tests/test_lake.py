@@ -1333,7 +1333,9 @@ def test_read_job_count_flat_as_delta_chain_grows(spark, tmp_path):
 def test_apply_batch_job_count(spark, tmp_path):
     """A batch runs a fixed number of Spark jobs per write path: the
     per-partition pre-pass, the write, and for CoW the touched-bucket read
-    of the merge target."""
+    of the merge target.  The batch is not cached, so no job fills a cache,
+    and the CoW join is partitioned like the buckets, so its write needs no
+    extra exchange."""
     table = _mk_base(spark, str(tmp_path / "lake_apply_jobs"), n=100, n_buckets=8)
 
     def batch(i):
@@ -1350,7 +1352,115 @@ def test_apply_batch_job_count(spark, tmp_path):
         cow=apply_batch(table, batch(2), 2, merge_mode="cow")))
     assert out["delta"]["merge_mode"] == "delta"
     assert out["cow"]["merge_mode"] == "cow"
-    assert (n_delta, n_cow) == (5, 8)
+    assert (n_delta, n_cow) == (4, 5)
+
+
+def test_cow_merge_writes_one_file_per_touched_bucket(spark, tmp_path):
+    """With shuffle partitions dividing n_buckets, the CoW merge join is
+    hash-partitioned like the buckets, so each touched bucket gets one
+    file.  The rows equal the read-time LWW merge of the same batches (the
+    delta twin) on a batch with a delete, a stale update and a stale update
+    of a tombstoned key."""
+    import glob as _glob
+    import os
+
+    n_buckets = 16
+    assert n_buckets % int(spark.conf.get("spark.sql.shuffle.partitions")) == 0
+
+    def ev(offset, seq, op, path, content):
+        return (0, offset, seq, op, "r", path, "d" * 12, None, content, None)
+
+    b1 = [ev(150, 150, "delete", "f3.py", None)]
+    b2 = ([ev(160, 160, "delete", "f5.py", None),
+           ev(161, 1, "update", "f7.py", "STALE"),   # base f7 has seq 7
+           ev(162, 2, "update", "f3.py", "UNDEAD"),  # loses to the tombstone
+           ev(170, 170, "insert", "fNEW.py", "N")]
+          + [ev(200 + i, 200 + i, "update", f"f{i}.py", f"U{i}")
+             for i in range(10, 60)])
+    tables, summaries = {}, {}
+    # keep every shuffle partition: AQE would coalesce this tiny fixture
+    # into one task, which writes one file per bucket whatever the join keys
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        for mode in ("cow", "delta"):
+            t = _mk_base(spark, str(tmp_path / f"lake_{mode}_files"), n=100,
+                         n_buckets=n_buckets)
+            for bid, rows in ((1, b1), (2, b2)):
+                summaries[mode] = apply_batch(
+                    t, _norm(spark.createDataFrame(rows, COLS_V1)), bid,
+                    merge_mode=mode)
+            tables[mode] = t
+    finally:
+        spark.conf.set(coalesce, was)
+    s = summaries["cow"]
+    assert s["merge_mode"] == "cow" and s["touched_buckets"] > 8
+    assert (s["rows_applied"], s["deletes_applied"],
+            s["merge_conflicts_resolved"]) == (51, 1, 2)
+    root = os.path.join(tables["cow"].location, s["data_rel"])
+    per_bucket = [len(_glob.glob(os.path.join(d, "*.parquet")))
+                  for d in _glob.glob(os.path.join(root, "__bucket=*"))]
+    assert len(per_bucket) == s["touched_buckets"]
+    assert max(per_bucket) == 1
+
+    cow = tables["cow"].read(include_tombstones=True)
+    assert _rows(cow) == _rows(tables["delta"].read(include_tombstones=True))
+    live = {r["path"]: r["content"] for r in tables["cow"].read().collect()}
+    assert "f3.py" not in live and "f5.py" not in live
+    assert live["f7.py"] == "X" * 50 and live["fNEW.py"] == "N"
+    assert live["f10.py"] == "U10" and len(live) == 100 - 2 + 1
+
+
+def test_read_plans_one_scan_per_physical_schema(spark, tmp_path):
+    """A read across a delta chain that crosses a column widening plans one
+    FileScan per distinct physical schema of the dirs it reads (not one per
+    writer version), with the same rows."""
+    from activedata_etl_spark.lake.schema_evolution import footer_schema
+
+    loc = str(tmp_path / "lake_scan_groups")
+    s1 = COLS_V1 + ", size int"
+    s2 = COLS_V1 + ", size double"
+    rows = [
+        (0, i, i, "insert", "r", f"f{i}.py", "c" * 12, None, "X", None, i)
+        for i in range(40)
+    ]
+    table = ensure_table(spark, loc, spark.createDataFrame(rows, s1).schema,
+                         n_buckets=1)
+    apply_batch(table, _norm(spark.createDataFrame(rows, s1)), 0)
+    deltas = [(s1, 1, 1), (s2, 2, 2.5), (s2, 3, 3.5)]  # widens at the 2nd
+    for bid, (schema, i, size) in enumerate(deltas, start=1):
+        b = spark.createDataFrame(
+            [(0, 100 + bid, 100 + bid, "update", "r", f"f{i}.py", "d" * 12,
+              None, f"N{bid}", None, size)], schema)
+        assert apply_batch(table, _norm(b), bid, merge_mode="delta")[
+            "merge_mode"] == "delta"
+
+    snap = table.snapshot()
+    base_dirs = sorted(set(snap["bucket_dirs"].values()))
+    delta_dirs = sorted({r for rels in snap["delta_dirs"].values()
+                         for r in rels})
+    assert len(delta_dirs) == 3
+
+    def n_schemas(rels):
+        return len({footer_schema(f"{loc}/{r}/__bucket=0").json()
+                    for r in rels})
+
+    want_scans = n_schemas(base_dirs) + n_schemas(delta_dirs)
+    assert want_scans < len(base_dirs) + len(delta_dirs)
+
+    t = SnapshotTable(spark, loc)
+    t.MOR_BROADCAST_MAX_DELTA_BYTES = -1  # the shuffle MOR path: one base scan
+    df = t.read()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"FileScan parquet", plan)) == want_scans
+    got = {r["path"]: (r["content"], r["size"]) for r in df.collect()}
+    assert len(got) == 40
+    assert got["f0.py"] == ("X", 0.0)
+    assert got["f1.py"] == ("N1", 1.0)
+    assert got["f2.py"] == ("N2", 2.5) and got["f3.py"] == ("N3", 3.5)
+    key = {"repo": "r", "path": "f2.py"}
+    assert _rows(t.lookup(key)) == _rows(df.where(_key_filter([key])))
 
 
 def test_footer_schema_and_inference_fallback(spark, tmp_path):

@@ -357,6 +357,48 @@ def test_simhash_candidates_stay_subquadratic(spark):
     assert c < 9 * n * n // (2 * 128), f"{c}: quadratic blowup"
 
 
+def test_simhash_hamming1_matches_brute_force(spark):
+    """At max_hamming=1 the band plan caps B at 12 blocks (a 4096-entry
+    canonical-band table, not 65,536) and recall stays exact: the pairs
+    equal a brute-force Hamming scan, over near-copy documents and over
+    signatures with a single flipped bit at every position."""
+    from itertools import combinations
+
+    from activedata_etl_spark.operators.dedup import (
+        _simhash_band_plan,
+        simhash,
+        simhash_pairs,
+        simhash_pairs_from_sigs,
+    )
+
+    starts, combos = _simhash_band_plan(1)
+    assert len(starts) - 1 == 12 and len(combos) == 12
+
+    def brute(sigs):
+        return {(a, b): bin(sigs[a] ^ sigs[b]).count("1")
+                for a, b in combinations(sorted(sigs), 2)
+                if bin(sigs[a] ^ sigs[b]).count("1") <= 1}
+
+    base = " ".join(f"tok{i}" for i in range(300))
+    df = spark.createDataFrame(
+        [(i, base + f" extra{i}" * (i % 3)) for i in range(60)],
+        "doc_id long, text string")
+    sigs = {r["id"]: r["simhash"]
+            for r in simhash(df, "doc_id", "text").collect()}
+    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in simhash_pairs(
+        df, "doc_id", "text", max_hamming=1, max_band_freq=None).collect()}
+    want = brute(sigs)
+    assert 1 in want.values() and got == want
+
+    seed = 0x2F0F3C5A96E1B47
+    flips = {1 + k: seed ^ (1 << k) for k in range(63)}
+    flips.update({0: seed, 100: seed ^ 0b11})  # hamming 2 to the seed
+    sig = spark.createDataFrame(list(flips.items()), "id long, simhash long")
+    got = {(r["id_a"], r["id_b"]): r["hamming"]
+           for r in simhash_pairs_from_sigs(sig, max_hamming=1).collect()}
+    assert got == brute(flips) and len(got) == 63 + 2
+
+
 def test_simhash_band_freq_cap(spark):
     """Adversarial corpus (one signature floods every bucket): the frequency
     cap bounds candidates, uncapped is quadratic — the stop-shingle
