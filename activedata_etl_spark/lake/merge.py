@@ -210,7 +210,9 @@ def apply_batch(
 
     key_bucket = _bucket_expr(key_cols, snap["n_buckets"])
     # not cached: the pre-pass, the quarantine write and the reduce each
-    # re-read the batch, which costs less than the job that would fill a cache
+    # re-read the batch.  For a pruned journal chunk (the measured case)
+    # that costs less than the job that would fill a cache; a caller whose
+    # batch is expensive to compute caches it itself (sync_changes)
     flagged = (
         batch.withColumn("__below", below)
         .withColumn("__invalid", invalid)
@@ -744,7 +746,15 @@ def sync_changes(
         enforce_watermark=False,
     )
     kwargs.update(apply_kwargs)
-    s = apply_batch(replica, events, replica.last_batch_id() + 1, **kwargs)
+    # the feed is a diff of two snapshot reads, and apply_batch reads its
+    # batch more than once (pre-pass, reduce, quarantine): cache it so the
+    # diff runs once
+    events.persist()
+    try:
+        s = apply_batch(replica, events, replica.last_batch_id() + 1,
+                        **kwargs)
+    finally:
+        events.unpersist()
     replica.set_properties(sync_source=source.location, synced_version=v_to)
     return {"applied": s["rows_applied"], "deletes": s["deletes_applied"],
             "batches": 1, "synced_version": v_to}

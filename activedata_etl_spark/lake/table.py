@@ -430,24 +430,31 @@ class SnapshotTable:
         column pruning and predicate pushdown still reach the parquet
         reader because alignment is a plain projection on top of the scan.
         A data dir is the output of one write, so its physical schema comes
-        from one footer read driver-side (``read_parquet``): a read plans
+        from one footer read driver-side (``footer_schema``): a read plans
         with no schema-inference job, its scan count is the number of
         distinct physical schemas (not of writer versions), and Spark packs
         the small bucket files of one scan into few tasks.
         """
-        dir_schema: dict[str, str] = {}
-        groups: dict[str, list[str]] = {}
+        dir_group: dict[str, str] = {}
+        groups: dict[str, tuple[T.StructType | None, list[str]]] = {}
         for d, b in sorted(pairs, key=lambda p: snap["dir_versions"][p[0]]):
             path = os.path.join(self.location, d, f"{BUCKET_COL}={b}")
             if not os.path.exists(path):
                 continue
-            if d not in dir_schema:
+            if d not in dir_group:
                 phys = footer_schema(path)
                 # an unreadable footer keeps its dir apart (inferred scan)
-                dir_schema[d] = phys.json() if phys is not None else d
-            groups.setdefault(dir_schema[d], []).append(path)
-        parts = [align_to_schema(read_parquet(self.spark, *paths), schema)
-                 for paths in groups.values()]
+                dir_group[d] = phys.json() if phys is not None else d
+                groups.setdefault(dir_group[d], (phys, []))
+            groups[dir_group[d]][1].append(path)
+        parts = [
+            align_to_schema(
+                read_parquet(self.spark, *paths) if phys is None
+                else self.spark.read.schema(phys).parquet(*paths),
+                schema,
+            )
+            for phys, paths in groups.values()
+        ]
         if not parts:
             return None
         out = parts[0]
@@ -813,9 +820,9 @@ class SnapshotTable:
            each bucket over many tasks.
 
         Otherwise (or where AQE splits a skewed join partition) the write
-        stays correct but emits up to one file per bucket per task.  ``sortWithinPartitions`` groups each task's rows
-        by bucket so the dynamic-partition writer keeps a single open file
-        at a time.
+        stays correct but emits up to one file per bucket per task.
+        ``sortWithinPartitions`` groups each task's rows by bucket so the
+        dynamic-partition writer keeps a single open file at a time.
         """
         rel = f"data/v{version}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.location, rel)

@@ -232,7 +232,8 @@ def test_chunk_scans_only_overlapping_journal_files(
     spark, journal_dir, journal_pdf, tmp_path
 ):
     """A replay chunk reads only the journal files whose offsets overlap it,
-    with the full journal schema and the rows of a whole-journal filter; a
+    with the full journal schema and the rows of a whole-journal filter —
+    for a segmented journal and for a flat (segment-less) copy of it; a
     replay whose chunks straddle the seg=1/seg=2 boundary and end inside
     files converges to the oracle."""
     import os
@@ -241,10 +242,11 @@ def test_chunk_scans_only_overlapping_journal_files(
 
     from activedata_etl_spark.journal import journal_metadata, read_journal_range
 
-    meta = journal_metadata(journal_dir, spark)
-    offsets = {f: pq.read_table(f, columns=["offset"]).column(0).to_pylist()
-               for f, _, _ in meta["files"]}
     full = read_journal(spark, journal_dir)
+    flat_dir = str(tmp_path / "flat_journal")
+    (full.repartitionByRange(6, "offset").sortWithinPartitions("offset")
+        .write.parquet(flat_dir))
+    meta = journal_metadata(journal_dir, spark)
     seg2_lo = min(lo for f, lo, _ in meta["files"] if "seg=2" in f)
     chunk = 1500
     # the fixture: chunk boundaries fall inside journal files, and one
@@ -252,20 +254,24 @@ def test_chunk_scans_only_overlapping_journal_files(
     assert any(lo < b <= hi for b in range(chunk, N, chunk)
                for _, lo, hi in meta["files"])
     assert seg2_lo % chunk != 0
-    for lo, hi in ((0, chunk - 1), (seg2_lo // chunk * chunk,
-                                    (seg2_lo // chunk + 1) * chunk - 1)):
-        df = read_journal_range(spark, journal_dir, lo, hi, meta["files"],
-                                full.schema)
-        want = {f for f, offs in offsets.items()
-                if any(lo <= o <= hi for o in offs)}
-        got = {os.path.realpath(p.removeprefix("file:"))
-               for p in df.inputFiles()}
-        assert got == {os.path.realpath(f) for f in want}
-        assert len(want) < len(offsets)
-        assert df.columns == full.columns  # seg=1-only chunk keeps `mode`
-        where = full.where(F.col("offset").between(lo, hi))
-        assert sorted(map(tuple, df.collect()), key=repr) == sorted(
-            map(tuple, where.collect()), key=repr)
+    ranges = ((0, chunk - 1),
+              (seg2_lo // chunk * chunk, (seg2_lo // chunk + 1) * chunk - 1))
+    for jd in (journal_dir, flat_dir):
+        files = journal_metadata(jd, spark)["files"]
+        offsets = {f: pq.read_table(f, columns=["offset"]).column(0)
+                   .to_pylist() for f, _, _ in files}
+        for lo, hi in ranges:
+            df = read_journal_range(spark, jd, lo, hi, files, full.schema)
+            want = {f for f, offs in offsets.items()
+                    if any(lo <= o <= hi for o in offs)}
+            got = {os.path.realpath(p.removeprefix("file:"))
+                   for p in df.inputFiles()}
+            assert got == {os.path.realpath(f) for f in want}
+            assert len(want) < len(offsets)
+            assert df.columns == full.columns  # seg=1-only chunk has `mode`
+            where = full.where(F.col("offset").between(lo, hi))
+            assert sorted(map(tuple, df.collect()), key=repr) == sorted(
+                map(tuple, where.collect()), key=repr)
 
     loc = str(tmp_path / "lake_pruned_chunks")
     res = replay_journal(spark, journal_dir, loc, chunk_events=chunk)
