@@ -102,6 +102,74 @@ def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(*cols)
 
 
+def align_arrow(table, phys: T.StructType | None, schema: T.StructType, jvm):
+    """:func:`align_to_schema` for an Arrow ``table`` read driver-side from
+    a dir of physical schema ``phys``: the same lattice casts, a missing
+    column becomes a typed null, and the result has exactly the Arrow
+    types ``spark.createDataFrame`` takes for ``schema`` (timestamps as
+    UTC instants).
+
+    Float/double -> string is the one cast whose text Arrow does not share
+    with Spark (``1.0`` and ``1.0E20`` against ``1`` and ``1e+20``), and
+    JDK 17's ``Double.toString`` digits are not the shortest round-trip
+    digits either (``2e23`` prints ``1.9999999999999998E23``), so those
+    values are formatted by the driver JVM's own ``toString``, the
+    function Spark's cast calls (:func:`_jvm_float_text`)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(schema)
+    have = {} if phys is None else {f.name: f.dataType for f in phys.fields}
+    cols = []
+    for f, af in zip(schema.fields, target):
+        if f.name not in table.column_names:
+            cols.append(pa.nulls(table.num_rows, af.type))
+            continue
+        col = table.column(f.name).combine_chunks()
+        cols.append(_cast_arrow(col, have.get(f.name, f.dataType),
+                                f.dataType, af.type, jvm))
+    return pa.Table.from_arrays(cols, schema=target)
+
+
+def _cast_arrow(arr, src: T.DataType, dst: T.DataType, atype, jvm):
+    import pyarrow as pa
+
+    if isinstance(src, (T.FloatType, T.DoubleType)) \
+            and isinstance(dst, T.StringType):
+        vals = arr.to_pylist()
+        text = iter(_jvm_float_text(
+            jvm, [v for v in vals if v is not None],
+            isinstance(src, T.FloatType)))
+        return pa.array([None if v is None else next(text) for v in vals],
+                        atype)
+    if isinstance(src, T.ArrayType) and isinstance(dst, T.ArrayType) \
+            and src != dst:
+        return pa.ListArray.from_arrays(
+            arr.offsets,
+            _cast_arrow(arr.values, src.elementType, dst.elementType,
+                        atype.value_type, jvm),
+            type=atype, mask=arr.is_null())
+    # unsafe like Spark's cast: long -> double rounds instead of raising
+    return arr.cast(atype, safe=False)
+
+
+def _jvm_float_text(jvm, values: list[float], single: bool) -> list[str]:
+    """``Float.toString``/``Double.toString`` of ``values`` in the driver
+    JVM, in one batch of a few py4j calls whatever their number: the
+    values travel as one big-endian byte array, and
+    ``Arrays.toString(float[]/double[])`` prints each element with it."""
+    import struct
+
+    if not values:
+        return []
+    raw = jvm.java.nio.ByteBuffer.wrap(bytearray(struct.pack(
+        f">{len(values)}{'f' if single else 'd'}", *values)))
+    buf = jvm.java.nio.FloatBuffer if single else jvm.java.nio.DoubleBuffer
+    arr = buf.allocate(len(values)).put(
+        raw.asFloatBuffer() if single else raw.asDoubleBuffer()).array()
+    return jvm.java.util.Arrays.toString(arr)[1:-1].split(", ")
+
+
 # the key under which Spark stores its own schema JSON in every parquet
 # footer it writes; Spark's schema inference reads it first, too
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
@@ -121,24 +189,33 @@ def footer_schema(*paths: str) -> T.StructType | None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    try:
-        from pyspark.sql.pandas.types import from_arrow_schema
-    except ImportError:  # older pyspark: fall back to inference
-        return None
     for p in paths:
         files = ([p] if os.path.isfile(p)
                  else sorted(glob.glob(os.path.join(p, "*.parquet"))))
         if not files:
             continue
         try:
-            arrow = pq.read_schema(files[0])
-            spark_json = (arrow.metadata or {}).get(_SPARK_ROW_METADATA)
-            if spark_json is not None:
-                return T.StructType.fromJson(json.loads(spark_json))
-            return from_arrow_schema(arrow)
-        except (OSError, KeyError, TypeError, ValueError, pa.ArrowException):
+            return spark_schema_of(pq.read_schema(files[0]))
+        except (OSError, pa.ArrowException):
             return None
     return None
+
+
+def spark_schema_of(arrow) -> T.StructType | None:
+    """Spark schema of a parquet footer's Arrow schema: Spark's own schema
+    JSON when the footer carries it, else the converted Arrow schema; None
+    for a type the conversion does not cover."""
+    try:
+        from pyspark.sql.pandas.types import from_arrow_schema
+    except ImportError:  # older pyspark: fall back to inference
+        return None
+    try:
+        spark_json = (arrow.metadata or {}).get(_SPARK_ROW_METADATA)
+        if spark_json is not None:
+            return T.StructType.fromJson(json.loads(spark_json))
+        return from_arrow_schema(arrow)
+    except (KeyError, TypeError, ValueError):
+        return None
 
 
 def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:

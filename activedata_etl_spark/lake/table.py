@@ -48,9 +48,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from activedata_etl_spark.lake.schema_evolution import (
+    align_arrow,
     align_to_schema,
     footer_schema,
     read_parquet,
+    spark_schema_of,
 )
 
 
@@ -97,6 +99,22 @@ def _bucket_expr(key_cols: list[str], n_buckets: int):
     with whole buckets per partition — the bucketed write then needs NO
     repartition (zero-shuffle write)."""
     return F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
+
+
+def _any(exprs: list):
+    """OR of pyarrow expressions as a balanced tree (depth log n, so a
+    long key list cannot nest the expression thousands deep)."""
+    if len(exprs) <= 1:
+        return exprs[0] if exprs else None
+    mid = len(exprs) // 2
+    return _any(exprs[:mid]) | _any(exprs[mid:])
+
+
+def _all(exprs: list):
+    out = exprs[0]
+    for e in exprs[1:]:
+        out = out & e
+    return out
 
 
 class SnapshotTable:
@@ -684,12 +702,11 @@ class SnapshotTable:
         version: int | None = None,
         include_tombstones: bool = False,
     ) -> DataFrame:
-        """Point lookup with bucket pruning — the O(table/n_buckets) access
-        path for "give me this key's current row".
+        """Point lookup of one full key: ``lookup_many([keys])``.
 
         Hash bucketing defeats file-level min/max skipping on the key
         columns, but it gives something better: the key's murmur3 names the
-        ONE bucket that can hold it, so a point query scans a single
+        ONE bucket that can hold it, so a point query reads a single
         bucket's files (base + its delta chain) instead of the table.  At
         10^10 rows / 8k buckets that is ~250 MB instead of ~2 TB.  ``keys``
         must bind EVERY key column — the hash needs all of them.  Result ==
@@ -708,26 +725,37 @@ class SnapshotTable:
     ) -> DataFrame:
         """Batched point lookup: N full keys -> their rows, equal to
         ``read().where(<OR of the keys' equalities>)`` (table column order,
-        duplicate keys matched once), scanning only the UNION of the keys'
-        buckets.
+        duplicate keys matched once), answered on the DRIVER from Arrow
+        with no Spark plan over the table and no Spark job.
 
-        Bucket ids come from the engine's own hash expression projected
-        over a local frame of the keys, so they can never drift from the
-        write path's murmur3, type coercions included.  The frame is built
-        from Arrow, which plans as a LocalRelation: Catalyst folds the
-        projection into it and the collect runs no Spark job.
+        1. Bucket ids come from the engine's own hash expression projected
+           over an Arrow-built frame of the keys, so they can never drift
+           from the write path's murmur3, type coercions included.  The
+           frame is a LocalRelation: the collect runs no job.
+        2. The keys' buckets name the files to open (:meth:`bucket_files`):
+           each bucket's base dir and live delta dirs in the pinned
+           snapshot, the same files the Spark read of those buckets opens.
+        3. pyarrow reads them filtered on the OR of the keys' equalities
+           (row-group statistics prune), and each dir is widened to the
+           snapshot schema with ``align_to_schema``'s lattice
+           (:func:`align_arrow`).
+        4. Buckets with live deltas are LWW-merged in Arrow with
+           structmax's semantics (:func:`lww_reduce_arrow`); tombstones and
+           ``__deleted`` drop unless ``include_tombstones``.
+        5. The rows come back as ``spark.createDataFrame(arrow_table)``, a
+           LocalRelation again, so collecting it runs no job.
 
-        The keys then filter the bucket-pruned read as an OR of per-key
-        equality conjunctions.  The predicate refers only to the LWW
-        grouping keys, so Catalyst pushes it through the read-time MOR merge
-        (the structmax aggregate, the broadcast probe's anti/semi joins and
-        the union) into the parquet scans: the merge shuffles only the
-        looked-up keys' rows, not whole buckets.  The predicate grows with
-        the key list — this is the O(|keys|) access path for
-        dashboards/debugging; for a key list approaching the table, join
-        ``read()`` against the keys instead.
+        The files are read on the driver, so this is the access path for a
+        few keys (dashboards, debugging, the CLI's ``get``): its cost grows
+        with the keys' buckets' bytes.  For a key list approaching the
+        table, join ``read()`` against the keys instead.
         """
         import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        from activedata_etl_spark.operators.lww import lww_reduce_arrow
 
         if not keys:
             raise ValueError("lookup_many needs at least one key dict")
@@ -743,26 +771,90 @@ class SnapshotTable:
         schema = T.StructType.fromJson(snap["schema"])
         dtypes = {f.name: f.dataType for f in schema.fields}
         rows = list(dict.fromkeys(tuple(k[c] for c in key_cols) for k in keys))
-        kdf = self.spark.createDataFrame(
+        kschema = T.StructType(
+            [T.StructField(c, dtypes[c], True) for c in key_cols])
+        hashed = self.spark.createDataFrame(
             pa.table({c: [r[i] for r in rows] for i, c in enumerate(key_cols)}),
-            T.StructType([T.StructField(c, dtypes[c], True) for c in key_cols]),
-        )
-        buckets = sorted({
-            r["b"] for r in kdf.select(
-                _bucket_expr(key_cols, snap["n_buckets"]).alias("b")
-            ).collect()
-        })
-        cond = None
-        for r in rows:
-            term = None
-            for c, v in zip(key_cols, r):
-                eq = F.col(c) == F.lit(v).cast(dtypes[c])
-                term = eq if term is None else term & eq
-            cond = term if cond is None else cond | term
-        return self.read(
-            buckets=buckets, include_tombstones=include_tombstones,
-            version=snap["version"],
-        ).where(cond)
+            kschema,
+        ).select(
+            *key_cols,
+            _bucket_expr(key_cols, snap["n_buckets"]).alias(BUCKET_COL),
+        ).collect()
+        # the keys as Arrow scalars of the table's types (pyspark returns a
+        # TimestampType value as a naive local datetime); a key with a null
+        # column equals no row, as in SQL
+        akeys = {c: pa.array(
+            [v.astimezone() if isinstance(dtypes[c], T.TimestampType)
+             and v is not None else v for v in (r[c] for r in hashed)],
+            to_arrow_type(dtypes[c])) for c in key_cols}
+        terms = [
+            _all([pc.field(c) == akeys[c][i] for c in key_cols])
+            for i, r in enumerate(hashed)
+            if all(r[c] is not None for c in key_cols)
+        ]
+        mor_buckets = {b for b, rels in snap.get("delta_dirs", {}).items()
+                       if rels}
+        vcols = snap.get("version_cols")
+        files = (self.bucket_files(snap, sorted({r[BUCKET_COL] for r in hashed}))
+                 if terms else {})
+        if not vcols and any(b in mor_buckets for _, b in files):
+            raise ValueError(
+                f"table {self.location} has delta files but no "
+                "version_cols recorded — cannot LWW-merge on read"
+            )
+        cond = _any(terms)
+        fmt = ds.ParquetFileFormat(read_options=ds.ParquetReadOptions(
+            coerce_int96_timestamp_unit="us"))
+        plain, mor = [], []
+        for (rel, b), paths in files.items():
+            dset = ds.dataset(paths, format=fmt)
+            # filter in the scan where the dir stores the keys as the table
+            # types them; a dir written before a key column widened is
+            # filtered after its widening
+            stored = all(c in dset.schema.names
+                         and dset.schema.field(c).type == akeys[c].type
+                         for c in key_cols)
+            tbl = align_arrow(dset.to_table(filter=cond if stored else None),
+                              spark_schema_of(dset.schema), schema,
+                              self.spark._jvm)
+            (mor if b in mor_buckets else plain).append(
+                tbl if stored else tbl.filter(cond))
+        if mor:
+            plain.append(lww_reduce_arrow(
+                pa.concat_tables(mor), schema, key_cols, vcols))
+        out = (pa.concat_tables(plain) if plain
+               else align_arrow(pa.table({}), None, schema, None))
+        if not include_tombstones and DELETED_COL in dtypes:
+            out = out.filter(
+                pc.invert(pc.fill_null(out[DELETED_COL], False))
+            ).drop_columns([DELETED_COL])
+            schema = T.StructType(
+                [f for f in schema.fields if f.name != DELETED_COL])
+        # one chunk per column: a filter that keeps no row can leave a
+        # column with zero chunks, which createDataFrame cannot convert
+        out = pa.Table.from_arrays(
+            [c.combine_chunks() for c in out.columns], schema=out.schema)
+        return self.spark.createDataFrame(out, schema)
+
+    def bucket_files(
+        self, snap: dict, buckets: list[int]
+    ) -> dict[tuple[str, str], list[str]]:
+        """The parquet files of each of ``buckets``' base dir and live delta
+        dirs in snapshot ``snap``, keyed by (data dir relpath, bucket id) —
+        what a lookup of keys in those buckets opens.  A dir with no files
+        for a bucket (a delete emptied it) is left out."""
+        import glob as _glob
+
+        out: dict[tuple[str, str], list[str]] = {}
+        for b in map(str, buckets):
+            base = snap["bucket_dirs"].get(b)
+            for rel in ([base] if base else []) + list(
+                    snap.get("delta_dirs", {}).get(b, [])):
+                paths = sorted(_glob.glob(os.path.join(
+                    self.location, rel, f"{BUCKET_COL}={b}", "*.parquet")))
+                if paths:
+                    out[(rel, b)] = paths
+        return out
 
     def existing_bucket_paths(self, buckets: list[int]) -> list[str]:
         """Physical data paths among ``buckets`` (a delete can empty a bucket,

@@ -873,6 +873,14 @@ def embedding_neardup_pairs(
                 {"id_a": np.int64, "id_b": np.int64, "cosine": np.float64}
             )
         sims = (mat[a_idx] @ mat[b_idx].T) / np.outer(norms[a_idx], norms[b_idx])
+        # np.round rounds half to EVEN on x * 1e6, unlike Spark's F.round
+        # (HALF_UP) that the JVM scorer used and DuckDB's round() in the
+        # oracle (half away from zero): a cosine with x * 1e6 exactly
+        # k + 0.5, k even, rounds DOWN here (0.9499985 -> 0.949998, where
+        # both give 0.949999) and can miss a threshold they pass.  No
+        # output pair of the perfbench sample lands on one (its DuckDB gate
+        # compares the rounded cosines).  Pinned by
+        # test_embedding_cosine_rounds_half_even_at_midpoint
         sims = np.round(sims, 6)
         if ti == tj:
             # within-block: upper triangle only
@@ -965,6 +973,8 @@ def embedding_neardup_lsh(
         outs = []
         for lo in range(0, len(ids), 2048):  # bound the score block per chunk
             hi = min(lo + 2048, len(ids))
+            # round-half-even, as embedding_neardup_pairs (see there): a
+            # midpoint cosine rounds to the even 6th decimal, not up
             sims = np.round(
                 (mat[lo:hi] @ mat.T) / np.outer(norms[lo:hi], norms), 6
             )

@@ -33,8 +33,11 @@ Three physical strategies, same semantics:
                            unavailable, and the skew-evidence path for the
                            bench's with/without-salting comparison.
 
+``lww_reduce_arrow`` is the same reduce over a driver-side Arrow table, for
+the handful of rows a point lookup reads (``SnapshotTable.lookup_many``).
+
 The independent pandas oracle (``tests/oracle.py``) pins the semantics all
-three must match.
+three Spark strategies must match.
 
 Property (tested): the result is independent of input partitioning and of
 batch split, because (commit_seq, offset) is a total order per key.  For
@@ -208,3 +211,64 @@ def lww_reduce_salted(
         *[F.col(c) if c in keys else F.col(f"__w.{c}").alias(c)
           for c in df.columns]
     )
+
+
+def _order_key(value, dt):
+    """Python sort key that orders ``value`` of Spark type ``dt`` as
+    Spark's interpreted ordering does, i.e. as ``max(struct(...))`` does:
+    None lowest, NaN above every double, ``-0.0 == 0.0``, strings by
+    UTF-8 bytes, arrays element-wise then by length, structs field-wise.
+    Values are as Arrow's ``to_pylist`` gives them (a struct is a dict)."""
+    from pyspark.sql import types as T
+
+    if value is None:
+        return (0,)
+    if isinstance(dt, (T.FloatType, T.DoubleType)) and value != value:
+        return (2,)
+    if isinstance(dt, T.StringType):
+        return (1, value.encode("utf-8"))
+    if isinstance(dt, T.ArrayType):
+        return (1, tuple(_order_key(v, dt.elementType) for v in value))
+    if isinstance(dt, T.StructType):
+        return (1, tuple(_order_key(value[f.name], f.dataType)
+                         for f in dt.fields))
+    return (1, value)
+
+
+def lww_reduce_arrow(table, schema, keys: list[str], version_cols: list[str]):
+    """``lww_reduce_structmax`` over a pyarrow ``table`` of Spark schema
+    ``schema``: per key the row with the largest version tuple wins.  Only
+    rows that tie on the full version need structmax's payload tie-break;
+    that runs over just those rows with :func:`_order_key`, version
+    columns first, then the payload in column order.  A table with an
+    unorderable (MapType) column keeps any one tied row, as ``lww_reduce``
+    does.  Row-at-a-time Python: meant for the few rows a point lookup
+    reads, not for a table."""
+    import pyarrow as pa
+
+    types = {f.name: f.dataType for f in schema.fields}
+
+    def ordered(cols):
+        vals = [table.column(c).to_pylist() for c in cols]
+        return [tuple(_order_key(v, types[c]) for c, v in zip(cols, row))
+                for row in zip(*vals)]
+
+    best: dict[tuple, tuple[tuple, list[int]]] = {}
+    for i, (k, v) in enumerate(zip(ordered(keys), ordered(version_cols))):
+        cur = best.get(k)
+        if cur is None or v > cur[0]:
+            best[k] = (v, [i])
+        elif v == cur[0]:
+            cur[1].append(i)
+    tiebreak = all(_orderable(t) for t in types.values())
+    payload = list(version_cols) + [
+        c for c in table.column_names
+        if c not in keys and c not in version_cols]
+    winners = []
+    for _, rows in best.values():
+        if len(rows) > 1 and tiebreak:
+            tied = table.take(rows).select(payload).to_pylist()
+            rows = [max(zip(rows, tied), key=lambda p: tuple(
+                _order_key(p[1][c], types[c]) for c in payload))[0]]
+        winners.append(rows[0])
+    return table.take(pa.array(sorted(winners), pa.int64()))

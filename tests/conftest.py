@@ -30,3 +30,32 @@ def _jx_test_limit():
     jx.DEFAULT_LIMIT = 10_000
     yield
     jx.DEFAULT_LIMIT = old
+
+
+@pytest.fixture
+def py4j_round_trips(spark):
+    """``count(fn) -> int``: the py4j commands the Python driver sends the
+    JVM while ``fn`` runs, counted by wrapping the gateway client's
+    ``send_command``.  Proxy deletes (``m\\nd\\n`` memory commands) are left
+    out: they fire whenever Python's GC collects a JVM object proxy, so
+    their timing is not the measured code's."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(fn) -> int:
+        n = 0
+        send = client.send_command
+
+        def counted(command, *args, **kwargs):
+            nonlocal n
+            if not command.startswith("m\nd\n"):
+                n += 1
+            return send(command, *args, **kwargs)
+
+        client.send_command = counted
+        try:
+            fn()
+        finally:
+            client.send_command = send
+        return n
+
+    return count

@@ -270,7 +270,32 @@ def test_replay_batch_retries_on_maintenance_conflict(spark, tmp_path):
     assert t.read().where(F.col("content").isNotNull()).count() > 0
 
 
-def test_lookup_prunes_to_one_bucket(spark, tmp_path):
+def _opened_buckets(monkeypatch, t) -> set[str]:
+    """Record the bucket ids whose files ``t``'s lookups open (through
+    ``SnapshotTable.bucket_files``, the lookup's file listing), and check
+    that each listed (dir, bucket) pair has files of that bucket only."""
+    opened: set[str] = set()
+    orig = SnapshotTable.bucket_files
+
+    def spy(self, snap, buckets):
+        out = orig(self, snap, buckets)
+        for (rel, b), files in out.items():
+            assert files and all(
+                f"/{rel}/__bucket={b}/" in f for f in files)
+            opened.add(b)
+        return out
+
+    monkeypatch.setattr(SnapshotTable, "bucket_files", spy)
+    return opened
+
+
+def _buckets_of(spark, t, keys) -> set[str]:
+    df = spark.createDataFrame([(k["repo"], k["path"]) for k in keys],
+                               "repo string, path string")
+    return {str(r[0]) for r in t.bucket_of(df).select("__bucket").collect()}
+
+
+def test_lookup_prunes_to_one_bucket(spark, tmp_path, monkeypatch):
     """Point lookup reads only the key's bucket and equals the full-scan
     filter — including through a live delta chain."""
     loc = str(tmp_path / "lake")
@@ -282,13 +307,12 @@ def test_lookup_prunes_to_one_bucket(spark, tmp_path):
     apply_batch(t, _norm(upd), 1, merge_mode="delta")
     got = t.lookup({"repo": "r", "path": "f5.py"}).collect()
     assert len(got) == 1 and got[0]["content"] == "NEWER"
-    # pruning: the lookup plan reads files from at most one bucket id
-    df = t.lookup({"repo": "r", "path": "f0.py"})
-    files = {
-        f for f in df.inputFiles()
-    }
-    bucket_ids = {f.split("__bucket=")[1].split("/")[0] for f in files}
-    assert len(bucket_ids) == 1
+    # pruning: the lookup opens files of one bucket id, the key's
+    key = {"repo": "r", "path": "f0.py"}
+    opened = _opened_buckets(monkeypatch, t)
+    df = t.lookup(key)
+    assert opened == _buckets_of(spark, t, [key])
+    assert len(opened) == 1
     full = t.read().where((F.col("repo") == "r") & (F.col("path") == "f0.py"))
     assert [r.asDict() for r in df.collect()] == [
         r.asDict() for r in full.collect()
@@ -491,19 +515,20 @@ def test_chaos_ingest_with_concurrent_maintenance(spark, tmp_path):
     assert r["batches"] == 0
 
 
-def test_lookup_many_prunes_to_key_buckets(spark, tmp_path):
+def test_lookup_many_prunes_to_key_buckets(spark, tmp_path, monkeypatch):
     """Batched point lookup reads only the union of the keys' buckets and
     equals the full-scan semi-join."""
     t = _mk(spark, str(tmp_path / "lake"), n_buckets=8)
     want = [{"repo": "r", "path": "f1.py"}, {"repo": "r", "path": "f6.py"},
             {"repo": "r", "path": "nope.py"}]
+    opened = _opened_buckets(monkeypatch, t)
     got = t.lookup_many(want)
     rows = {r["path"]: r["content"] for r in got.collect()}
     assert rows == {"f1.py": "V1", "f6.py": "V6"}
     # three keys (one nonexistent — it still names a bucket) -> at most 3
-    # of the table's 8 buckets are scanned
-    bucket_ids = {f.split("__bucket=")[1].split("/")[0] for f in got.inputFiles()}
-    assert len(bucket_ids) <= 3
+    # of the table's 8 buckets are opened, all of them the keys' buckets
+    assert opened and opened <= _buckets_of(spark, t, want)
+    assert len(opened) <= 3
     with pytest.raises(ValueError):
         t.lookup_many([{"repo": "r"}])
     with pytest.raises(ValueError):

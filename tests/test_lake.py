@@ -5,6 +5,8 @@ from __future__ import annotations
 import re
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -40,6 +42,43 @@ def test_merge_schemas_widening():
     c = T.StructType([T.StructField("x", T.StructType([]))])
     with pytest.raises(SchemaMergeError):
         merge_schemas(a, c)
+
+
+def test_align_arrow_matches_align_to_schema(spark, tmp_path):
+    """align_arrow (a lookup's driver-side widening) == align_to_schema
+    (the Spark read's) on every lattice step from a Spark-written dir:
+    boolean -> int, int -> string, long -> double, float and double ->
+    string (Spark's text, e.g. ``1.0E20`` and JDK 17's
+    ``1.9999999999999998E23``), array<int> -> array<double>,
+    array<double> -> array<string>, and a missing column."""
+    import pyarrow.parquet as pq
+
+    from activedata_etl_spark.lake.schema_evolution import (
+        align_arrow,
+        align_to_schema,
+        footer_schema,
+    )
+
+    nan = float("nan")
+    rows = [
+        (True, 5, 2 ** 62 + 1, 1.0, 1e20, [1, None], [0.5, nan, None]),
+        (False, -7, -3, 5.2192488e7, 2e23, [], [1e-5, -0.0]),
+        (None, None, None, nan, -0.0, None, None),
+        (True, 0, 0, -1e-3, 4.9e-324, [2 ** 30], [123456789.0]),
+    ]
+    path = str(tmp_path / "phys")
+    spark.createDataFrame(
+        rows, "b boolean, i int, l long, f float, d double, ai array<int>, "
+        "ad array<double>").write.parquet(path)
+    target = T.StructType.fromDDL(
+        "b int, i string, l double, f string, d string, ai array<double>, "
+        "ad array<string>, new string")
+    want = align_to_schema(spark.read.parquet(path), target).collect()
+    got = spark.createDataFrame(
+        align_arrow(pq.read_table(path), footer_schema(path), target,
+                    spark._jvm),
+        target).collect()
+    assert sorted(map(repr, got)) == sorted(map(repr, want))
 
 
 def test_add_column_mid_stream(spark, tmp_path):
@@ -1211,10 +1250,10 @@ def _rows(df):
 
 def test_lookup_equals_filtered_read_on_both_mor_paths(spark, tmp_path):
     """lookup / lookup_many == read().where(<key equality>) through a live
-    delta chain, on the broadcast-probe and the shuffle MOR path: stale and
-    fresh deltas, a tombstoned key (include_tombstones both ways), a column
-    widened after the base dir was written, duplicate and nonexistent
-    keys.  The result keeps the table's column order."""
+    delta chain, with the read on the broadcast-probe and on the shuffle
+    MOR path: stale and fresh deltas, a tombstoned key (include_tombstones
+    both ways), a column widened after the base dir was written, duplicate
+    and nonexistent keys.  The result keeps the table's column order."""
     loc = str(tmp_path / "lake_lookup_eq")
     s1 = COLS_V1 + ", size int"
     s2 = COLS_V1 + ", size double"
@@ -1258,16 +1297,21 @@ def test_lookup_equals_filtered_read_on_both_mor_paths(spark, tmp_path):
             t.MOR_BROADCAST_MAX_DELTA_BYTES = -1
         for tomb in (False, True):
             full = t.read(include_tombstones=tomb)
-            got = t.lookup_many(keys, include_tombstones=tomb)
-            plan = got._jdf.queryExecution().analyzed().toString()
+            # the MOR strategy shows in the read the lookup is compared
+            # with; the lookup itself plans no read (a LocalRelation)
+            plan = full._jdf.queryExecution().analyzed().toString()
             assert ("LeftAnti" in plan) == (path == "probe")
             if path == "shuffle":
                 # the key predicate reaches every parquet scan, below the
                 # LWW aggregate
                 scans = re.findall(
                     r"PushedFilters: \[([^\]]*)\]",
-                    got._jdf.queryExecution().executedPlan().toString())
+                    full.where(_key_filter(keys))._jdf.queryExecution()
+                    .executedPlan().toString())
                 assert scans and all("EqualTo(path" in f for f in scans)
+            got = t.lookup_many(keys, include_tombstones=tomb)
+            assert "LocalRelation" in \
+                got._jdf.queryExecution().analyzed().toString()
             assert got.columns == full.columns
             assert _rows(got) == _rows(full.where(_key_filter(keys)))
             for k in keys:
@@ -1284,6 +1328,121 @@ def test_lookup_equals_filtered_read_on_both_mor_paths(spark, tmp_path):
             assert by_path["f6.py"]["content"] == "FRESHER"
             if tomb:
                 assert by_path["f8.py"]["__deleted"] is True
+
+
+# Physical schemas a dir of the equivalence test's tables is written with:
+# ``n`` widens int -> long -> double and ``s`` float -> double -> string
+# across dirs, and ``extra`` is added after the base dir.
+_EQ_PHYS = [
+    "n int, s float",
+    "n long, s double, extra string",
+    "n double, s string, extra string",
+]
+_EQ_TEXT = st.sampled_from([None, "", "a", "b", "é", "Z😀"])
+_EQ_FLOAT = st.one_of(
+    st.none(), st.sampled_from([0.0, -0.0, 1.0, 1e20, 2e23, 0.1, -7.25,
+                                float("nan"), float("inf")]),
+    st.floats(width=32, allow_nan=False, allow_infinity=False))
+_EQ_ROW = st.tuples(
+    st.integers(0, 11),                                  # key
+    st.integers(0, 3), st.one_of(st.none(), st.integers(0, 1)),  # version
+    _EQ_TEXT,                                            # content
+    st.one_of(st.none(), st.integers(-3, 3)),            # n
+    _EQ_FLOAT,                                           # s
+    st.integers(-2 ** 55, 2 ** 57),                      # ts, microseconds
+    st.one_of(st.none(), st.lists(st.integers(0, 2), max_size=3)),  # arr
+    _EQ_TEXT,                                            # extra
+    st.booleans(),                                       # tombstone
+)
+_EQ_DIR = st.tuples(st.integers(0, len(_EQ_PHYS) - 1),
+                    st.lists(_EQ_ROW, min_size=1, max_size=12))
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(dirs=st.lists(_EQ_DIR, min_size=2, max_size=5),
+       with_map=st.booleans(),
+       keys=st.lists(st.integers(0, 13), min_size=1, max_size=8))
+def test_lookup_many_equals_filtered_read(spark, tmp_path_factory, dirs,
+                                          with_map, keys):
+    """lookup_many == read().where(<key equality>) on random tables: one
+    base dir and up to four delta dirs per bucket, written with narrower
+    physical schemas than the table's (int -> double, float/double ->
+    string, a column added later), tombstones with include_tombstones both
+    ways, duplicate and missing keys, version ties with differing payloads
+    (NaN, -0.0, non-ASCII text, arrays in the tie-break) and null version
+    fields, a TimestampType column read under a non-UTC session time zone,
+    and a MapType payload, the case where structmax falls back to
+    lww_reduce.  Its tie pick is arbitrary, so map tables get no version
+    ties.  Rows compare by repr, so NaN equals NaN."""
+    import datetime
+    import json
+
+    schema = T.StructType.fromDDL(
+        "repo string, path string, commit_seq long, offset long, "
+        "content string, n double, s string, ts timestamp, arr array<int>, "
+        "extra string" + (", m map<string,int>" if with_map else "")
+        + ", __deleted boolean")
+    loc = str(tmp_path_factory.mktemp("lake_lookup_prop"))
+    t = SnapshotTable.create(spark, loc, schema, ["repo", "path"],
+                             n_buckets=4)
+    snap = t.snapshot()
+    seen_versions: set = set()
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    for i, (phys_i, rows) in enumerate(dirs):
+        phys = T.StructType.fromDDL(
+            "repo string, path string, commit_seq long, offset long, "
+            "content string, " + _EQ_PHYS[0 if i == 0 else phys_i]
+            + ", ts timestamp, arr array<int>"
+            + (", m map<string,int>" if with_map else "")
+            + ", __deleted boolean")
+        by_key = {}
+        for (k, cs, off, content, n, sv, ts, arr, extra, dead) in rows:
+            if with_map:
+                if (cs, off) in seen_versions:
+                    continue
+                seen_versions.add((cs, off))
+            vals = {
+                "repo": "r", "path": f"f{k}.py", "commit_seq": cs,
+                "offset": off, "content": content,
+                "n": None if n is None else (
+                    n if phys["n"].dataType != T.DoubleType()
+                    else float("nan") if n == -3 else n / 2),
+                "s": None if sv is None else (
+                    json.dumps(sv) if phys["s"].dataType == T.StringType()
+                    else sv),
+                "ts": (epoch + datetime.timedelta(microseconds=ts)
+                       ).astimezone(),
+                "arr": arr, "extra": extra, "m": {"k": k, "cs": cs},
+                "__deleted": dead,
+            }
+            by_key[k] = tuple(vals[c] for c in phys.names)
+        if not by_key:
+            continue
+        df = t.bucket_of(spark.createDataFrame(list(by_key.values()), phys))
+        rel = t.write_buckets(df, i + 1)
+        snap["dir_versions"][rel] = i + 1
+        for b in t.written_buckets(rel):
+            if i == 0:
+                snap["bucket_dirs"][b] = rel
+            else:
+                snap["delta_dirs"].setdefault(b, []).append(rel)
+    snap.update(version=1, parent=0)
+    t._commit_snapshot(snap)
+
+    want = [{"repo": "r", "path": f"f{k}.py"} for k in keys]
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        for tomb in (False, True):
+            got = t.lookup_many(want, include_tombstones=tomb)
+            full = t.read(include_tombstones=tomb)
+            assert got.columns == full.columns
+            assert sorted(map(repr, got.collect())) == sorted(
+                map(repr, full.where(_key_filter(want)).collect()))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 def _jobs(spark, fn) -> int:
@@ -1353,6 +1512,33 @@ def test_apply_batch_job_count(spark, tmp_path):
     assert out["delta"]["merge_mode"] == "delta"
     assert out["cow"]["merge_mode"] == "cow"
     assert (n_delta, n_cow) == (4, 5)
+
+
+def test_lookup_runs_no_job_and_few_py4j_round_trips(
+        spark, tmp_path, py4j_round_trips):
+    """A lookup plans no Spark read: one 4-key ``lookup_many(...).collect()``
+    through a 4-deep delta chain runs 0 Spark jobs and at most 120 py4j
+    round trips (proxy deletes left out)."""
+    table = _mk_base(spark, str(tmp_path / "lake_lookup_cost"), n=100,
+                     n_buckets=8)
+    for n in range(1, 5):
+        b = spark.createDataFrame(
+            [(0, 100 + 4 * n + j, 100 + 4 * n + j, "update", "r", f"f{j}.py",
+              "d" * 12, None, f"N{n}", None) for j in range(4)],
+            COLS_V1,
+        )
+        apply_batch(table, _norm(b), n, merge_mode="delta")
+    assert max(len(r) for r in table.snapshot()["delta_dirs"].values()) == 4
+    keys = [{"repo": "r", "path": f"f{j}.py"} for j in range(4)]
+    t = SnapshotTable(spark, table.location)
+    rows = []
+    t.lookup_many(keys).collect()  # warm: imports, first Arrow frame
+    assert _jobs(spark, lambda: rows.extend(t.lookup_many(keys).collect())) \
+        == 0
+    assert sorted((r["path"], r["content"]) for r in rows) == [
+        (f"f{j}.py", "N4") for j in range(4)]
+    trips = py4j_round_trips(lambda: t.lookup_many(keys).collect())
+    assert trips <= 120, trips
 
 
 def test_cow_merge_writes_one_file_per_touched_bucket(spark, tmp_path):

@@ -230,6 +230,39 @@ def test_embedding_neardup_lsh_subset_and_recall(spark, emb):
     assert all(exact[p] == c for p, c in low.items())
 
 
+def test_embedding_cosine_rounds_half_even_at_midpoint(spark):
+    """Both embedding scorers round the cosine with np.round, half to
+    EVEN: a pair whose cosine times 1e6 is exactly 949998.5 scores
+    0.949998, so it misses threshold 0.949999.  Spark's F.round (HALF_UP,
+    the old JVM scorer) gives 0.949999 and would keep the pair."""
+    import math
+
+    import numpy as np
+
+    from activedata_etl_spark.operators.dedup import (
+        embedding_neardup_lsh,
+        embedding_neardup_pairs,
+    )
+
+    x = 0.9499985
+    vecs = [[1.0, 0.0], [x, math.sqrt(1.0 - x * x)]]
+    mat = np.array(vecs)
+    norms = np.sqrt((mat * mat).sum(axis=1))
+    cos = ((mat @ mat.T) / np.outer(norms, norms))[0, 1]
+    assert cos * 1e6 == 949998.5  # exactly on the 6th-decimal half
+    df = spark.createDataFrame([(1, vecs[0]), (2, vecs[1])],
+                               "id long, vec array<double>")
+    assert df.select(F.round(F.lit(x), 6)).first()[0] == 0.949999
+    for score in (
+        lambda t: embedding_neardup_pairs(df, "id", "vec", threshold=t,
+                                          n_blocks=2),
+        lambda t: embedding_neardup_lsh(df, "id", "vec", threshold=t),
+    ):
+        assert [tuple(r) for r in score(0.949998).collect()] == [
+            (1, 2, 0.949998)]
+        assert score(0.949999).collect() == []
+
+
 def test_ivf_ann_recall_vs_exact(spark, emb):
     """IVF coarse quantizer: candidates from probed cells only, recall vs
     exact top-k stays usable; scores are true cosines."""
