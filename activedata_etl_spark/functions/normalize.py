@@ -21,7 +21,6 @@ typed-JSON encoder and per-record transforms.
 from __future__ import annotations
 
 import json
-from itertools import chain
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -59,13 +58,27 @@ NESTED_TYPE = "~N~"
 EXISTS_TYPE = "~e~"
 
 
+# the extension of a path, and the extension -> tag map as one SQL map
+# literal (built once: a map of per-entry F.lit calls costs a py4j round
+# trip per key and value)
+_EXT_RE = r"\.([A-Za-z0-9]+)$"
+_LANG_MAP_SQL = "map(" + ", ".join(
+    f"'{k}', '{v}'" for k, v in LANG_BY_EXT.items()) + ")"
+
+
 def lang_from_path(path: Column) -> Column:
     """Language tag from the file extension of ``path``; null if none/unknown."""
-    ext = F.lower(F.regexp_extract(path, r"\.([A-Za-z0-9]+)$", 1))
-    mapping = F.create_map(
-        *chain.from_iterable((F.lit(k), F.lit(v)) for k, v in LANG_BY_EXT.items())
-    )
-    return F.when(ext == "", F.lit(None).cast("string")).otherwise(mapping[ext])
+    ext = F.lower(F.regexp_extract(path, _EXT_RE, 1))
+    return F.when(ext == "", F.lit(None).cast("string")).otherwise(
+        F.expr(_LANG_MAP_SQL)[ext])
+
+
+def _lang_sql(path: str) -> str:
+    """:func:`lang_from_path` as SQL over the SQL expression ``path``."""
+    regex = _EXT_RE.replace("\\", "\\\\")
+    ext = f"lower(regexp_extract({path}, '{regex}', 1))"
+    return (f"CASE WHEN {ext} = '' THEN CAST(NULL AS STRING) "
+            f"ELSE {_LANG_MAP_SQL}[{ext}] END")
 
 
 def content_sha256(content: Column) -> Column:
@@ -73,46 +86,61 @@ def content_sha256(content: Column) -> Column:
     return F.sha2(content, 256)
 
 
+def _nullify_sql(q: str) -> str:
+    """'' -> null over the quoted column ``q``."""
+    return f"CASE WHEN {q} = '' THEN NULL ELSE {q} END"
+
+
 def nullify_empty_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """'' -> null for string columns (mo_dots missing-value semantics)."""
+    """'' -> null for string columns (mo_dots missing-value semantics), as
+    one projection; a frame with no target column is returned as is."""
+    # imported here, not at module level: Python workers import this
+    # module for its UDFs, and the lake package is driver-side only
+    from activedata_etl_spark.lake.schema_evolution import sql_ident
+
+    fields = df.schema.fields
     # `columns is None` -> every string column; an explicit [] means NONE
     # (`columns or default` would silently widen a no-op call to all columns)
-    targets = (
-        [f.name for f in df.schema.fields
-         if f.dataType.simpleString() == "string"]
+    targets = set(
+        [f.name for f in fields if f.dataType.simpleString() == "string"]
         if columns is None else columns
     )
-    exprs = []
-    for f_ in df.schema.fields:
-        if f_.name in targets:
-            exprs.append(
-                F.when(F.col(f_.name) == "", F.lit(None)).otherwise(F.col(f_.name)).alias(f_.name)
-            )
-        else:
-            exprs.append(F.col(f_.name))
-    return df.select(*exprs)
+    if not targets.intersection(f.name for f in fields):
+        return df
+    return df.selectExpr(*[
+        f"{_nullify_sql(sql_ident(f.name))} AS {sql_ident(f.name)}"
+        if f.name in targets else sql_ident(f.name)
+        for f in fields
+    ])
 
 
 def normalize_keys(df: DataFrame) -> DataFrame:
     """Pre-reduce normalization: ONLY what affects keying/versioning
     ('' -> null on key columns).  Cheap — runs on every event."""
-    cols = [c for c in ("repo", "path") if c in df.columns]
-    return nullify_empty_strings(df, cols)
+    return nullify_empty_strings(
+        df, [c for c in ("repo", "path") if c in df.columns])
 
 
 def finalize_records(df: DataFrame) -> DataFrame:
     """Post-reduce normalization: lang tag + content hash + residual
     empty-string cleanup.  Runs only on LWW winners (one row per key per
     batch), not on every event — at 10^10 events with ~10^8 keys that is
-    ~99% less hashing."""
-    out = nullify_empty_strings(
-        df, [c for c in ("commit", "lang", "content") if c in df.columns]
-    )
-    out = out.withColumn(
-        "lang", F.coalesce(F.col("lang"), lang_from_path(F.col("path")))
-    )
-    out = out.withColumn("content_sha256", content_sha256(F.col("content")))
-    return out
+    ~99% less hashing.  One projection: ``commit``/``lang``/``content``
+    '' -> null, ``lang`` defaulted from the path's extension, and
+    ``content_sha256`` of the cleaned content (replaced in place when the
+    frame has one, else appended)."""
+    from activedata_etl_spark.lake.schema_evolution import sql_ident
+
+    q = {c: sql_ident(c) for c in df.columns}
+    clean = {c: _nullify_sql(q[c])
+             for c in ("commit", "lang", "content") if c in q}
+    # dict order is withColumn's: a column already there keeps its place
+    out = dict(q, **{c: f"{e} AS {q[c]}" for c, e in clean.items()})
+    out["lang"] = (f"coalesce({clean.get('lang', '`lang`')}, "
+                   f"{_lang_sql('`path`')}) AS `lang`")
+    out["content_sha256"] = (f"sha2({clean.get('content', '`content`')}, 256)"
+                             " AS `content_sha256`")
+    return df.selectExpr(*out.values())
 
 
 def normalize_batch(df: DataFrame) -> DataFrame:

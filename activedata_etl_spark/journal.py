@@ -253,7 +253,18 @@ def read_journal_range(
     None when a row group has no stats: always scanned); ``schema`` is the
     full journal schema (``read_journal(...).schema``), which the result is
     aligned to, so a chunk holding only old-segment rows still carries the
-    newer segments' columns as nulls."""
+    newer segments' columns as nulls.
+
+    The bounds are compared as one-field structs,
+    ``struct(offset) >= struct(CAST(lo AS BIGINT) AS offset)``, not with
+    ``between``.  Whole-stage codegen inlines a primitive literal into the
+    generated Java source, so every chunk's bounds would make new source and
+    a fresh Janino compile of each stage; a struct literal is passed to the
+    generated class by reference, so the next chunk's plan reuses the
+    compiled classes.  The price is Parquet row-group pushdown, which a
+    struct comparison does not get; here the file skipping above already
+    did that work.  Reads that rely on the pushdown (a journal without
+    per-file ranges, ``repair_range``) keep ``between``."""
     hit = [f for f, fmin, fmax in files
            if fmin is None or (fmin <= hi and fmax >= lo)]
     out = None
@@ -264,7 +275,10 @@ def read_journal_range(
             out = df if out is None else out.unionByName(df)
     if out is None:
         return spark.createDataFrame([], schema)
-    return out.where(F.col("offset").between(lo, hi))
+    return out.where(
+        f"struct(`offset`) >= struct(CAST({int(lo)} AS BIGINT) AS `offset`) "
+        f"AND struct(`offset`) <= struct(CAST({int(hi)} AS BIGINT) AS `offset`)"
+    )
 
 
 def journal_metadata(

@@ -30,20 +30,24 @@ from __future__ import annotations
 import os
 import time
 import uuid as _uuid
-from itertools import chain
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from activedata_etl_spark import ENGINE_REVISION
-from activedata_etl_spark.lake.schema_evolution import align_to_schema, merge_schemas
+from activedata_etl_spark.lake.schema_evolution import (
+    align_exprs,
+    align_to_schema,
+    merge_schemas,
+    sql_ident,
+)
 from activedata_etl_spark.lake.table import (
     BUCKET_COL,
     DELETED_COL,
     CommitConflictError,
     SnapshotTable,
-    _bucket_expr,
+    _bucket_sql,
 )
 from activedata_etl_spark.operators.lww import (
     lww_reduce_salted,
@@ -167,9 +171,11 @@ def apply_batch(
     # (ANSI cast would abort the whole batch instead).
     tbl_types = {f.name: f.dataType
                  for f in T.StructType.fromJson(snap["schema"]).fields}
+    batch_types = {f.name: f.dataType for f in batch.schema.fields}
+    batch_cols = list(batch_types)  # the casts below keep names and order
     for k in key_cols:
-        if k in batch.columns and k in tbl_types \
-                and batch.schema[k].dataType != tbl_types[k]:
+        if k in batch_types and k in tbl_types \
+                and batch_types[k] != tbl_types[k]:
             batch = batch.withColumn(k, F.col(k).try_cast(tbl_types[k]))
 
     # ---- epoch fence: a replayed batch is a no-op ----------------------
@@ -178,75 +184,78 @@ def apply_batch(
         return {"batch_id": batch_id, "skipped": True, "reason": "epoch_fenced"}
 
     # ---- watermark filter: already-applied offsets drop ----------------
+    # the flags and the pre-pass are SQL text: one py4j call per expression
+    # instead of one per F.col/F.lit, and the per-batch values (watermarks,
+    # late cutoff) are map and struct literals, which generated code takes
+    # by reference, so the next batch's plan reuses the compiled classes
     wm = table.watermarks()
     if wm and enforce_watermark:
-        wm_map = F.create_map(
-            *chain.from_iterable((F.lit(p), F.lit(o)) for p, o in wm.items())
-        )
-        below = F.col(OFFSET_COL) <= F.coalesce(
-            wm_map[F.col(PARTITION_COL)], F.lit(-1)
-        )
+        wm_map = "map(" + ", ".join(f"{int(p)}, {int(o)}"
+                                    for p, o in wm.items()) + ")"
+        below = (f"{sql_ident(OFFSET_COL)} <= coalesce("
+                 f"{wm_map}[{sql_ident(PARTITION_COL)}], -1)")
     else:
-        below = F.lit(False)
+        below = "false"
 
     # ---- dead-letter + late-data flags (DATA_TOO_OLD analog,
     #      rollover_index.py:74-77; poison-pill rejection, etl.py:309-350) --
     # a CDC event without a full key is malformed: it cannot be bucketed or
     # merged (and would otherwise emit a ghost all-null row through the
     # full-outer join's key_cols[0].isNotNull() presence test)
-    invalid = F.lit(False)
-    for c in key_cols:
-        if c in batch.columns:
-            invalid = invalid | F.col(c).isNull()
+    invalid = " OR ".join(
+        [f"{sql_ident(c)} IS NULL" for c in key_cols if c in batch_cols]
+    ) or "false"
     max_event_ts = snap.get("max_event_ts")  # epoch seconds, event-time WM
-    has_ts = TS_COL in batch.columns
+    has_ts = TS_COL in batch_cols
+    ts_sec = f"unix_timestamp({sql_ident(TS_COL)})"
     if late_threshold_sec is not None and max_event_ts is not None and has_ts:
-        late = F.unix_timestamp(F.col(TS_COL)) < F.lit(
-            int(max_event_ts) - late_threshold_sec
-        )
-        late = F.coalesce(late, F.lit(False))
+        # a struct compares null lowest: the null test keeps a null ts
+        # not late, as a plain `<` (null -> false) did
+        late = (f"{ts_sec} IS NOT NULL AND struct({ts_sec} AS t) < struct("
+                f"CAST({int(max_event_ts) - late_threshold_sec} AS BIGINT)"
+                " AS t)")
     else:
-        late = F.lit(False)
+        late = "false"
 
-    key_bucket = _bucket_expr(key_cols, snap["n_buckets"])
+    key_bucket = _bucket_sql(key_cols, snap["n_buckets"])
     # not cached: the pre-pass, the quarantine write and the reduce each
     # re-read the batch.  For a pruned journal chunk (the measured case)
     # that costs less than the job that would fill a cache; a caller whose
     # batch is expensive to compute caches it itself (sync_changes)
-    flagged = (
-        batch.withColumn("__below", below)
-        .withColumn("__invalid", invalid)
-        .withColumn("__late", late & ~invalid)
+    flagged = batch.selectExpr(
+        "*", f"{below} AS __below", f"{invalid} AS __invalid",
+        f"({late}) AND NOT ({invalid}) AS __late",
     )
-    drop_row = F.col("__below") | F.col("__invalid") | F.col("__late")
+    drop_row = "(__below OR __invalid OR __late)"
 
     # ---- ONE pre-pass job: per-partition lineage + touched buckets -------
     # counters are counts, never sums: without a partition column this
     # is a global aggregate, which yields one row (all counts 0) even
     # for an empty batch
-    by_partition = [PARTITION_COL] if PARTITION_COL in batch.columns else []
+    by_partition = [PARTITION_COL] if PARTITION_COL in batch_cols else []
     part_rows = [
-        r.asDict() for r in flagged.groupBy(*by_partition).agg(
-            F.min(OFFSET_COL).alias("min_offset"),
-            F.max(OFFSET_COL).alias("max_offset"),
-            F.count(F.lit(1)).alias("rows_read"),
-            F.count(F.when(F.col("__below"), 1)).alias("below_watermark"),
-            F.count(F.when(F.col("__invalid"), 1)).alias("invalid_events"),
-            F.count(F.when(F.col("__late"), 1)).alias("late_events"),
+        r.asDict() for r in flagged.groupBy(*by_partition).agg(*[F.expr(a) for a in (
+            f"min({sql_ident(OFFSET_COL)}) AS min_offset",
+            f"max({sql_ident(OFFSET_COL)}) AS max_offset",
+            "count(1) AS rows_read",
+            "count(CASE WHEN __below THEN 1 END) AS below_watermark",
+            "count(CASE WHEN __invalid THEN 1 END) AS invalid_events",
+            "count(CASE WHEN __late THEN 1 END) AS late_events",
             # the flags overlap (a null-key event can also sit below
             # the watermark), so live rows are counted, not derived
-            F.count(F.when(~drop_row, 1)).alias("live_rows"),
+            f"count(CASE WHEN NOT {drop_row} THEN 1 END) AS live_rows",
             # valid rows only: one corrupt future-dated event must
             # NOT advance the event-time watermark (it would make
             # every later real event "late" forever)
-            (F.max(F.when(~drop_row, F.unix_timestamp(TS_COL)))
-             if has_ts else F.lit(None).cast("long")).alias("max_ts"),
+            (f"max(CASE WHEN NOT {drop_row} THEN {ts_sec} END)" if has_ts
+             else "CAST(NULL AS BIGINT)") + " AS max_ts",
             # the bucket id lives only inside this set: the reduce
             # computes it on the winners, since it is constant within a
             # key group (carried per event it widens the reduce shuffle,
             # measured ~6% of the reduce stage)
-            F.collect_set(F.when(~drop_row, key_bucket)).alias("buckets"),
-        ).collect()
+            f"collect_set(CASE WHEN NOT {drop_row} THEN {key_bucket} END)"
+            " AS buckets",
+        )]).collect()
     ]
     t_pre = time.time()
     touched = sorted({b for r in part_rows for b in r["buckets"]})
@@ -268,7 +277,7 @@ def apply_batch(
     if n_quarantined:
         # quarantine table: malformed + too-late events, kept for audit
         (
-            flagged.where(F.col("__invalid") | F.col("__late"))
+            flagged.where("__invalid OR __late")
             .drop("__below")
             .write.mode("overwrite")
             .parquet(os.path.join(table.location, f"quarantine/b{batch_id}"))
@@ -288,23 +297,22 @@ def apply_batch(
     # ---- within-batch LWW reduce (map-side combine handles skew) -----
     # partition id is lineage-only (consumed by the pre-pass); dropping
     # it keeps the envelope column out of the reduce shuffle
-    live = flagged.where(~drop_row).drop(
+    live = flagged.where(f"NOT {drop_row}").drop(
         "__below", "__invalid", "__late", PARTITION_COL
     )
     reduce = lww_reduce_salted if salted else lww_reduce_structmax
-    reduced = reduce(live, key_cols, list(version_cols)).withColumn(
-        BUCKET_COL, key_bucket
-    )
-    stored_cols = [c for c in batch.columns if c not in ENVELOPE_DROP]
+    reduced = reduce(live, key_cols, list(version_cols))
+    stored_cols = [c for c in batch_cols if c not in ENVELOPE_DROP]
 
     # ---- finalize transforms on WINNERS only (not on every event) ----
     if finalize_fn is not None:
         reduced = finalize_fn(reduced)
-        stored_cols = [c for c in reduced.columns if c not in ENVELOPE_DROP
-                       and c != BUCKET_COL]
+        stored_cols = [c for c in reduced.columns if c not in ENVELOPE_DROP]
 
     # ---- schema evolution (transactional with this commit) ------------
-    merged_schema, changes, src = _evolve(snap, reduced, stored_cols)
+    # the bucket id of each winner rides along in the same projection
+    merged_schema, changes, src = _evolve(snap, reduced, stored_cols,
+                                          key_bucket)
 
     # ---- pick the write strategy --------------------------------------
     mode = merge_mode
@@ -334,16 +342,18 @@ def apply_batch(
         # delta, the >= version guard is deferred to the read-time LWW
         # reduce, which resolves base-vs-delta and delta-vs-delta exactly
         # like the CoW merge expressions.
-        frame = src.select(*merged_schema.fieldNames(), BUCKET_COL)
-        deleted = F.coalesce(F.col(DELETED_COL), F.lit(False))
+        # ``_evolve`` already projected the stored columns and the bucket
+        frame, out_cols = src, None
+        deleted = f"coalesce({sql_ident(DELETED_COL)}, false)"
         metrics = [
-            F.sum((~deleted).cast("long")).alias("applied"),
-            F.sum(deleted.cast("long")).alias("deletes"),
+            F.expr(f"sum(CAST(NOT {deleted} AS BIGINT)) AS applied"),
+            F.expr(f"sum(CAST({deleted} AS BIGINT)) AS deletes"),
         ]
-        out_cols = frame.columns
     obs = Observation(f"{mode}_b{batch_id}")
+    observed = frame.observe(obs, *metrics)
     rel = table.write_buckets(
-        frame.observe(obs, *metrics).select(*out_cols), snap["version"] + 1
+        observed if out_cols is None else observed.selectExpr(*out_cols),
+        snap["version"] + 1,
     )
     try:
         m = obs.get
@@ -363,32 +373,29 @@ def apply_batch(
     return s
 
 
-def _evolve(snap, reduced, stored_cols):
+def _evolve(snap, reduced, stored_cols, bucket_sql):
     """Merge the winners' stored columns into the table schema: the merged
     schema, its change descriptions, and the winners aligned to it with
-    the tombstone marker and bucket id."""
+    the tombstone marker and the bucket id (SQL ``bucket_sql``), in one
+    projection."""
     table_schema = T.StructType.fromJson(snap["schema"])
+    fields = reduced.schema.fields
     batch_stored_schema = T.StructType(
-        [f for f in reduced.schema.fields if f.name in stored_cols]
+        [f for f in fields if f.name in stored_cols]
     )
     merged_schema, changes = merge_schemas(table_schema, batch_stored_schema)
 
-    have = {f.name: f for f in reduced.schema.fields}
-    src_cols = []
-    for f in merged_schema.fields:
-        if f.name == DELETED_COL:
-            # tombstone marker derives from the op, not from alignment
-            src_cols.append((F.col(OP_COL) == "delete").alias(DELETED_COL))
-        elif f.name in have:
-            c = F.col(f.name)
-            src_cols.append(
-                c.cast(f.dataType).alias(f.name)
-                if have[f.name].dataType != f.dataType else c
-            )
-        else:
-            src_cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+    have = {f.name: f.dataType for f in fields}
+    src_cols = [
+        # tombstone marker derives from the op, not from alignment
+        f"{sql_ident(OP_COL)} = 'delete' AS {sql_ident(DELETED_COL)}"
+        if f.name == DELETED_COL else e
+        for f, e in zip(merged_schema.fields,
+                        align_exprs(have, merged_schema))
+    ]
     # bucket id rides along (constant per key)
-    return merged_schema, changes, reduced.select(*src_cols, F.col(BUCKET_COL))
+    return merged_schema, changes, reduced.selectExpr(
+        *src_cols, f"{bucket_sql} AS {sql_ident(BUCKET_COL)}")
 
 
 def _cow_merge(table, src, merged_schema, key_cols, version_cols, touched):
@@ -397,39 +404,51 @@ def _cow_merge(table, src, merged_schema, key_cols, version_cols, touched):
     output columns (the >= version guard picks each row's side)."""
     tgt = align_to_schema(table.read(buckets=touched, include_tombstones=True),
                           merged_schema)
-    tgt = table.bucket_of(tgt).withColumn("__present", F.lit(True))
 
-    s = src.select([F.col(c).alias(f"s_{c}") for c in src.columns])
-    t = tgt.select([F.col(c).alias(f"t_{c}") for c in tgt.columns])
+    def s_(c):
+        return sql_ident(f"s_{c}")
+
+    def t_(c):
+        return sql_ident(f"t_{c}")
+
+    names = merged_schema.fieldNames()
+    s = src.selectExpr(*[f"{sql_ident(c)} AS {s_(c)}"
+                         for c in names + [BUCKET_COL]])
+    t = tgt.selectExpr(
+        *[f"{sql_ident(c)} AS {t_(c)}" for c in names],
+        f"{_bucket_sql(key_cols, table.snapshot()['n_buckets'])}"
+        f" AS {t_(BUCKET_COL)}",
+        f"true AS {t_('__present')}",
+    )
     # plain equality, not null-safe: the pre-pass quarantines every null-key
     # event, so no null key reaches this join, and a null-key target row
     # stays unmatched either way.  The join then hash-partitions on the
     # plain key columns, the murmur3 the bucket id derives from, so the
     # bucketed write gets whole buckets per task (``write_buckets``)
-    cond = [s[f"s_{k}"] == t[f"t_{k}"] for k in key_cols]
-    joined = s.join(t, cond, "full_outer")
+    joined = s.join(t, F.expr(" AND ".join(
+        f"{s_(k)} = {t_(k)}" for k in key_cols)), "full_outer")
 
-    s_ver = F.struct(*[F.col(f"s_{c}") for c in version_cols])
-    t_ver = F.struct(*[F.col(f"t_{c}") for c in version_cols])
-    s_present = F.col(f"s_{key_cols[0]}").isNotNull()
-    t_present = F.col("t___present").isNotNull()
-    src_wins = s_present & (~t_present | (s_ver >= t_ver))
-    s_deleted = F.coalesce(F.col(f"s_{DELETED_COL}"), F.lit(False))
-    t_deleted = F.coalesce(F.col(f"t_{DELETED_COL}"), F.lit(False))
-    metrics = [
-        F.sum((t_present & s_present & ~src_wins).cast("long")).alias("conflicts"),
-        F.sum((src_wins & s_deleted & t_present & ~t_deleted).cast("long")).alias("deletes"),
-        F.sum((src_wins & ~s_deleted).cast("long")).alias("applied"),
-    ]
+    s_ver = "struct(" + ", ".join(s_(c) for c in version_cols) + ")"
+    t_ver = "struct(" + ", ".join(t_(c) for c in version_cols) + ")"
+    s_present = f"({s_(key_cols[0])} IS NOT NULL)"
+    t_present = f"({t_('__present')} IS NOT NULL)"
+    src_wins = f"({s_present} AND (NOT {t_present} OR {s_ver} >= {t_ver}))"
+    s_deleted = f"coalesce({s_(DELETED_COL)}, false)"
+    t_deleted = f"coalesce({t_(DELETED_COL)}, false)"
+    metrics = [F.expr(f"sum(CAST({cond} AS BIGINT)) AS {name}") for name, cond in (
+        ("conflicts", f"{t_present} AND {s_present} AND NOT {src_wins}"),
+        ("deletes", f"{src_wins} AND {s_deleted} AND {t_present} AND NOT {t_deleted}"),
+        ("applied", f"{src_wins} AND NOT {s_deleted}"),
+    )]
 
     def pick(name):
-        return F.when(src_wins, F.col(f"s_{name}")).otherwise(F.col(f"t_{name}"))
+        return f"CASE WHEN {src_wins} THEN {s_(name)} ELSE {t_(name)} END"
 
     out_cols = [
-        (F.coalesce(pick(f.name), F.lit(False)) if f.name == DELETED_COL
-         else pick(f.name)).alias(f.name)
-        for f in merged_schema.fields
-    ] + [pick(BUCKET_COL).alias(BUCKET_COL)]
+        (f"coalesce({pick(c)}, false)" if c == DELETED_COL else pick(c))
+        + f" AS {sql_ident(c)}"
+        for c in names + [BUCKET_COL]
+    ]
     return joined, metrics, out_cols
 
 

@@ -21,7 +21,6 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # widening lattice rank (higher wins)
@@ -85,21 +84,55 @@ def merge_schemas(
     return T.StructType(out), changes
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier: any column name
+    (dots, spaces, backticks, keywords) resolves as one top-level column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_type(dt: T.DataType) -> str:
+    """Spark SQL text of ``dt``, with struct field names quoted."""
+    if isinstance(dt, T.StructType):
+        return "STRUCT<" + ", ".join(
+            f"{sql_ident(f.name)}: {sql_type(f.dataType)}" for f in dt.fields
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{sql_type(dt.keyType)}, {sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def align_exprs(have: dict[str, T.DataType], schema: T.StructType) -> list[str]:
+    """SQL projection list that aligns columns of types ``have`` (name ->
+    type) to ``schema``: a column of another type is cast, a missing one
+    is a typed null."""
+    out = []
+    for f in schema.fields:
+        q = sql_ident(f.name)
+        if f.name not in have:
+            out.append(f"CAST(NULL AS {sql_type(f.dataType)}) AS {q}")
+        elif have[f.name] != f.dataType:
+            out.append(f"CAST({q} AS {sql_type(f.dataType)}) AS {q}")
+        else:
+            out.append(q)
+    return out
+
+
 def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project/cast ``df`` to exactly ``schema`` (missing cols -> null).
 
     Casting is the read-time analog of type widening: old parquet files keep
-    their narrow physical type; alignment upcasts on scan.
+    their narrow physical type; alignment upcasts on scan.  The projection
+    is one ``selectExpr``, and a ``df`` already in ``schema``'s names,
+    order and types is returned as is.
     """
-    have = {f.name: f for f in df.schema.fields}
-    cols = []
-    for f in schema.fields:
-        if f.name in have:
-            src = F.col(f.name)
-            cols.append(src.cast(f.dataType).alias(f.name) if have[f.name].dataType != f.dataType else src)
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+    fields = df.schema.fields
+    if [(f.name, f.dataType) for f in fields] \
+            == [(f.name, f.dataType) for f in schema.fields]:
+        return df
+    return df.selectExpr(*align_exprs({f.name: f.dataType for f in fields},
+                                      schema))
 
 
 def align_arrow(table, phys: T.StructType | None, schema: T.StructType, jvm):

@@ -53,6 +53,7 @@ from activedata_etl_spark.lake.schema_evolution import (
     footer_schema,
     read_parquet,
     spark_schema_of,
+    sql_ident,
 )
 
 
@@ -98,7 +99,13 @@ def _bucket_expr(key_cols: list[str], n_buckets: int):
     hash-partitioning uses, so rows hash-partitioned by the key columns land
     with whole buckets per partition — the bucketed write then needs NO
     repartition (zero-shuffle write)."""
-    return F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
+    return F.expr(_bucket_sql(key_cols, n_buckets))
+
+
+def _bucket_sql(key_cols: list[str], n_buckets: int) -> str:
+    """SQL text of :func:`_bucket_expr`."""
+    keys = ", ".join(map(sql_ident, key_cols))
+    return f"CAST(pmod(hash({keys}), {int(n_buckets)}) AS INT)"
 
 
 def _any(exprs: list):

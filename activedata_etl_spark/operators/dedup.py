@@ -31,6 +31,8 @@ import itertools as _it
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from activedata_etl_spark.kernels import cosine_hits
+
 TOKEN_RE = r"\S+"
 
 # --- the "mix31" hash family: ANSI-SQL-expressible, engine-portable --------
@@ -873,28 +875,22 @@ def embedding_neardup_pairs(
                 {"id_a": np.int64, "id_b": np.int64, "cosine": np.float64}
             )
         sims = (mat[a_idx] @ mat[b_idx].T) / np.outer(norms[a_idx], norms[b_idx])
-        # np.round rounds half to EVEN on x * 1e6, unlike Spark's F.round
-        # (HALF_UP) that the JVM scorer used and DuckDB's round() in the
-        # oracle (half away from zero): a cosine with x * 1e6 exactly
-        # k + 0.5, k even, rounds DOWN here (0.9499985 -> 0.949998, where
-        # both give 0.949999) and can miss a threshold they pass.  No
-        # output pair of the perfbench sample lands on one (its DuckDB gate
-        # compares the rounded cosines).  Pinned by
-        # test_embedding_cosine_rounds_half_even_at_midpoint
-        sims = np.round(sims, 6)
+        # cosines round half away from zero, as the oracle's DuckDB round()
+        # (and Spark's F.round, HALF_UP): a midpoint cosine (x * 1e6
+        # exactly k + 0.5) scores the same here and in the oracle, so a
+        # threshold between the two roundings cannot split them
         if ti == tj:
             # within-block: upper triangle only
-            ii, jj = np.nonzero(
-                (sims >= threshold) & (ids[a_idx][:, None] < ids[b_idx][None, :])
-            )
+            ii, jj, cos = cosine_hits(
+                sims, threshold, ids[a_idx][:, None] < ids[b_idx][None, :])
             ia, ib = ids[a_idx][ii], ids[b_idx][jj]
         else:
             # cross-block: blocks are disjoint so every hit is a distinct
             # pair — normalize orientation to id_a < id_b
-            ii, jj = np.nonzero(sims >= threshold)
+            ii, jj, cos = cosine_hits(sims, threshold, True)
             xa, xb = ids[a_idx][ii], ids[b_idx][jj]
             ia, ib = np.minimum(xa, xb), np.maximum(xa, xb)
-        return pd.DataFrame({"id_a": ia, "id_b": ib, "cosine": sims[ii, jj]})
+        return pd.DataFrame({"id_a": ia, "id_b": ib, "cosine": cos})
 
     return replicated.groupBy("ti", "tj").applyInPandas(tile, out_schema)
 
@@ -973,15 +969,11 @@ def embedding_neardup_lsh(
         outs = []
         for lo in range(0, len(ids), 2048):  # bound the score block per chunk
             hi = min(lo + 2048, len(ids))
-            # round-half-even, as embedding_neardup_pairs (see there): a
-            # midpoint cosine rounds to the even 6th decimal, not up
-            sims = np.round(
-                (mat[lo:hi] @ mat.T) / np.outer(norms[lo:hi], norms), 6
-            )
-            ii, jj = np.nonzero(
-                (sims >= threshold) & (ids[lo:hi, None] < ids[None, :])
-            )
-            outs.append((ids[lo:hi][ii], ids[jj], sims[ii, jj]))
+            # rounded half away from zero, as embedding_neardup_pairs
+            ii, jj, cos = cosine_hits(
+                (mat[lo:hi] @ mat.T) / np.outer(norms[lo:hi], norms),
+                threshold, ids[lo:hi, None] < ids[None, :])
+            outs.append((ids[lo:hi][ii], ids[jj], cos))
         if not outs:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
                 {"id_a": np.int64, "id_b": np.int64, "cosine": np.float64}

@@ -54,6 +54,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from activedata_etl_spark.lake.schema_evolution import sql_ident
+
 DEFAULT_KEYS = ["repo", "path"]
 DEFAULT_VERSION = ["commit_seq", "offset"]
 
@@ -139,21 +141,34 @@ def lww_reduce_structmax(
     """
     keys = keys or DEFAULT_KEYS
     version_cols = version_cols or DEFAULT_VERSION
-    payload = [c for c in df.columns if c not in keys]
-    if not all(_orderable(f.dataType) for f in df.schema.fields):
+    fields = df.schema.fields
+    if not all(_orderable(f.dataType) for f in fields):
         return lww_reduce(df, keys, version_cols)
-    ordered = list(version_cols) + [c for c in payload if c not in version_cols]
+    names = [f.name for f in fields]
     # note: a numeric xxhash64(keys) grouping prefix was measured and
     # REJECTED — cheaper sort compares, but the extra column grew the
     # shuffle ~20% and randomizing row order hurt both the final sort and
     # parquet compression (output +15%); net throughput loss
-    out = df.groupBy(*keys).agg(
-        F.max(F.struct(*[F.col(c) for c in ordered])).alias("__w")
-    )
-    return out.select(
-        *[F.col(c) if c in keys else F.col(f"__w.{c}").alias(c)
-          for c in df.columns]
-    )
+    out = df.groupBy(*map(sql_ident, keys)).agg(
+        F.expr(f"max({_winner_struct(names, keys, version_cols)}) AS __w"))
+    return _unpack_winner(out, names, keys)
+
+
+def _winner_struct(names, keys, version_cols) -> str:
+    """SQL of the struct ``max`` picks the winner by: the version columns
+    first, then the rest of the payload in column order."""
+    payload = [c for c in names if c not in keys and c not in version_cols]
+    return "struct(" + ", ".join(
+        map(sql_ident, list(version_cols) + payload)) + ")"
+
+
+def _unpack_winner(out: DataFrame, names, keys) -> DataFrame:
+    """The winner struct ``__w`` of ``out`` back to the input columns
+    ``names``, in their order, as one projection."""
+    return out.selectExpr(*[
+        sql_ident(c) if c in keys else f"__w.{sql_ident(c)} AS {sql_ident(c)}"
+        for c in names
+    ])
 
 
 def lww_reduce_salted(
@@ -199,18 +214,14 @@ def lww_reduce_salted(
             .where(F.col("__rn") == 1)
             .drop("__v", "__rn")
         )
-    payload = [c for c in df.columns if c not in keys]
-    ordered = list(version_cols) + [c for c in payload if c not in version_cols]
-    ws = F.struct(*[F.col(c) for c in ordered])
+    names = df.columns
     phase1 = (
         df.withColumn("__salt", salt)
-        .groupBy(*keys, "__salt").agg(F.max(ws).alias("__w"))
+        .groupBy(*map(sql_ident, keys), "__salt")
+        .agg(F.expr(f"max({_winner_struct(names, keys, version_cols)}) AS __w"))
     )
-    out = phase1.groupBy(*keys).agg(F.max("__w").alias("__w"))
-    return out.select(
-        *[F.col(c) if c in keys else F.col(f"__w.{c}").alias(c)
-          for c in df.columns]
-    )
+    out = phase1.groupBy(*map(sql_ident, keys)).agg(F.max("__w").alias("__w"))
+    return _unpack_winner(out, names, keys)
 
 
 def _order_key(value, dt):

@@ -207,8 +207,12 @@ def replay_journal(
         if offset_range is not None:
             lo, hi = max(lo, offset_range[0]), min(hi, offset_range[1])
         # a chunk scans only the journal files whose footer offset range
-        # overlaps it; past the footer walk's file threshold there are no
-        # per-file ranges and the chunk filters the whole journal
+        # overlaps it, and compares its bounds as struct literals, which
+        # generated code references instead of inlining, so every chunk
+        # after the first reuses the compiled classes.  Past the footer
+        # walk's file threshold there are no per-file ranges: the chunk
+        # filters the whole journal with `between`, whose literal bounds
+        # Parquet row-group pushdown can use and a struct comparison cannot
         chunk = (
             journal.where(F.col("offset").between(lo, hi))
             if meta["files"] is None else read_journal_range(

@@ -59,3 +59,37 @@ def py4j_round_trips(spark):
         return n
 
     return count
+
+
+def _jvm_counter(spark, read):
+    """``count(fn) -> int``: how far the JVM counter ``read(jvm)`` moves
+    while ``fn`` runs."""
+    jvm = spark.sparkContext._jvm
+
+    def count(fn) -> int:
+        before = read(jvm)
+        fn()
+        return read(jvm) - before
+
+    return count
+
+
+@pytest.fixture
+def catalyst_rule_runs(spark):
+    """``count(fn) -> int``: the Catalyst rule executions (analyzer,
+    optimizer and planner rules, ``RuleExecutor.getCurrentMetrics``) while
+    ``fn`` runs.  Classic pyspark analyzes every DataFrame it creates, so
+    this counts intermediate frames as well as executed plans."""
+    return _jvm_counter(spark, lambda jvm: jvm.org.apache.spark.sql.catalyst
+                        .rules.RuleExecutor.getCurrentMetrics().numRuns())
+
+
+@pytest.fixture
+def codegen_compiles(spark):
+    """``count(fn) -> int``: the Janino compiles of generated classes
+    (``CodegenMetrics.METRIC_COMPILATION_TIME``) while ``fn`` runs.  A plan
+    whose generated source matches an earlier one's hits Spark's codegen
+    cache and compiles nothing."""
+    return _jvm_counter(spark, lambda jvm: jvm.org.apache.spark.metrics
+                        .source.CodegenMetrics.METRIC_COMPILATION_TIME()
+                        .getCount())

@@ -1514,6 +1514,87 @@ def test_apply_batch_job_count(spark, tmp_path):
     assert (n_delta, n_cow) == (4, 5)
 
 
+def test_apply_batch_py4j_round_trips(
+        spark, tmp_path, py4j_round_trips, catalyst_rule_runs):
+    """The driver-side cost of planning a batch: ``apply_batch(table,
+    _norm(batch), i)`` builds each projection as one SQL ``selectExpr``
+    and creates few intermediate frames, so a delta batch makes at most
+    350 py4j round trips (proxy deletes left out) and a CoW batch at most
+    382, with at most 3,960 and 6,000 Catalyst rule runs.  The bounds are
+    the measured counts (204 and 332 round trips, 3,443 and 5,216 rule
+    runs) plus 15 %, or the delta target of 350; the per-column
+    ``F.col``/``cast``/``alias`` chains made 886 and 1,460 round trips.
+    The job counts stay 4 and 5."""
+    table = _mk_base(spark, str(tmp_path / "lake_apply_trips"), n=100,
+                     n_buckets=8)
+
+    def raw(i):
+        return spark.createDataFrame(
+            [(0, 100 + i, 100 + i, "update", "r", "f7.py", "d" * 12, None,
+              f"N{i}", None)],
+            COLS_V1,
+        )
+
+    out, trips, runs, jobs = {}, {}, {}, {}
+    for i, mode in enumerate(("delta", "cow", "delta", "cow", "delta", "cow"),
+                             start=1):
+        b = raw(i)
+        kw = {"merge_mode": "cow"} if mode == "cow" else {}
+
+        def run(b=b, i=i, kw=kw):
+            out[i] = apply_batch(table, _norm(b), i, **kw)
+
+        if i <= 2:
+            trips[mode] = py4j_round_trips(run)
+        elif i <= 4:
+            runs[mode] = catalyst_rule_runs(run)
+        else:
+            jobs[mode] = _jobs(spark, run)
+        assert out[i]["merge_mode"] == mode
+    assert trips["delta"] <= 350, trips
+    assert trips["cow"] <= 382, trips
+    assert runs["delta"] <= 3960 and runs["cow"] <= 6000, runs
+    assert (jobs["delta"], jobs["cow"]) == (4, 5)
+
+
+def test_later_chunk_compiles_no_class(spark, tmp_path, codegen_compiles):
+    """A journal chunk's offset bounds reach generated code as referenced
+    struct literals, not inlined primitives: after one chunk has run,
+    reading a second chunk of the same journal with other bounds through
+    ``read_journal_range`` and applying it compiles no new class."""
+    from activedata_etl_spark.functions.normalize import (
+        finalize_records,
+        normalize_keys,
+    )
+    from activedata_etl_spark.journal import (
+        journal_metadata,
+        read_journal,
+        read_journal_range,
+        write_journal,
+    )
+
+    jd = str(tmp_path / "journal_codegen")
+    write_journal(spark, 4096, jd, seed=3)
+    schema = read_journal(spark, jd).schema
+    files = journal_metadata(jd)["files"]
+    table = ensure_table(spark, str(tmp_path / "lake_codegen"), schema,
+                         n_buckets=8)
+
+    def chunk(i, lo, hi):
+        return apply_batch(
+            table,
+            normalize_keys(read_journal_range(spark, jd, lo, hi, files,
+                                              schema)),
+            i, finalize_fn=finalize_records, merge_mode="delta")
+
+    chunk(0, 0, 2047)  # upsert into the empty table
+    assert chunk(1, 2048, 2559)["merge_mode"] == "delta"
+    out = {}
+    assert codegen_compiles(
+        lambda: out.update(s=chunk(2, 2560, 3071))) == 0
+    assert out["s"]["merge_mode"] == "delta" and out["s"]["rows_read"] > 0
+
+
 def test_lookup_runs_no_job_and_few_py4j_round_trips(
         spark, tmp_path, py4j_round_trips):
     """A lookup plans no Spark read: one 4-key ``lookup_many(...).collect()``

@@ -225,3 +225,62 @@ def test_lww_structmax_agrees_and_is_deterministic(spark):
     for parts in (1, 3):
         got = lww_reduce_structmax(df.repartition(parts)).collect()
         assert len(got) == 1 and got[0]["content"] == "ZZZ"
+
+
+def test_sql_builders_quote_identifiers(spark):
+    """Column names that are not plain SQL identifiers (a backtick, a dot,
+    a space, a keyword) stay single top-level columns through the SQL-text
+    projections of ``align_to_schema`` (every step of the widening
+    lattice, an array's element type, and a missing column),
+    ``nullify_empty_strings`` and ``lww_reduce_structmax``."""
+    from pyspark.sql import types as T
+
+    from activedata_etl_spark.lake.schema_evolution import align_to_schema
+
+    def schema(*fields):
+        return T.StructType([T.StructField(n, t) for n, t in fields])
+
+    src = spark.createDataFrame(
+        [(True, 7, 3, 0.5, 1.5, [1, 2]), (False, None, -4, -2.25, 1e20, None)],
+        schema(("a`b", T.BooleanType()), ("x.y", T.IntegerType()),
+               ("has space", T.LongType()), ("select", T.FloatType()),
+               ("x.y`z w", T.DoubleType()),
+               ("arr.`x", T.ArrayType(T.IntegerType()))),
+    )
+    target = schema(
+        ("a`b", T.IntegerType()), ("x.y", T.LongType()),
+        ("from", T.StringType()),  # missing in src
+        ("has space", T.FloatType()), ("select", T.DoubleType()),
+        ("x.y`z w", T.StringType()), ("arr.`x", T.ArrayType(T.DoubleType())),
+    )
+    aligned = align_to_schema(src, target)
+    assert [(f.name, f.dataType) for f in aligned.schema.fields] == [
+        (f.name, f.dataType) for f in target.fields]
+    assert [tuple(r) for r in aligned.collect()] == [
+        (1, 7, None, 3.0, 0.5, "1.5", [1.0, 2.0]),
+        (0, None, None, -4.0, -2.25, "1.0E20", None),
+    ]
+    assert align_to_schema(aligned, target) is aligned
+
+    strs = spark.createDataFrame(
+        [("", "v", "", "w", 1), ("u", "", "s", "", 2)],
+        schema(("a`b", T.StringType()), ("x.y", T.StringType()),
+               ("has space", T.StringType()), ("select", T.StringType()),
+               ("n", T.IntegerType())),
+    )
+    assert [tuple(r) for r in nullify_empty_strings(strs).collect()] == [
+        (None, "v", None, "w", 1), ("u", None, "s", None, 2)]
+    assert [tuple(r) for r in
+            nullify_empty_strings(strs, ["x.y", "select"]).collect()] == [
+        ("", "v", "", "w", 1), ("u", None, "s", None, 2)]
+
+    events = spark.createDataFrame(
+        [("k1", 1, "old", "p"), ("k1", 2, "new", "q"),
+         ("k2", 5, "only", "r"), ("k2", 5, "tie", "r")],
+        schema(("x.y", T.StringType()), ("select", T.IntegerType()),
+               ("a`b", T.StringType()), ("has space", T.StringType())),
+    )
+    won = lww_reduce_structmax(events, ["x.y"], ["select"])
+    assert won.columns == ["x.y", "select", "a`b", "has space"]
+    assert sorted(tuple(r) for r in won.collect()) == [
+        ("k1", 2, "new", "q"), ("k2", 5, "tie", "r")]

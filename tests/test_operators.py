@@ -171,13 +171,14 @@ def test_embedding_neardup_tiled_matches_exact(spark, emb):
     contains no Collect on the driver (operator is fully distributed)."""
     import numpy as np
 
+    from activedata_etl_spark.kernels import round6_half_away
     from activedata_etl_spark.operators.dedup import embedding_neardup_pairs
 
     pdf = emb.toPandas()
     ids = pdf["vec_id"].to_numpy(dtype=np.int64)
     mat = np.array(list(pdf["embedding"]), dtype=np.float64)
     norms = np.sqrt((mat * mat).sum(axis=1))
-    sims = np.round((mat @ mat.T) / np.outer(norms, norms), 6)
+    sims = round6_half_away((mat @ mat.T) / np.outer(norms, norms))
     ii, jj = np.nonzero((sims >= 0.5) & (ids[:, None] < ids[None, :]))
     expect = {(int(ids[i]), int(ids[j])): sims[i, j] for i, j in zip(ii, jj)}
 
@@ -230,13 +231,15 @@ def test_embedding_neardup_lsh_subset_and_recall(spark, emb):
     assert all(exact[p] == c for p, c in low.items())
 
 
-def test_embedding_cosine_rounds_half_even_at_midpoint(spark):
-    """Both embedding scorers round the cosine with np.round, half to
-    EVEN: a pair whose cosine times 1e6 is exactly 949998.5 scores
-    0.949998, so it misses threshold 0.949999.  Spark's F.round (HALF_UP,
-    the old JVM scorer) gives 0.949999 and would keep the pair."""
+def test_embedding_cosine_rounds_half_away_at_midpoint(spark):
+    """Both embedding scorers round the cosine half away from zero, as
+    the oracles' DuckDB ``round()`` and Spark's ``F.round`` (HALF_UP) do: a
+    pair whose cosine times 1e6 is exactly 949998.5 scores 0.949999, so it
+    is kept at threshold 0.949999 (``np.round``, half to even, gave
+    0.949998 and dropped it)."""
     import math
 
+    import duckdb
     import numpy as np
 
     from activedata_etl_spark.operators.dedup import (
@@ -253,14 +256,41 @@ def test_embedding_cosine_rounds_half_even_at_midpoint(spark):
     df = spark.createDataFrame([(1, vecs[0]), (2, vecs[1])],
                                "id long, vec array<double>")
     assert df.select(F.round(F.lit(x), 6)).first()[0] == 0.949999
+    assert duckdb.sql(f"select round({x}::DOUBLE, 6)").fetchone()[0] \
+        == 0.949999
     for score in (
         lambda t: embedding_neardup_pairs(df, "id", "vec", threshold=t,
                                           n_blocks=2),
         lambda t: embedding_neardup_lsh(df, "id", "vec", threshold=t),
     ):
-        assert [tuple(r) for r in score(0.949998).collect()] == [
-            (1, 2, 0.949998)]
-        assert score(0.949999).collect() == []
+        assert [tuple(r) for r in score(0.949999).collect()] == [
+            (1, 2, 0.949999)]
+        assert score(0.9499995).collect() == []
+
+
+def test_round6_half_away_matches_duckdb_round():
+    """``round6_half_away`` equals DuckDB's ``round(x, 6)`` bit for bit on
+    random doubles of both signs and on exact midpoints (x * 1e6 == k +
+    0.5, where half-away and half-even rounding differ)."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    from activedata_etl_spark.kernels import round6_half_away
+
+    rng = np.random.default_rng(7)
+    k = rng.integers(-10**6, 10**6, 4000)
+    mid = (k + 0.5) / 1e6
+    mid = mid[mid * 1e6 == k + 0.5]
+    assert len(mid) > 1000
+    xs = pd.DataFrame({"x": np.concatenate([
+        rng.uniform(-1.0, 1.0, 4000), rng.uniform(-1e3, 1e3, 1000), mid,
+        [0.0, -0.0, 1.0, -1.0, 0.5e-6, -0.5e-6, 0.9499985, -0.9499985],
+    ])})
+    want = duckdb.sql("select round(x, 6) as r from xs").df()["r"].to_numpy()
+    got = round6_half_away(xs["x"].to_numpy())
+    assert np.array_equal(got, want)
+    assert not np.array_equal(np.round(xs["x"].to_numpy(), 6), want)
 
 
 def test_ivf_ann_recall_vs_exact(spark, emb):
