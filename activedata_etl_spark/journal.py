@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 
 from activedata_etl_spark.lake.schema_evolution import (
     align_to_schema,
+    footer_schema,
     read_parquet,
 )
 
@@ -242,6 +243,30 @@ def read_journal(spark: SparkSession, journal_dir: str) -> DataFrame:
     return out
 
 
+def journal_schema(spark: SparkSession, journal_dir: str) -> T.StructType:
+    """``read_journal(spark, journal_dir).schema`` without building that
+    frame.  For ``seg=*`` segments it merges one footer schema per segment
+    as ``unionByName(allowMissingColumns=True)`` does: the first segment's
+    columns in order, each later segment's new columns appended, every
+    field nullable (a file scan reads all fields as nullable).  A journal
+    without segments (its schema inference adds partition columns), an
+    unreadable footer, or a column whose type differs between segments
+    falls back to ``read_journal``."""
+    fields: dict[str, T.StructField] = {}
+    for root in _journal_roots(journal_dir):
+        schema = (footer_schema(root)
+                  if os.path.basename(root.rstrip("/")).startswith("seg=")
+                  else None)
+        if schema is None:
+            return read_journal(spark, journal_dir).schema
+        for f in schema.fields:
+            seen = fields.setdefault(
+                f.name, T.StructField(f.name, f.dataType, True, f.metadata))
+            if seen.dataType != f.dataType:
+                return read_journal(spark, journal_dir).schema
+    return T.StructType(list(fields.values()))
+
+
 def read_journal_range(
     spark: SparkSession, journal_dir: str, lo: int, hi: int, files: list,
     schema: T.StructType,
@@ -251,7 +276,7 @@ def read_journal_range(
     min/max stats kept beside the data.  ``files`` is
     ``journal_metadata``'s ``(path, min_offset, max_offset)`` list (bounds
     None when a row group has no stats: always scanned); ``schema`` is the
-    full journal schema (``read_journal(...).schema``), which the result is
+    full journal schema (``journal_schema``), which the result is
     aligned to, so a chunk holding only old-segment rows still carries the
     newer segments' columns as nulls.
 

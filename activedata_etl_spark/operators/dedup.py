@@ -41,7 +41,7 @@ TOKEN_RE = r"\S+"
 # Mersenne prime P = 2^31 - 1.  Every intermediate stays < 2^62, so the SAME
 # arithmetic runs overflow-free as Spark long expressions AND DuckDB BIGINT
 # SQL — which makes hash-defined operators (minhash, simhash) ORACLE-
-# CHECKABLE.  xxhash64 stays the fast default (one JVM hash vs sha256).
+# CHECKABLE.  It is the one family every hash-defined operator here uses.
 MIX_P = 2_147_483_647
 
 
@@ -255,7 +255,7 @@ def ngram_jaccard_pairs(
 
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, *, n: int = 3, k: int = 64,
-    seed: int = 7, hash_fn: str = "xxhash64",
+    seed: int = 7,
 ) -> DataFrame:
     """k-permutation MinHash signature per doc.
 
@@ -265,55 +265,41 @@ def minhash_signatures(
     (The explode + groupBy(id).agg(64 mins) formulation was measured ~2x
     slower at sf0.1: it shuffles |doc|x|shingles| rows to re-group by id.)
 
-    hash_fn "xxhash64" (default): hash each shingle STRING once, then derive
-    the k permutations by hashing the resulting 8-byte long — xxhash64 over
-    8 bytes is ~4x cheaper than over a ~30-char shingle, so total hash work
-    drops from k string-hashes to 1 string-hash + k long-hashes per shingle.
-    hash_fn "mix31": sha256-prefix base + k universal-hash permutations
-    (a_i*x + c_i mod 2^31-1) — the classic MinHash family, reproducible in
-    ANSI SQL, making the LSH pipeline oracle-checkable.
+    Hashing is the mix31 family: a sha256-prefix base per shingle, then k
+    universal-hash permutations (a_i*x + c_i mod 2^31-1) — the classic
+    MinHash family, reproducible in ANSI SQL, so the LSH pipeline is
+    oracle-checkable.
     """
     sh = shingled(df, id_col, text_col, n)
-    # NOTE the closure helpers: a `lambda b, i=i:` two-parameter lambda is
+    base = sh.withColumn(
+        "__bh", F.transform("sh", lambda s: base60(s) % MIX_P)
+    )
+
+    # NOTE the closure factory: a `lambda b, a=a:` two-parameter lambda is
     # interpreted by pyspark's transform() as the (element, INDEX) form —
     # the "captured" default silently becomes the array position and every
     # permutation collapses to the same expression.  A one-parameter lambda
-    # from a factory captures the loop variable correctly.
-    if hash_fn == "xxhash64":
-        base = sh.withColumn(
-            "__bh", F.transform("sh", lambda s: F.xxhash64(s, F.lit(seed)))
-        )
+    # from a factory captures the loop variables correctly.
+    def perm31(a, c):
+        return lambda b: (b * a + c) % MIX_P
 
-        def perm(i):
-            return lambda b: F.xxhash64(b, F.lit(seed + i))
-
-        sig = F.array(*[
-            F.array_min(F.transform("__bh", perm(i))) for i in range(k)
-        ])
-    elif hash_fn == "mix31":
-        base = sh.withColumn(
-            "__bh", F.transform("sh", lambda s: base60(s) % MIX_P)
-        )
-
-        def perm31(a, c):
-            return lambda b: (b * a + c) % MIX_P
-
-        sig = F.array(*[
-            F.array_min(F.transform("__bh", perm31(a, c)))
-            for a, c in mix_consts(seed, k)
-        ])
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+    sig = F.array(*[
+        F.array_min(F.transform("__bh", perm31(a, c)))
+        for a, c in mix_consts(seed, k)
+    ])
     return base.select("id", sig.alias("signature"))
 
 
-def _band_frame(
-    sig: DataFrame, hash_fn: str, k: int, bands: int
-) -> tuple[DataFrame, list[str]]:
+def _band_frame(sig: DataFrame, k: int, bands: int) -> tuple[DataFrame, list[str]]:
     """Explode a signature frame into one row per (id, band) with the band
     key columns, repartitioned ON those keys.  Shared by the self-join LSH
     (minhash_lsh_pairs) and the asymmetric batch-vs-corpus join
     (incremental_dedup).
+
+    The key is the band number plus the band's raw r-value tuple, not a
+    hash of it, so the candidate set is exactly reproducible in the DuckDB
+    oracle (a hashed key could, with vanishing probability, admit a
+    colliding candidate the oracle lacks).
 
     The repartition is deliberate: signatures are per-row HOF expressions
     with no exchange of their own, so without it every join consumer would
@@ -322,32 +308,22 @@ def _band_frame(
     happens exactly once per doc.
     """
     r = k // bands
-    if hash_fn == "mix31":
-        band_structs = F.array(*[
-            F.struct(*[
-                F.element_at("signature", b * r + j + 1).alias(f"v{j}")
-                for j in range(r)
-            ])
-            for b in range(bands)
+    band_structs = F.array(*[
+        F.struct(*[
+            F.element_at("signature", b * r + j + 1).alias(f"v{j}")
+            for j in range(r)
         ])
-        banded = sig.select(
-            # posexplode_OUTER everywhere a fixed-length array literal is exploded:
-            # plain (pos)explode infers size>0/isnotnull predicates that inline the
-            # whole signature/bucket HOF subtree into a pushed-down filter and
-            # defeat AQE stage reuse (see ngram_jaccard_pairs).  These arrays are
-            # fixed-length and non-null, so _outer is row-identical.
-            "id", F.posexplode_outer(band_structs).alias("band", "bs")
-        ).select("id", "band", "bs.*")
-        join_keys = ["band"] + [f"v{j}" for j in range(r)]
-    else:
-        band_cols = [
-            F.xxhash64(
-                *[F.element_at("signature", b * r + j + 1) for j in range(r)], F.lit(b)
-            ).alias(f"b{b}")
-            for b in range(bands)
-        ]
-        banded = sig.select("id", F.posexplode_outer(F.array(*band_cols)).alias("band", "bh"))
-        join_keys = ["band", "bh"]
+        for b in range(bands)
+    ])
+    banded = sig.select(
+        # posexplode_OUTER everywhere a fixed-length array literal is exploded:
+        # plain (pos)explode infers size>0/isnotnull predicates that inline the
+        # whole signature/bucket HOF subtree into a pushed-down filter and
+        # defeat AQE stage reuse (see ngram_jaccard_pairs).  These arrays are
+        # fixed-length and non-null, so _outer is row-identical.
+        "id", F.posexplode_outer(band_structs).alias("band", "bs")
+    ).select("id", "band", "bs.*")
+    join_keys = ["band"] + [f"v{j}" for j in range(r)]
     return banded.repartition(*[F.col(c) for c in join_keys]), join_keys
 
 
@@ -362,23 +338,18 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     seed: int = 7,
     verify_exact: bool = True,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """MinHash + LSH banding + (optional) exact-Jaccard verification.
 
     bands of r = k/bands rows; docs colliding in any band are candidates
-    (banded equi-join, never a cross join); candidates are then verified
-    with the exact n-gram Jaccard so the output has no false positives.
-
-    Band-key physicality follows hash_fn: "xxhash64" compresses each band's
-    r values into one 8-byte key (narrowest shuffle — the 10^9-doc path);
-    "mix31" joins on the raw r-value tuple, so the candidate set is exactly
-    reproducible in the DuckDB oracle (a hashed key could, with vanishing
-    probability, admit a colliding candidate the oracle lacks).
+    (banded equi-join on the raw r-value tuple, never a cross join);
+    candidates are then verified with the exact n-gram Jaccard so the
+    output has no false positives.  Signatures and band keys are mix31
+    (``minhash_signatures``, ``_band_frame``), so the candidate set is
+    exactly reproducible in the DuckDB oracle.
     """
-    sig = minhash_signatures(df, id_col, text_col, n=n, k=k, seed=seed,
-                             hash_fn=hash_fn)
-    banded, join_keys = _band_frame(sig, hash_fn, k, bands)
+    sig = minhash_signatures(df, id_col, text_col, n=n, k=k, seed=seed)
+    banded, join_keys = _band_frame(sig, k, bands)
     left = banded.withColumnsRenamed({"id": "id_a"})
     right = banded.withColumnsRenamed({"id": "id_b"})
     cand = (
@@ -419,7 +390,6 @@ def incremental_dedup(
     bands: int = 16,
     threshold: float = 0.8,
     seed: int = 7,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Survivors of a NEW batch deduplicated against an existing corpus —
     the steady-state shape of web-scale ingestion: the corpus is never
@@ -440,8 +410,8 @@ def incremental_dedup(
     rows and the candidate set is O(collisions with the batch).  Survivor
     rule, greedy and order-independent: a batch doc is dropped iff it
     verifies (exact n-gram Jaccard) >= threshold against ANY corpus doc or
-    any smaller-id batch doc.  With hash_fn='mix31' every stage is ANSI-SQL
-    reproducible (registry oracle `dedup_incremental`).
+    any smaller-id batch doc.  Every stage is ANSI-SQL reproducible
+    (registry oracle `dedup_incremental`).
 
     Returns the surviving batch rows with their original columns.
 
@@ -475,11 +445,10 @@ def incremental_dedup(
     survivors = survivors.localCheckpoint()
     # near stage over the exact survivors (strictly fewer docs to sign)
     sig_b = minhash_signatures(survivors, id_col, text_col, n=n, k=k,
-                               seed=seed, hash_fn=hash_fn)
-    sig_c = minhash_signatures(corpus, id_col, text_col, n=n, k=k,
-                               seed=seed, hash_fn=hash_fn)
-    bb, keys = _band_frame(sig_b, hash_fn, k, bands)
-    cb, _ = _band_frame(sig_c, hash_fn, k, bands)
+                               seed=seed)
+    sig_c = minhash_signatures(corpus, id_col, text_col, n=n, k=k, seed=seed)
+    bb, keys = _band_frame(sig_b, k, bands)
+    cb, _ = _band_frame(sig_c, k, bands)
     bb = bb.localCheckpoint()
     cand_x = (
         bb.withColumnsRenamed({"id": "id_b"})
@@ -541,17 +510,15 @@ def incremental_dedup(
 
 def simhash(
     df: DataFrame, id_col: str, text_col: str, *, seed: int = 11,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """63-bit SimHash per doc (bit 63 kept clear to stay in signed long).
 
     One explode + one hash-agg with 63 conditional sums (all JVM-side);
     signature assembled from the per-bit majorities.
 
-    hash_fn: "xxhash64" (fast default — one JVM hash, bit b of the token
-    hash) or "mix31" (sha256-prefix + universal-hash parity per bit —
-    slower, but reproducible in ANSI SQL, so the operator is
-    oracle-checkable; see ``mix_consts``).
+    Token bit b is the parity of the b-th mix31 universal hash of the
+    token's sha256 prefix (see ``mix_consts``), which DuckDB reproduces, so
+    the operator is oracle-checkable.
     """
     # explicit cheap token-count guard + explode_OUTER: plain explode would
     # infer the same size>0 predicate anyway (pushed below the fanout
@@ -566,49 +533,41 @@ def simhash(
             F.explode_outer(toks_expr).alias("tok"),
         )
     )
-    if hash_fn == "xxhash64":
-        toks = toks.withColumn("th", F.xxhash64("tok", F.lit(seed)))
-        bit = [
-            F.col("th").bitwiseAND(F.lit(1 << b)) != 0 for b in range(63)
-        ]
-    elif hash_fn == "mix31":
-        # hash once per DISTINCT token, not per occurrence: sha256 + the 63
-        # universal-hash parities are ~100x more rows of work when run per
-        # occurrence (the corpus re-uses its vocabulary).  The parities pack
-        # into one 63-bit mask long per token; occurrences join the mask
-        # back (the vocab is frequency-floor-small, so AQE broadcasts it at
-        # bench scale and it stays an equi-join at web scale) and the
-        # per-doc aggregate tests mask bits instead of re-hashing.
-        # Arithmetic is IDENTICAL to the per-occurrence form — same base60,
-        # same (a, c) constants, same parity — so the signature is unchanged.
-        # the second distinct is a CSE BARRIER, not a dedup: projection
-        # collapse would otherwise inline base60 (sha256 + hex conv) into
-        # every one of the 63 when-branches below — 126 sha256s per token,
-        # measured 26 s serial in the AQE-coalesced single partition.  An
-        # aggregate key is evaluated once per row and cannot be projected
-        # into, so __bm materializes exactly once per distinct token.
-        vocab = (
-            toks.select("tok").distinct()
-            .select("tok", (base60(F.col("tok")) % MIX_P).alias("__bm"))
-            .distinct()
-            # (a repartition here to parallelize the 63-way mask projection
-            # was measured 3x WORSE: it cost the vocab its broadcast-join
-            # plan and the exploded token frame got shuffled instead; the
-            # ~2.6 s single-task mask stage is the cheaper evil)
-        )
-        mask = None
-        for b, (a, c) in enumerate(mix_consts(seed, 63)):
-            m = F.when(
-                ((F.col("__bm") * a + c) % MIX_P) % 2 == 1, F.lit(1 << b)
-            ).otherwise(F.lit(0))
-            mask = m if mask is None else mask + m
-        vocab = vocab.select("tok", mask.cast("long").alias("__mask"))
-        toks = toks.join(vocab, "tok")
-        bit = [
-            F.col("__mask").bitwiseAND(F.lit(1 << b)) != 0 for b in range(63)
-        ]
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+    # hash once per DISTINCT token, not per occurrence: sha256 + the 63
+    # universal-hash parities are ~100x more rows of work when run per
+    # occurrence (the corpus re-uses its vocabulary).  The parities pack
+    # into one 63-bit mask long per token; occurrences join the mask
+    # back (the vocab is frequency-floor-small, so AQE broadcasts it at
+    # bench scale and it stays an equi-join at web scale) and the
+    # per-doc aggregate tests mask bits instead of re-hashing.
+    # Arithmetic is IDENTICAL to the per-occurrence form — same base60,
+    # same (a, c) constants, same parity — so the signature is unchanged.
+    # the second distinct is a CSE BARRIER, not a dedup: projection
+    # collapse would otherwise inline base60 (sha256 + hex conv) into
+    # every one of the 63 when-branches below — 126 sha256s per token,
+    # measured 26 s serial in the AQE-coalesced single partition.  An
+    # aggregate key is evaluated once per row and cannot be projected
+    # into, so __bm materializes exactly once per distinct token.
+    vocab = (
+        toks.select("tok").distinct()
+        .select("tok", (base60(F.col("tok")) % MIX_P).alias("__bm"))
+        .distinct()
+        # (a repartition here to parallelize the 63-way mask projection
+        # was measured 3x WORSE: it cost the vocab its broadcast-join
+        # plan and the exploded token frame got shuffled instead; the
+        # ~2.6 s single-task mask stage is the cheaper evil)
+    )
+    mask = None
+    for b, (a, c) in enumerate(mix_consts(seed, 63)):
+        m = F.when(
+            ((F.col("__bm") * a + c) % MIX_P) % 2 == 1, F.lit(1 << b)
+        ).otherwise(F.lit(0))
+        mask = m if mask is None else mask + m
+    vocab = vocab.select("tok", mask.cast("long").alias("__mask"))
+    toks = toks.join(vocab, "tok")
+    bit = [
+        F.col("__mask").bitwiseAND(F.lit(1 << b)) != 0 for b in range(63)
+    ]
     sums = [
         F.sum(F.when(bit[b], 1).otherwise(-1)).alias(f"s{b}")
         for b in range(63)
@@ -672,7 +631,6 @@ def simhash_pairs(
     seed: int = 11,
     max_bands: int = 64,
     max_band_freq: int | None = SIMHASH_MAX_BAND_FREQ,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming.
 
@@ -689,7 +647,7 @@ def simhash_pairs(
     ``None`` for exact recall-lossless semantics (the oracle registry query
     does).
     """
-    sig = simhash(df, id_col, text_col, seed=seed, hash_fn=hash_fn)
+    sig = simhash(df, id_col, text_col, seed=seed)
     return simhash_pairs_from_sigs(
         sig, max_hamming=max_hamming, max_bands=max_bands,
         max_band_freq=max_band_freq,
@@ -904,7 +862,6 @@ def embedding_neardup_lsh(
     n_planes: int = 8,
     n_tables: int = 4,
     seed: int = 23,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Sub-quadratic embedding near-dup: hyperplane-LSH candidate pairs +
     exact-cosine verify — the scale path next to the exact (O(n²) compute)
@@ -919,12 +876,12 @@ def embedding_neardup_lsh(
     bucket expressions would otherwise be recomputed per side).  Verified
     pairs carry their true cosine, so output ⊆ the exact operator's output.
 
-    hash_fn "mix31" makes bucketing reproducible in ANSI SQL (DuckDB
-    oracle); "xxhash64" is the fast default.
+    The hyperplane weights are mix31, so bucketing is reproducible in ANSI
+    SQL (DuckDB oracle).
 
     Physical shape (guide §4.2): bucket assignment goes through
-    ``similarity.bucket_frame`` (one numpy matmul per Arrow batch on the
-    mix31 path — sign-equality with the JVM expressions it replaced is
+    ``similarity.bucket_frame`` (one numpy matmul per Arrow batch —
+    sign-equality with the JVM expressions it replaced is
     regression-tested, since the buckets DEFINE the candidate set), and
     scoring runs as one BLAS matmul per (table, bucket) group via
     ``applyInPandas`` — the same tiling kernel as the exact operator.  The
@@ -949,7 +906,7 @@ def embedding_neardup_lsh(
         )
     b = S.bucket_frame(
         df, id_col, vec_col, n_planes=n_planes, n_tables=n_tables, dim=dim,
-        seed=seed, hash_fn=hash_fn, carry_vec=True,
+        seed=seed, carry_vec=True,
     ).repartition("table", "bucket")
 
     out_schema = T.StructType([

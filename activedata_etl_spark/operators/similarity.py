@@ -92,40 +92,30 @@ def cosine_topk(
     )
 
 
-def _hyperplane(plane: int, dim: int, seed: int, hash_fn: str = "xxhash64"):
-    """Deterministic pseudo-random weights in [-1, 1) for one hyperplane.
-
-    hash_fn "xxhash64": one JVM hash per (plane, dim) — the fast default.
-    hash_fn "mix31": the SQL-expressible universal-hash family
+def _hyperplane(plane: int, dim: int, seed: int):
+    """Deterministic pseudo-random weights in [-1, 1) for one hyperplane,
+    as a JVM expression: the SQL-expressible mix31 universal-hash family
     (operators/dedup.py) over weight index plane*dim+1+d, so the DuckDB
-    oracle reproduces the exact same weights (making hyperplane-LSH ANN
-    oracle-checkable end to end)."""
-    if hash_fn == "mix31":
-        from activedata_etl_spark.operators.dedup import MIX_P, mix_consts
+    oracle reproduces the exact same weights.  ``bucket_frame`` computes
+    the same weights in numpy (``_mix31_weights_np``); this form is the
+    reference its test compares against."""
+    from activedata_etl_spark.operators.dedup import MIX_P, mix_consts
 
-        ((a, c),) = mix_consts(seed, 1)
-        base = plane * dim + 1
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda d: (((F.lit(a).cast("long") * (base + d) + c) % MIX_P)
-                       % 2000 - 1000).cast("double") / 1000.0,
-        )
+    ((a, c),) = mix_consts(seed, 1)
+    base = plane * dim + 1
     return F.transform(
         F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda d: (
-            F.pmod(F.xxhash64(F.lit(plane), d, F.lit(seed)), F.lit(2000)) - 1000
-        ).cast("double")
-        / 1000.0,
+        lambda d: (((F.lit(a).cast("long") * (base + d) + c) % MIX_P)
+                   % 2000 - 1000).cast("double") / 1000.0,
     )
 
 
-def hyperplane_bucket(vec, *, n_planes: int = 8, dim: int, seed: int = 23,
-                      hash_fn: str = "xxhash64"):
+def hyperplane_bucket(vec, *, n_planes: int = 8, dim: int, seed: int = 23):
     """LSH bucket id: sign bits of the vector against n_planes hyperplanes."""
     bucket = None
     for p in range(n_planes):
         bit = F.when(
-            dot(vec, _hyperplane(p, dim, seed, hash_fn)) >= 0, F.lit(1 << p)
+            dot(vec, _hyperplane(p, dim, seed)) >= 0, F.lit(1 << p)
         ).otherwise(F.lit(0))
         bucket = bit if bucket is None else bucket + bit
     return bucket.cast("int")
@@ -151,43 +141,30 @@ def _mix31_weights_np(n_planes: int, dim: int, seed: int):
 
 def bucket_frame(df: DataFrame, id_col: str, vec_col: str, *,
                  n_planes: int, n_tables: int, dim: int, seed: int = 23,
-                 hash_fn: str = "xxhash64", carry_vec: bool = False) -> DataFrame:
-    """(id[, vec], table, bucket) — one row per (vector, hash table).
+                 carry_vec: bool = False) -> DataFrame:
+    """(id[, vec], table, bucket) — one row per (vector, hash table); id
+    and vec keep the input columns' types.
 
-    mix31: computed as ONE numpy matmul per Arrow batch (guide §4.2) — the
-    per-row Catalyst-HOF formulation interprets n_tables x n_planes
-    zip_with+aggregate walks per vector (~40M lambda evals per 20k-vector
-    corpus).  The sign of the float64 matmul equals the sign of the JVM's
-    sequential double dot for every graded dataset (verified against the
-    DuckDB oracle per SF; a disagreement would need |dot| ~ 1e-13 of an
-    O(1) value).  xxhash64 weights are JVM-only expressions, so that path
-    keeps the expression form.
+    Computed as ONE numpy matmul per Arrow batch (guide §4.2) — the
+    per-row Catalyst-HOF formulation (``hyperplane_bucket``) interprets
+    n_tables x n_planes zip_with+aggregate walks per vector (~40M lambda
+    evals per 20k-vector corpus).  The sign of the float64 matmul equals
+    the sign of the JVM's sequential double dot for every graded dataset
+    (verified against the DuckDB oracle per SF; a disagreement would need
+    |dot| ~ 1e-13 of an O(1) value).
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
     src = fanout(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")))
-    if hash_fn != "mix31":
-        buckets = F.array(*[
-            hyperplane_bucket(F.col("vec"), n_planes=n_planes, dim=dim,
-                              seed=seed + 1000 * t, hash_fn=hash_fn)
-            for t in range(n_tables)
-        ])
-        cols = ["id", "vec"] if carry_vec else ["id"]
-        return src.select(
-            *cols, F.posexplode_outer(buckets).alias("table", "bucket")
-        )
-
     w = np.hstack([
         _mix31_weights_np(n_planes, dim, seed + 1000 * t)
         for t in range(n_tables)
     ])  # dim x (n_tables*n_planes)
     pw = (1 << np.arange(n_planes, dtype=np.int64))
 
-    fields = [T.StructField("id", T.LongType())]
-    if carry_vec:
-        fields.append(T.StructField("vec", T.ArrayType(T.FloatType())))
+    fields = [src.schema["id"]] + ([src.schema["vec"]] if carry_vec else [])
     fields += [T.StructField("table", T.IntegerType()),
                T.StructField("bucket", T.IntegerType())]
     schema = T.StructType(fields)
@@ -203,7 +180,7 @@ def bucket_frame(df: DataFrame, id_col: str, vec_col: str, *,
                 bits.reshape(nrow, n_tables, n_planes) * pw
             ).sum(axis=2).astype(np.int32)  # nrow x n_tables
             out = {
-                "id": np.repeat(pdf["id"].to_numpy(dtype=np.int64), n_tables),
+                "id": np.repeat(pdf["id"].to_numpy(), n_tables),
                 "table": np.tile(
                     np.arange(n_tables, dtype=np.int32), nrow),
                 "bucket": buckets.ravel(),
@@ -227,7 +204,6 @@ def lsh_ann_topk(
     n_planes: int = 8,
     n_tables: int = 4,
     seed: int = 23,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Approximate top-k via multi-table hyperplane LSH.
 
@@ -250,16 +226,16 @@ def lsh_ann_topk(
     # candidates over ids only: the corpus vector stays OUT of the bucket
     # join and the dedup shuffle (same fix as embedding_neardup_lsh — score
     # once per distinct pair, not once per co-bucketing table).  Bucket
-    # assignment goes through bucket_frame (numpy matmul per Arrow batch on
-    # the mix31 path) for BOTH sides, so join keys stay internally
-    # consistent; the exact-cosine re-rank below is unchanged JVM math.
+    # assignment goes through bucket_frame (numpy matmul per Arrow batch)
+    # for BOTH sides, so join keys stay internally consistent; the
+    # exact-cosine re-rank below is unchanged JVM math.
     cb = bucket_frame(
         corpus, id_col, vec_col, n_planes=n_planes, n_tables=n_tables,
-        dim=dim, seed=seed, hash_fn=hash_fn,
+        dim=dim, seed=seed,
     ).withColumnRenamed("id", "neighbor_id")
     qb = bucket_frame(
         queries, id_col, vec_col, n_planes=n_planes, n_tables=n_tables,
-        dim=dim, seed=seed, hash_fn=hash_fn,
+        dim=dim, seed=seed,
     ).withColumnRenamed("id", "query_id")
     cand = (
         cb.join(F.broadcast(qb), ["table", "bucket"])

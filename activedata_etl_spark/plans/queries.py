@@ -1093,16 +1093,13 @@ ORDER BY d.doc_id
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
-    """MinHash+LSH candidates verified by exact Jaccard.  hash_fn="mix31"
+    """MinHash+LSH candidates verified by exact Jaccard.  The mix31 family
     (sha256-prefix base + universal-hash permutations over 2^31-1) makes the
     ENTIRE pipeline — signatures, banding, candidate join, verification —
-    reproducible in ANSI SQL, so the DuckDB oracle checks it end to end.
-    The xxhash64 fast path (narrow 8-byte band keys) stays the 10^9-doc
-    default in the operator itself."""
+    reproducible in ANSI SQL, so the DuckDB oracle checks it end to end."""
     d = _t(spark, sf, "documents")
     return DD.minhash_lsh_pairs(
         d, "doc_id", "text", n=3, k=64, bands=16, threshold=0.5,
-        hash_fn="mix31",
     ).orderBy("id_a", "id_b")
 
 
@@ -1158,8 +1155,8 @@ def dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     exact corpus copies (doc_id%10, +1e6 ids), near-copies with one token
     appended (doc_id%7, +2e6), and genuinely novel docs (doc_id%13, +3e6)
     is deduplicated against the full corpus — only the novel docs survive.
-    hash_fn='mix31' makes exact hash, signatures, asymmetric banding, and
-    jaccard verification ANSI-SQL reproducible end to end."""
+    Exact hash, mix31 signatures, asymmetric banding, and jaccard
+    verification are ANSI-SQL reproducible end to end."""
     d = _t(spark, sf, "documents")
     batch = (
         d.where(F.col("doc_id") % 10 == 0)
@@ -1184,7 +1181,7 @@ def dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     )
     out = DD.incremental_dedup(
         d.select("doc_id", "text"), batch, "doc_id", "text",
-        near=True, n=3, k=64, bands=16, threshold=0.5, hash_fn="mix31",
+        near=True, n=3, k=64, bands=16, threshold=0.5,
     )
     return out.select("doc_id").orderBy("doc_id")
 
@@ -1254,17 +1251,16 @@ ORDER BY doc_id
 
 
 def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
-    """SimHash near-dup pairs.  hash_fn="mix31" makes the signature SQL-
-    expressible; block-permutation banding is recall-lossless, so the oracle
-    reproduces the output with signatures + an exact hamming join (banding
-    only prunes candidates, never results)."""
+    """SimHash near-dup pairs.  The mix31 signature is SQL-expressible;
+    block-permutation banding is recall-lossless, so the oracle reproduces
+    the output with signatures + an exact hamming join (banding only
+    prunes candidates, never results)."""
     d = _t(spark, sf, "documents")
     return DD.simhash_pairs(
         # max_band_freq=None: the registry query is the oracle-exact path
         # (the SQL oracle enumerates ALL pairs); pipelines keep the default
         # SIMHASH_MAX_BAND_FREQ hot-bucket cap
-        d, "doc_id", "text", max_hamming=8, hash_fn="mix31",
-        max_band_freq=None,
+        d, "doc_id", "text", max_hamming=8, max_band_freq=None,
     ).orderBy("id_a", "id_b")
 
 
@@ -1341,10 +1337,10 @@ WHERE rank <= 3 ORDER BY query_id, rank
 def sim_ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """Hyperplane-LSH ANN with mix31 hyperplane weights: buckets, candidate
     join, and re-rank all reproduce in ANSI SQL, so the DuckDB oracle checks
-    the full ANN pipeline (xxhash weights remain the operator default)."""
+    the full ANN pipeline."""
     e = _t(spark, sf, "embeddings")
     q = e.where(F.col("vec_id") < 5)
-    return SIM.lsh_ann_topk(e, q, k=3, n_planes=4, hash_fn="mix31").orderBy(
+    return SIM.lsh_ann_topk(e, q, k=3, n_planes=4).orderBy(
         "query_id", "rank"
     )
 
@@ -1406,7 +1402,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf: str) -> DataFrame:
     candidate generation bit-for-bit; output ⊆ dedup_embedding's pairs."""
     e = _t(spark, sf, "embeddings")
     return DD.embedding_neardup_lsh(
-        e, "vec_id", "embedding", threshold=0.4, n_planes=6, hash_fn="mix31"
+        e, "vec_id", "embedding", threshold=0.4, n_planes=6
     ).orderBy("id_a", "id_b")
 
 

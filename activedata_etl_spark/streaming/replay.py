@@ -141,19 +141,23 @@ def replay_journal(
     """
     from activedata_etl_spark.journal import (
         journal_metadata,
+        journal_schema,
         read_journal,
         read_journal_range,
     )
 
-    journal = read_journal(spark, journal_dir)
+    # the schema comes from segment footers; the whole-journal frame is
+    # built only where chunks filter it (no per-file offset ranges)
+    schema = journal_schema(spark, journal_dir)
     table = ensure_table(
-        spark, table_location, journal.schema,
+        spark, table_location, schema,
         n_buckets=n_buckets, expected_rows=expected_rows,
     )
 
     # max offset and per-file offset ranges: footer stats driver-side for
     # small journals, one distributed column-pruned agg past ~2k files
     meta = journal_metadata(journal_dir, spark)
+    journal = read_journal(spark, journal_dir) if meta["files"] is None else None
     max_offset = journal_max = meta["max_offset"]
     if offset_range is not None and max_offset is not None:
         max_offset = min(max_offset, offset_range[1])
@@ -216,7 +220,7 @@ def replay_journal(
         chunk = (
             journal.where(F.col("offset").between(lo, hi))
             if meta["files"] is None else read_journal_range(
-                spark, journal_dir, lo, hi, meta["files"], journal.schema)
+                spark, journal_dir, lo, hi, meta["files"], schema)
         )
         # key normalization pre-reduce; lang/sha256 only on LWW winners.
         # A CommitConflictError means a concurrent MAINTENANCE commit
@@ -466,9 +470,9 @@ def stream_journal(
     missed range), so the stream degrades to at-least-once export while
     `external_gte` keeps the index idempotent.
     """
-    from activedata_etl_spark.journal import read_journal as _rj
+    from activedata_etl_spark.journal import journal_schema
 
-    static_schema = _rj(spark, journal_dir).schema
+    static_schema = journal_schema(spark, journal_dir)
     table = ensure_table(spark, table_location, static_schema, n_buckets=n_buckets)
 
     stream = (

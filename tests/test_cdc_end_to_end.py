@@ -228,6 +228,27 @@ def test_lineage_recorded(spark, journal_dir, tmp_path):
     assert (summary["rows_applied"] >= 0).all()
 
 
+def test_journal_schema_matches_read_journal(
+    spark, journal_dir, tmp_path, catalyst_rule_runs
+):
+    """``journal_schema`` equals ``read_journal(...).schema`` in names,
+    types and nullability: merged from the footers of the two-segment
+    fixture (seg=2 adds ``mode``) without analyzing a plan, and inferred
+    for a segment-less journal whose partition dirs add a column."""
+    from activedata_etl_spark.journal import journal_schema
+
+    flat_dir = str(tmp_path / "flat_journal")
+    read_journal(spark, journal_dir).write.partitionBy("partition") \
+        .parquet(flat_dir)
+    for jd in (journal_dir, flat_dir):
+        got = [(f.name, f.dataType, f.nullable)
+               for f in journal_schema(spark, jd)]
+        assert got == [(f.name, f.dataType, f.nullable)
+                       for f in read_journal(spark, jd).schema]
+        assert "mode" in [name for name, _, _ in got]
+    assert catalyst_rule_runs(lambda: journal_schema(spark, journal_dir)) == 0
+
+
 def test_chunk_scans_only_overlapping_journal_files(
     spark, journal_dir, journal_pdf, tmp_path
 ):

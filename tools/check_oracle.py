@@ -7,6 +7,7 @@ Compares rows + column names + values (type-aware canonicalization:
 Decimal -> float, numpy scalars -> python, bytes -> hex).  Exits nonzero on
 any mismatch.  This mirrors the driver's rows+schema+hash check closely
 enough to catch any behavior change before committing an optimization.
+The comparison (``compare``) is shared with tests/test_registry_oracle.py.
 """
 
 from __future__ import annotations
@@ -53,6 +54,48 @@ def canon_frame(df) -> list[tuple]:
     return [tuple(canon_val(v) for v in row) for row in df.itertuples(index=False, name=None)]
 
 
+def oracle_connection(sf: str):
+    """A DuckDB connection with one view per registry table under ``sf``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf}/{t}.parquet"
+        if os.path.exists(p):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def compare(got, want) -> tuple[bool, list[str]]:
+    """A query's Spark result against its oracle's (pandas frames): column
+    names (case-insensitive), row count, then the canonical values row by
+    row.  Equal rows in another order also pass, as "OK (tie-order)":
+    duplicate ORDER BY keys make tie order engine-dependent, and an equal
+    result SET means the query is unchanged.  Returns (ok, report lines):
+    the status with row counts, then the first difference on a mismatch."""
+    cols_ok = [c.lower() for c in got.columns] == [c.lower() for c in want.columns]
+    g, w = canon_frame(got), canon_frame(want)
+    rows_ok = len(g) == len(w)
+    vals_ok = g == w
+    tie_order = False
+    if cols_ok and rows_ok and not vals_ok:
+        vals_ok = tie_order = sorted(map(repr, g)) == sorted(map(repr, w))
+    ok = cols_ok and rows_ok and vals_ok
+    status = "OK (tie-order)" if ok and tie_order else (
+        "OK" if ok else "MISMATCH")
+    report = [f"{status} rows={len(g)}/{len(w)} cols_ok={cols_ok}"]
+    if not ok and rows_ok and cols_ok:
+        for i, (a, b) in enumerate(zip(g, w)):
+            if a != b:
+                report.append(f"  first diff at row {i}:\n    spark  {a}\n    oracle {b}")
+                break
+    elif not rows_ok:
+        only_g = [r for r in g if r not in set(w)][:3]
+        only_w = [r for r in w if r not in set(g)][:3]
+        report.append(f"  spark-only (3): {only_g}\n  oracle-only (3): {only_w}")
+    return ok, report
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -60,18 +103,16 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    import duckdb
-
     from activedata_etl_spark.plans.queries import ORACLE_SQL, SPARK_QUERIES
     from activedata_etl_spark.session import get_spark
 
+    # the Python workers import the package too: they inherit PYTHONPATH
+    # from the JVM, which inherits this process's environment at launch
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark("oracle_check", parallelism=args.cpus,
                       shuffle_partitions=args.cpus * 2)
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{args.sf}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_connection(args.sf)
 
     names = args.names or [n for n in SPARK_QUERIES if n in ORACLE_SQL]
     failures = []
@@ -94,33 +135,12 @@ def main() -> int:
             print(f"{name}: ORACLE ERROR {type(e).__name__}: {e}")
             continue
         t2 = time.time()
-        cols_ok = [c.lower() for c in got.columns] == [c.lower() for c in want.columns]
-        g, w = canon_frame(got), canon_frame(want)
-        rows_ok = len(g) == len(w)
-        vals_ok = g == w
-        tie_order = False
-        if cols_ok and rows_ok and not vals_ok:
-            # duplicate ORDER BY keys make tie order engine-dependent;
-            # the result SET being equal means the query is unchanged
-            ks = sorted(map(repr, g)) == sorted(map(repr, w))
-            if ks:
-                vals_ok, tie_order = True, True
-        ok = cols_ok and rows_ok and vals_ok
-        status = "OK (tie-order)" if ok and tie_order else (
-            "OK" if ok else "MISMATCH")
-        print(f"{name}: {status} rows={len(g)}/{len(w)} cols_ok={cols_ok} "
-              f"spark={t1 - t0:.2f}s oracle={t2 - t1:.2f}s")
+        ok, report = compare(got, want)
+        print(f"{name}: {report[0]} spark={t1 - t0:.2f}s oracle={t2 - t1:.2f}s")
+        for line in report[1:]:
+            print(line)
         if not ok:
             failures.append(name)
-            if rows_ok and cols_ok:
-                for i, (a, b) in enumerate(zip(g, w)):
-                    if a != b:
-                        print(f"  first diff at row {i}:\n    spark  {a}\n    oracle {b}")
-                        break
-            elif not rows_ok:
-                only_g = [r for r in g if r not in set(w)][:3]
-                only_w = [r for r in w if r not in set(g)][:3]
-                print(f"  spark-only (3): {only_g}\n  oracle-only (3): {only_w}")
     print(f"\n{len(names) - len(failures)}/{len(names)} OK")
     return 1 if failures else 0
 
