@@ -8,8 +8,9 @@
   so the operator needs no stored model; candidates come from a bucket
   equi-join, then exact cosine re-ranks.
 
-All vector math is Catalyst higher-order functions (zip_with/aggregate) —
-JVM-side, no Python.
+Cosine scoring is Catalyst higher-order functions (zip_with/aggregate),
+JVM-side; LSH bucket and large IVF cell assignment are numpy matmuls per
+Arrow batch (``mapInPandas``).
 """
 
 from __future__ import annotations
