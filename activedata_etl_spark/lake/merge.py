@@ -472,7 +472,6 @@ def _commit(
     mode: str = "cow",
     advance_fence: bool = True,
 ) -> dict:
-    new_version = snap["version"] + 1
     duration_ms = int((time.time() - t0) * 1000)
 
     def total(k):
@@ -499,7 +498,7 @@ def _commit(
 
     # nonce keeps racing writers' lineage dirs disjoint (referenced by
     # path in the snapshot, never parsed by name)
-    lineage_rel = f"lineage/v{new_version}-{_uuid.uuid4().hex[:8]}"
+    lineage_rel = f"lineage/v{snap['version'] + 1}-{_uuid.uuid4().hex[:8]}"
     names = [
         "batch_id", "partition", "min_offset", "max_offset", "rows_read",
         "below_watermark", "invalid_events", "late_events", "rows_applied",
@@ -521,39 +520,62 @@ def _commit(
     os.makedirs(out_dir, exist_ok=True)
     pq.write_table(tbl, os.path.join(out_dir, "lineage.parquet"))
 
-    # ---- build + CAS-commit, with commit-time rebase where it is safe ----
-    # A DELTA batch's files are independent of the base (read-time LWW
-    # resolves order), and a metadata-only commit carries no files at all —
-    # for those, losing the version CAS to a concurrent maintenance commit
-    # only requires re-pointing the SAME data at the fresh parent (schema
-    # re-merged, watermarks/fence taken as per-key max).  CoW/upsert
-    # rewrites DO depend on the base they merged against, so they re-raise
-    # and the caller recomputes the batch (replay_journal's retry).
-    written = (
-        table.written_bucket_rows(data_rel)
-        if touched is not None and data_rel is not None else None
-    )
-    parent = snap
-    eff_schema = schema_json
-    for attempt in range(8):
-        new_version = parent["version"] + 1
-        new = dict(parent)
-        new["version"] = new_version
-        new["parent"] = parent["version"]
-        new["ts_ms"] = int(time.time() * 1000)
-        new["schema"] = eff_schema
+    written = (table.written_bucket_rows(data_rel)
+               if data_rel is not None else None)
+
+    def build(fresh):
+        # Commit-time rebase where it is safe.  A DELTA batch's files are
+        # independent of the base (read-time LWW resolves order), and a
+        # metadata-only commit carries no files at all — for those, a
+        # concurrent commit only requires re-pointing the SAME data at the
+        # fresh parent.  CoW/upsert rewrites DO depend on the base they
+        # merged against; refusing raises out of the commit, and the caller
+        # recomputes the batch (replay_journal's retry).
+        rebased = fresh["version"] != snap["version"]
+        if rebased and data_rel is not None:
+            if mode == "delta" and fresh["n_buckets"] != snap["n_buckets"]:
+                # a concurrent rebucket() changed the layout: this batch's
+                # delta files are bucketed under the OLD n_buckets, so
+                # appending them to delta_dirs keyed by stale bucket ids
+                # would misroute keys (a key's rebucketed base row and its
+                # delta winner would live in different buckets, and
+                # lookup() would prune to the wrong one)
+                raise CommitConflictError(
+                    f"batch {batch_id}: a rebucket landed at "
+                    f"{table.location} after the delta write; recompute")
+            sd, fd = snap.get("delta_dirs", {}), fresh.get("delta_dirs", {})
+            if mode != "delta" and not all(
+                    fresh["bucket_dirs"].get(str(b))
+                    == snap["bucket_dirs"].get(str(b))
+                    and fd.get(str(b), []) == sd.get(str(b), [])
+                    for b in touched):
+                # a CoW/upsert rewrite can only rebase if every touched
+                # bucket is EXACTLY as the merge saw it (same base pointer,
+                # same delta chain) — true when racing metadata-only
+                # commits (analyze, schema), false when a compactor folded
+                # those buckets (its fold holds rows our rewrite lacks)
+                raise CommitConflictError(
+                    f"batch {batch_id}: a concurrent commit at "
+                    f"{table.location} rewrote a touched bucket; recompute")
+        new_version = fresh["version"] + 1
+        fields = {"schema": schema_json}
+        if rebased and fresh["schema"] != snap["schema"]:
+            # a concurrent writer evolved the schema: our files are still
+            # readable (read-time align/cast), but the committed schema
+            # must be the UNION or their columns would vanish
+            fields["schema"] = merge_schemas(
+                T.StructType.fromJson(fresh["schema"]),
+                T.StructType.fromJson(schema_json),
+            )[0].jsonValue()
+        # repair mode leaves fence + watermarks EXACTLY the parent's: the
+        # data change commits, but nothing is newly marked applied
         if advance_fence:
             wm = {str(k): int(v) for k, v in new_wm.items()}
-            if parent is not snap:
-                for k, v in parent.get("watermarks", {}).items():
-                    wm[str(k)] = max(int(v), int(wm.get(str(k), -1)))
-                new["batch_id"] = max(int(parent.get("batch_id", -1)), batch_id)
-            else:
-                new["batch_id"] = batch_id
-            new["watermarks"] = wm
-        # repair mode: fence + watermarks stay EXACTLY the parent's — the
-        # data change commits, but nothing is newly marked applied
-        lineage_dirs = parent.get("lineage_dirs", []) + [lineage_rel]
+            for k, v in fresh.get("watermarks", {}).items():
+                wm[k] = max(int(v), wm.get(k, -1))
+            fields["watermarks"] = wm
+            fields["batch_id"] = max(int(fresh.get("batch_id", -1)), batch_id)
+        lineage_dirs = fresh.get("lineage_dirs", []) + [lineage_rel]
         if len(lineage_dirs) > LINEAGE_CONSOLIDATE_AT:
             # one dir per commit makes the snapshot JSON and read_lineage
             # cost O(total batches ever applied) — at 10^10-event scale
@@ -573,101 +595,43 @@ def _commit(
             os.makedirs(cdir, exist_ok=True)
             pq.write_table(consolidated, os.path.join(cdir, "lineage.parquet"))
             lineage_dirs = [crel] + tail
-        new["lineage_dirs"] = lineage_dirs
+        fields["lineage_dirs"] = lineage_dirs
         if max_event_ts is not None:
-            new["max_event_ts"] = max(
-                int(max_event_ts), int(parent.get("max_event_ts", -1))
-            )
-        bucket_dirs = dict(parent["bucket_dirs"])
-        dir_versions = dict(parent["dir_versions"])
-        delta_dirs = {b: list(r) for b, r in parent.get("delta_dirs", {}).items()}
-        bucket_rows = dict(parent.get("bucket_rows", {}))
+            fields["max_event_ts"] = max(
+                int(max_event_ts), int(fresh.get("max_event_ts") or -1))
         if written is not None:
-            dir_versions[data_rel] = new_version
+            bucket_dirs = dict(fresh["bucket_dirs"])
+            delta_dirs = {b: list(r)
+                          for b, r in fresh.get("delta_dirs", {}).items()}
+            bucket_rows = dict(fresh.get("bucket_rows", {}))
             if mode == "delta":
                 for b in written:
                     delta_dirs.setdefault(b, []).append(data_rel)
             else:
-                for b in touched:
-                    bucket_dirs[str(b)] = data_rel
-                    bucket_rows[str(b)] = written.get(str(b), 0)
+                for b in map(str, touched):
+                    bucket_dirs[b] = data_rel
+                    bucket_rows[b] = written.get(b, 0)
                     if mode == "cow":
                         # the CoW merge read base ∪ deltas for these
                         # buckets, so the rewrite folded the deltas in; the
                         # pure-upsert path (mode="upsert") never read them
                         # — they stay live
-                        delta_dirs.pop(str(b), None)
-        new["bucket_dirs"] = bucket_dirs
-        # prune dir_versions to dirs still referenced (bucket pointers +
-        # delta chains): keeps the snapshot JSON O(buckets), not O(commits
-        # ever made)
-        live_dirs = set(bucket_dirs.values()) | {
-            r for rels in delta_dirs.values() for r in rels
-        }
-        if data_rel is not None:
-            live_dirs.add(data_rel)
-        new["dir_versions"] = {
-            d: v for d, v in dir_versions.items() if d in live_dirs
-        }
-        new["delta_dirs"] = delta_dirs
-        new["bucket_rows"] = bucket_rows
-        if version_cols is not None and not parent.get("version_cols"):
+                        delta_dirs.pop(b, None)
+            fields.update(bucket_dirs=bucket_dirs, delta_dirs=delta_dirs,
+                          bucket_rows=bucket_rows)
+        if version_cols is not None and not fresh.get("version_cols"):
             # tables created before version_cols were recorded: pin them at
             # the first commit so read-time delta merging knows the LWW order
-            new["version_cols"] = list(version_cols)
+            fields["version_cols"] = list(version_cols)
         if changes:
-            new.setdefault("properties", {})
-            new["properties"] = dict(
-                new["properties"], **{f"schema_changes_v{new_version}": changes}
-            )
-        try:
-            table._commit_snapshot(new)
-            break
-        except CommitConflictError:
-            if attempt == 7:
-                raise
-            fresh = table.snapshot()
-            if (mode == "delta" and data_rel is not None
-                    and fresh.get("n_buckets") != snap.get("n_buckets")):
-                # a concurrent rebucket() changed the layout: this batch's
-                # delta files are bucketed under the OLD n_buckets, so
-                # appending them to delta_dirs keyed by stale bucket ids
-                # would misroute keys (a key's rebucketed base row and its
-                # delta winner would live in different buckets, and
-                # lookup() would prune to the wrong one).  The CoW path
-                # catches this implicitly via its bucket-pointer
-                # comparison; delta must refuse explicitly and let the
-                # caller recompute against the new layout.
-                raise
-            if not (data_rel is None or mode == "delta"):
-                # CoW/upsert rewrites merged against snap's base: they can
-                # only rebase if every touched bucket is EXACTLY as the
-                # merge saw it (same base pointer, same delta chain) — true
-                # when racing metadata-only commits (analyze, schema), false
-                # when a compactor folded those buckets (its fold holds rows
-                # our rewrite lacks); then the caller must recompute.
-                sd, fd = snap.get("delta_dirs", {}), fresh.get("delta_dirs", {})
-                unchanged = all(
-                    fresh["bucket_dirs"].get(str(b)) == snap["bucket_dirs"].get(str(b))
-                    and fd.get(str(b), []) == sd.get(str(b), [])
-                    for b in (touched or [])
-                )
-                if not unchanged:
-                    raise
-            parent = fresh
-            if parent["schema"] != snap["schema"]:
-                # a concurrent writer evolved the schema: our files are
-                # still readable (read-time align/cast), but the committed
-                # schema must be the UNION or their columns would vanish
-                merged2, _ = merge_schemas(
-                    T.StructType.fromJson(parent["schema"]),
-                    T.StructType.fromJson(schema_json),
-                )
-                eff_schema = merged2.jsonValue()
+            fields["properties"] = dict(
+                fresh.get("properties", {}),
+                **{f"schema_changes_v{new_version}": changes})
+        return fields
 
     return {
         "batch_id": batch_id,
-        "version": new_version,
+        "version": table._cas_commit("apply_batch", build),
         "skipped": False,
         "pre_pass_ms": None,  # filled by apply_batch
         "rows_read": total("rows_read"),

@@ -10,13 +10,14 @@ engine implements the same contract itself, Iceberg-style:
 - a commit is an **optimistic-concurrency CAS**: the new ``v{N}.json`` is
   linked into place with ``os.link`` (atomic create-if-absent on POSIX), so
   exactly ONE of two racing writers owns version N — the loser gets
-  ``CommitConflictError`` and rebases onto the winner's snapshot (compaction
-  and the rewrite ops retry automatically; the ingest loop re-applies the
-  batch).  The ``metadata/_current`` pointer is a monotonic cache swapped
-  with ``os.replace``; the v-files are authoritative.  Readers always see a
-  complete snapshot, never a partial write.  A real deployment routes the
-  same CAS through a catalog (Iceberg's commit protocol) — the rest of the
-  engine is unchanged;
+  ``CommitConflictError``.  Every commit except ``create`` goes through one
+  loop, ``SnapshotTable._cas_commit``: it rebuilds the change against the
+  winner's snapshot (each op supplies its own rebase rule) and retries, up to
+  ``COMMIT_ATTEMPTS`` times.  The ``metadata/_current`` pointer is a
+  monotonic cache swapped with ``os.replace``; the v-files are
+  authoritative.  Readers always see a complete snapshot, never a partial
+  write.  A real deployment routes the same CAS through a catalog
+  (Iceberg's commit protocol) — the rest of the engine is unchanged;
 - data is hash-bucketed by the key columns into ``n_buckets`` buckets
   (Iceberg ``bucket(N, key)`` partition transform).  A MERGE is
   **copy-on-write at bucket granularity**: only buckets containing changed
@@ -63,8 +64,15 @@ class CommitConflictError(RuntimeError):
     The table is untouched by the losing commit (its data dirs are orphans
     until ``expire_snapshots`` collects them).  Recovery is Iceberg's:
     re-read the current snapshot, rebuild the change against it, commit
-    again — ``compact``/``update_where``/``delete_where``/``analyze`` do
-    this automatically; ``replay_journal`` re-applies the batch."""
+    again.  ``SnapshotTable._cas_commit`` does this for every commit, up to
+    ``COMMIT_ATTEMPTS`` times; it raises this error when the attempts run
+    out, or when a batch's rebase onto the winner is unsafe, in which case
+    ``replay_journal`` re-applies the batch."""
+
+
+# attempts of the one commit loop (``SnapshotTable._cas_commit``) before a
+# commit gives up with CommitConflictError
+COMMIT_ATTEMPTS = 8
 
 
 BUCKET_COL = "__bucket"
@@ -130,11 +138,9 @@ class SnapshotTable:
     # read-time MOR strategy cutoff: delta chains at or below this many
     # bytes merge via a BROADCAST key probe (no base shuffle); above it —
     # or when sizing would cost too many stat() calls — the read falls back
-    # to the full structmax shuffle of the touched buckets.  Env override
-    # (SPARK_GRAFT_MOR_BROADCAST_MAX_BYTES) is an ops/bench knob; 0
-    # disables the probe entirely.
-    MOR_BROADCAST_MAX_DELTA_BYTES = int(os.environ.get(
-        "SPARK_GRAFT_MOR_BROADCAST_MAX_BYTES", str(64 << 20)))
+    # to the full structmax shuffle of the touched buckets.  A negative
+    # value on an instance forces the shuffle path (the tests do this).
+    MOR_BROADCAST_MAX_DELTA_BYTES = 64 << 20
     MOR_BROADCAST_MAX_DELTA_FILES = 4096
     # ...and only when the base dwarfs the deltas: the probe trades one
     # base shuffle for two base scans plus broadcast fixed costs, which
@@ -284,56 +290,40 @@ class SnapshotTable:
                 f"no tag {name!r} on {self.location} (tags: {sorted(t)})")
         return t[name]
 
-    def tag(self, name: str, version: int | None = None,
-            max_retries: int = 5) -> int:
+    def tag(self, name: str, version: int | None = None) -> int:
         """Pin ``name`` to a snapshot version (default: current).  Tagged
         versions survive :meth:`expire_snapshots` regardless of age — the
         audit/repro ref pattern (Iceberg ``createTag``).  Metadata-only
         CAS commit; the tag map is re-merged from the fresh snapshot on
         every retry so concurrent taggers never clobber each other."""
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            v = snap["version"] if version is None else int(version)
+        v = None
+
+        def build(fresh):
+            nonlocal v
+            v = fresh["version"] if version is None else int(version)
             # fail loudly on a dangling ref: the target must still exist
             if not os.path.exists(os.path.join(self.meta_dir, f"v{v}.json")):
                 raise FileNotFoundError(
                     f"cannot tag {name!r}: no snapshot v{v} at {self.location}")
-            new = dict(snap)
-            new["version"] = snap["version"] + 1
-            new["parent"] = snap["version"]
-            new["ts_ms"] = int(time.time() * 1000)
-            tags = dict(snap.get("properties", {}).get("tags", {}))
-            tags[name] = v
-            new["properties"] = dict(snap.get("properties", {}), tags=tags)
-            try:
-                self._commit_snapshot(new)
-                return v
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"tag({name!r}) at {self.location} lost {max_retries} commit races")
+            props = fresh.get("properties", {})
+            return {"properties": dict(
+                props, tags=dict(props.get("tags", {}), **{name: v}))}
 
-    def drop_tag(self, name: str, max_retries: int = 5) -> None:
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            tags = dict(snap.get("properties", {}).get("tags", {}))
+        self._cas_commit("tag", build)
+        return v
+
+    def drop_tag(self, name: str) -> None:
+        def build(fresh):
+            props = fresh.get("properties", {})
+            tags = dict(props.get("tags", {}))
             if name not in tags:
-                return
+                return None
             del tags[name]
-            new = dict(snap)
-            new["version"] = snap["version"] + 1
-            new["parent"] = snap["version"]
-            new["ts_ms"] = int(time.time() * 1000)
-            new["properties"] = dict(snap.get("properties", {}), tags=tags)
-            try:
-                self._commit_snapshot(new)
-                return
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"drop_tag({name!r}) at {self.location} lost {max_retries} commit races")
+            return {"properties": dict(props, tags=tags)}
 
-    def rollback(self, to_version: int | str, max_retries: int = 5) -> int:
+        self._cas_commit("drop_tag", build)
+
+    def rollback(self, to_version: int | str) -> int:
         """Restore the table to an older snapshot's state by committing a
         NEW version whose content (schema, bucket pointers, delta chains,
         row accounting, WATERMARKS, batch fence) is the target's — history
@@ -361,8 +351,7 @@ class SnapshotTable:
         rollback point).  Data dirs are never touched; the new head simply
         re-references the old dirs, which re-pins them against expiry.
         """
-        for _ in range(max_retries):
-            cur = self.snapshot()
+        def build(cur):
             tv = (self.resolve_tag(to_version)
                   if isinstance(to_version, str) else int(to_version))
             if tv > cur["version"]:
@@ -370,10 +359,6 @@ class SnapshotTable:
                     f"rollback target v{tv} is newer than "
                     f"current v{cur['version']}")
             tgt = self.snapshot(tv)
-            new = dict(tgt)
-            new["version"] = cur["version"] + 1
-            new["parent"] = cur["version"]
-            new["ts_ms"] = int(time.time() * 1000)
             props = dict(tgt.get("properties", {}))
             # strip export/sync cursors (see docstring: external artifacts
             # don't revert, so the next incremental export must start from
@@ -387,14 +372,13 @@ class SnapshotTable:
             if tags:
                 props["tags"] = tags
             props["rolled_back_to"] = tgt["version"]
-            new["properties"] = props
-            try:
-                self._commit_snapshot(new)
-                return new["version"]
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"rollback at {self.location} lost {max_retries} commit races")
+            # the target's content replaces the head's; a field the target
+            # predates (e.g. max_event_ts) is reset to null
+            return dict({k: tgt.get(k) for k in set(cur) | set(tgt)
+                         if k not in ("version", "parent", "ts_ms")},
+                        properties=props)
+
+        return self._cas_commit("rollback", build)
 
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(self.snapshot()["schema"])
@@ -441,6 +425,43 @@ class SnapshotTable:
             with open(cur_tmp, "w") as f:
                 f.write(str(v))
             os.replace(cur_tmp, p)
+
+    def _cas_commit(self, op: str, build) -> int:
+        """The one commit loop: every commit except :meth:`create` lands
+        through here.  Each attempt reads the current snapshot ``fresh`` and
+        calls ``build(fresh)``, which carries the op's rebase rule and
+        returns the snapshot fields to change, or None for a clean no-op
+        (``fresh``'s version is returned).  The loop stamps ``version``,
+        ``parent`` and ``ts_ms`` (a ``ts_ms`` among the fields wins), records
+        each data dir the new snapshot references that ``dir_versions`` does
+        not know yet at the version actually committed, prunes
+        ``dir_versions`` to the referenced dirs (the snapshot JSON stays
+        O(buckets), not O(commits ever made)), and CASes the snapshot in.  A
+        lost CAS re-runs ``build`` against the winner, up to
+        ``COMMIT_ATTEMPTS`` times.  An exception raised by ``build`` — a
+        rebase the op refuses — propagates unchanged.  Returns the committed
+        version."""
+        for _ in range(COMMIT_ATTEMPTS):
+            fresh = self.snapshot()
+            fields = build(fresh)
+            if fields is None:
+                return fresh["version"]
+            v = fresh["version"] + 1
+            new = dict(fresh, version=v, parent=fresh["version"],
+                       ts_ms=int(time.time() * 1000))
+            new.update(fields)
+            known = new["dir_versions"]
+            live = set(new["bucket_dirs"].values()).union(
+                *new.get("delta_dirs", {}).values())
+            new["dir_versions"] = {d: known.get(d, v) for d in live}
+            try:
+                self._commit_snapshot(new)
+                return v
+            except CommitConflictError:
+                continue
+        raise CommitConflictError(
+            f"{op} at {self.location} lost {COMMIT_ATTEMPTS} consecutive "
+            f"commit races; retry when the writer burst subsides")
 
     # ----------------------------------------------------------------- read
 
@@ -1197,7 +1218,6 @@ class SnapshotTable:
         self,
         drop_tombstones: bool = False,
         buckets: list[int] | None = None,
-        max_retries: int = 5,
         sort_by: list[str] | None = None,
     ) -> int:
         """Rewrite buckets at the current schema in one new snapshot (analog
@@ -1245,12 +1265,8 @@ class SnapshotTable:
             scope = {str(b) for b in buckets}
         s_base = snap["bucket_dirs"]
         s_deltas = snap.get("delta_dirs", {})
-        for _ in range(max_retries):
-            fresh = self.snapshot()
-            new = dict(fresh)
-            new["version"] = fresh["version"] + 1
-            new["parent"] = fresh["version"]
-            new["ts_ms"] = int(time.time() * 1000)
+
+        def build(fresh):
             bucket_dirs = dict(fresh["bucket_dirs"])
             bucket_rows = dict(fresh.get("bucket_rows", {}))
             delta_dirs = {b: list(r) for b, r in
@@ -1273,35 +1289,15 @@ class SnapshotTable:
                 else:
                     delta_dirs.pop(b, None)
             if repointed == 0 and fresh["version"] != pinned:
-                # every bucket was superseded concurrently: clean no-op
-                return fresh["version"]
-            new["bucket_dirs"] = bucket_dirs
-            new["bucket_rows"] = bucket_rows
-            new["delta_dirs"] = delta_dirs
+                return None  # every bucket was superseded concurrently
+            fields = {"bucket_dirs": bucket_dirs, "bucket_rows": bucket_rows,
+                      "delta_dirs": delta_dirs}
             if sort_by:
-                new.setdefault("properties", {})
-                new["properties"] = dict(
-                    new["properties"], sort_order=list(sort_by)
-                )
-            # prune dir_versions to dirs this snapshot still references —
-            # snapshot JSON stays O(buckets), not O(commits ever made)
-            live = set(bucket_dirs.values()) | {
-                r for rels in delta_dirs.values() for r in rels
-            }
-            new["dir_versions"] = {
-                d: v for d, v in
-                dict(fresh["dir_versions"], **{rel: new["version"]}).items()
-                if d in live
-            }
-            try:
-                self._commit_snapshot(new)
-                return new["version"]
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"compact at {self.location} lost {max_retries} consecutive "
-            f"commit races; retry when the writer burst subsides"
-        )
+                fields["properties"] = dict(fresh.get("properties", {}),
+                                            sort_order=list(sort_by))
+            return fields
+
+        return self._cas_commit("compact", build)
 
     def delta_stats(self) -> dict:
         """Per-bucket delta file/dir pressure from snapshot metadata only —
@@ -1338,7 +1334,6 @@ class SnapshotTable:
         n_buckets: int | None = None,
         *,
         target_bucket_bytes: int = TARGET_BUCKET_BYTES,
-        max_retries: int = 3,
     ) -> int:
         """Layout evolution: rewrite the whole table under a NEW bucket
         count (Iceberg partition-spec-evolution analog, resolved by full
@@ -1386,40 +1381,28 @@ class SnapshotTable:
         if n_buckets == snap0["n_buckets"]:
             return snap0["version"]
         keys = snap0["key_cols"]
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            pinned = snap["version"]
-            df = self.read(include_tombstones=True, version=pinned)
-            if DELETED_COL not in df.columns:
-                df = df.withColumn(DELETED_COL, F.lit(False))
-            df = df.repartition(n_buckets, *[F.col(c) for c in keys]) \
-                   .withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-            rel = self.write_buckets(df, pinned + 1)
-            written = self.written_bucket_rows(rel)
-            fresh = self.snapshot()
-            if (fresh["bucket_dirs"] != snap["bucket_dirs"]
-                    or fresh.get("delta_dirs", {})
-                    != snap.get("delta_dirs", {})):
-                continue  # concurrent data commit: recompute from winner
-            new = dict(fresh)
-            new["version"] = fresh["version"] + 1
-            new["parent"] = fresh["version"]
-            new["ts_ms"] = int(time.time() * 1000)
-            new["n_buckets"] = int(n_buckets)
-            new["bucket_dirs"] = {b: rel for b in written}
-            new["bucket_rows"] = dict(written)
-            new["delta_dirs"] = {}
-            new["dir_versions"] = {rel: new["version"]}
-            try:
-                self._commit_snapshot(new)
-                return new["version"]
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"rebucket at {self.location} lost {max_retries} consecutive "
-            f"races against concurrent writers; retry when the burst "
-            f"subsides"
-        )
+        made: dict = {}
+
+        def build(fresh):
+            data = (fresh["bucket_dirs"], fresh.get("delta_dirs", {}))
+            if made.get("data") != data:
+                # first attempt, or a data commit landed since the rewrite:
+                # recompute it from the winner
+                df = self.read(include_tombstones=True,
+                               version=fresh["version"])
+                if DELETED_COL not in df.columns:
+                    df = df.withColumn(DELETED_COL, F.lit(False))
+                df = df.repartition(n_buckets, *[F.col(c) for c in keys]) \
+                       .withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
+                rel = self.write_buckets(df, fresh["version"] + 1)
+                made.update(data=data, rel=rel,
+                            written=self.written_bucket_rows(rel))
+            return {"n_buckets": int(n_buckets),
+                    "bucket_dirs": {b: made["rel"] for b in made["written"]},
+                    "bucket_rows": dict(made["written"]),
+                    "delta_dirs": {}}
+
+        return self._cas_commit("rebucket", build)
 
     def maybe_rebucket(
         self,
@@ -1458,88 +1441,56 @@ class SnapshotTable:
             suggested, target_bucket_bytes=target_bucket_bytes
         )
 
-    def set_properties(self, max_retries: int = 5, **props) -> int:
+    def set_properties(self, **props) -> int:
         """Metadata-only commit updating snapshot ``properties`` (no data
         files touched; ``changed_buckets`` across it is empty).  Used for
         small durable cursors — e.g. :func:`~activedata_etl_spark.lake.
         merge.sync_changes` records how far a replica has consumed its
         source's change feed.  CAS-retried like every other commit."""
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            new = dict(snap)
-            new["version"] = snap["version"] + 1
-            new["parent"] = snap["version"]
-            new["ts_ms"] = int(time.time() * 1000)
-            new["properties"] = dict(snap.get("properties", {}), **props)
-            try:
-                self._commit_snapshot(new)
-                return new["version"]
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"set_properties at {self.location} lost {max_retries} commit races"
-        )
+        return self._cas_commit("set_properties", lambda fresh: {
+            "properties": dict(fresh.get("properties", {}), **props)})
 
-    def update_where(self, condition, set_exprs: dict, max_retries: int = 5) -> int:
+    def update_where(self, condition, set_exprs: dict) -> int:
         """UPDATE ... SET ... WHERE — the reference's in-place update
         (`ListContainer.update({"set","clear","where"})`,
         `vendor/jx_python/containers/list_usingPythonList.py:122-139`).
         Copy-on-write: rewrites the table at a new snapshot version.  On a
         commit conflict the whole op re-runs against the winner's snapshot
         (a full rewrite has no narrower rebase)."""
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            df = self.read(include_tombstones=True, version=snap["version"])
-            cond = F.expr(condition) if isinstance(condition, str) else condition
+        cond = F.expr(condition) if isinstance(condition, str) else condition
+
+        def change(df):
             for name, expr in set_exprs.items():
                 value = F.expr(expr) if isinstance(expr, str) else expr
                 df = df.withColumn(name, F.when(cond, value).otherwise(F.col(name)))
-            try:
-                return self._rewrite(snap, df)
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"update_where at {self.location} lost {max_retries} commit races"
-        )
+            return df
 
-    def delete_where(self, condition, max_retries: int = 5) -> int:
+        return self._cas_commit(
+            "update_where", lambda fresh: self._rewrite(fresh, change))
+
+    def delete_where(self, condition) -> int:
         """DELETE FROM ... WHERE (`Index.delete_record`,
         `vendor/pyLibrary/env/elasticsearch.py:241`).  Rows are physically
         removed (maintenance op, not a CDC tombstone).  Re-runs on commit
         conflict, like ``update_where``."""
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            cond = F.expr(condition) if isinstance(condition, str) else condition
-            df = self.read(
-                include_tombstones=True, version=snap["version"]
-            ).where(~F.coalesce(cond, F.lit(False)))
-            try:
-                return self._rewrite(snap, df)
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"delete_where at {self.location} lost {max_retries} commit races"
-        )
+        cond = F.expr(condition) if isinstance(condition, str) else condition
+        return self._cas_commit("delete_where", lambda fresh: self._rewrite(
+            fresh, lambda df: df.where(~F.coalesce(cond, F.lit(False)))))
 
-    def _rewrite(self, snap: dict, df: DataFrame) -> int:
-        new_version = snap["version"] + 1
-        df = self.bucket_of(df)
-        rel = self.write_buckets(df, new_version)
+    def _rewrite(self, fresh: dict, change) -> dict:
+        """Commit build of ``update_where``/``delete_where``: rewrite the
+        whole table of snapshot ``fresh`` through ``change`` (a DataFrame
+        transform) and point every bucket at the result."""
+        df = change(self.read(include_tombstones=True,
+                              version=fresh["version"]))
+        rel = self.write_buckets(self.bucket_of(df), fresh["version"] + 1)
         bucket_rows = self.written_bucket_rows(rel)
-        new = dict(snap)
-        new["version"] = new_version
-        new["parent"] = snap["version"]
-        new["ts_ms"] = int(time.time() * 1000)
         # repoint from what was WRITTEN, not from the old snapshot's bucket
         # set: a SET on a key column moves rows to new buckets (which must
         # become visible) and can empty old ones (which must be dropped).
         # ``read`` folded any deltas into the rewritten rows, so clear them.
-        new["bucket_dirs"] = {b: rel for b in bucket_rows}
-        new["dir_versions"] = {rel: new_version}
-        new["delta_dirs"] = {}
-        new["bucket_rows"] = bucket_rows
-        self._commit_snapshot(new)
-        return new_version
+        return {"bucket_dirs": {b: rel for b in bucket_rows},
+                "delta_dirs": {}, "bucket_rows": bucket_rows}
 
     def expire_snapshots(
         self, keep_last: int = 2, orphan_grace_s: float = 3600.0
@@ -1713,22 +1664,11 @@ class SnapshotTable:
         # metadata-only commit: trivially rebased onto whatever snapshot is
         # current if a writer races us (stats stay stamped with the version
         # they were measured against)
-        for _ in range(5):
-            base = self.snapshot()
-            new = dict(base)
-            new["version"] = base["version"] + 1
-            new["parent"] = base["version"]
-            new["ts_ms"] = stats["ts_ms"]
-            new.setdefault("properties", {})
-            new["properties"] = dict(new["properties"], column_stats=stats)
-            try:
-                self._commit_snapshot(new)
-                return stats
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"analyze at {self.location} lost 5 commit races"
-        )
+        self._cas_commit("analyze", lambda fresh: {
+            "ts_ms": stats["ts_ms"],
+            "properties": dict(fresh.get("properties", {}),
+                               column_stats=stats)})
+        return stats
 
     def maybe_analyze(
         self,

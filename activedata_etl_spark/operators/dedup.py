@@ -773,6 +773,25 @@ def _simhash_candidates(
     return joined.select("id_a", "id_b", "sh_a", "sh_b").distinct()
 
 
+def _pair_schema(df: DataFrame, id_col: str):
+    """Output schema of the embedding pair operators, and the numpy dtype
+    their ``tile`` kernels read ids as: integral ids take the int64 path
+    and come out ``long``; any other id type (a string id) passes through
+    as Python objects and keeps its Spark type."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    id_type = df.schema[id_col].dataType
+    integral = isinstance(id_type, T.IntegralType)
+    if integral:
+        id_type = T.LongType()
+    return T.StructType([
+        T.StructField("id_a", id_type),
+        T.StructField("id_b", id_type),
+        T.StructField("cosine", T.DoubleType()),
+    ]), (np.int64 if integral else object)
+
+
 def embedding_neardup_pairs(
     df: DataFrame, id_col: str, vec_col: str, *, threshold: float = 0.95,
     n_blocks: int = 8,
@@ -792,13 +811,8 @@ def embedding_neardup_pairs(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    out_schema = T.StructType([
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
+    out_schema, id_dtype = _pair_schema(df, id_col)
 
     blk = F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
     tiles = F.transform(
@@ -820,7 +834,7 @@ def embedding_neardup_pairs(
 
     def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ti, tj = key
-        ids = pdf["id"].to_numpy(dtype=np.int64)
+        ids = pdf["id"].to_numpy(dtype=id_dtype)
         mat = np.array(list(pdf["vec"]), dtype=np.float64)
         norms = np.sqrt((mat * mat).sum(axis=1))
         if ti == tj:
@@ -830,7 +844,7 @@ def embedding_neardup_pairs(
             a_idx, b_idx = np.nonzero(bk == ti)[0], np.nonzero(bk == tj)[0]
         if len(a_idx) == 0 or len(b_idx) == 0:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-                {"id_a": np.int64, "id_b": np.int64, "cosine": np.float64}
+                {"id_a": id_dtype, "id_b": id_dtype, "cosine": np.float64}
             )
         sims = (mat[a_idx] @ mat[b_idx].T) / np.outer(norms[a_idx], norms[b_idx])
         # cosines round half away from zero, as the oracle's DuckDB round()
@@ -895,28 +909,20 @@ def embedding_neardup_lsh(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     from activedata_etl_spark.operators import similarity as S
 
+    out_schema, id_dtype = _pair_schema(df, id_col)
     dim = S.probe_dim(df, vec_col)
     if dim is None:  # empty corpus / all-null vectors: no pairs, not a crash
-        return df.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine double"
-        )
+        return df.sparkSession.createDataFrame([], out_schema)
     b = S.bucket_frame(
         df, id_col, vec_col, n_planes=n_planes, n_tables=n_tables, dim=dim,
         seed=seed, carry_vec=True,
     ).repartition("table", "bucket")
 
-    out_schema = T.StructType([
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
     def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
+        ids = pdf["id"].to_numpy(dtype=id_dtype)
         mat = np.array(list(pdf["vec"]), dtype=np.float64)
         norms = np.sqrt((mat * mat).sum(axis=1))
         # zero-norm vectors can never clear the threshold (the JVM path
@@ -933,7 +939,7 @@ def embedding_neardup_lsh(
             outs.append((ids[lo:hi][ii], ids[jj], cos))
         if not outs:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-                {"id_a": np.int64, "id_b": np.int64, "cosine": np.float64}
+                {"id_a": id_dtype, "id_b": id_dtype, "cosine": np.float64}
             )
         return pd.DataFrame({
             "id_a": np.concatenate([o[0] for o in outs]),

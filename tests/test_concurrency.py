@@ -188,9 +188,62 @@ def test_threaded_metadata_commits_all_land(spark, tmp_path):
     assert t.read().count() == 8
 
 
-def test_update_where_retries_through_conflict(spark, tmp_path):
+def _contents(t):
+    return {r["path"]: r["content"] for r in t.read().collect()}
+
+
+# op -> (setup, op, check): each op commits once through the CAS loop
+RACED_OPS = {
+    "update_where": (
+        None,
+        lambda t: t.update_where("path = 'f0.py'", {"content": "'PATCHED'"}),
+        lambda t, out: _contents(t)["f0.py"] == "PATCHED"
+        and _contents(t)["f1.py"] == "V1",
+    ),
+    "delete_where": (
+        None,
+        lambda t: t.delete_where("path = 'f0.py'"),
+        lambda t, out: set(_contents(t)) == {f"f{i}.py" for i in range(1, 8)},
+    ),
+    "tag": (
+        None,
+        lambda t: t.tag("golden"),
+        lambda t, out: t.tags() == {"golden": out},
+    ),
+    "drop_tag": (
+        lambda t: t.tag("golden"),
+        lambda t: t.drop_tag("golden"),
+        lambda t, out: t.tags() == {},
+    ),
+    "rollback": (
+        None,
+        lambda t: t.rollback(0),
+        lambda t, out: t.read().count() == 0
+        and t.snapshot()["properties"]["rolled_back_to"] == 0,
+    ),
+    "set_properties": (
+        None,
+        lambda t: t.set_properties(cursor=7),
+        lambda t, out: t.snapshot()["properties"]["cursor"] == 7,
+    ),
+    "analyze": (
+        None,
+        lambda t: t.analyze(columns=["repo"]),
+        lambda t, out: t.snapshot()["properties"]["column_stats"]["rows"] == 8,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(RACED_OPS))
+def test_update_where_retries_through_conflict(spark, tmp_path, op):
+    """Each op loses its first CAS to a commit that steals its version
+    target, then lands on top of it: its effect is present and the stolen
+    commit stays in the history as its parent."""
+    setup, run, check = RACED_OPS[op]
     loc = str(tmp_path / "lake")
     t = _mk(spark, loc)
+    if setup is not None:
+        setup(t)
     orig = SnapshotTable._commit_snapshot
     fired = {"n": 0}
 
@@ -200,17 +253,56 @@ def test_update_where_retries_through_conflict(spark, tmp_path):
             other = SnapshotTable(spark, loc)
             sn = other.snapshot()
             bump = dict(sn, version=sn["version"] + 1, parent=sn["version"])
+            bump["properties"] = dict(sn["properties"], stolen=True)
             orig(other, bump)  # steal the version target
+            fired["v"] = bump["version"]
         return orig(self, snap)
 
     try:
         SnapshotTable._commit_snapshot = racing_commit
-        n = t.update_where("path = 'f0.py'", {"content": "'PATCHED'"})
+        out = run(t)
     finally:
         SnapshotTable._commit_snapshot = orig
-    assert fired["n"] == 1 and n > 0
-    got = {r["path"]: r["content"] for r in t.read().collect()}
-    assert got["f0.py"] == "PATCHED" and got["f1.py"] == "V1"
+    assert fired["n"] == 1
+    assert check(t, out)
+    assert t.snapshot()["parent"] == fired["v"]
+    assert t.snapshot(fired["v"])["properties"]["stolen"] is True
+
+
+def test_commits_have_one_cas_loop():
+    """Every snapshot commit in the package goes through
+    ``SnapshotTable._cas_commit`` (``create`` writes the first snapshot
+    directly), and no function takes a ``max_retries`` knob: the attempt
+    limit is the one ``COMMIT_ATTEMPTS`` constant."""
+    import ast
+    import pathlib
+
+    import activedata_etl_spark
+
+    users: set[str] = set()
+    knobs: list[str] = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = child.args
+                if "max_retries" in [x.arg for x in
+                                     a.posonlyargs + a.args + a.kwonlyargs]:
+                    knobs.append(f"{path.name}:{child.name}")
+                inner = scope + [child.name]
+            elif isinstance(child, ast.ClassDef):
+                inner = scope + [child.name]
+            elif (isinstance(child, ast.Attribute)
+                  and child.attr == "_commit_snapshot"):
+                users.add(".".join(scope))
+            visit(child, inner)
+
+    root = pathlib.Path(activedata_etl_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        visit(ast.parse(path.read_text(), str(path)), [])
+    assert users == {"SnapshotTable._cas_commit", "SnapshotTable.create"}
+    assert knobs == []
 
 
 def test_expire_grace_protects_inflight_dirs(spark, tmp_path):

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 @pytest.fixture(scope="module")
@@ -281,6 +282,22 @@ def test_embedding_cosine_rounds_half_away_at_midpoint(spark):
         assert [tuple(r) for r in score(0.949999).collect()] == [
             (1, 2, 0.949999)]
         assert score(0.9499995).collect() == []
+
+    # string ids pass through both scorers with their type, as
+    # lsh_ann_topk's do (the tiles used to force them to int64)
+    sdf = spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [2.0, 0.0]), ("c", [0.0, 1.0])],
+        "vec_id string, embedding array<double>")
+    for out in (embedding_neardup_pairs(sdf, "vec_id", "embedding",
+                                        threshold=0.9, n_blocks=2),
+                embedding_neardup_lsh(sdf, "vec_id", "embedding",
+                                      threshold=0.9)):
+        assert out.schema["id_a"].dataType == out.schema["id_b"].dataType \
+            == T.StringType()
+        assert [tuple(r) for r in out.collect()] == [("a", "b", 1.0)]
+    empty = embedding_neardup_lsh(sdf.where("false"), "vec_id", "embedding")
+    assert empty.schema["id_a"].dataType == T.StringType()
+    assert empty.collect() == []
 
 
 def test_round6_half_away_matches_duckdb_round():
