@@ -10,9 +10,11 @@ cross join).
 
 Scale notes (10^10 docs):
 - exact: one hash-agg on sha256 — map-side combine, minimal shuffle;
-- ngram-jaccard: |shingles| explode -> self-equi-join; frequency cap drops
-  stop-shingles that would quadratically blow up a hot join key (same skew
-  reasoning as the salted LWW reduce);
+- ngram-jaccard: ONE shingle-keyed explode, then a PPJoin prefix and
+  positional filter — each doc enters the self-equi-join with only its
+  ~(1 - t)·|shingles| rarest shingles, not all its postings — then an exact
+  verify; frequency cap drops stop-shingles that would quadratically blow
+  up a hot join key (same skew reasoning as the salted LWW reduce);
 - minhash-LSH: signature agg + band-bucket equi-join, candidates then
   verified exactly — the classic sub-quadratic path;
 - simhash: 63-bit signature; block-permutation banding (every (B-h)-subset
@@ -28,7 +30,7 @@ from __future__ import annotations
 
 import itertools as _it
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from activedata_etl_spark.kernels import cosine_hits
@@ -166,83 +168,72 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard-similar pairs (id_a < id_b, jaccard >= threshold).
 
-    explode(shingles) -> equi-join on shingle -> count intersections ->
-    jaccard from |A|,|B|,|A∩B|.  ``max_shingle_freq`` drops shingles shared
-    by more than N docs (stop-shingle skew guard for web scale).
+    PPJoin prefix + positional filter (Xiao et al., WWW 2008), then an exact
+    verify.  ``max_shingle_freq`` drops shingles shared by more than N docs
+    from candidate generation (stop-shingle skew guard for web scale);
+    scores always come from the FULL shingle sets.
+
+    Each doc's shingles are sorted by (f, shingle), f = the number of docs
+    holding the shingle, rarest first.  Let w be a pair's first common
+    shingle in that order, at 0-based positions i in x and j in y.  Every
+    common shingle sorts at or after w, so |x∩y| <= min(|x| - i, |y| - j).
+    Equivalence with the definition (a pair sharing at least one shingle of
+    f <= cap, scored by round(J, 6) >= threshold):
+    - with t' = threshold - 1e-6, round(J, 6) >= threshold implies J >= t',
+      i.e. |x∩y| >= t'/(1 + t')·(|x| + |y|) and |x∩y| >= ceil(t'·|x|).  So
+      i < |x| - ceil(t'·|x|) + 1, the prefix length (likewise j in y's
+      prefix), and the row joining the two prefixes on w passes the
+      positional bound min(|x| - i, |y| - j) >= t'/(1 + t')·(|x| + |y|);
+      rows on later common shingles may fail it, as they miss earlier
+      ones, and are dropped;
+    - a shingle with f > cap sorts after every uncapped shingle, so when the
+      pair shares an uncapped shingle, w is uncapped and its row is kept.
+      The candidates are exactly the definition's candidates with J >= t',
+      and the verify is exact.
     """
-    sh = shingled(df, id_col, text_col, n)
-    # ONE explicit exchange on the join key: the exploded table feeds the
-    # freq cap AND both self-join sides — without this the explode+shuffle
-    # subtree ran FOUR times (event-log audit: 4x identical 471MB shuffle
-    # writes); with it every shingle-keyed consumer hangs off a single
-    # ReusedExchange, and the cap join is co-partitioned (no extra shuffle)
-    # explode_OUTER, deliberately: plain explode lets Catalyst infer
-    # `size(sh) > 0 AND isnotnull(sh)` predicates (InferFiltersFromGenerate)
-    # which push below the fanout exchange and INLINE the whole shingle HOF
-    # into a scan-side filter — with the tokenizer regex re-expanded per
-    # element_at (no CSE in lambdas), that filter burned 9 s of CPU per
-    # subtree at sf0.1 and its per-branch variants defeated AQE stage reuse.
-    # shingled() guarantees sh is non-null and non-empty, so _outer is
-    # row-identical and generates no inferred predicates.
-    ex0 = sh.select("id", F.explode_outer("sh").alias("shingle")).repartition("shingle")
-    ex = ex0
-    if max_shingle_freq is not None:
-        freq = ex0.groupBy("shingle").count().where(F.col("count") <= max_shingle_freq)
-        ex = ex0.join(freq.select("shingle"), "shingle")
-    a = ex.select(F.col("id").alias("id_a"), "shingle")
-    b = ex.select(F.col("id").alias("id_b"), "shingle")
-    # count-filter-verify (the PPJoin-family shape): the self-join emits one
-    # row per SHARED capped shingle, so aggregate the pair count c =
-    # |A'∩B'| (map-side combinable — no distinct over the pair blow-up),
-    # bound the best achievable jaccard, and exact-verify only survivors.
-    # With d_x = |X| - |X'| shingles dropped from x by the cap,
-    # |A∩B| <= c + min(d_a, d_b), so
-    #   jaccard <= (c + min(d_a, d_b)) / (|A| + |B| - c - min(d_a, d_b)).
-    # Pairs failing that bound (with 1e-6 slack for the round(.,6) of the
-    # final score) cannot reach the threshold — at sf0.1 this prunes the
-    # 1.13M candidate pairs to the ~300 that get an array_intersect, and
-    # the filter is exact: scores still come from the FULL shingle sets
-    # (the cap prunes candidate generation only, it must not bias the
-    # jaccard of surviving pairs downward — same discipline as the minhash
-    # verify).  When no cap is set, c IS the exact intersection.
-    pc = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__c"))
+    t = threshold - 1e-6
+    # ONE exchange on the shingle: the document frequency is a window over
+    # it (no second consumer, so no pruned variant of the explode forks a
+    # second exchange) and the per-doc regroup reads it.  explode_OUTER,
+    # deliberately: plain explode lets Catalyst infer `size(sh) > 0 AND
+    # isnotnull(sh)` predicates (InferFiltersFromGenerate) which push below
+    # the fanout exchange and INLINE the whole shingle HOF into a scan-side
+    # filter, with the tokenizer regex re-expanded per element_at (no CSE in
+    # lambdas).  shingled() guarantees sh is non-null and non-empty, so
+    # _outer is row-identical and generates no inferred predicates.
+    ex = (
+        shingled(df, id_col, text_col, n)
+        .select("id", F.explode_outer("sh").alias("shingle"))
+        .repartition("shingle")
+        .withColumn("f", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
     )
-    # per-doc set sizes, counted from the EXPLODED frames, not F.size(sh):
-    # a size(sh) projection looks cheap, but the downstream size joins make
-    # Catalyst infer isnotnull(__n_full) -> isnotnull(size(<full shingle
-    # HOF>)) which pushes to the scan and re-expands the tokenizer per
-    # element (9.5 s single-task filter at sf0.1).  groupBy is a pushdown
-    # BARRIER, and the counts reuse the existing shingle-keyed exchange.
-    sizes = ex0.groupBy("id").agg(F.count(F.lit(1)).alias("__n_full"))
-    if max_shingle_freq is not None:
-        capped = ex.groupBy("id").agg(F.count(F.lit(1)).alias("__n_capped"))
-        sizes = sizes.join(capped, "id", "left").select(
-            "id", "__n_full", F.coalesce("__n_capped", F.lit(0)).alias("__n_capped")
-        )
-    else:
-        sizes = sizes.withColumn("__n_capped", F.col("__n_full"))
-    sza = sizes.select(F.col("id").alias("id_a"), F.col("__n_full").alias("__nfa"),
-                       F.col("__n_capped").alias("__nca"))
-    szb = sizes.select(F.col("id").alias("id_b"), F.col("__n_full").alias("__nfb"),
-                       F.col("__n_capped").alias("__ncb"))
-    ub = F.col("__c") + F.least(
-        F.col("__nfa") - F.col("__nca"), F.col("__nfb") - F.col("__ncb")
+    # one id-keyed regroup gives each doc its size, its ordered prefix and
+    # its shingle set for the verify; the aggregate is a pushdown barrier
+    o = F.array_sort(F.collect_list(F.struct("f", "shingle")))
+    size = F.size("o")
+    docs = ex.groupBy("id").agg(o.alias("o")).select(
+        "id", size.alias("n"),
+        F.slice("o", 1, (size - F.ceil(size * t) + 1).cast("int")).alias("prefix"),
+        F.col("o.shingle").alias("sh"),
     )
+    pre = docs.select("id", "n", F.posexplode_outer("prefix").alias("i", "p"))
+    if max_shingle_freq is not None:
+        pre = pre.where(F.col("p.f") <= max_shingle_freq)
+    a, b = (
+        pre.select(F.col("id").alias(f"id_{side}"), F.col("n").alias(f"n_{side}"),
+                   (F.col("n") - F.col("i")).alias(f"r_{side}"),
+                   F.col("p.shingle").alias("shingle"))
+        for side in "ab"
+    )
+    bound = (F.col("n_a") + F.col("n_b")) * (t / (1 + t))
     cand = (
-        pc.join(sza, "id_a").join(szb, "id_b")
-        .where(ub / (F.col("__nfa") + F.col("__nfb") - ub) >= threshold - 1e-6)
+        a.join(b, "shingle")
+        .where((F.col("id_a") < F.col("id_b")) & (F.least("r_a", "r_b") >= bound))
         .select("id_a", "id_b")
+        .distinct()
     )
-    # ONE id-keyed exchange feeds BOTH verify joins: shingling is a per-row
-    # HOF subtree with no exchange of its own, so without this each join
-    # side re-tokenizes the whole corpus (the round-2 no-CSE lesson)
-    shr = sh.repartition("id")
-    sa = shr.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = shr.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    sa = docs.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    sb = docs.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     n_inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - n_inter
     return (

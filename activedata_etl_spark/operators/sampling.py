@@ -327,11 +327,11 @@ def contamination_pairs(
     bucketed equi-join (shared shingle -> candidate -> exact verify), never
     a cross join.
 
-    The shape mirrors ``ngram_jaccard_pairs`` but across two corpora: one
-    exploded frame per side joined on the shingle, candidate pair counts
-    aggregated map-side, exact scores only for survivors.  At 10^10 train
-    docs the join is bounded by the (capped) shingle postings, and the test
-    side is typically small.
+    Count-filter-verify across two corpora (``ngram_jaccard_pairs`` uses a
+    prefix filter instead): one exploded frame per side joined on the
+    shingle, candidate pair counts aggregated map-side, exact scores only
+    for survivors.  At 10^10 train docs the join is bounded by the
+    (capped) shingle postings, and the test side is typically small.
     """
     sh_tr = shingled(train, id_col, text_col, n)
     sh_te = shingled(test, id_col, text_col, n)
@@ -352,12 +352,12 @@ def contamination_pairs(
             F.col("count") <= max_shingle_freq
         )
         ex_tr = ex_tr0.join(freq.select("shingle"), "shingle")
-    # count-filter-verify across the two corpora (same shape as
-    # ngram_jaccard_pairs): __c = shared shingles with CAPPED train
-    # postings; the test side is uncapped, so the only intersection __c can
-    # miss comes from capped-away train shingles — with d = |train| -
-    # |train_capped|, |A∩B| <= __c + d bounds the achievable jaccard and
-    # prunes candidates before any array_intersect (exact when no cap).
+    # count-filter-verify across the two corpora: __c = shared shingles
+    # with CAPPED train postings; the test side is uncapped, so the only
+    # intersection __c can miss comes from capped-away train shingles —
+    # with d = |train| - |train_capped|, |A∩B| <= __c + d bounds the
+    # achievable jaccard and prunes candidates before any array_intersect
+    # (exact when no cap).
     pc = (
         ex_te.join(ex_tr, "shingle")
         .groupBy("test_id", "train_id")

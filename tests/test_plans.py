@@ -118,23 +118,46 @@ def test_streaming_tail_processing_time(spark, tmp_path):
         q.stop()
 
 
+def _stages_writing(spark, fn, records: int) -> int:
+    """Completed stages of the jobs ``fn`` runs (counted through a job
+    group) whose shuffle write holds exactly ``records`` rows."""
+    sc = spark.sparkContext
+    sc.setJobGroup("stages_writing", "stages_writing")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # the status store is fed async
+    stages = {s for j in sc.statusTracker().getJobIdsForGroup("stages_writing")
+              for s in sc.statusTracker().getJobInfo(j).stageIds}
+    done = [jsc.statusStore().lastStageAttempt(s) for s in stages]
+    return sum(1 for d in done if d.status().toString() == "COMPLETE"
+               and d.shuffleWriteRecords() == records)
+
+
 def test_jaccard_and_minhash_reuse_exchanges(spark):
-    """The exploded-shingle exchange must be planned ONCE and reused by the
-    freq cap + both self-join sides (it was recomputed 4x before); same for
-    the minhash band exchange."""
+    """The exploded-shingle exchange runs ONCE per query: every later step
+    reads it.  A ReusedExchange node somewhere in the plan does not show
+    this: column pruning gives differently-pruned consumers exchanges of
+    their own (the all-postings count filter ran the explode 3-4 times), so
+    count the completed stages whose shuffle write is the exploded
+    (doc, shingle) rows.  The minhash band exchange is planned once and
+    reused by both self-join sides."""
     from activedata_etl_spark.operators.dedup import (
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
+        shingled,
     )
 
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # AQE inserts ReusedExchange at runtime, and only into the plan that is
-    # actually executed — collect() THIS frame (count() builds its own plan)
+    df = spark.read.parquet(f"{SF}/documents.parquet")
+    exploded = shingled(df, "doc_id", "text").select(F.sum(F.size("sh"))).first()[0]
     out = ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5,
                               max_shingle_freq=100)
-    out.collect()
-    assert "ReusedExchange" in _plan(out)
+    assert _stages_writing(spark, out.collect, exploded) == 1
 
+    # AQE inserts ReusedExchange at runtime, and only into the plan that is
+    # actually executed — collect() THIS frame (count() builds its own plan)
     out2 = minhash_lsh_pairs(df, "doc_id", "text", k=16, bands=4,
                              threshold=0.5, verify_exact=False)
     out2.collect()

@@ -11,14 +11,18 @@ from tools.check_oracle import compare, oracle_connection
 SF = "/root/testdata/sf0.001"
 
 # the hash-defined (mix31) queries: only the oracle checks that the Spark
-# expressions and the SQL compute the same hashes.  Any name in
-# SPARK_QUERIES and ORACLE_SQL can join the list.
+# expressions and the SQL compute the same hashes; then the consumers of the
+# prefix-filtered jaccard pairs, whose oracle uses the all-postings
+# candidates.  Any name in SPARK_QUERIES and ORACLE_SQL can join the list.
 QUERIES = [
     "dedup_minhash_lsh",
     "dedup_incremental",
     "dedup_simhash",
     "sim_ann_lsh",
     "dedup_embedding_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_jaccard_clusters",
+    "dedup_keep_list",
 ]
 
 

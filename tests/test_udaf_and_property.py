@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -85,8 +87,6 @@ def test_lww_matches_python_reduce(spark, events, n_parts):
             expect[k] = (cs, off, op, c)
     # ties on (commit_seq, offset): duplicates may differ in payload — the
     # engine picks one deterministically; compare only where versions unique
-    from collections import Counter
-
     vc = Counter((r[0], r[1], r[2], r[3]) for r in rows)
     for k, v in expect.items():
         assert got[k][:2] == v[:2]
@@ -95,21 +95,27 @@ def test_lww_matches_python_reduce(spark, events, n_parts):
             assert got[k] == v
 
 
-# --- property: count-filter-verify jaccard == brute force ------------------
+# --- property: prefix-filter-verify jaccard == brute force ----------------
 
-def _py_jaccard_pairs(texts: dict[int, str], n: int, threshold: float):
-    """Reference implementation: exact jaccard over distinct word n-grams."""
+def _py_jaccard_pairs(texts: dict[int, str], n: int, threshold: float,
+                      cap: int | None = None):
+    """Reference implementation: exact jaccard over distinct word n-grams.
+    With a ``cap``, a pair is a candidate only if it shares at least one
+    shingle held by <= cap docs (the registry oracle's keep/cand rule)."""
     sets = {}
     for i, t in texts.items():
         toks = t.split()
         sh = {" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)}
         if sh:
             sets[i] = sh
+    freq = Counter(s for sh in sets.values() for s in sh)
     out = {}
     ids = sorted(sets)
     for x in range(len(ids)):
         for y in range(x + 1, len(ids)):
             a, b = sets[ids[x]], sets[ids[y]]
+            if cap is not None and all(freq[s] > cap for s in a & b):
+                continue
             j = round(len(a & b) / len(a | b), 6)
             if j >= threshold:
                 out[(ids[x], ids[y])] = j
@@ -118,7 +124,7 @@ def _py_jaccard_pairs(texts: dict[int, str], n: int, threshold: float):
 
 _vocab = ["aa", "bb", "cc", "dd", "ee"]
 _texts = st.lists(
-    st.lists(st.sampled_from(_vocab), min_size=0, max_size=10).map(" ".join),
+    st.lists(st.sampled_from(_vocab), min_size=0, max_size=14).map(" ".join),
     min_size=2, max_size=8,
 )
 
@@ -128,11 +134,16 @@ _texts = st.lists(
 @given(texts=_texts,
        threshold=st.sampled_from([0.3, 0.5, 0.8]),
        cap=st.sampled_from([None, 1, 2, 100]))
+# docs 0 and 1 share "cc bb dd" (held by 2 docs) and "aa cc bb" (held by
+# 3, over the cap); by shingle text alone each doc's 2-shingle prefix would
+# share only the capped one, so the pair survives only if capped shingles
+# sort last
+@example(texts=["aa cc bb dd ee", "aa cc bb dd aa", "aa cc bb"],
+         threshold=0.5, cap=2)
 def test_ngram_jaccard_matches_bruteforce(spark, texts, threshold, cap):
-    """The count-filter-verify upper bound may never drop a qualifying
-    pair: with no cap the operator must equal brute force exactly; with a
-    cap the result is the brute-force pairs whose candidates survive the
-    capped postings, with EXACT scores (never biased by the cap)."""
+    """The prefix filter may never drop a qualifying pair: the operator
+    equals brute force exactly, capped or not, with EXACT scores (never
+    biased by the cap)."""
     from activedata_etl_spark.operators.dedup import ngram_jaccard_pairs
 
     rows = list(enumerate(texts))
@@ -144,14 +155,7 @@ def test_ngram_jaccard_matches_bruteforce(spark, texts, threshold, cap):
             max_shingle_freq=cap,
         ).collect()
     }
-    want = _py_jaccard_pairs(dict(rows), 3, threshold)
-    if cap is None or cap >= len(texts):
-        assert got == want
-    else:
-        # cap prunes CANDIDATES only: result ⊆ brute force, scores exact
-        assert set(got) <= set(want)
-        for k, v in got.items():
-            assert v == want[k]
+    assert got == _py_jaccard_pairs(dict(rows), 3, threshold, cap)
 
 
 @settings(max_examples=8, deadline=None,
