@@ -813,8 +813,11 @@ def embedding_neardup_pairs(
             F.greatest(F.col("__blk"), j).cast("int").alias("tj"),
         ),
     )
+    # a null vector has no cosine (the oracle's NULL fails >=): drop it
+    # before the tiles stack vectors into one matrix
     replicated = (
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+        .where(F.col("vec").isNotNull())
         .withColumn("__blk", blk)
         .withColumn("__tile", F.explode_outer(F.array_distinct(tiles)))
         .select(
@@ -904,11 +907,14 @@ def embedding_neardup_lsh(
     from activedata_etl_spark.operators import similarity as S
 
     out_schema, id_dtype = _pair_schema(df, id_col)
-    dim = S.probe_dim(df, vec_col)
+    # a null vector has no cosine (the oracle's NULL fails >=): drop it
+    # before bucket_frame and the tiles stack vectors into matrices
+    src = df.select(id_col, vec_col).where(F.col(vec_col).isNotNull())
+    dim = S.probe_dim(src, vec_col)
     if dim is None:  # empty corpus / all-null vectors: no pairs, not a crash
         return df.sparkSession.createDataFrame([], out_schema)
     b = S.bucket_frame(
-        df, id_col, vec_col, n_planes=n_planes, n_tables=n_tables, dim=dim,
+        src, id_col, vec_col, n_planes=n_planes, n_tables=n_tables, dim=dim,
         seed=seed, carry_vec=True,
     ).repartition("table", "bucket")
 

@@ -300,6 +300,42 @@ def test_embedding_cosine_rounds_half_away_at_midpoint(spark):
     assert empty.collect() == []
 
 
+def test_embedding_pair_operators_skip_null_vectors(spark):
+    """A corpus where some vectors are null: both pair operators score the
+    non-null rows as a brute-force cosine does and leave the null rows out,
+    as the oracles do (a NULL cosine fails ``>=``).  They used to stack the
+    null into the tile matrix and fail in the worker."""
+    import numpy as np
+
+    from activedata_etl_spark.kernels import round6_half_away
+    from activedata_etl_spark.operators.dedup import (
+        embedding_neardup_lsh,
+        embedding_neardup_pairs,
+    )
+
+    # scaled copies share every hyperplane sign, so LSH co-buckets each
+    # true pair in every table and must equal the brute force exactly
+    rows = [(1, [1.0, 0.0, 0.2]), (2, None), (3, [2.0, 0.0, 0.4]),
+            (4, [0.0, 1.0, 0.0]), (5, None), (6, [0.0, 3.0, 0.0]),
+            (7, [0.5, 0.5, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    live = [(i, v) for i, v in rows if v is not None]
+    ids = np.array([i for i, _ in live])
+    mat = np.array([v for _, v in live])
+    norms = np.sqrt((mat * mat).sum(axis=1))
+    sims = round6_half_away((mat @ mat.T) / np.outer(norms, norms))
+    ii, jj = np.nonzero((sims >= 0.9) & (ids[:, None] < ids[None, :]))
+    expect = {(int(ids[i]), int(ids[j])): sims[i, j] for i, j in zip(ii, jj)}
+    assert set(expect) == {(1, 3), (4, 6)}
+
+    for out in (embedding_neardup_pairs(df, "vec_id", "embedding",
+                                        threshold=0.9, n_blocks=2),
+                embedding_neardup_lsh(df, "vec_id", "embedding",
+                                      threshold=0.9)):
+        assert {(r["id_a"], r["id_b"]): r["cosine"]
+                for r in out.collect()} == expect
+
+
 def test_round6_half_away_matches_duckdb_round():
     """``round6_half_away`` equals DuckDB's ``round(x, 6)`` bit for bit on
     random doubles of both signs and on exact midpoints (x * 1e6 == k +

@@ -4,6 +4,7 @@ assertions)."""
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -131,7 +132,16 @@ def _stages_writing(spark, fn, records: int) -> int:
     jsc.listenerBus().waitUntilEmpty()  # the status store is fed async
     stages = {s for j in sc.statusTracker().getJobIdsForGroup("stages_writing")
               for s in sc.statusTracker().getJobInfo(j).stageIds}
-    done = [jsc.statusStore().lastStageAttempt(s) for s in stages]
+    # past spark.ui.retainedStages the status store evicts SKIPPED stages
+    # first, so a skipped stage of an early job in ``fn`` may be gone by
+    # now; a skipped stage wrote nothing, so it counts as not writing
+    done = []
+    for s in stages:
+        try:
+            done.append(jsc.statusStore().lastStageAttempt(s))
+        except Py4JJavaError as e:
+            if "NoSuchElementException" not in str(e.java_exception):
+                raise
     return sum(1 for d in done if d.status().toString() == "COMPLETE"
                and d.shuffleWriteRecords() == records)
 

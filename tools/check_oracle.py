@@ -55,10 +55,14 @@ def canon_frame(df) -> list[tuple]:
 
 
 def oracle_connection(sf: str):
-    """A DuckDB connection with one view per registry table under ``sf``."""
+    """A DuckDB connection with one view per registry table under ``sf``.
+
+    Capped at 3 GB and 2 threads: under DuckDB's defaults (80 % of RAM,
+    every core) the sf0.1 ``dedup_jaccard_clusters`` oracle grew past 7 GB
+    RSS; capped, it finishes (373 s on a 4-CPU host)."""
     import duckdb
 
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": "3GB", "threads": 2})
     for t in TABLES:
         p = f"{sf}/{t}.parquet"
         if os.path.exists(p):
@@ -106,10 +110,6 @@ def main() -> int:
     from activedata_etl_spark.plans.queries import ORACLE_SQL, SPARK_QUERIES
     from activedata_etl_spark.session import get_spark
 
-    # the Python workers import the package too: they inherit PYTHONPATH
-    # from the JVM, which inherits this process's environment at launch
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark("oracle_check", parallelism=args.cpus,
                       shuffle_partitions=args.cpus * 2)
     con = oracle_connection(args.sf)
