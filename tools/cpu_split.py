@@ -78,7 +78,7 @@ def snapshot(jvm: int) -> dict[str, float]:
     """Cumulative CPU seconds per class at this instant."""
     ticks = dict.fromkeys(CLASSES, 0)
     ticks["python_driver"] = sum(_stat("/proc/self/stat")[1][:2])
-    jvm_total = sum(_stat(f"/proc/{jvm}/stat")[1][:2])
+    jvm_cpu = _stat(f"/proc/{jvm}/stat")[1]
     for tid in os.listdir(f"/proc/{jvm}/task"):
         t = _stat(f"/proc/{jvm}/task/{tid}/stat")
         if t is None:
@@ -90,9 +90,10 @@ def snapshot(jvm: int) -> dict[str, float]:
             ticks["py4j"] += cpu
         elif name.startswith(("C1 CompilerThre", "C2 CompilerThre")):
             ticks["jit"] += cpu
-    ticks["driver_jvm"] = jvm_total - ticks["tasks"] - ticks["py4j"] - ticks["jit"]
+    ticks["driver_jvm"] = (sum(jvm_cpu[:2]) - ticks["tasks"] - ticks["py4j"]
+                           - ticks["jit"])
     # the JVM's own reaped children (workers started without the daemon)
-    ticks["python_workers"] = sum(_stat(f"/proc/{jvm}/stat")[1][2:])
+    ticks["python_workers"] = sum(jvm_cpu[2:])
     for p in _descendants(jvm):
         s = _stat(f"/proc/{p}/stat")
         if s is not None and s[0].startswith("python"):
