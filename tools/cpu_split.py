@@ -1,30 +1,37 @@
 #!/usr/bin/env python
 """Split query_mix's CPU per query by process and JVM thread class.
 
-Usage: python tools/cpu_split.py [--passes 2] [--out FILE]
+Usage: python tools/cpu_split.py > split.json
 
 Starts perfbench's session shape (``perfbench/run.py:start_session``: one
 JVM, ``local[4]``, 8 shuffle partitions), runs one untimed warm-up pass of
-``perfbench/querymix.py``'s five queries, then ``--passes`` passes, each
+``perfbench/querymix.py``'s five queries, then ``PASSES`` passes, each
 over a fresh copy of ``perfbench/data``.  Around every query it reads
-``/proc`` and reports, per query, the median CPU seconds of
+``/proc`` and prints, as JSON, per query, the median CPU seconds of
 
 - ``tasks``: the JVM's Spark task threads (``Executor task launch ...``);
-- ``py4j``: the JVM's py4j gateway threads (``Thread-N``);
-- ``driver_jvm``: the rest of the JVM (scheduler, planner, GC, and threads
-  that exited during the query), less the JIT compiler threads;
+- ``py4j``: the JVM's threads named ``Thread-N``.  py4j's gateway
+  connection threads carry that name, but so does any other thread the
+  JVM starts without a name;
+- ``driver_jvm``: the rest of the JVM (scheduler, planner, GC), less the
+  JIT compiler threads;
 - ``python_driver``: this process;
-- ``python_workers``: the JVM's Python children (the worker daemon and its
-  forked workers, reaped ones included);
+- ``python_workers``: the live Python descendants of the JVM (the worker
+  daemon and its forked workers);
 - ``jit``: the C1/C2 compiler threads, which the gated CPU leaves out.
 
 ``gated`` is the sum of the first five, the quantity perfbench's
 ``op_cpu_s`` takes the geometric mean of.
+
+Classes are assigned by thread and command name.  A snapshot sees only
+live threads and processes, so CPU of those that exit during a query is
+misplaced: a JVM thread's earlier CPU moves into ``driver_jvm``, and a
+Python worker's is lost, since pyspark's daemon ignores SIGCHLD and its
+exited workers never reach its ``cutime``.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import re
@@ -35,81 +42,51 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
+from harness import (  # noqa: E402
+    _JIT_THREADS, _TICK_S, _stat_fields, _tree_pids, median)
+
 CLASSES = ("tasks", "py4j", "driver_jvm", "python_driver", "python_workers",
            "jit")
-_TICK_S = 1.0 / os.sysconf("SC_CLK_TCK")
+PASSES = 2
 
 
-def _stat(path: str) -> tuple[str, list[int]] | None:
-    """(command name, [utime, stime, cutime, cstime]) of a /proc stat file."""
-    try:
-        with open(path) as f:
-            s = f.read()
-    except OSError:
-        return None
-    end = s.rindex(")")
-    return s[s.index("(") + 1:end], [int(x) for x in s[end + 2:].split()[11:15]]
-
-
-def _children(pid: int) -> list[int]:
-    out = []
-    for name in os.listdir("/proc"):
-        if name.isdigit():
-            try:
-                with open(f"/proc/{name}/stat") as f:
-                    s = f.read()
-            except OSError:
-                continue
-            if int(s[s.rindex(")") + 2:].split()[1]) == pid:
-                out.append(int(name))
-    return out
-
-
-def _descendants(pid: int) -> list[int]:
-    out, todo = [], _children(pid)
-    while todo:
-        p = todo.pop()
-        out.append(p)
-        todo.extend(_children(p))
-    return out
+def _cpu(fields: list[str]) -> tuple[int, int]:
+    """(utime + stime, cutime + cstime) in ticks, from a stat's fields."""
+    utime, stime, cutime, cstime = (int(x) for x in fields[11:15])
+    return utime + stime, cutime + cstime
 
 
 def snapshot(jvm: int) -> dict[str, float]:
     """Cumulative CPU seconds per class at this instant."""
     ticks = dict.fromkeys(CLASSES, 0)
-    ticks["python_driver"] = sum(_stat("/proc/self/stat")[1][:2])
-    jvm_cpu = _stat(f"/proc/{jvm}/stat")[1]
+    jvm_own, jvm_children = _cpu(_stat_fields(f"/proc/{jvm}/stat")[1])
     for tid in os.listdir(f"/proc/{jvm}/task"):
-        t = _stat(f"/proc/{jvm}/task/{tid}/stat")
+        t = _stat_fields(f"/proc/{jvm}/task/{tid}/stat")
         if t is None:
             continue
-        name, cpu = t[0], sum(t[1][:2])
+        name, cpu = t[0], _cpu(t[1])[0]
         if name.startswith("Executor task"):
             ticks["tasks"] += cpu
         elif re.fullmatch(r"Thread-\d+", name):
             ticks["py4j"] += cpu
-        elif name.startswith(("C1 CompilerThre", "C2 CompilerThre")):
+        elif name.startswith(_JIT_THREADS):
             ticks["jit"] += cpu
-    ticks["driver_jvm"] = (sum(jvm_cpu[:2]) - ticks["tasks"] - ticks["py4j"]
+    ticks["driver_jvm"] = (jvm_own - ticks["tasks"] - ticks["py4j"]
                            - ticks["jit"])
     # the JVM's own reaped children (workers started without the daemon)
-    ticks["python_workers"] = sum(jvm_cpu[2:])
-    for p in _descendants(jvm):
-        s = _stat(f"/proc/{p}/stat")
+    ticks["python_workers"] = jvm_children
+    for p in _tree_pids(jvm)[1:]:
+        s = _stat_fields(f"/proc/{p}/stat")
         if s is not None and s[0].startswith("python"):
-            ticks["python_workers"] += sum(s[1])
+            ticks["python_workers"] += sum(_cpu(s[1]))
+    # last, so the /proc scans above are not charged to the query
+    ticks["python_driver"] = _cpu(_stat_fields("/proc/self/stat")[1])[0]
     return {k: v * _TICK_S for k, v in ticks.items()}
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--passes", type=int, default=2)
-    ap.add_argument("--out")
-    args = ap.parse_args()
-
     import querymix
     import run
-    from harness import median
     from pyspark import SparkContext
 
     from activedata_etl_spark.plans.queries import SPARK_QUERIES
@@ -119,13 +96,13 @@ def main() -> int:
     try:
         jvm = SparkContext._gateway.proc.pid
         # the launcher script may exec the JVM in a child: take the java one
-        while _stat(f"/proc/{jvm}/stat")[0] != "java":
-            jvm = _children(jvm)[0]
+        jvm = next(p for p in _tree_pids(jvm)
+                   if _stat_fields(f"/proc/{p}/stat")[0] == "java")
         warm = querymix._pass_dir(querymix.DATA, os.path.join(work, "warm"))
         for name in querymix.QUERIES:
             SPARK_QUERIES[name](spark, warm).toPandas()
         per: dict[str, list[dict]] = {n: [] for n in querymix.QUERIES}
-        for i in range(args.passes):
+        for i in range(PASSES):
             sf = querymix._pass_dir(querymix.DATA, os.path.join(work, f"p{i}"))
             for name in querymix.QUERIES:
                 before = snapshot(jvm)
@@ -142,11 +119,7 @@ def main() -> int:
     finally:
         run.stop_session(spark)
         shutil.rmtree(work, ignore_errors=True)
-    text = json.dumps(out, indent=1)
-    print(text)
-    if args.out:
-        with open(args.out, "w") as f:
-            f.write(text + "\n")
+    print(json.dumps(out, indent=1))
     return 0
 
 
