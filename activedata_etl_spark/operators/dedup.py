@@ -910,11 +910,8 @@ def embedding_neardup_lsh(
     # a null vector has no cosine (the oracle's NULL fails >=): drop it
     # before bucket_frame and the tiles stack vectors into matrices
     src = df.select(id_col, vec_col).where(F.col(vec_col).isNotNull())
-    dim = S.probe_dim(src, vec_col)
-    if dim is None:  # empty corpus / all-null vectors: no pairs, not a crash
-        return df.sparkSession.createDataFrame([], out_schema)
     b = S.bucket_frame(
-        src, id_col, vec_col, n_planes=n_planes, n_tables=n_tables, dim=dim,
+        src, id_col, vec_col, n_planes=n_planes, n_tables=n_tables,
         seed=seed, carry_vec=True,
     ).repartition("table", "bucket")
 

@@ -25,14 +25,6 @@ from pyspark.sql import functions as F
 from activedata_etl_spark.operators.dedup import fanout
 
 
-def probe_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Embedding dimensionality from the first NON-NULL vector; None when
-    the corpus is empty or all-null (callers return empty results instead
-    of crashing in len(None))."""
-    row = df.select(vec_col).where(F.col(vec_col).isNotNull()).first()
-    return None if row is None else len(row[0])
-
-
 def dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -141,10 +133,11 @@ def _mix31_weights_np(n_planes: int, dim: int, seed: int):
 
 
 def bucket_frame(df: DataFrame, id_col: str, vec_col: str, *,
-                 n_planes: int, n_tables: int, dim: int, seed: int = 23,
+                 n_planes: int, n_tables: int, seed: int = 23,
                  carry_vec: bool = False) -> DataFrame:
     """(id[, vec], table, bucket) — one row per (vector, hash table); id
-    and vec keep the input columns' types.
+    and vec keep the input columns' types.  Every vector must be non-null;
+    a null one fails the task with a ``ValueError`` that names its id.
 
     Computed as ONE numpy matmul per Arrow batch (guide §4.2) — the
     per-row Catalyst-HOF formulation (``hyperplane_bucket``) interprets
@@ -153,16 +146,17 @@ def bucket_frame(df: DataFrame, id_col: str, vec_col: str, *,
     the sign of the JVM's sequential double dot for every graded dataset
     (verified against the DuckDB oracle per SF; a disagreement would need
     |dot| ~ 1e-13 of an O(1) value).
+
+    The weights are sized by the first batch's vector width inside the
+    task (they are a deterministic function of (plane, dim, seed)), so no
+    Spark job runs just to learn the dimensionality, and an empty input
+    yields no rows.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
     src = fanout(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")))
-    w = np.hstack([
-        _mix31_weights_np(n_planes, dim, seed + 1000 * t)
-        for t in range(n_tables)
-    ])  # dim x (n_tables*n_planes)
     pw = (1 << np.arange(n_planes, dtype=np.int64))
 
     fields = [src.schema["id"]] + ([src.schema["vec"]] if carry_vec else [])
@@ -171,11 +165,22 @@ def bucket_frame(df: DataFrame, id_col: str, vec_col: str, *,
     schema = T.StructType(fields)
 
     def assign(batches):
+        w = None  # dim x (n_tables*n_planes)
         for pdf in batches:
             nrow = len(pdf)
             if nrow == 0:
                 continue
+            null = pdf["vec"].isna().to_numpy()
+            if null.any():  # only lsh_ann_topk passes nulls on
+                raise ValueError(
+                    f"lsh_ann_topk: null vector in {vec_col!r} at "
+                    f"{id_col}={pdf['id'][null].tolist()[0]!r}")
             mat = np.array(list(pdf["vec"]), dtype=np.float64)
+            if w is None:
+                w = np.hstack([
+                    _mix31_weights_np(n_planes, mat.shape[1], seed + 1000 * t)
+                    for t in range(n_tables)
+                ])
             bits = (mat @ w) >= 0.0  # nrow x (n_tables*n_planes)
             buckets = (
                 bits.reshape(nrow, n_tables, n_planes) * pw
@@ -212,14 +217,14 @@ def lsh_ann_topk(
     union of same-bucket matches across tables (miss probability decays as
     (1-p)^L), then exact cosine re-ranks.  The (table, bucket) equi-join
     replaces the cross join — the pair count shrinks by ~2^n_planes / L at
-    corpus scale, and the corpus is never shuffled (queries broadcast)."""
-    from pyspark.sql import Window as W
+    corpus scale, and the corpus is never shuffled (queries broadcast).
 
-    dim = probe_dim(corpus, vec_col)
-    if dim is None:  # empty corpus: no neighbors, not a crash
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, score double, rank int"
-        )
+    A null vector on either side fails the query with a ``ValueError``
+    naming its id (from ``bucket_frame``).  ``ORACLE_SIM_ANN_LSH`` keeps
+    its own null semantics: it would put a null vector in bucket 0 of
+    every table and rank its null scores, which no Spark re-rank
+    reproduces; the registry's embeddings have no nulls."""
+    from pyspark.sql import Window as W
 
     csrc = fanout(corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
@@ -232,11 +237,11 @@ def lsh_ann_topk(
     # exact-cosine re-rank below is unchanged JVM math.
     cb = bucket_frame(
         corpus, id_col, vec_col, n_planes=n_planes, n_tables=n_tables,
-        dim=dim, seed=seed,
+        seed=seed,
     ).withColumnRenamed("id", "neighbor_id")
     qb = bucket_frame(
         queries, id_col, vec_col, n_planes=n_planes, n_tables=n_tables,
-        dim=dim, seed=seed,
+        seed=seed,
     ).withColumnRenamed("id", "query_id")
     cand = (
         cb.join(F.broadcast(qb), ["table", "bucket"])

@@ -4,12 +4,16 @@ Local mode is the test bed; the configs are chosen so the same code path is
 what you would submit to a real multi-executor cluster with
 ``spark-submit --py-files``:  AQE on (runtime skew-join + partition
 coalescing), Arrow on (all pandas UDF traffic), shuffle partitions sized to
-the parallelism level instead of the 200 default.
+the parallelism level instead of the 200 default, and a codegen cache
+(``spark.sql.codegen.cache.maxEntries``) big enough that a session's
+repeated queries reuse their generated classes instead of recompiling them.
 
 The local sessions (``get_spark``) run their Python workers under the
 engine's own daemon, ``worker_daemon``, which stops each task's
 ``importlib.invalidate_caches()`` from re-reading the unchanged pyspark.zip
-(~0.1 CPU-s per task on CPython 3.11), and they put the package root on the
+(~0.1 CPU-s per task on CPython 3.11) and forks the workers from a frozen
+heap with the Arrow-UDF stack pre-imported, so pyspark's per-task
+``gc.collect()`` skips those modules.  They put the package root on the
 workers' ``PYTHONPATH`` so the daemon and the package UDFs import from any
 cwd.  ``get_spark_submit`` sessions keep pyspark's stock daemon: there the
 package reaches an executor's Python only as a ``--py-files`` zip, which
@@ -41,6 +45,14 @@ def tuning_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         # Column call: extra py4j round trips (and a failed IPython import)
         # per F.* call, thousands per CDC batch
         "spark.python.sql.dataFrameDebugging.enabled": "false",
+        # keep the generated classes a session reuses.  Spark's default of
+        # 100 entries is split over 4 Guava LRU segments of 25, which
+        # query_mix's ~80 classes overfill: 53-57 identical recompiles per
+        # timed pass.  The whole registry (69 queries at sf0.001) plus a
+        # CDC replay compile ~870 distinct classes, ~218 per segment; 1000
+        # (250 per segment) held them with little room for skew, 2000
+        # leaves 2x.  Static and per JVM: sized once, at the first codegen.
+        "spark.sql.codegen.cache.maxEntries": "2000",
     }
     if shuffle_partitions:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

@@ -13,6 +13,20 @@ keeps no eagerly read ``_files`` and invalidates lazily; there the stock
 method runs unchanged (checked on 3.12.1, eager like 3.11, and 3.13.0).
 Then pyspark's own daemon runs; its forked workers inherit both the
 override and the directories read here.
+
+Before it forks, the daemon also imports the Arrow-UDF stack every worker
+loads anyway (numpy, pandas, pyarrow, pyspark's Arrow serializers and
+``pyspark.worker``) and moves everything it holds into the collector's
+permanent generation (``gc.freeze()``).  pyspark's daemon runs
+``gc.collect()`` after every task of a reused worker; unfrozen, that walked
+the ~73k objects of those modules each time (17-24 ms of worker CPU per
+collect in a probe worker).  Now it walks only what the task itself allocated, which it still
+frees.  The freeze is safe: the frozen objects are the daemon's module
+state, which lives for the whole session anyway, so a collector pass could
+never have freed them.  The package's own UDF modules are not pre-imported:
+a worker that has loaded ``operators.similarity`` and ``functions.normalize``
+tracked 1,044 objects without them frozen and 721 with, 0.09 against
+0.06 ms per collect.
 """
 
 from __future__ import annotations
@@ -45,8 +59,17 @@ def invalidate_caches(self) -> None:
 
 
 if __name__ == "__main__":
+    import gc
+
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
     import pyspark.daemon
+    import pyspark.sql.pandas.serializers  # noqa: F401
+    import pyspark.worker  # noqa: F401
 
     zipimport.zipimporter.invalidate_caches = invalidate_caches
     importlib.invalidate_caches()  # read each archive once, before the forks
+    gc.collect()
+    gc.freeze()
     pyspark.daemon.manager()

@@ -61,6 +61,26 @@ def py4j_round_trips(spark):
     return count
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """``count(fn) -> int``: the Spark jobs ``fn`` runs, counted through a
+    job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 def _jvm_counter(spark, read):
     """``count(fn) -> int``: how far the JVM counter ``read(jvm)`` moves
     while ``fn`` runs."""

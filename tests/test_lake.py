@@ -1445,21 +1445,8 @@ def test_lookup_many_equals_filtered_read(spark, tmp_path_factory, dirs,
         spark.conf.set("spark.sql.session.timeZone", tz)
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs that ``fn`` runs, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_read_job_count_flat_as_delta_chain_grows(spark, tmp_path):
+def test_read_job_count_flat_as_delta_chain_grows(spark, tmp_path,
+                                                  spark_jobs):
     """Table reads plan with no schema-inference job per data dir, and a
     lookup hashes its keys with no job: a lookup and a full count run the
     same number of jobs with 1 and with 4 live delta versions."""
@@ -1480,8 +1467,8 @@ def test_read_job_count_flat_as_delta_chain_grows(spark, tmp_path):
             t = SnapshotTable(spark, table.location)
             setattr(t, attr, v)
             counts[(n, path)] = (
-                _jobs(spark, lambda: t.lookup(key).collect()),
-                _jobs(spark, lambda: t.read().count()),
+                spark_jobs(lambda: t.lookup(key).collect()),
+                spark_jobs(lambda: t.read().count()),
             )
     assert max(len(r) for r in table.snapshot()["delta_dirs"].values()) == 4
     for path in ("probe", "shuffle"):
@@ -1489,7 +1476,7 @@ def test_read_job_count_flat_as_delta_chain_grows(spark, tmp_path):
     assert [r["content"] for r in table.lookup(key).collect()] == ["N4"]
 
 
-def test_apply_batch_job_count(spark, tmp_path):
+def test_apply_batch_job_count(spark, tmp_path, spark_jobs):
     """A batch runs a fixed number of Spark jobs per write path: the
     per-partition pre-pass, the write, and for CoW the touched-bucket read
     of the merge target.  The batch is not cached, so no job fills a cache,
@@ -1505,9 +1492,9 @@ def test_apply_batch_job_count(spark, tmp_path):
         ))
 
     out = {}
-    n_delta = _jobs(spark, lambda: out.update(
+    n_delta = spark_jobs(lambda: out.update(
         delta=apply_batch(table, batch(1), 1)))
-    n_cow = _jobs(spark, lambda: out.update(
+    n_cow = spark_jobs(lambda: out.update(
         cow=apply_batch(table, batch(2), 2, merge_mode="cow")))
     assert out["delta"]["merge_mode"] == "delta"
     assert out["cow"]["merge_mode"] == "cow"
@@ -1515,7 +1502,7 @@ def test_apply_batch_job_count(spark, tmp_path):
 
 
 def test_apply_batch_py4j_round_trips(
-        spark, tmp_path, py4j_round_trips, catalyst_rule_runs):
+        spark, tmp_path, py4j_round_trips, catalyst_rule_runs, spark_jobs):
     """The driver-side cost of planning a batch: ``apply_batch(table,
     _norm(batch), i)`` builds each projection as one SQL ``selectExpr``
     and creates few intermediate frames, so a delta batch makes at most
@@ -1549,7 +1536,7 @@ def test_apply_batch_py4j_round_trips(
         elif i <= 4:
             runs[mode] = catalyst_rule_runs(run)
         else:
-            jobs[mode] = _jobs(spark, run)
+            jobs[mode] = spark_jobs(run)
         assert out[i]["merge_mode"] == mode
     assert trips["delta"] <= 350, trips
     assert trips["cow"] <= 382, trips
@@ -1596,7 +1583,7 @@ def test_later_chunk_compiles_no_class(spark, tmp_path, codegen_compiles):
 
 
 def test_lookup_runs_no_job_and_few_py4j_round_trips(
-        spark, tmp_path, py4j_round_trips):
+        spark, tmp_path, py4j_round_trips, spark_jobs):
     """A lookup plans no Spark read: one 4-key ``lookup_many(...).collect()``
     through a 4-deep delta chain runs 0 Spark jobs and at most 120 py4j
     round trips (proxy deletes left out)."""
@@ -1614,7 +1601,7 @@ def test_lookup_runs_no_job_and_few_py4j_round_trips(
     t = SnapshotTable(spark, table.location)
     rows = []
     t.lookup_many(keys).collect()  # warm: imports, first Arrow frame
-    assert _jobs(spark, lambda: rows.extend(t.lookup_many(keys).collect())) \
+    assert spark_jobs(lambda: rows.extend(t.lookup_many(keys).collect())) \
         == 0
     assert sorted((r["path"], r["content"]) for r in rows) == [
         (f"f{j}.py", "N4") for j in range(4)]

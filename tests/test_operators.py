@@ -336,6 +336,39 @@ def test_embedding_pair_operators_skip_null_vectors(spark):
                 for r in out.collect()} == expect
 
 
+def test_lsh_ann_topk_fails_loudly_on_null_vector(spark):
+    """A null corpus vector fails ``lsh_ann_topk`` with a ``ValueError``
+    that names the operator and the row, not with numpy's "setting an
+    array element with a sequence" from inside the worker."""
+    from pyspark.errors import PythonException
+
+    from activedata_etl_spark.operators.similarity import lsh_ann_topk
+
+    rows = [(1, [1.0, 0.0, 0.2]), (2, None), (3, [2.0, 0.0, 0.4]),
+            (4, [0.0, 1.0, 0.0]), (5, None), (6, [0.0, 3.0, 0.0]),
+            (7, [0.5, 0.5, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.where(F.col("embedding").isNotNull())
+    with pytest.raises(PythonException, match=r"ValueError: lsh_ann_topk: "
+                       r"null vector in 'embedding' at vec_id=[25]\b"):
+        lsh_ann_topk(df, q, k=2, n_planes=2).collect()
+
+
+def test_lsh_operators_run_no_sizing_job(spark, emb, spark_jobs):
+    """The LSH operators size their hyperplane weights from the vectors
+    inside the bucketing UDF: a collected ``embedding_neardup_lsh`` call
+    runs 3 Spark jobs and an ``lsh_ann_topk`` call 10.  Each ran one more,
+    a ``first()`` that only read the dimensionality."""
+    from activedata_etl_spark.operators.dedup import embedding_neardup_lsh
+    from activedata_etl_spark.operators.similarity import lsh_ann_topk
+
+    q = emb.where(F.col("vec_id") < 5)
+    assert spark_jobs(lambda: embedding_neardup_lsh(
+        emb, "vec_id", "embedding", threshold=0.9).collect()) == 3
+    assert spark_jobs(lambda: lsh_ann_topk(
+        emb, q, k=3, n_planes=4).collect()) == 10
+
+
 def test_round6_half_away_matches_duckdb_round():
     """``round6_half_away`` equals DuckDB's ``round(x, 6)`` bit for bit on
     random doubles of both signs and on exact midpoints (x * 1e6 == k +
@@ -1619,16 +1652,14 @@ def test_bucket_frame_numpy_matches_jvm_expressions(spark):
     from activedata_etl_spark.operators.similarity import (
         bucket_frame,
         hyperplane_bucket,
-        probe_dim,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    dim = probe_dim(emb, "embedding")
+    dim = len(emb.first()["embedding"])
     got = {
         (r["id"], r["table"]): r["bucket"]
         for r in bucket_frame(
-            emb, "vec_id", "embedding", n_planes=6, n_tables=4, dim=dim,
-            seed=23,
+            emb, "vec_id", "embedding", n_planes=6, n_tables=4, seed=23,
         ).collect()
     }
     jvm = emb.select(

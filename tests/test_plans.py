@@ -359,3 +359,34 @@ def test_session_window_stream_matches_batch(spark, tmp_path):
                "n_events", "max_commit_seq"]
     ).count()
     assert exact >= 1
+
+
+def test_query_mix_second_round_compiles_nothing(spark, tmp_path,
+                                                 codegen_compiles):
+    """The five query_mix queries (``perfbench/querymix.py``'s ``QUERIES``)
+    run twice over fresh copies of its data sample compile no generated
+    class the second time: the session's codegen cache
+    (``spark.sql.codegen.cache.maxEntries``, ``session.tuning_conf``) holds
+    the mix's classes.  It runs the whole mix because one query would pass
+    under Spark's default too: that cache holds 100 entries split over 4
+    LRU segments of 25, which one query's classes fit, while the mix's ~80
+    overfill a segment, and a repeated cycle through an overfull LRU
+    segment misses on every entry (57 recompiles in the second round)."""
+    import os
+    import shutil
+
+    from activedata_etl_spark.plans.queries import SPARK_QUERIES
+
+    data = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "perfbench", "data")
+    mix = ["dedup_ngram_jaccard", "dedup_embedding_lsh", "dedup_embedding",
+           "typed_json_props", "q34_sessionize"]
+
+    def run_mix(copy: str) -> None:
+        # a fresh directory: the registry memoizes pair frames per data dir
+        shutil.copytree(data, copy)
+        for name in mix:
+            SPARK_QUERIES[name](spark, copy).toPandas()
+
+    codegen_compiles(lambda: run_mix(str(tmp_path / "first")))
+    assert codegen_compiles(lambda: run_mix(str(tmp_path / "second"))) == 0

@@ -103,6 +103,30 @@ def test_reused_worker_keeps_pyspark_zip_directory(spark):
     assert all(again), runs
 
 
+def test_worker_forks_from_a_frozen_heap(spark):
+    """A Python task's worker inherits the daemon's pre-imported Arrow-UDF
+    stack in the collector's permanent generation, so the ``gc.collect()``
+    pyspark runs after each task no longer walks it: the frozen objects
+    outnumber those a fresh interpreter holds after importing pandas and
+    pyarrow (the stock daemon freezes none)."""
+    def frozen(batches):
+        import gc
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"n": [gc.get_freeze_count()]})
+
+    got = spark.range(1, numPartitions=1).mapInPandas(
+        frozen, "n long").first()["n"]
+    imported = subprocess.run(
+        [sys.executable, "-c", "import gc, pandas, pyarrow; gc.collect(); "
+         "print(len(gc.get_objects()))"],
+        capture_output=True, text=True, check=True, timeout=120)
+    assert got > int(imported.stdout), (got, imported.stdout)
+
+
 def test_session_runs_from_a_foreign_cwd(tmp_path):
     """A ``get_spark`` session started outside the repo, with no PYTHONPATH,
     runs a by-value lambda and a package UDF: the session itself puts the

@@ -21,7 +21,11 @@ over a fresh copy of ``perfbench/data``.  Around every query it reads
 - ``jit``: the C1/C2 compiler threads, which the gated CPU leaves out.
 
 ``gated`` is the sum of the first five, the quantity perfbench's
-``op_cpu_s`` takes the geometric mean of.
+``op_cpu_s`` takes the geometric mean of.  ``compiles`` is the number of
+generated classes Janino compiled during the query
+(``CodegenMetrics.METRIC_COMPILATION_TIME``'s count), i.e. the misses of
+Spark's codegen cache.  A query compiles the same sources in every pass,
+so a compile in a timed pass is almost always a class the cache let go of.
 
 Classes are assigned by thread and command name.  A snapshot sees only
 live threads and processes, so CPU of those that exit during a query is
@@ -84,6 +88,12 @@ def snapshot(jvm: int) -> dict[str, float]:
     return {k: v * _TICK_S for k, v in ticks.items()}
 
 
+def compiles(spark) -> int:
+    """The generated classes compiled in this JVM so far."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
 def main() -> int:
     import querymix
     import run
@@ -105,17 +115,20 @@ def main() -> int:
         for i in range(PASSES):
             sf = querymix._pass_dir(querymix.DATA, os.path.join(work, f"p{i}"))
             for name in querymix.QUERIES:
+                n0 = compiles(spark)  # py4j calls outside the CPU snapshots
                 before = snapshot(jvm)
                 SPARK_QUERIES[name](spark, sf).toPandas()
                 after = snapshot(jvm)
                 per[name].append({k: after[k] - before[k] for k in CLASSES})
+                per[name][-1]["compiles"] = compiles(spark) - n0
         out = {}
         for name, runs in per.items():
-            row = {k: round(median([r[k] for r in runs]), 3) for k in CLASSES}
+            row = {k: round(median([r[k] for r in runs]), 3)
+                   for k in CLASSES + ("compiles",)}
             row["gated"] = round(sum(row[k] for k in CLASSES if k != "jit"), 3)
             out[name] = row
         out["pass"] = {k: round(sum(out[n][k] for n in querymix.QUERIES), 3)
-                       for k in CLASSES + ("gated",)}
+                       for k in CLASSES + ("compiles", "gated")}
     finally:
         run.stop_session(spark)
         shutil.rmtree(work, ignore_errors=True)
