@@ -18,6 +18,22 @@ workers' ``PYTHONPATH`` so the daemon and the package UDFs import from any
 cwd.  ``get_spark_submit`` sessions keep pyspark's stock daemon: there the
 package reaches an executor's Python only as a ``--py-files`` zip, which
 each task adds to ``sys.path`` after the daemon has started.
+
+The local sessions also swap the ``file:`` filesystem for
+``NioLocalFileSystem`` (``jvm/``, on the driver's and the executors'
+classpath).  Without the native Hadoop library, Hadoop's local filesystem
+sets permissions by running ``chmod``, once for every file it creates and
+every directory it makes: a 16-bucket write forked ~410 processes and a
+steady CDC batch ~117.  ``NioLocalFileSystem`` is the stock checksummed
+``LocalFileSystem`` (same files, same ``.crc`` sidecars, same modes) whose
+permissions are set through java.nio instead.  Two paths keep the stock
+classes: ``get_spark_submit``, whose tables live on HDFS or S3 and whose
+``--jars`` are a deployment choice, and Structured Streaming checkpoints
+(``streaming.replay.stream_journal``), which Spark writes through
+``FileContext`` and its ``fs.AbstractFileSystem.file.impl``.  The local
+sessions also list a read's files on the driver however many directories it
+names: past Spark's 32-path threshold, listing the local disk became a
+Spark job of its own.
 """
 
 from __future__ import annotations
@@ -29,6 +45,9 @@ from pyspark.sql import SparkSession
 
 # the directory holding the ``activedata_etl_spark`` package
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# NioLocalFileSystem, built from jvm/*.java by tools/build_jvm.py
+JVM_JAR = os.path.join(PACKAGE_ROOT, "activedata_etl_spark", "jvm",
+                       "activedata-fs.jar")
 
 
 def tuning_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
@@ -62,7 +81,10 @@ def tuning_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
 def get_spark_submit(app_name: str, shuffle_partitions: int | None = None) -> SparkSession:
     """Session for `spark-submit --py-files activedata_etl_spark.zip ...`:
     master/executors/memory come from the submit command line (or the
-    cluster manager), only the engine's SQL tuning is applied here."""
+    cluster manager), only the engine's SQL tuning is applied here.  The
+    ``file:`` filesystem stays Hadoop's own: a cluster's tables live on
+    HDFS or S3, and shipping ``JVM_JAR`` with ``--jars`` is the
+    deployment's choice."""
     b = SparkSession.builder.appName(app_name)
     for k, v in tuning_conf(shuffle_partitions).items():
         b = b.config(k, v)
@@ -144,6 +166,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.python.daemon.module", "activedata_etl_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
+        # set permissions in-process, not with a chmod per file and dir
+        .config("spark.hadoop.fs.file.impl", "activedata_etl_spark.NioLocalFileSystem")
+        .config("spark.driver.extraClassPath", JVM_JAR)
+        .config("spark.executor.extraClassPath", JVM_JAR)
+        # list a read's local dirs on the driver: past the default 32
+        # paths, listing became its own Spark job (0.3-0.7 s a read)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

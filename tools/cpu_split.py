@@ -18,9 +18,12 @@ over a fresh copy of ``perfbench/data``.  Around every query it reads
 - ``python_driver``: this process;
 - ``python_workers``: the live Python descendants of the JVM (the worker
   daemon and its forked workers);
+- ``jvm_children``: the JVM's reaped children (its ``cutime`` and
+  ``cstime``), such as the shell commands Hadoop runs.  They are not
+  Python, but the gated CPU counts them;
 - ``jit``: the C1/C2 compiler threads, which the gated CPU leaves out.
 
-``gated`` is the sum of the first five, the quantity perfbench's
+``gated`` is the sum of the first six, the quantity perfbench's
 ``op_cpu_s`` takes the geometric mean of.  ``compiles`` is the number of
 generated classes Janino compiled during the query
 (``CodegenMetrics.METRIC_COMPILATION_TIME``'s count), i.e. the misses of
@@ -50,7 +53,7 @@ from harness import (  # noqa: E402
     _JIT_THREADS, _TICK_S, _stat_fields, _tree_pids, median)
 
 CLASSES = ("tasks", "py4j", "driver_jvm", "python_driver", "python_workers",
-           "jit")
+           "jvm_children", "jit")
 PASSES = 2
 
 
@@ -63,7 +66,7 @@ def _cpu(fields: list[str]) -> tuple[int, int]:
 def snapshot(jvm: int) -> dict[str, float]:
     """Cumulative CPU seconds per class at this instant."""
     ticks = dict.fromkeys(CLASSES, 0)
-    jvm_own, jvm_children = _cpu(_stat_fields(f"/proc/{jvm}/stat")[1])
+    jvm_own, ticks["jvm_children"] = _cpu(_stat_fields(f"/proc/{jvm}/stat")[1])
     for tid in os.listdir(f"/proc/{jvm}/task"):
         t = _stat_fields(f"/proc/{jvm}/task/{tid}/stat")
         if t is None:
@@ -77,8 +80,6 @@ def snapshot(jvm: int) -> dict[str, float]:
             ticks["jit"] += cpu
     ticks["driver_jvm"] = (jvm_own - ticks["tasks"] - ticks["py4j"]
                            - ticks["jit"])
-    # the JVM's own reaped children (workers started without the daemon)
-    ticks["python_workers"] = jvm_children
     for p in _tree_pids(jvm)[1:]:
         s = _stat_fields(f"/proc/{p}/stat")
         if s is not None and s[0].startswith("python"):
